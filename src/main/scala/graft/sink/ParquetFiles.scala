@@ -6,26 +6,54 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter}
-import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.{InputFile, LocalOutputFile, OutputFile}
 
-/** Row-group-level Parquet file surgery for the sink's shard finalize
-  * step. A Parquet file cannot be appended to after its footer is
-  * written, so each buffer flush lands as its own staged file; when a
-  * shard closes, its staged flushes are concatenated **at the binary
-  * row-group level** (`ParquetFileWriter.appendFile` — no decode, no
-  * re-encode, no decompress). This keeps the observable semantics of
-  * the reference's single `pq.ParquetWriter` per shard
-  * (`writer.py:177-199`): one file per shard, row groups in flush
-  * order, each flush = the row groups `write_table` would have
-  * produced.
+/** Row-group-level Parquet file surgery: whole files appended to one
+  * output **at the binary row-group level** (`ParquetFileWriter.appendFile`
+  * — no decode, no re-encode, no decompress), and the footer facts the
+  * tests read.
   *
-  * Cost model at scale: finalize is one sequential read+write of the
-  * shard (pure I/O), done once per shard — not per flush — so total
-  * merge I/O is O(data), not O(data × flushes).
+  * The parity sink appends each flush, encoded in memory by
+  * [[DriverParquet.Encoder]], to its open shard through an [[Appender]],
+  * so a shard close only writes the footer. [[concat]] — staged files
+  * concatenated into one — is no longer on the sink path; it remains as
+  * the composition the sink's bytes are checked against (per-chunk
+  * [[DriverParquet.write]] + `concat`), with the same [[Appender]].
+  * Either way the result keeps the observable semantics of the
+  * reference's single `pq.ParquetWriter` per shard (`writer.py:177-199`):
+  * one file per shard, row groups in flush order, each flush = the row
+  * groups `write_table` would have produced.
   */
 object ParquetFiles {
 
   private def conf(): Configuration = new Configuration()
+
+  /** Appends whole Parquet files to `out`, row groups copied verbatim,
+    * under the schema and key-value footer metadata (e.g. Spark's row
+    * schema) of `template` — the first file to be appended. `close`
+    * writes the footer. Appended row groups carry no page indexes
+    * (parquet-mr drops them on append).
+    */
+  final class Appender(out: OutputFile, template: InputFile) {
+    private val (schema, keyValueMeta) = {
+      val r = ParquetFileReader.open(template)
+      try {
+        val md = r.getFooter.getFileMetaData
+        (md.getSchema, md.getKeyValueMetaData)
+      } finally r.close()
+    }
+    // 128 MiB target block size / 8 MiB max padding — parquet-mr's own
+    // defaults (ParquetWriter.DEFAULT_BLOCK_SIZE / MAX_PADDING_SIZE_DEFAULT);
+    // irrelevant to appendFile, which copies source row groups verbatim.
+    private val writer = new ParquetFileWriter(out, schema,
+      ParquetFileWriter.Mode.OVERWRITE, 128L * 1024 * 1024, 8 * 1024 * 1024,
+      null, org.apache.parquet.column.ParquetProperties.builder().build())
+    writer.start()
+
+    def append(part: InputFile): Unit = writer.appendFile(part)
+    def close(): Unit = writer.end(keyValueMeta)
+  }
 
   /** Concatenate `parts` (in order) into `dest`, replacing it.
     * Single part degenerates to a rename. Preserves key-value footer
@@ -38,27 +66,11 @@ object ParquetFiles {
       return
     }
     val c = conf()
-    val first = ParquetFileReader.open(
-      HadoopInputFile.fromPath(hPath(parts.head), c))
-    val (schema, keyValueMeta) =
-      try {
-        val md = first.getFooter.getFileMetaData
-        (md.getSchema, md.getKeyValueMetaData)
-      } finally first.close()
-
+    val inputs = parts.map(p => HadoopInputFile.fromPath(hPath(p), c))
     val tmp = dest.resolveSibling("." + dest.getFileName.toString + ".concat.tmp")
-    Files.deleteIfExists(tmp)
-    // 128 MiB target block size / 8 MiB max padding — parquet-mr's own
-    // defaults (ParquetWriter.DEFAULT_BLOCK_SIZE / MAX_PADDING_SIZE_DEFAULT);
-    // irrelevant to appendFile, which copies source row groups verbatim.
-    val writer = new ParquetFileWriter(
-      HadoopOutputFile.fromPath(hPath(tmp), c), schema,
-      ParquetFileWriter.Mode.OVERWRITE,
-      128L * 1024 * 1024, 8 * 1024 * 1024,
-      null, org.apache.parquet.column.ParquetProperties.builder().build())
-    writer.start()
-    parts.foreach(p => writer.appendFile(HadoopInputFile.fromPath(hPath(p), c)))
-    writer.end(keyValueMeta)
+    val out = new Appender(new LocalOutputFile(tmp), inputs.head)
+    inputs.foreach(out.append)
+    out.close()
     Files.move(tmp, dest, StandardCopyOption.REPLACE_EXISTING)
     parts.foreach(Files.deleteIfExists(_))
   }

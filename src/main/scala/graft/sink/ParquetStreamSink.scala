@@ -1,11 +1,12 @@
 package graft.sink
 
-import java.nio.file.{FileAlreadyExistsException, Files, NoSuchFileException, Path, StandardCopyOption}
+import java.nio.file.{FileAlreadyExistsException, Files, NoSuchFileException, Path}
 import java.util.Comparator
 
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
+import org.apache.parquet.io.LocalOutputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
@@ -46,12 +47,17 @@ import org.apache.spark.sql.types.StructType
   *
   * Execution model: this is the driver-coordinated parity mode — the
   * buffer lives on the driver (bounded by `bufferSizeBytes`, exactly
-  * like the reference's single-process buffer), while every encode runs
-  * as a Spark job. A Parquet file cannot be appended to after its
-  * footer is written, so each flush stages one Parquet file and shard
-  * finalize concatenates staged flushes at the binary row-group level
-  * ([[ParquetFiles.concat]] — pure I/O, once per shard). For unbounded
-  * distributed streams, the same [[SinkState]] semantics drive
+  * like the reference's single-process buffer), and so does the encode:
+  * no Spark job runs unless a batch needs the cast. Rows whose JVM
+  * values already match the schema ([[RowConformance]]) are buffered as
+  * they are. A flush encodes the buffer once, into memory
+  * ([[DriverParquet.Encoder]], settings resolved once per sink), and
+  * appends those row groups to the shard's open writer
+  * ([[ParquetFiles.Appender]]), like the reference's `write_table` on
+  * its open `pq.ParquetWriter`; rotation and close only write the
+  * footer. A shard that receives one flush of at most `rowGroupSize`
+  * rows is that encoded file verbatim, page indexes included. For
+  * unbounded distributed streams, the same [[SinkState]] semantics drive
   * [[graft.streaming.StreamingShardSink]] inside `foreachBatch`, where
   * "buffer" is the micro-batch and shards roll per partition.
   */
@@ -75,16 +81,22 @@ final class ParquetStreamSink(
   // Validates the size parameters before any filesystem effect
   // (writer.py:127-131).
   private val state = new SinkState(shardSizeBytes, bufferSizeBytes)
+  // Resolves the codec and the other write settings, so a bad option
+  // fails here, before the overwrite delete.
+  private val encoder = new DriverParquet.Encoder(spark, schema, rowGroupSize, options)
 
   val path: Path = rawPath.toAbsolutePath.normalize
   val prefix: String = filePrefix.getOrElse(path.getFileName.toString)
 
   private val buffer = ArrayBuffer.empty[Array[Row]]
-  private val staged = ArrayBuffer.empty[Path]
   private val manifest = ArrayBuffer.empty[Path]
-  private var currentShardPath: Option[Path] = None
-  private var flushCount = 0
+  private var shard: Option[ParquetStreamSink.OpenShard] = None
   private var closed = false
+  // counters, reported by close()
+  private var flushCount = 0
+  private var rowCount = 0L
+  private var encodedBytes = 0L
+  private var encodeNanos = 0L
 
   // --- construction-time path semantics (writer.py:151-169) ---
   if (Files.exists(path)) {
@@ -163,15 +175,17 @@ final class ParquetStreamSink(
     }
   }
 
-  /** Flush buffered batches as one consolidated staged write
-    * (`writer.py:266-293`): many tiny input batches become few row
-    * groups (`tests.py:234-249`). No-op when nothing was buffered.
+  /** Flush buffered batches as one consolidated write into the open
+    * shard (`writer.py:266-293`): many tiny input batches become few
+    * row groups (`tests.py:234-249`). No-op when nothing was buffered.
     */
   def flush(): Unit = {
     if (!state.bufferNonEmpty) return
-    if (currentShardPath.isEmpty) openNewShard() // lazy creation
-    val rows: Seq[Row] = buffer.toSeq.flatten
-    staged ++= stageWrite(rows)
+    if (shard.isEmpty) openNewShard() // lazy creation
+    val n = buffer.iterator.map(_.length).sum
+    shard.get.add(encode(buffer.iterator.flatten), onePart = rowGroupSize.forall(n <= _))
+    flushCount += 1
+    rowCount += n
     state.onFlush()
     buffer.clear()
   }
@@ -192,7 +206,7 @@ final class ParquetStreamSink(
     Files.createFile(p) // file exists from open time, like pq.ParquetWriter
     log.info(s"Opened new Parquet shard: $p") // writer.py:190
     manifest += p
-    currentShardPath = Some(p)
+    shard = Some(new ParquetStreamSink.OpenShard(p))
   }
 
   /** Final flush + finalize (`writer.py:295-303`). Idempotent. */
@@ -200,56 +214,27 @@ final class ParquetStreamSink(
     if (closed) return
     flush()
     finalizeCurrentShard()
-    currentShardPath = None
     closed = true
-    // staging dir is inside/alongside the output; drop it
-    val sd = stagingDirPath
-    if (Files.exists(sd)) deleteRecursively(sd)
-    log.info(s"Closed Parquet writer for: $path") // writer.py:301
+    val encodeMs = "%.1f".formatLocal(java.util.Locale.ROOT, encodeNanos / 1e6)
+    log.info(s"Closed Parquet writer for: $path (flushes=$flushCount, " + // writer.py:301
+      s"shards=${manifest.size}, rows=$rowCount, encoded_bytes=$encodedBytes, encode_ms=$encodeMs)")
   }
 
   // ------------------------------------------------------------------
 
-  private def finalizeCurrentShard(): Unit = currentShardPath.foreach { sp =>
-    if (staged.nonEmpty) ParquetFiles.concat(staged.toSeq, sp)
-    else {
-      // Opened but never flushed: the reference's ParquetWriter.close()
-      // still writes a valid 0-row file (schema + footer only).
-      val empty = stageWrite(Seq.empty)
-      ParquetFiles.concat(empty, sp)
-    }
-    staged.clear()
+  private def finalizeCurrentShard(): Unit = {
+    // Opened but never flushed: the reference's ParquetWriter.close()
+    // still writes a valid 0-row file (schema + footer only).
+    shard.foreach(_.close(encode(Iterator.empty)))
+    shard = None
   }
 
-  /** Driver-local encode: buffer → a single ordered Parquet file (or
-    * several ≤`rowGroupSize`-row files, concatenated later as row
-    * groups). The rows are already on the driver, so this runs zero
-    * Spark jobs ([[DriverParquet]]) — flush cost is O(data), not
-    * O(flushes × job overhead), mirroring the reference's in-process
-    * `pq.ParquetWriter` (`writer.py:192-196`).
-    */
-  private def stageWrite(rows: Seq[Row]): Seq[Path] = {
-    val chunks: Seq[Seq[Row]] = rowGroupSize match {
-      case Some(n) if rows.nonEmpty => rows.grouped(n).toSeq
-      case _                        => Seq(rows)
-    }
-    flushCount += 1
-    chunks.zipWithIndex.map { case (chunk, i) =>
-      val dest = stagingDir().resolve(f"staged-$flushCount%05d-$i%04d.parquet")
-      DriverParquet.write(spark, dest, schema, chunk, options)
-      dest
-    }
-  }
-
-  private def stagingDirPath: Path = shardSizeBytes match {
-    case Some(_) => path.resolve(".graft-staging")
-    case None    => path.getParent.resolve(s".graft-staging-${path.getFileName}")
-  }
-
-  private def stagingDir(): Path = {
-    val sd = stagingDirPath
-    if (!Files.exists(sd)) Files.createDirectories(sd)
-    sd
+  private def encode(rows: Iterator[Row]): DriverParquet.Encoded = {
+    val t0 = System.nanoTime
+    val e = encoder.encode(rows)
+    encodeNanos += System.nanoTime - t0
+    encodedBytes += e.length
+    e
   }
 
   private def ensureOpen(): Unit =
@@ -281,4 +266,32 @@ object ParquetStreamSink {
     */
   def estimateBytes(rows: Seq[Row], schema: StructType): Long =
     ColumnarSize.ofRows(rows, schema)
+
+  /** The shard being written. A shard's first flush is held, encoded,
+    * while it may still be the shard's only part: a shard of one flush
+    * of at most `rowGroupSize` rows is written as that file, verbatim.
+    * Any other flush starts the writer over the shard file, which then
+    * takes every flush's row groups as they come.
+    */
+  private final class OpenShard(path: Path) {
+    private var held: Option[DriverParquet.Encoded] = None
+    private var writer: Option[ParquetFiles.Appender] = None
+
+    def add(flush: DriverParquet.Encoded, onePart: Boolean): Unit = writer match {
+      case Some(w) => w.append(flush.inputFile)
+      case None if held.isEmpty && onePart => held = Some(flush)
+      case None =>
+        val w = new ParquetFiles.Appender(new LocalOutputFile(path), held.getOrElse(flush).inputFile)
+        held.foreach(h => w.append(h.inputFile))
+        held = None
+        w.append(flush.inputFile)
+        writer = Some(w)
+    }
+
+    /** Write the footer, or the held flush, or else `empty`. */
+    def close(empty: => DriverParquet.Encoded): Unit = writer match {
+      case Some(w) => w.close()
+      case None    => held.getOrElse(empty).writeTo(path)
+    }
+  }
 }

@@ -36,12 +36,20 @@ object RowConformance {
     case BinaryType    => v.isInstanceOf[Array[Byte]]
     case TimestampType =>
       v.isInstanceOf[java.sql.Timestamp] || v.isInstanceOf[java.time.Instant]
+    case TimestampNTZType => v.isInstanceOf[java.time.LocalDateTime]
     case DateType =>
       v.isInstanceOf[java.sql.Date] || v.isInstanceOf[java.time.LocalDate]
     case _: DecimalType => v.isInstanceOf[java.math.BigDecimal]
     case ArrayType(et, _) => v match {
       case s: scala.collection.Seq[_] => s.forall(e => e == null || valueConforms(e, et))
       case _                          => false
+    }
+    // a null key is invalid in a Spark map: leave it to the cast path's error
+    case MapType(kt, vt, _) => v match {
+      case m: scala.collection.Map[_, _] => m.forall { case (k, mv) =>
+        k != null && valueConforms(k, kt) && (mv == null || valueConforms(mv, vt))
+      }
+      case _ => false
     }
     case st: StructType => v match {
       case r: Row => conforms(r, st)

@@ -76,7 +76,14 @@ class LoggingSpec extends AnyFunSuite {
       s"missing overwrite-delete log in: $logs")
     assert(logs.count(_.startsWith("Opened new Parquet shard:")) >= 2,
       s"expected a shard-open log per rollover in: $logs")
-    assert(logs.exists(_.startsWith("Closed Parquet writer for:")),
-      s"missing close log in: $logs")
+    val closed = logs.filter(_.startsWith("Closed Parquet writer for:"))
+    assert(closed.size == 1, s"missing close log in: $logs")
+    // the sink's counters: two flushes of 32 rows, one shard each
+    val fields = "(\\w+)=([0-9.]+)".r.findAllMatchIn(closed.head)
+      .map(m => m.group(1) -> m.group(2)).toMap
+    assert(fields.keySet == Set("flushes", "shards", "rows", "encoded_bytes", "encode_ms"),
+      closed.head)
+    assert(fields("flushes") == "2" && fields("shards") == "2" && fields("rows") == "64", closed.head)
+    assert(fields("encoded_bytes").toLong > 0 && fields("encode_ms").toDouble > 0, closed.head)
   }
 }

@@ -2,6 +2,7 @@ package graft.sink
 
 import java.nio.file.{Files, Path}
 import java.sql.{Date, Timestamp}
+import java.time.LocalDateTime
 
 import scala.jdk.CollectionConverters._
 
@@ -32,6 +33,7 @@ class TypePassthroughSpec extends AnyFunSuite {
       StructField("bin", BinaryType),
       StructField("dec", DecimalType(18, 4)),
       StructField("ts", TimestampType),
+      StructField("ntz", TimestampNTZType),
       StructField("d", DateType),
       StructField("arr", ArrayType(FloatType)),
       StructField("m", MapType(StringType, LongType)),
@@ -41,9 +43,12 @@ class TypePassthroughSpec extends AnyFunSuite {
     val rows = Seq(
       Row(1L, 42, 3.5, 2.25f, true, "hello", Array[Byte](1, 2, 3),
         new java.math.BigDecimal("12345.6789"),
-        Timestamp.valueOf("2024-06-01 12:34:56.789"), Date.valueOf("2024-06-01"),
+        Timestamp.valueOf("2024-06-01 12:34:56.789"),
+        LocalDateTime.of(2024, 6, 1, 12, 34, 56, 789000000), Date.valueOf("2024-06-01"),
         Seq(1.0f, -2.5f), Map("a" -> 1L, "b" -> 2L), Row(7L, "inner")),
-      Row(2L, null, null, null, null, null, null, null, null, null, null, null, null))
+      Row(2L, null, null, null, null, null, null, null, null, null, null, null, null, null))
+    // every value already has its encoder's JVM type: no cast job runs
+    assert(rows.forall(RowConformance.conforms(_, schema)))
 
     val tmp = Files.createTempDirectory("graft-types")
     try {
@@ -64,10 +69,11 @@ class TypePassthroughSpec extends AnyFunSuite {
       assert(r.getAs[Array[Byte]](6).toSeq == Seq[Byte](1, 2, 3))
       assert(r.getDecimal(7) == new java.math.BigDecimal("12345.6789"))
       assert(r.getTimestamp(8) == Timestamp.valueOf("2024-06-01 12:34:56.789"))
-      assert(r.getDate(9) == Date.valueOf("2024-06-01"))
-      assert(r.getSeq[Float](10) == Seq(1.0f, -2.5f))
-      assert(r.getMap[String, Long](11) == Map("a" -> 1L, "b" -> 2L))
-      assert(r.getStruct(12) == Row(7L, "inner"))
+      assert(r.getAs[LocalDateTime](9) == LocalDateTime.of(2024, 6, 1, 12, 34, 56, 789000000))
+      assert(r.getDate(10) == Date.valueOf("2024-06-01"))
+      assert(r.getSeq[Float](11) == Seq(1.0f, -2.5f))
+      assert(r.getMap[String, Long](12) == Map("a" -> 1L, "b" -> 2L))
+      assert(r.getStruct(13) == Row(7L, "inner"))
       // null row: every non-key column null
       val n = back(1)
       (1 until schema.length).foreach(i => assert(n.isNullAt(i), s"col $i not null"))
