@@ -28,12 +28,19 @@ as a script, so a false claim can't ship.
    the driver commits round N-1's correctness artifact before round N
    builds — and can be overridden with `--round N`.
 
+5. Dangling tool references — every `runMain graft.X` and every
+   scaladoc `[[graft.….X]]` link under src/ and .claude/ must name an
+   object, class or trait declared in src/main (and, for a member
+   link, a member declared in that type's file). Scaladoc links are
+   not compiled, so deleting a tool or member leaves them dangling
+   with no build error.
+
 Usage:
     python3 scripts/round_close_checks.py [path/to/oracle_sql.json] \
         [--round N]
 
 oracle_sql.json defaults to /tmp/verify_out/oracle_sql.json (the
-verify recipe's output). Exit 0 iff all four checks are clean.
+verify recipe's output). Exit 0 iff all checks are clean.
 
 Chicken-and-egg note: CHECKS_rN.txt IS this script's captured output,
 so the canonical close sequence is: run with artifacts present from a
@@ -84,6 +91,61 @@ def check_claims():
         print(f"  {'OK     ' if ok else 'MISSING'} {path}:{line}  "
               f"{suite} {verb}")
     return bad
+
+
+# `runMain graft.X` or a scaladoc link `[[graft.a.B.member]]`
+TOOL_REF = re.compile(r"runMain (graft(?:\.\w+)+)|\[\[(graft(?:\.\w+)+)\]\]")
+TOP_DECL = re.compile(
+    r"^(?:(?:final|sealed|abstract|case|private(?:\[\w+\])?)\s+)*"
+    r"(?:object|class|trait)\s+(\w+)", re.M)
+
+
+def declared_types():
+    """package-qualified top-level type name -> its file's text"""
+    types = {}
+    for path in scala_files(MAIN):
+        text = open(path, encoding="utf-8").read()
+        pkg = re.search(r"^package ([\w.]+)", text, re.M)
+        for m in TOP_DECL.finditer(text):
+            types[f"{pkg.group(1)}.{m.group(1)}"] = text
+    return types
+
+
+def resolves(ref, types):
+    segs = ref.split(".")
+    for i in range(len(segs), 1, -1):
+        text = types.get(".".join(segs[:i]))
+        if text is not None:
+            return all(re.search(
+                r"\b(?:object|class|trait|def|val|var|type)\s+"
+                + re.escape(m) + r"\b", text) for m in segs[i:])
+    return False
+
+
+def check_tool_refs():
+    types = declared_types()
+    roots = [os.path.join(REPO, "src"), os.path.join(REPO, ".claude")]
+    n, bad = 0, []
+    for root in roots:
+        for dirpath, _, names in os.walk(root):
+            for name in sorted(names):
+                path = os.path.join(dirpath, name)
+                try:
+                    text = open(path, encoding="utf-8").read()
+                except (UnicodeDecodeError, OSError):
+                    continue
+                for m in TOOL_REF.finditer(text):
+                    n += 1
+                    ref = m.group(1) or m.group(2)
+                    if not resolves(ref, types):
+                        line = text.count("\n", 0, m.start()) + 1
+                        bad.append((os.path.relpath(path, REPO), line, ref))
+    print(f"== runMain / [[graft.…]] references ({n} found) ==")
+    for path, line, ref in bad:
+        print(f"  MISSING {path}:{line}  {ref}")
+    if not bad:
+        print("  every reference resolves")
+    return len(bad)
 
 
 def survey_names():
@@ -227,6 +289,7 @@ def main():
         rnd = current_round()
     oracle = args[0] if args else "/tmp/verify_out/oracle_sql.json"
     bad = check_claims()
+    bad += check_tool_refs()
     if not os.path.exists(oracle):
         print(f"oracle_sql.json not found at {oracle} — run "
               "`sbt \"runMain graft.Verify <sfDir> <outDir>\"` first",

@@ -124,7 +124,7 @@ object Bench {
     * x_epoch_schedule 1.12 (1.115/0.871). Re-recorded, work changed:
     * x_contam_strip 2.49 → 2.14 and x_span_strip 5.05 → 2.11 (−58%,
     * named — the staged coverage HOF plus a ceiling that predates the
-    * max-of-pair convention; StripAbProfile's A/B in BASELINE.md),
+    * max-of-pair convention; the staging A/B is in BASELINE.md),
     * x_index_health 2.47 → 2.24 (readings 2.234/1.574 — now includes
     * the two media cap rows). Re-recorded, stale pair-max ceilings of
     * sub-second queries (the round-18 adjudication's own rule,
@@ -138,7 +138,7 @@ object Bench {
     * noise floor, the ceiling stands. Late-round re-records:
     * x_corpus_export 4.17 → 3.35 (−20%, named — measured work
     * changed: the kept base is materialized once before the
-    * tree/join fan-out, ExportAbProfile's A/B and the re-run ladder
+    * tree/join fan-out, the export A/B and the re-run ladder
     * in BASELINE.md; the first re-record took the pair-max 3.06 from
     * readings 2.825/3.056 and the NEXT two quiet sweeps promptly read
     * 3.295/3.338 — the round-18 pair-max trap on a sink-bound query

@@ -5,27 +5,26 @@ import scala.collection.concurrent.TrieMap
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.DataFrame
 
-/** Per-JOB attribution profiler for the incremental-delta consumers
-  * (`x_incr_clusters` / `x_incr_split_leakage`) — the r21 "Not yet
-  * optimized" item: before touching the delta internals, measure
-  * which phase owns the seconds. The delta's phases are eager
-  * localCheckpoint jobs (demoted → jacTouch → fused plus/minus), the
-  * label loop is checkpoint+count jobs per round, and the final
-  * assembly is the noop write — so a job-end listener over ONE real
-  * run of the declared query yields the attribution table without
-  * touching the code under measurement.
+/** Per-JOB attribution profiler for named registry queries: a job-end
+  * listener over real runs of the declared queries yields, per job,
+  * its seconds, stages and tasks — which phase owns a query's time —
+  * without touching the code under measurement. A query's phases are
+  * its eager jobs (localCheckpoints, driver collects, label-loop
+  * rounds) followed by the final noop write.
   *
   * Emits one JSON line per drive: ordered [sec, stages, tasks] per
-  * job plus the wall total. Interleaves the two queries rep times
+  * job plus the wall total. Interleaves the named queries `reps` times
   * (isolated between drives). Run:
-  * `sbt "runMain graft.IncrAbProfile /root/testdata/sf0.1 2"`
+  * `sbt "runMain graft.Profile /root/testdata/sf0.1 2 x_incr_clusters,x_incr_split_leakage"`
   */
-object IncrAbProfile {
+object Profile {
 
   def main(args: Array[String]): Unit = {
-    val dir = args.lift(0).getOrElse("/root/testdata/sf0.1")
-    val reps = args.lift(1).getOrElse("2").toInt
-    val spark = Sessions.builder("graft-incr-ab").getOrCreate()
+    require(args.length == 3, "usage: graft.Profile <sfDir> <reps> <query,query,...>")
+    val dir = args(0)
+    val reps = args(1).toInt
+    val names = args(2).split(",").map(_.trim).toSeq
+    val spark = Sessions.builder("graft-profile").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000).selectExpr("sum(id)")
       .write.format("noop").mode("overwrite").save()
@@ -51,9 +50,6 @@ object IncrAbProfile {
         }
     })
 
-    val names = args.lift(2)
-      .map(_.split(",").map(_.trim).toSeq)
-      .getOrElse(Seq("x_incr_clusters", "x_incr_split_leakage"))
     val arms: Seq[(String, () => DataFrame)] = names.map(n =>
       n -> (() => SparkEntry.queries(n)(spark, dir)))
     for (r <- 1 to reps; (name, fn) <- arms) {
@@ -68,7 +64,7 @@ object IncrAbProfile {
         val sec = math.round(jobSec(jid) * 1000) / 1e3
         s"[$sec,${jobStages.getOrElse(jid, 0)},${jobTasks.getOrElse(jid, 0L)}]"
       }
-      println(s"""{"probe":"incr_ab","arm":"$name","rep":$r,""" +
+      println(s"""{"probe":"profile","arm":"$name","rep":$r,""" +
         s""""wall":$wall,"jobs":[${jobs.mkString(",")}]}""")
     }
     spark.stop()

@@ -283,9 +283,9 @@ object ScaleProbe {
     * the source verbatim (modulo recomputed `n_chars`, kept consistent
     * with the salted copies' longer texts).
     */
-  private[graft] def buildFixture(
+  private def buildFixture(
       spark: SparkSession, srcDir: String, dir: String, factor: Int): Long = {
-    queries.Pipeline.deleteTree(java.nio.file.Paths.get(dir))
+    sink.ParquetFiles.deleteTree(java.nio.file.Paths.get(dir))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
     val docs = spark.read.parquet(s"$srcDir/documents.parquet")
     val emb = spark.read.parquet(s"$srcDir/embeddings.parquet")

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.sink.ParquetFiles
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -288,10 +289,9 @@ object Pipeline {
 
   /** (doc_id, text, fl) for the contamination strip: training docs
     * left-joined with their flagged 3-shingle start positions —
-    * [[contamStrip]]'s base, shared with `StripAbProfile` so the
-    * projection-form A/B runs both arms over the identical frame.
+    * [[contamStrip]]'s base.
     */
-  private[graft] def contamFlaggedBase(
+  private def contamFlaggedBase(
       s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = Tables(s, dir, "documents")
@@ -326,8 +326,7 @@ object Pipeline {
     * it entirely on the unflagged majority, which also passes its
     * ORIGINAL text through with no split/rejoin round trip. ONE
     * definition shared by [[contamStrip]] (spanLen 3) and
-    * [[spanStrip]] (spanLen 5); `StripAbProfile` holds the one-JVM
-    * A/B of the staging decision.
+    * [[spanStrip]] (spanLen 5).
     */
   private[graft] def stripCoverageProjection(
       base: DataFrame, spanLen: Int): DataFrame = {
@@ -500,33 +499,12 @@ object Pipeline {
     * shorter, mirroring the oracle's empty-CTE propagation.
     */
   private def bpeTrainOf(s: SparkSession, docs: DataFrame)
-      : (Seq[(Int, String, String, Long)], DataFrame) =
-    bpeTrainRounds(s, bpeVocabOf(docs).localCheckpoint(), BPE_ROUNDS)
-
-  /** The vocab-state build (the ONE corpus pass), exposed for the
-    * horizon probe ([[graft.BpeProbe]]) so the corpus-touch cost and
-    * the per-round vocab-only cost are measurable separately.
-    */
-  private[graft] def bpeVocabState(docs: DataFrame): DataFrame =
-    bpeVocabOf(docs).localCheckpoint()
-
-  /** The merge loop from an already-checkpointed vocab state, horizon
-    * parameterized — `bpeMerges`/`bpeSegment`/`bpeDrift` run it at
-    * [[BPE_ROUNDS]] (the oracle horizon, unchanged); the probe runs
-    * deeper horizons over the SAME starting state to measure the
-    * rounds × O(vocab) driver-loop cost model with the corpus
-    * untouched after pass 1 (each round: one vocab-keyed pair
-    * aggregate + a 1-row TakeOrdered + a map-side replace over the
-    * vocab — nothing corpus-sized).
-    */
-  private[graft] def bpeTrainRounds(
-      s: SparkSession, vocab0: DataFrame, horizon: Int)
       : (Seq[(Int, String, String, Long)], DataFrame) = {
     import s.implicits._
-    var vocab = vocab0
+    var vocab = bpeVocabOf(docs).localCheckpoint()
     val rounds = scala.collection.mutable.ListBuffer.empty[(Int, String, String, Long)]
     var exhausted = false
-    (1 to horizon).foreach { r =>
+    (1 to BPE_ROUNDS).foreach { r =>
       if (!exhausted) {
         bpePairCounts(vocab)
           .orderBy($"pair_count".desc, $"a", $"b").limit(1)
@@ -1092,14 +1070,14 @@ object Pipeline {
   def spanStrip(s: SparkSession, dir: String): DataFrame =
     // coverage filter staged once per flagged row, both outputs derive
     // from the staged column — [[stripCoverageProjection]], ONE
-    // definition with contamStrip; StripAbProfile carries the A/B
+    // definition with contamStrip
     stripCoverageProjection(spanFlaggedBase(s, dir), 5)
       .orderBy(col("doc_id"))
 
-  /** (doc_id, text, fl) for the cross-document span strip — shared
-    * with `StripAbProfile` (the [[contamFlaggedBase]] contract).
+  /** (doc_id, text, fl) for the cross-document span strip —
+    * [[spanStrip]]'s base (the [[contamFlaggedBase]] shape).
     */
-  private[graft] def spanFlaggedBase(
+  private def spanFlaggedBase(
       s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = Tables(s, dir, "documents")
@@ -1270,44 +1248,6 @@ object Pipeline {
 
   def shingleNovelty(s: SparkSession, dir: String): DataFrame =
     noveltyCore(s, dir, defaultBatchPred).orderBy(col("doc_id"))
-
-  /** A/B frames for the hashed-join-key sweep: [[contamination]] and
-    * [[shingleNovelty]] paired with their pre-rewrite STRING-keyed
-    * controls, reconstructed so old-vs-new measures in one JVM (the
-    * [[edgeStageFrames]] `ngram_pairs_legacy` discipline — cross-run
-    * drift on this box exceeds the effect size). Driven by
-    * [[graft.HashKeyProfile]].
-    */
-  private[graft] def hashKeyAbFrames(
-      s: SparkSession, dir: String): Seq[(String, DataFrame)] = {
-    import s.implicits._
-    val contaminationLegacy = {
-      val sh = keptShingles(s, dir)
-      val bench = sh.filter($"doc_id" % 50 === 0).select($"s").distinct()
-      sh.filter($"doc_id" % 50 =!= 0)
-        .join(broadcast(bench), "s")
-        .groupBy($"doc_id")
-        .agg(count(lit(1)).as("n_contaminated_shingles"))
-        .orderBy($"doc_id")
-    }
-    val noveltyLegacy = {
-      val sh = shinglesOf(Tables(s, dir, "documents"))
-      val batch = sh.filter(defaultBatchPred)
-      val corpus = sh.filter(!defaultBatchPred).select($"s").distinct()
-      val totals = batch.groupBy($"doc_id").agg(count(lit(1)).as("n_shingles"))
-      val novel = batch.join(corpus, Seq("s"), "left_anti")
-        .groupBy($"doc_id").agg(count(lit(1)).as("nn"))
-      totals.join(novel, Seq("doc_id"), "left")
-        .select($"doc_id", $"n_shingles",
-          coalesce($"nn", lit(0L)).as("n_novel"))
-        .withColumn("novelty_ppm", expr("(n_novel * 1000000) div n_shingles"))
-    }
-    Seq(
-      "contamination_legacy" -> contaminationLegacy,
-      "contamination_hashed" -> contamination(s, dir),
-      "novelty_legacy" -> noveltyLegacy,
-      "novelty_hashed" -> shingleNovelty(s, dir))
-  }
 
   /** Serialized Bloom filter of the corpus's distinct shingle
     * universe — the broadcastable stand-in for [[noveltyCore]]'s
@@ -1626,20 +1566,7 @@ object Pipeline {
     * `levenshtein` is the standard unit-cost
     * insert/delete/substitute distance, so the oracle is exact.
     */
-  def editVerify(s: SparkSession, dir: String): DataFrame =
-    editVerifyKernel(s, dir, banded = true)
-
-  /** [[editVerify]] with the kernel selectable — the A/B instrument
-    * behind the banded-kernel adoption ([[graft.EditVerifyProfile]]):
-    * `banded = true` is the shipped 3-arg thresholded Levenshtein
-    * (O(cap·len) cells per pair); `banded = false` runs the full
-    * O(len²) lattice and applies the SAME `least(dist, cap + 1)`
-    * output cap post-hoc, so both arms produce identical rows and the
-    * measured delta is the kernel alone (candidate generation and the
-    * verify projection are shared).
-    */
-  private[graft] def editVerifyKernel(
-      s: SparkSession, dir: String, banded: Boolean): DataFrame = {
+  def editVerify(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val pairs = minhashCandPairs(s, dir, withSig = false)
       .select($"a_id", $"b_id")
@@ -1649,9 +1576,7 @@ object Pipeline {
       .join(broadcast(pairs), "a_id")
     // thresholded kernel: O(cap·len) per pair, −1 past the cap → the
     // declared least(dist, cap+1) output (EDIT_DIST_CAP doc)
-    val lev =
-      if (banded) levenshtein($"ta", $"tb", EDIT_DIST_CAP)
-      else least(levenshtein($"ta", $"tb"), lit(EDIT_DIST_CAP + 1))
+    val lev = levenshtein($"ta", $"tb", EDIT_DIST_CAP)
     t.select($"doc_id".as("b_id"), $"t".as("tb"))
       .join(broadcast(withA), "b_id")
       .select($"a_id", $"b_id",
@@ -2334,51 +2259,6 @@ object Pipeline {
     * `x_simhash_pairs`, `x_embed_near_dup`); this artifact is their
     * consumer-side amortization.
     */
-  /** The edge build's internal stages as drivable frames, upstream to
-    * downstream per family — the [[graft.EdgeProfile]] instrumentation
-    * surface: timing each with a noop write brackets every stage's
-    * marginal cost (stage k's time minus stage k−1's ≈ the cost k
-    * adds), which is how the 30× edge-build constant factor gets
-    * attributed to a specific exchange instead of guessed at.
-    */
-  private[graft] def edgeStageFrames(
-      s: SparkSession, dir: String): Seq[(String, DataFrame)] = Seq(
-    "kept_shingles" -> keptShingles(s, dir),
-    // the round-11 optimization's control: the pre-rewrite ngram PAIR
-    // pipeline (string pair-index keys, least/greatest/first
-    // orientation), reconstructed so old-vs-new measures in ONE JVM —
-    // cross-run machine drift on this box exceeds the effect size.
-    // NOT fully pre-rewrite: it feeds from keptShingles, whose df-cap
-    // stage was itself moved to xxhash64 keys in the same round-11
-    // change, so the control already includes that part of the
-    // optimization and the measured delta UNDERSTATES the true win —
-    // the A/B isolates the pair-index keying only
-    "ngram_pairs_legacy" -> {
-      import org.apache.spark.sql.expressions.Window
-      val kept = keptShingles(s, dir)
-        .withColumn("n",
-          count(lit(1)).over(Window.partitionBy(col("doc_id"))))
-      kept.groupBy(col("s"))
-        .agg(collect_list(struct(col("doc_id"), col("n"))).as("g"))
-        .filter(size(col("g")) >= 2)
-        .select(posexplode(col("g")).as(Seq("px", "x")), col("g"))
-        .select(col("x"), explode(slice(col("g"), col("px") + lit(2),
-          size(col("g")) - col("px") - lit(1))).as("y"))
-        .groupBy(least(col("x.doc_id"), col("y.doc_id")).as("a_id"),
-          greatest(col("x.doc_id"), col("y.doc_id")).as("b_id"))
-        .agg(count(lit(1)).as("c"),
-          first(when(col("x.doc_id") < col("y.doc_id"), col("x.n"))
-            .otherwise(col("y.n"))).as("na"),
-          first(when(col("x.doc_id") < col("y.doc_id"), col("y.n"))
-            .otherwise(col("x.n"))).as("nb"))
-    },
-    "ngram_pair_counts" -> ngramPairCounts(s, dir),
-    "ngram_jaccard" -> ngramJaccard(s, dir),
-    "rep_docs" -> repDocs(s, dir),
-    "fingerprints" -> fingerprintsOf(repDocs(s, dir)),
-    "simhash_pairs" -> simhashPairs(s, dir),
-    "embed_near_dup" -> embedNearDup(s, dir))
-
   def ensureEdgeGraph(s: SparkSession, dir: String): java.nio.file.Path = {
     // the artifact's stamp covers documents via ensureArtifact; the
     // semantic edges read embeddings too, so its size+mtime joins the
@@ -3378,7 +3258,7 @@ object Pipeline {
     // jaccard touching core at its pair-aggregation exchange — each
     // is planned once and its shuffle output shared by all its
     // consumers; only the cheap post-exchange projections re-run).
-    // The r22 IncrAbProfile read the incr pair as ~76 serialized
+    // A per-job [[graft.Profile]] read the incr pair as ~76 serialized
     // sub-second jobs — job COUNT, not compute, owns the seconds —
     // and dropping the two pins lets the jaccard, simhash, semantic
     // and retraction subtrees schedule CONCURRENTLY inside the one
@@ -3835,6 +3715,15 @@ object Pipeline {
       .orderBy($"family")
   }
 
+  /** One cap family's keyed frame as `(family, k1: string, k2: string,
+    * doc: long)` — key components cast to string (injective per
+    * family; `family` is part of every grouping and join key, so
+    * cross-family collisions cannot merge groups). A missing second
+    * key component is the non-null sentinel `""` (never produced by a
+    * cast of a numeric component), NOT null — the carrier semi-join
+    * must match on it; a genuinely-null key component stays null and
+    * falls out of the semi-join.
+    */
   private def normKeyed(keyed: DataFrame, fam: String, k1: Column,
       k2: Column, doc: Column): DataFrame =
     keyed.select(lit(fam).as("family"), k1.cast("string").as("k1"),
@@ -3845,116 +3734,6 @@ object Pipeline {
       .when(col("family") === "cell", lit(EMBED_CELL_CAP))
       .when(col("family") === "shingle", lit(SHINGLE_DF_CAP.toLong))
       .otherwise(lit(graft.multimodal.Multimodal.FRAME_DF_CAP.toLong))
-
-  /** The r22 two-pass fused shape WITHOUT the checkpoint+prune tail,
-    * kept as the `fused` A/B arm.
-    */
-  private[graft] def indexHealthFusedNoCkpt(s: SparkSession, dir: String): DataFrame =
-    indexHealthFrom(s, indexHealthUnion(s, dir))
-
-  /** The five cap families as ONE normalized frame
-    * `(family, k1: string, k2: string, doc: long)` — key components
-    * cast to string (injective per family; `family` is part of every
-    * grouping and join key, so cross-family collisions cannot merge
-    * groups). A missing second key component is the non-null sentinel
-    * `""` (never produced by a cast of a numeric component), NOT
-    * null — the carrier semi-join must match on it; a genuinely-null
-    * key component stays null so it keeps falling out of the
-    * semi-join exactly as it did under the per-family joins.
-    */
-  private[graft] def indexHealthUnion(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables(s, dir, "documents")
-    val mm = graft.multimodal.Multimodal
-    normKeyed(fingerprintBands(s, dir), "band",
-        col("band_idx"), col("band"), col("doc_id"))
-      .unionByName(normKeyed(Tables(s, dir, "embeddings"), "cell",
-        col("label"), lit(""), col("vec_id")))
-      .unionByName(normKeyed(shinglesOf(docs), "shingle",
-        col("s"), lit(""), col("doc_id")))
-      // the two MEDIA cap families (round 19): frame-window df and
-      // prefix-ladder entries, both screened by FRAME_DF_CAP — the
-      // keyed tables are the PRE-CAP feature frames the index builds
-      // actually filter (frameWindowsPreCap / ladderEntriesPreCap,
-      // one definition with the builds).
-      .unionByName(normKeyed(mm.frameWindowsPreCap(s, dir), "frame",
-        col("frame_md5"), lit(""), col("asset_id")))
-      .unionByName(normKeyed(mm.ladderEntriesPreCap(s, docs), "prefix",
-        col("l"), col("ph"), col("asset_id")))
-  }
-
-  /** The report body over [[indexHealthUnion]]'s normalized frame —
-    * split out so the A/B profiler can drive variant frames through
-    * the identical tail.
-    */
-  private[graft] def indexHealthFrom(s: SparkSession, u: DataFrame): DataFrame = {
-    import s.implicits._
-    val mm = graft.multimodal.Multimodal
-    val capOf = when($"family" === "band", lit(BAND_CAP.toLong))
-      .when($"family" === "cell", lit(EMBED_CELL_CAP))
-      .when($"family" === "shingle", lit(SHINGLE_DF_CAP.toLong))
-      .otherwise(lit(mm.FRAME_DF_CAP.toLong))
-    // ONE per-key count; `stats` and `over` both hang off this frame,
-    // so its exchange is planned once and reused (identical subtree)
-    val cnt = u.groupBy($"family", $"k1", $"k2")
-      .agg(count(lit(1)).as("m"))
-      .withColumn("cap", capOf)
-    val stats = cnt.groupBy($"family").agg(
-      count(lit(1)).as("n_keys"),
-      max($"m").as("max_members"),
-      sum(when($"m" > $"cap", 1L).otherwise(0L)).as("n_over_cap"))
-    val over = cnt.filter($"m" > $"cap").select($"family", $"k1", $"k2")
-    val carriers = u.join(broadcast(over), Seq("family", "k1", "k2"), "left_semi")
-      .groupBy($"family").agg(countDistinct($"doc").as("n_carrier_docs"))
-    // zero-safe: an EMPTY family (a corpus with no media, say) reads
-    // 0/0/0/0, not NULL, and never loses its row — the report is a
-    // fixed-spine operational table consumers read positionally
-    val spine = Seq("band", "cell", "frame", "prefix", "shingle").toDF("family")
-    spine.join(broadcast(stats), Seq("family"), "left")
-      .join(broadcast(carriers), Seq("family"), "left")
-      .select($"family",
-        coalesce($"n_keys", lit(0L)).as("n_keys"),
-        coalesce($"max_members", lit(0L)).as("max_members"),
-        coalesce($"n_over_cap", lit(0L)).as("n_over_cap"),
-        coalesce($"n_carrier_docs", lit(0L)).as("n_carrier_docs"))
-      .orderBy($"family")
-  }
-
-  /** The pre-r22 five-pipeline shape of [[indexHealth]], kept ONLY as
-    * the A arm of `graft.IndexHealthAbProfile` (measurement artifact,
-    * not production code — the declared query runs the fused form).
-    */
-  private[graft] def indexHealthLegacy(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    def famRow(keyed: DataFrame, docCol: String, keyCols: Seq[String],
-        cap: Long, fam: String): DataFrame = {
-      val cnt = keyed.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("m"))
-      val stats = cnt.agg(
-        count(lit(1)).as("n_keys"),
-        coalesce(max($"m"), lit(0L)).as("max_members"),
-        coalesce(sum(when($"m" > cap, 1L).otherwise(0L)), lit(0L))
-          .as("n_over_cap"))
-      val over = cnt.filter($"m" > cap).select(keyCols.map(col): _*)
-      val carriers = keyed
-        .join(broadcast(over), keyCols, "left_semi")
-        .agg(countDistinct(col(docCol)).as("n_carrier_docs"))
-      stats.crossJoin(carriers)
-        .select(lit(fam).as("family"), $"n_keys", $"max_members",
-          $"n_over_cap", $"n_carrier_docs")
-    }
-    val docs = Tables(s, dir, "documents")
-    val mm = graft.multimodal.Multimodal
-    famRow(fingerprintBands(s, dir), "doc_id", Seq("band_idx", "band"),
-        BAND_CAP, "band")
-      .unionByName(famRow(Tables(s, dir, "embeddings"), "vec_id",
-        Seq("label"), EMBED_CELL_CAP, "cell"))
-      .unionByName(famRow(shinglesOf(docs), "doc_id", Seq("s"),
-        SHINGLE_DF_CAP, "shingle"))
-      .unionByName(famRow(mm.frameWindowsPreCap(s, dir), "asset_id",
-        Seq("frame_md5"), mm.FRAME_DF_CAP, "frame"))
-      .unionByName(famRow(mm.ladderEntriesPreCap(s, docs), "asset_id",
-        Seq("l", "ph"), mm.FRAME_DF_CAP, "prefix"))
-      .orderBy($"family")
-  }
 
   lazy val indexHealthSql: String =
     s"""WITH shx AS (${shinglesSqlFrom("documents")}),
@@ -7103,9 +6882,9 @@ object Pipeline {
   }
 
   /** Token budget per training shard in [[shardPlan]].
-    * `private[graft]` so ShardProbe and the export/epoch specs track
-    * the constant instead of restating the literal — a future budget
-    * change must not fail them for a stale reason.
+    * `private[graft]` so the export/epoch specs track the constant
+    * instead of restating the literal — a future budget change must
+    * not fail them for a stale reason.
     */
   private[graft] val SHARD_TOKEN_BUDGET = 4096L
 
@@ -7458,11 +7237,10 @@ object Pipeline {
     * input twice, the text join once), and the manifest decision under
     * it is itself a multi-scan subtree — unmaterialized, the whole
     * manifest + text pass replicates into every branch (a measured
-    * 24-scan plan, 20 of them carrying the corpus text column;
-    * ExportAbProfile holds the one-JVM A/B). The checkpoint's
-    * lifecycle follows the incrDelta returned-checkpoint contract:
-    * the caller's harness (or [[corpusExport]]'s freeCheckpoint of
-    * the pre-checkpoint plan) reclaims it.
+    * 24-scan plan, 20 of them carrying the corpus text column). The
+    * checkpoint's lifecycle follows the incrDelta returned-checkpoint
+    * contract: the caller's harness (or [[corpusExport]]'s
+    * freeCheckpoint of the pre-checkpoint plan) reclaims it.
     */
   private[graft] def exportPackedSlice(s: SparkSession, dir: String,
       pred: Column, offsetTokens: Column): DataFrame =
@@ -7490,10 +7268,8 @@ object Pipeline {
         $"shard_id", $"text")
   }
 
-  /** The manifest's kept doc-id slice (ExportAbProfile shares it with
-    * the profile's A arm).
-    */
-  private[graft] def manifestKeptIds(s: SparkSession, dir: String): DataFrame = {
+  /** The manifest's kept doc-id slice. */
+  private def manifestKeptIds(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     manifestCore(s, dir).filter($"reason" === "kept").select($"doc_id")
   }
@@ -7547,12 +7323,8 @@ object Pipeline {
 
   lazy val exportStatsSql: String = shardStatsSqlFrom(exportAssignSql)
 
-  /** The export's seeded permutation key / packing tree, exposed for
-    * ExportAbProfile's A arm.
-    */
-  private[graft] def exportShuffleKey(id: Column): Column = shuffleKeyCol(id)
-
-  private[graft] def exportPrefixSum(toks: DataFrame): DataFrame =
+  /** The export's packing tree over (doc_id, shuffle_key, n_tokens). */
+  private def exportPrefixSum(toks: DataFrame): DataFrame =
     exclusivePrefixSumUniform(toks, "shuffle_key", "doc_id", "n_tokens")
       .withColumn("shard_id", expr(s"cum_before div $SHARD_TOKEN_BUDGET"))
       .select(col("doc_id"), col("n_tokens"), col("cum_before"),
@@ -7655,7 +7427,7 @@ object Pipeline {
     * fan-in: each micro-batch costs two jobs (the sink's row-size
     * sample + the write), so an unmaterialized plan re-runs the
     * keep decision and the prefix-sum tree 2×EXPORT_BATCHES times —
-    * ShardProbe measured 18.6/33.1/55.0 s unmaterialized vs
+    * the round-19 scale ladder read 18.6/33.1/55.0 s unmaterialized vs
     * 5.5/9.9/17.3 s checkpointed at 1×/10×/30×. localCheckpoint
     * stores in EXECUTOR storage (memory-and-disk, distributed) — at
     * deployment scale the same move is a persisted staging table,
@@ -7681,7 +7453,7 @@ object Pipeline {
         .localCheckpoint()
     } finally {
       // independent cleanups: a failed unpersist must not strand the dir
-      try freeCheckpoint(packed) finally deleteTree(root)
+      try freeCheckpoint(packed) finally ParquetFiles.deleteTree(root)
     }
   }
 
@@ -7802,7 +7574,7 @@ object Pipeline {
     } finally {
       // a throwing unpersist must not strand the temp copy dir — the
       // exportAndReadBack discipline
-      try freeCheckpoint(packed) finally deleteTree(root)
+      try freeCheckpoint(packed) finally ParquetFiles.deleteTree(root)
     }
   }
 
@@ -8856,7 +8628,7 @@ object Pipeline {
       if (!java.nio.file.Files.exists(p.resolve("_SUCCESS"))) {
         // a dir without _SUCCESS is a partial artifact from a killed
         // run — it would make the rename below fail forever; clear it
-        deleteTree(p)
+        ParquetFiles.deleteTree(p)
         val staging = p.resolveSibling(
           p.getFileName.toString + ".tmp-" + ProcessHandle.current.pid)
         try {
@@ -8885,20 +8657,9 @@ object Pipeline {
           }
         // covers the race-loser copy AND a build that threw mid-write —
         // a no-op when the rename moved staging into place
-        } finally deleteTree(staging)
+        } finally ParquetFiles.deleteTree(staging)
       }
       p
-    }
-
-  private[graft] def deleteTree(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      // materialize then close: Files.walk holds a directory fd open
-      val s = java.nio.file.Files.walk(p)
-      val paths = try s
-        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .iterator.asScala.toSeq finally s.close()
-      paths.foreach(java.nio.file.Files.deleteIfExists(_))
     }
 
   def ensureIvfLayout(s: SparkSession, dir: String): java.nio.file.Path =

@@ -1,6 +1,7 @@
 package graft.sink
 
 import java.nio.file.{Files, Path, StandardCopyOption}
+import java.util.Comparator
 
 import scala.jdk.CollectionConverters._
 
@@ -73,6 +74,18 @@ object ParquetFiles {
     out.close()
     Files.move(tmp, dest, StandardCopyOption.REPLACE_EXISTING)
     parts.foreach(Files.deleteIfExists(_))
+  }
+
+  /** Deletes `p` and everything under it; a missing `p` is a no-op.
+    * The one recursive delete in the codebase: the sinks' overwrite and
+    * staging cleanup, and the query layer's artifact directories.
+    */
+  def deleteTree(p: Path): Unit = if (Files.exists(p)) {
+    // materialize then close: Files.walk holds a directory fd open
+    val s = Files.walk(p)
+    val paths = try s.sorted(Comparator.reverseOrder[Path]())
+      .iterator.asScala.toSeq finally s.close()
+    paths.foreach(Files.deleteIfExists(_))
   }
 
   /** (rowGroupCount, totalRows, maxRowsInAnyGroup) from a file footer —

@@ -1,7 +1,6 @@
 package graft.sink
 
 import java.nio.file.{FileAlreadyExistsException, Files, NoSuchFileException, Path}
-import java.util.Comparator
 
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
@@ -105,7 +104,7 @@ final class ParquetStreamSink(
       // is about to remove before removing it
       if (Files.isDirectory(path)) log.info(s"Deleting existing directory: $path")
       else log.info(s"Deleting existing file: $path")
-      deleteRecursively(path)
+      ParquetFiles.deleteTree(path)
     } else throw new FileAlreadyExistsException(s"'$path' already exists.")
   }
   if (path.getParent == null || !Files.exists(path.getParent))
@@ -239,14 +238,6 @@ final class ParquetStreamSink(
 
   private def ensureOpen(): Unit =
     if (closed) throw new IllegalStateException("sink is closed")
-
-  private def deleteRecursively(p: Path): Unit = {
-    // materialize then close: Files.walk holds a directory fd open
-    val s = Files.walk(p)
-    val paths = try s.sorted(Comparator.reverseOrder[Path]())
-      .iterator.asScala.toSeq finally s.close()
-    paths.foreach(Files.deleteIfExists(_))
-  }
 }
 
 object ParquetStreamSink {

@@ -9,7 +9,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, sum}
 import org.apache.spark.sql.types.StructType
 
-import graft.sink.ColumnarSizeExpr
+import graft.sink.{ColumnarSizeExpr, ParquetFiles}
 
 /** The DISTRIBUTED execution mode of the streaming Parquet sink — the
   * shape the same semantics take on a 1000-executor cluster, where the
@@ -89,7 +89,7 @@ final class StreamingShardSink(
   private val commitLog: Path = path.resolve("_graft_commits.tsv")
 
   if (Files.exists(path) && !resume) {
-    if (overwrite) deleteRecursively(path)
+    if (overwrite) ParquetFiles.deleteTree(path)
     else throw new FileAlreadyExistsException(s"'$path' already exists.")
   }
   if (path.getParent == null || !Files.exists(path.getParent))
@@ -106,10 +106,6 @@ final class StreamingShardSink(
   private def withStream[A](s: java.util.stream.Stream[Path])(
       f: Iterator[Path] => A): A =
     try f(s.iterator.asScala) finally s.close()
-
-  private def deleteRecursively(p: Path): Unit =
-    withStream(Files.walk(p))(
-      _.toSeq.sorted(Ordering[Path].reverse).foreach(Files.deleteIfExists(_)))
 
   private def restoreFromCommitLog(): Unit = {
     if (Files.exists(commitLog)) {
@@ -162,7 +158,7 @@ final class StreamingShardSink(
     // leftover staging dirs from a crashed batch attempt
     withStream(Files.list(path))(
       _.filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith(".batch-"))
-        .toSeq).foreach(deleteRecursively)
+        .toSeq).foreach(ParquetFiles.deleteTree)
   }
 
   private def appendCommit(batchId: Long, start: Int, n: Int): Unit = {
@@ -217,7 +213,9 @@ final class StreamingShardSink(
       val n = p.getFileName.toString
       if (n.startsWith(s"$prefix-") && n.endsWith(".parquet")) {
         val idx = n.stripPrefix(s"$prefix-").stripSuffix(".parquet")
-        if (idx.forall(_.isDigit) && idx.toInt >= shardIndex) Files.delete(p)
+        // BigInt: an all-digit index past Int range is still an orphan
+        if (idx.nonEmpty && idx.forall(_.isDigit) && BigInt(idx) >= shardIndex)
+          Files.delete(p)
       }
     }
     val start = shardIndex
@@ -268,6 +266,6 @@ final class StreamingShardSink(
       manifest += dest
       shardIndex += 1
     }
-    deleteRecursively(staging)
+    ParquetFiles.deleteTree(staging)
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.sink.ParquetFiles
 
 /** The incremental media-dedup contract: linking the arriving batch
   * against the persisted frame index yields EXACTLY the pairs a full
@@ -75,6 +76,6 @@ class MediaIncrSpec extends AnyFunSuite {
       assert(!pairs.exists(p => p._1 == 11L || p._2 == 11L),
         s"boilerplate prefix must be capped before pairing: " +
           pairs.filter(p => p._1 == 11L || p._2 == 11L))
-    } finally graft.queries.Pipeline.deleteTree(java.nio.file.Paths.get(tmp))
+    } finally ParquetFiles.deleteTree(java.nio.file.Paths.get(tmp))
   }
 }

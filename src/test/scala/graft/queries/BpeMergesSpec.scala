@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.sink.ParquetFiles
 
 /** Hand-derived BPE training rounds: the classic low/lower/lowest
   * corpus pins argmax + tie-break + merge chaining, and an
@@ -33,7 +34,7 @@ class BpeMergesSpec extends AnyFunSuite {
       assert(got.toSeq == Seq(
         (1, "l", "o", 5L), (2, "lo", "w", 5L), (3, "low", "e", 2L)),
         s"merge table must match hand-derived BPE rounds: ${got.toSeq}")
-    } finally Pipeline.deleteTree(java.nio.file.Paths.get(dir))
+    } finally ParquetFiles.deleteTree(java.nio.file.Paths.get(dir))
   }
 
   test("bpeSegment: per-lang symbol/char compression from the same merges") {
@@ -53,7 +54,7 @@ class BpeMergesSpec extends AnyFunSuite {
       assert(got.toSeq == Seq(
         ("de", 2L, 9L, 4L, 444444L), ("en", 3L, 11L, 4L, 363636L)),
         s"per-lang segmentation stats must match hand values: ${got.toSeq}")
-    } finally Pipeline.deleteTree(java.nio.file.Paths.get(dir))
+    } finally ParquetFiles.deleteTree(java.nio.file.Paths.get(dir))
   }
 
   test("bpeTrain: merging is lossless — post-merge symbols reassemble every word, counts shrink") {
@@ -77,7 +78,7 @@ class BpeMergesSpec extends AnyFunSuite {
         assert(n >= 1 && n <= w.length,
           s"symbol count must stay within [1, chars]: '$w' → '$syms'")
       }
-    } finally Pipeline.deleteTree(java.nio.file.Paths.get(dir))
+    } finally ParquetFiles.deleteTree(java.nio.file.Paths.get(dir))
   }
 
   test("bpeDrift: a batch arrival flips the argmax; exhausted rounds drop from both sides") {
@@ -97,7 +98,7 @@ class BpeMergesSpec extends AnyFunSuite {
         (1, "x", "y", "a", "b", true),
         (2, "a", "b", "x", "y", true)),
         s"planted batch must flip both rounds, third round exhausts: ${got.toSeq}")
-    } finally Pipeline.deleteTree(java.nio.file.Paths.get(dir))
+    } finally ParquetFiles.deleteTree(java.nio.file.Paths.get(dir))
   }
 
   test("bpeMerges: abutting pairs fuse under the two-pass replace rule") {
@@ -117,6 +118,6 @@ class BpeMergesSpec extends AnyFunSuite {
       assert(got(1) == ((2, "aa", "aa", 2L)), s"round 2: ${got.toSeq}")
       // round 3: 'aaaa' is a single symbol now; only (a,b) remains
       assert(got(2) == ((3, "a", "b", 1L)), s"round 3: ${got.toSeq}")
-    } finally Pipeline.deleteTree(java.nio.file.Paths.get(dir))
+    } finally ParquetFiles.deleteTree(java.nio.file.Paths.get(dir))
   }
 }

@@ -7,6 +7,7 @@ import scala.util.Random
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.sink.ParquetFiles
 
 /** Randomized compaction-repair ≡ full-rebuild identity — the seeded
   * sweep [[CompactionRunSpec]]'s single planted corpus doesn't give:
@@ -122,7 +123,7 @@ class CompactionPropSpec extends AnyFunSuite {
         assert(kept.forall { case (a, b) =>
             !carriers.contains(a) && !carriers.contains(b) },
           s"seed $seed: kept rows must not touch the crossing")
-      } finally Pipeline.deleteTree(java.nio.file.Paths.get(dir))
+      } finally ParquetFiles.deleteTree(java.nio.file.Paths.get(dir))
     }
   }
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.sink.ParquetFiles
 
 /** The compaction-repair contract on a corpus where the incremental
   * path is provably WRONG: [[Pipeline.ensureCrossedCorpus]] plants a
@@ -111,7 +112,7 @@ class CompactionRunSpec extends AnyFunSuite {
         s"rebuild stage must stay confined to the survivor diff: " +
           s"${repairedRows.filterNot { case (a, b) =>
             a == 7L || b == 7L || a == evicted || b == evicted }.take(5)}")
-    } finally Pipeline.deleteTree(java.nio.file.Paths.get(dir2))
+    } finally ParquetFiles.deleteTree(java.nio.file.Paths.get(dir2))
   }
 
   /** The DEPARTURE case: rep demotion removes a doc's fingerprint
@@ -157,6 +158,6 @@ class CompactionRunSpec extends AnyFunSuite {
       assert(repaired == full,
         s"repair must regenerate the re-entrant's pairs: " +
           s"extra=${(repaired -- full).take(5)} missing=${(full -- repaired).take(5)}")
-    } finally Pipeline.deleteTree(java.nio.file.Paths.get(dir3))
+    } finally ParquetFiles.deleteTree(java.nio.file.Paths.get(dir3))
   }
 }

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.sink.ParquetFiles
 
 /** Duplicate-cluster resolution: min-label connected components over
   * the near-dup pair graph, the step a dedup pipeline runs after pair
@@ -194,7 +195,7 @@ class DedupClusterSpec extends AnyFunSuite {
         s"val: (val,test) pair must not leak, singleton can't: ${got("val")}")
       assert(got("test") == ((3L, 2L, 1L, 333333L)),
         s"test: only the (train,test) member leaks: ${got("test")}")
-    } finally Pipeline.deleteTree(java.nio.file.Paths.get(dir))
+    } finally ParquetFiles.deleteTree(java.nio.file.Paths.get(dir))
   }
 
   test("splitRepair: clusters land whole on the min member's split, singletons and anchors never move") {
@@ -233,6 +234,6 @@ class DedupClusterSpec extends AnyFunSuite {
       // checked here structurally (pairs share the min member's split)
       assert(got.values.map(_._1).sum == got.values.map(_._2).sum,
         "repair must conserve the corpus")
-    } finally Pipeline.deleteTree(java.nio.file.Paths.get(dir))
+    } finally ParquetFiles.deleteTree(java.nio.file.Paths.get(dir))
   }
 }

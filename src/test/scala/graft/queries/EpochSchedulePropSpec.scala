@@ -7,6 +7,7 @@ import scala.util.Random
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.sink.ParquetFiles
 
 /** Randomized epoch-schedule ≡ first-principles identity — the seeded
   * sweep [[EpochScheduleSpec]]'s single engineered corpus doesn't
@@ -98,7 +99,7 @@ class EpochSchedulePropSpec extends AnyFunSuite {
         got.foreach { case (key, row) =>
           assert(row == expect(key), s"seed $seed doc/copy $key: $row vs ${expect(key)}")
         }
-      } finally Pipeline.deleteTree(java.nio.file.Paths.get(dir))
+      } finally ParquetFiles.deleteTree(java.nio.file.Paths.get(dir))
     }
   }
 }

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.sink.ParquetFiles
 
 /** Hand-arithmetic semantics of the epoch-schedule realization
   * (`x_epoch_schedule`) on a corpus engineered so every arm of the
@@ -130,7 +131,7 @@ class EpochScheduleSpec extends AnyFunSuite {
       val bMilli = bMass * 1000L / 120L
       assert(real("srcB") == (((45L + winners, bMass, bMilli,
         bMilli - 3766L))), s"srcB: ${real("srcB")} vs coin expansion")
-    } finally Pipeline.deleteTree(java.nio.file.Paths.get(dir))
+    } finally ParquetFiles.deleteTree(java.nio.file.Paths.get(dir))
   }
 
   test("scheduled copies export through the sink: manifest order carries the permutation with duplicate doc_ids") {
@@ -190,6 +191,6 @@ class EpochScheduleSpec extends AnyFunSuite {
         .parquet(out.toString).collect().map(_.toString).sorted
       val src = packed.collect().map(_.toString).sorted
       assert(back.length == src.length && back.sameElements(src))
-    } finally Pipeline.deleteTree(java.nio.file.Paths.get(dir))
+    } finally ParquetFiles.deleteTree(java.nio.file.Paths.get(dir))
   }
 }

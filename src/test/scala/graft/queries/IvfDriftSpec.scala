@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.sink.ParquetFiles
 
 /** Boundary semantics of the IVF drift monitor on an engineered
   * corpus: a brand-new cell (every member batch-id) must flag with a
@@ -78,6 +79,6 @@ class IvfDriftSpec extends AnyFunSuite {
       // numerator join with NULL drift and still flag as new
       assert(got(4) == ((0L, 1L, None, true)),
         s"empty-embedding new cell must stay in the monitor: ${got(4)}")
-    } finally Pipeline.deleteTree(java.nio.file.Paths.get(dir))
+    } finally ParquetFiles.deleteTree(java.nio.file.Paths.get(dir))
   }
 }

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.sink.ParquetFiles
 
 /** Scale-safety bounds of the LSH near-dup family: band groups are
   * materialized with `collect_list`, so a degenerate band value (every
@@ -132,6 +133,6 @@ class LshBoundSpec extends AnyFunSuite {
       // the disjoint doc shares no shingle, so no band, no pair
       assert(!got.keySet.exists(p => p._1 == 3L || p._2 == 3L),
         s"disjoint doc must not reach the verify stage: ${got.keySet}")
-    } finally Pipeline.deleteTree(java.nio.file.Paths.get(dir))
+    } finally ParquetFiles.deleteTree(java.nio.file.Paths.get(dir))
   }
 }

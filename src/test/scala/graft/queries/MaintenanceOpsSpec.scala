@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.sink.ParquetFiles
 
 /** Engineered-corpus semantics for the round-10 additions: the
   * substring-level duplicate-span audit, the quality threshold sweep,
@@ -54,7 +55,7 @@ class MaintenanceOpsSpec extends AnyFunSuite {
         s"sub-span doc passes through byte-identical: ${strip(3)}")
       assert(strip(4) == (("", 6L)) && strip(5) == strip(4),
         s"fully-duplicated docs strip to empty: ${strip(4)} ${strip(5)}")
-    } finally Pipeline.deleteTree(java.nio.file.Paths.get(dir))
+    } finally ParquetFiles.deleteTree(java.nio.file.Paths.get(dir))
   }
 
   test("qualitySweep: fixed 20-row spine whose cumulative foots to the corpus totals") {
@@ -85,7 +86,7 @@ class MaintenanceOpsSpec extends AnyFunSuite {
       val kept = rows.map(r => (r.getLong(2), r.getLong(3)))
       assert(kept.sliding(2).forall(p => p(0)._1 >= p(1)._1 && p(0)._2 >= p(1)._2),
         "raising the floor never keeps more")
-    } finally Pipeline.deleteTree(java.nio.file.Paths.get(dir))
+    } finally ParquetFiles.deleteTree(java.nio.file.Paths.get(dir))
   }
 
   test("indexHealth: a df-101 boilerplate shingle is counted with all its carriers") {
@@ -116,7 +117,7 @@ class MaintenanceOpsSpec extends AnyFunSuite {
         s"two quiet cells: ${got("cell")}")
       assert(got("band")._3 == 0L && got("band")._4 == 0L,
         s"no over-cap band groups on distinct texts: ${got("band")}")
-    } finally Pipeline.deleteTree(java.nio.file.Paths.get(dir))
+    } finally ParquetFiles.deleteTree(java.nio.file.Paths.get(dir))
   }
 
   test("indexHealth media rows: a window shared past FRAME_DF_CAP counts as over-cap with all its carriers") {
@@ -152,7 +153,7 @@ class MaintenanceOpsSpec extends AnyFunSuite {
         s"one shared over-cap window + two unique: ${got("frame")}")
       assert(got("prefix") == ((2L, 102L, 1L, 102L)),
         s"one shared over-cap l=64 ladder hash + one unique: ${got("prefix")}")
-    } finally Pipeline.deleteTree(java.nio.file.Paths.get(dir))
+    } finally ParquetFiles.deleteTree(java.nio.file.Paths.get(dir))
   }
 
   test("bm25Incr: batch docs retrievable under stale base stats; base-unseen term scores at df-0 idf") {
@@ -177,7 +178,7 @@ class MaintenanceOpsSpec extends AnyFunSuite {
         (2, 2L, 1L, 1375000L, false),
         (2, 1L, 1L, 1000000L, false)),
         s"stale-stats scoring must match hand arithmetic: ${got.toSeq}")
-    } finally Pipeline.deleteTree(java.nio.file.Paths.get(dir))
+    } finally ParquetFiles.deleteTree(java.nio.file.Paths.get(dir))
   }
 
   test("ivfRecluster: flagged cells split on the sign planes, quiet cells keep their layout") {
@@ -227,7 +228,7 @@ class MaintenanceOpsSpec extends AnyFunSuite {
         s"dispersed split: 2 members over 2 sub-cells: ${stats(1)}")
       assert(stats(2) == ((1L, 1L, 1L, 1000000L)),
         s"degenerate split: one member, one sub-cell: ${stats(2)}")
-    } finally Pipeline.deleteTree(java.nio.file.Paths.get(dir))
+    } finally ParquetFiles.deleteTree(java.nio.file.Paths.get(dir))
   }
 
   test("annIncr: batch vectors searchable via stale-centroid assignment; off-cell members stay out") {
@@ -260,7 +261,7 @@ class MaintenanceOpsSpec extends AnyFunSuite {
       assert(math.abs(got(0)._2 - 0.9 / math.sqrt(0.82)) < 1e-6 &&
         math.abs(got(1)._2 - 1.0 / math.sqrt(1.25)) < 1e-6,
         s"cosines near hand values: ${got.toSeq}")
-    } finally Pipeline.deleteTree(java.nio.file.Paths.get(dir))
+    } finally ParquetFiles.deleteTree(java.nio.file.Paths.get(dir))
   }
 
   test("embedQuality: seed centroid from heuristic quality; cosine ppm exact incl. sign") {
@@ -286,7 +287,7 @@ class MaintenanceOpsSpec extends AnyFunSuite {
         (3L, 81250L, false, Some(0L)),
         (4L, 81250L, false, Some(-1000000L))),
         s"seed/qm/cosine must match hand values: ${got.toSeq}")
-    } finally Pipeline.deleteTree(java.nio.file.Paths.get(dir))
+    } finally ParquetFiles.deleteTree(java.nio.file.Paths.get(dir))
   }
 
   test("gateBattery: each content gate drops exactly its planted doc; one doc clears all") {
@@ -331,7 +332,7 @@ class MaintenanceOpsSpec extends AnyFunSuite {
         ("qdir", 5L, 4L, 1L, 200000L),
         ("quality", 5L, 4L, 1L, 200000L)),
         s"each gate must drop exactly its planted doc: ${got.toSeq}")
-    } finally Pipeline.deleteTree(java.nio.file.Paths.get(dir))
+    } finally ParquetFiles.deleteTree(java.nio.file.Paths.get(dir))
   }
 
   test("gateBattery: binding bigram budget — audit ≡ deployed gate at the capped params, ≠ at defaults") {
@@ -397,7 +398,7 @@ class MaintenanceOpsSpec extends AnyFunSuite {
       // is what an unthreaded budget would silently get wrong
       assert(keptCapped != keptDefault,
         "corpus must make the cap observable or the test is vacuous")
-    } finally Pipeline.deleteTree(java.nio.file.Paths.get(dir))
+    } finally ParquetFiles.deleteTree(java.nio.file.Paths.get(dir))
   }
 
   test("heuristicFilters: each rule fails independently on its planted boundary doc") {
@@ -450,7 +451,7 @@ class MaintenanceOpsSpec extends AnyFunSuite {
         (false, true) -> ((1L, 200000L)),
         (true, false) -> ((1L, 200000L))),
         s"agreement matrix must pin the disagreement cells: $agree")
-    } finally Pipeline.deleteTree(java.nio.file.Paths.get(dir))
+    } finally ParquetFiles.deleteTree(java.nio.file.Paths.get(dir))
   }
 
   test("repQuality: min-id keep policy's quality regret is visible per cluster") {
@@ -492,7 +493,7 @@ class MaintenanceOpsSpec extends AnyFunSuite {
       assert(kb(3L) == ((3L, true)) && kb(4L) == ((3L, false)),
         s"quality tie falls back to the smaller id: $kb")
       assert(kb(5L) == ((5L, true)), s"singleton keeps itself: $kb")
-    } finally Pipeline.deleteTree(java.nio.file.Paths.get(dir))
+    } finally ParquetFiles.deleteTree(java.nio.file.Paths.get(dir))
   }
 
   test("mixRealized: rate-100 keeps everything, ppm arithmetic foots against the coin") {
@@ -520,7 +521,7 @@ class MaintenanceOpsSpec extends AnyFunSuite {
         .count(_.getString(1) == "zh")
       assert(kept == mixKept,
         s"eval's kept count must equal the shipped mix ($kept vs $mixKept)")
-    } finally Pipeline.deleteTree(java.nio.file.Paths.get(dir))
+    } finally ParquetFiles.deleteTree(java.nio.file.Paths.get(dir))
   }
 
   test("bigramFluency: corpus-conditional bigram means, exact ppm, sub-bigram docs NULL") {
@@ -542,7 +543,7 @@ class MaintenanceOpsSpec extends AnyFunSuite {
       assert(got(4) == ((1L, Some(250000L))), s"rare continuation: ${got(4)}")
       assert(got(3) == ((0L, None)),
         s"sub-bigram doc: zero bigrams, NULL fluency: ${got(3)}")
-    } finally Pipeline.deleteTree(java.nio.file.Paths.get(dir))
+    } finally ParquetFiles.deleteTree(java.nio.file.Paths.get(dir))
   }
 
   test("mixTemperature: alpha=0.5 flattening boosts the low-resource language, exact integers") {
@@ -567,7 +568,7 @@ class MaintenanceOpsSpec extends AnyFunSuite {
         s"low-resource lang boosted: ${got("a")}")
       assert(got("b") == ((3L, 12L, 750000L, 633974L, 845L)),
         s"dominant lang cut: ${got("b")}")
-    } finally Pipeline.deleteTree(java.nio.file.Paths.get(dir))
+    } finally ParquetFiles.deleteTree(java.nio.file.Paths.get(dir))
   }
 
   test("keepBestIncr: batch arrival flips a touched keeper; untouched clusters pass through") {
@@ -617,7 +618,7 @@ class MaintenanceOpsSpec extends AnyFunSuite {
         .map(r => r.getLong(0) -> ((r.getLong(1), r.getBoolean(2)))).toMap
       assert(full == got.view.mapValues(v => (v._1, v._2)).toMap,
         s"incremental must equal full recompute: $full vs $got")
-    } finally Pipeline.deleteTree(java.nio.file.Paths.get(dir))
+    } finally ParquetFiles.deleteTree(java.nio.file.Paths.get(dir))
   }
 
   test("hybridRank: both-arm doc beats either single-arm top, missing arm reads NULL, RRF exact") {
@@ -663,7 +664,7 @@ class MaintenanceOpsSpec extends AnyFunSuite {
       // property the fusion exists for
       assert(got.head._1 == 2L && got.head._4 > got(1)._4,
         s"mid-rank agreement must beat single-arm tops: ${got.toSeq}")
-    } finally Pipeline.deleteTree(java.nio.file.Paths.get(dir))
+    } finally ParquetFiles.deleteTree(java.nio.file.Paths.get(dir))
   }
 
   test("cdcNovelty: replayed chunks don't grow the store, novel ones do, duplicate arrivals collapse") {
@@ -694,6 +695,6 @@ class MaintenanceOpsSpec extends AnyFunSuite {
         s"sA: one replay + one novel of 2 distinct: ${got("sA")}")
       assert(got("sB") == ((3L, 2L, 666666L)),
         s"sB: 4 arrivals, 3 distinct chunks, 2 novel: ${got("sB")}")
-    } finally Pipeline.deleteTree(java.nio.file.Paths.get(dir))
+    } finally ParquetFiles.deleteTree(java.nio.file.Paths.get(dir))
   }
 }

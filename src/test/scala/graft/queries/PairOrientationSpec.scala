@@ -7,6 +7,7 @@ import scala.util.Random
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.sink.ParquetFiles
 
 /** The one property no oracle can see: every downstream consumer of
   * the pair cores uses the SYMMETRIC `na + nb`, so a silent swap of
@@ -66,7 +67,7 @@ class PairOrientationSpec extends AnyFunSuite {
         // sure the corpus actually contains some
         assert(expected.exists { case (_, _, _, na, nb) => na != nb },
           s"seed $seed: corpus must contain size-asymmetric pairs")
-      } finally graft.queries.Pipeline.deleteTree(java.nio.file.Paths.get(dir))
+      } finally ParquetFiles.deleteTree(java.nio.file.Paths.get(dir))
     }
   }
 }

@@ -5,11 +5,13 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.sink.ParquetFiles
 
 /** Hand-fixture semantics for the round-16 relational additions: the
-  * cohort-retention gap rule and the correlated-aggregate predicate's
-  * exact strict boundary — the two edges the corpus oracle exercises
-  * only statistically.
+  * cohort-retention gap rule, the event funnel's fixed three-stage
+  * spine on an empty cohort, and the correlated-aggregate predicate's
+  * exact strict boundary — edges the corpus oracle exercises only
+  * statistically.
   */
 class RelationalEdgeSpec extends AnyFunSuite {
 
@@ -41,7 +43,27 @@ class RelationalEdgeSpec extends AnyFunSuite {
         ("2024-01-01", 2L, 2L, 1000000L),   // both return
         ("2024-01-08", 0L, 1L, 1000000L)),  // user 3's own cohort
         s"retention matrix mismatch: $got")
-    } finally Pipeline.deleteTree(java.nio.file.Paths.get(dir))
+    } finally ParquetFiles.deleteTree(java.nio.file.Paths.get(dir))
+  }
+
+  test("eventFunnel: always three stages, even when no user viewed") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("funnel-").toString
+    try {
+      def t(hms: String) = java.sql.Timestamp.valueOf(s"2024-01-01 $hms")
+      // no 'view' events: every stage's cohort is empty, yet the report
+      // keeps its fixed three-row spine (0 users, NULL conversion)
+      Seq((1L, t("10:00:00"), 1L, "click"), (2L, t("11:00:00"), 1L, "purchase"))
+        .toDF("event_id", "ts", "user_id", "event_type")
+        .selectExpr("event_id", "ts", "user_id", "event_type",
+          "1.0 AS value", "'{}' AS props")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
+      val got = Relational.eventFunnel(spark, dir).collect()
+        .map(r => (r.getInt(0), r.getString(1), r.getLong(2),
+          Option(r.get(3)))).toSeq
+      assert(got === Seq((1, "view", 0L, None), (2, "click", 0L, None),
+        (3, "purchase", 0L, None)), s"funnel spine mismatch: $got")
+    } finally ParquetFiles.deleteTree(java.nio.file.Paths.get(dir))
   }
 
   test("correlatedAgg: a row exactly AT 20% of its part's average is NOT small (strict <)") {
@@ -62,7 +84,7 @@ class RelationalEdgeSpec extends AnyFunSuite {
         .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq
       assert(got === Seq(("BA", 1L, 11.11)),
         s"boundary row must not qualify, BB must be absent: $got")
-    } finally Pipeline.deleteTree(java.nio.file.Paths.get(dir))
+    } finally ParquetFiles.deleteTree(java.nio.file.Paths.get(dir))
   }
 
   test("correlatedAgg: shipped explicit-aggregate plan ≡ correlated-subquery form") {

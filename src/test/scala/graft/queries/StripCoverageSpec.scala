@@ -16,8 +16,9 @@ import graft.functions.StripCoverageFunctions
   * it (x ≤ j ≤ x + cover), order preserved — on seeded random
   * flag sets, hand fixtures (overlap, adjacency, boundary spans,
   * empty flags, multibyte tokens), and both shipped span lengths
-  * (contam 3, span 5). `StripAbProfile` additionally asserts the
-  * full-query parity on the real corpus.
+  * (contam 3, span 5). The full queries are pinned against DuckDB on
+  * the real corpus by the oracle rows `x_contam_strip` and
+  * `x_span_strip`.
   */
 class StripCoverageSpec extends AnyFunSuite {
 

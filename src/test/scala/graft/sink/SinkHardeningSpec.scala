@@ -2,8 +2,6 @@ package graft.sink
 
 import java.nio.file.{Files, Path}
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
@@ -25,15 +23,7 @@ class SinkHardeningSpec extends AnyFunSuite with BeforeAndAfterEach {
 
   private var tmp: Path = _
   override def beforeEach(): Unit = { tmp = Files.createTempDirectory("graft-hard-spec") }
-  override def afterEach(): Unit = {
-    import java.util.Comparator
-    if (Files.exists(tmp)) {
-      val s = Files.walk(tmp)
-      val paths = try s.sorted(Comparator.reverseOrder[Path]())
-        .iterator.asScala.toSeq finally s.close()
-      paths.foreach(Files.deleteIfExists(_))
-    }
-  }
+  override def afterEach(): Unit = ParquetFiles.deleteTree(tmp)
 
   private val idVal = StructType(Seq(
     StructField("id", LongType), StructField("value", StringType)))
@@ -97,6 +87,21 @@ class SinkHardeningSpec extends AnyFunSuite with BeforeAndAfterEach {
       new StreamingShardSink(out, idVal, shardSizeBytes = 1024, resume = true)
     }
     assert(e.getMessage.contains("refusing to resume"))
+  }
+
+  test("streaming orphan cleanup skips non-numeric suffixes, deletes out-of-Int indexes") {
+    import spark.implicits._
+    val out = tmp.resolve("odd")
+    val sink = new StreamingShardSink(out, idVal, shardSizeBytes = 1024)
+    // an empty suffix and an all-digit index past Int range each threw
+    // NumberFormatException out of addBatch's orphan cleanup
+    val foreign = Seq("odd-.parquet", "odd-x1.parquet").map(out.resolve)
+    val orphan = out.resolve("odd-99999999999.parquet")
+    (foreign :+ orphan).foreach(Files.write(_, Array[Byte](1)))
+    sink.addBatch(Seq((1L, "a")).toDF("id", "value"), batchId = 0L)
+    assert(foreign.forall(Files.exists(_)), "a non-numeric suffix is not a shard")
+    assert(!Files.exists(orphan), "an index at or past the next shard is an orphan")
+    assert(sink.writtenFiles.nonEmpty)
   }
 
   test("streaming restore drops a torn trailing commit-log line") {
