@@ -35,6 +35,13 @@ as a script, so a false claim can't ship.
    not compiled, so deleting a tool or member leaves them dangling
    with no build error.
 
+6. Benchmark API references — every `graft.…` name that perfbench/src
+   imports or qualifies must be declared in src/main, and every
+   `Obj.member` it calls on an imported graft object must be declared
+   in that object's file. The benchmark's sources are frozen and are
+   compiled against src/main, so renaming a sink or query API fails
+   every benchmark workload, not this repo's build.
+
 Usage:
     python3 scripts/round_close_checks.py [path/to/oracle_sql.json] \
         [--round N]
@@ -145,6 +152,52 @@ def check_tool_refs():
         print(f"  MISSING {path}:{line}  {ref}")
     if not bad:
         print("  every reference resolves")
+    return len(bad)
+
+
+BENCH_SRC = os.path.join(REPO, "perfbench/src")
+GRAFT_IMPORT = re.compile(r"^[ \t]*import (graft(?:\.\w+)*)\.(?:\{([^}]*)\}|(\w+))", re.M)
+QUALIFIED = re.compile(r"\bgraft(?:\.\w+)+")
+COMMENT = re.compile(r"//[^\n]*|/\*.*?\*/", re.S)
+
+
+def check_bench_refs():
+    types = declared_types()
+    n, bad = 0, []
+    for path in sorted(scala_files(BENCH_SRC)):
+        raw = open(path, encoding="utf-8").read()
+        # blank comments out (keeping newlines, so line numbers hold):
+        # a name in a comment is not compiled
+        text = COMMENT.sub(lambda m: re.sub(r"[^\n]", " ", m.group(0)), raw)
+        refs, aliases, spans = [], {}, []
+        for m in GRAFT_IMPORT.finditer(text):
+            spans.append(m.span())
+            pkg = m.group(1)
+            for sel in (m.group(2).split(",") if m.group(2) else [m.group(3)]):
+                name, _, alias = (x.strip() for x in sel.partition("=>"))
+                if name == "_":
+                    aliases.update((t.rsplit(".", 1)[1], t) for t in types
+                                   if t.rsplit(".", 1)[0] == pkg)
+                    continue
+                refs.append((m.start(), f"{pkg}.{name}"))
+                aliases[alias or name] = f"{pkg}.{name}"
+        in_import = lambda i: any(a <= i < b for a, b in spans)
+        refs += [(m.start(), m.group(0)) for m in QUALIFIED.finditer(text)
+                 if not in_import(m.start())]
+        for short, full in aliases.items():
+            for m in re.finditer(r"(?<![\w.])" + re.escape(short) + r"\.(\w+)", text):
+                if not in_import(m.start()):
+                    refs.append((m.start(), f"{full}.{m.group(1)}"))
+        for at, ref in sorted(refs):
+            n += 1
+            if not resolves(ref, types):
+                line = text.count("\n", 0, at) + 1
+                bad.append((os.path.relpath(path, REPO), line, ref))
+    print(f"== perfbench/src → src/main names ({n} found) ==")
+    for path, line, ref in bad:
+        print(f"  MISSING {path}:{line}  {ref}")
+    if not bad:
+        print("  every name resolves")
     return len(bad)
 
 
@@ -290,6 +343,7 @@ def main():
     oracle = args[0] if args else "/tmp/verify_out/oracle_sql.json"
     bad = check_claims()
     bad += check_tool_refs()
+    bad += check_bench_refs()
     if not os.path.exists(oracle):
         print(f"oracle_sql.json not found at {oracle} — run "
               "`sbt \"runMain graft.Verify <sfDir> <outDir>\"` first",

@@ -1,69 +1,17 @@
 package graft.sink
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.{Column, Row}
+import org.apache.spark.sql.functions.{struct, udf}
+import org.apache.spark.sql.types.StructType
 
-/** The distributed twin of [[ColumnarSize]]: the same uncompressed
-  * columnar size estimate, but as a Catalyst expression evaluated
-  * where the data lives — no driver collect, one `sum` away from a
-  * whole-DataFrame size. Used by the streaming shard sink to derive
-  * per-file record caps from byte thresholds at scale.
-  *
-  * Keep the two estimators in lockstep: a value must cost the same
-  * bytes here and in [[ColumnarSize.ofRow]]. Container types recurse
-  * through `aggregate` exactly as `ofValue` recurses over collections
-  * — per-element, null elements at zero — so the invariant holds for
-  * arrays of ANY element type and for maps, not just the scalar fast
-  * paths (a single null element in an array must not poison the fold:
-  * the sink once under-sized such arrays to 4 bytes and oversized its
-  * shards accordingly). The higher-order functions are interpreted
-  * rather than codegen'd, which is fine for this use: the sink samples
-  * a bounded prefix per micro-batch, never a full scan.
+/** [[ColumnarSize.ofRow]] as a column: a UDF over each row, evaluated
+  * where the data lives, one `sum` away from a DataFrame's size with no
+  * driver collect. The streaming shard sink sizes its files with it.
   */
 object ColumnarSizeExpr {
 
   /** Estimated bytes of one row of `schema`. */
   def rowBytes(schema: StructType): Column =
-    schema.fields.map(f => valueBytes(col(f.name), f.dataType))
-      .foldLeft(lit(0L))(_ + _)
-
-  private def valueBytes(c: Column, dt: DataType): Column = {
-    val sz: Column = dt match {
-      case LongType | DoubleType | TimestampType | TimestampNTZType => lit(8L)
-      case IntegerType | FloatType | DateType => lit(4L)
-      case ShortType => lit(2L)
-      case ByteType | BooleanType => lit(1L)
-      case StringType | BinaryType => octet_length(c).cast("long") + 4L
-      case _: DecimalType => lit(16L)
-      case ArrayType(et, containsNull) if !containsNull && fixedWidth(et).isDefined =>
-        // element nulls impossible by schema: size × width is exact
-        lit(4L) + size(c).cast("long") * fixedWidth(et).get
-      case ArrayType(et, _) =>
-        // recurse per element; valueBytes's own null guard prices null
-        // elements at 0, matching ofValue's filter(_ != null)
-        lit(4L) + coalesce(
-          aggregate(c, lit(0L), (acc, e) => acc + valueBytes(e, et)), lit(0L))
-      case MapType(kt, vt, _) =>
-        // Spark map keys are never null; null values cost 0 like ofValue
-        lit(4L) +
-          coalesce(aggregate(map_keys(c), lit(0L),
-            (acc, k) => acc + valueBytes(k, kt)), lit(0L)) +
-          coalesce(aggregate(map_values(c), lit(0L),
-            (acc, v) => acc + valueBytes(v, vt)), lit(0L))
-      case st: StructType =>
-        st.fields.map(f => valueBytes(c.getField(f.name), f.dataType))
-          .foldLeft(lit(0L))(_ + _)
-      case other => lit(other.defaultSize.toLong)
-    }
-    when(c.isNull, lit(0L)).otherwise(sz)
-  }
-
-  private def fixedWidth(dt: DataType): Option[Long] = dt match {
-    case LongType | DoubleType | TimestampType | TimestampNTZType => Some(8L)
-    case IntegerType | FloatType | DateType => Some(4L)
-    case ShortType => Some(2L)
-    case ByteType | BooleanType => Some(1L)
-    case _ => None
-  }
+    udf((r: Row) => ColumnarSize.ofRow(r, schema)).apply(
+      struct(schema.fieldNames.toIndexedSeq.map(RowConformance.column): _*))
 }

@@ -1,6 +1,6 @@
 package graft.sink
 
-import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.{FileAlreadyExistsException, Files, NoSuchFileException, Path, StandardCopyOption}
 import java.util.Comparator
 
 import scala.jdk.CollectionConverters._
@@ -86,6 +86,24 @@ object ParquetFiles {
     val paths = try s.sorted(Comparator.reverseOrder[Path]())
       .iterator.asScala.toSeq finally s.close()
     paths.foreach(Files.deleteIfExists(_))
+  }
+
+  /** Clear `path` for a new sink output (`writer.py:151-165`): an
+    * existing file or tree is deleted, and logged, when `overwrite` is
+    * set, and is an error otherwise; a missing parent directory is an
+    * error and is never created.
+    */
+  def claimOutput(path: Path, overwrite: Boolean, log: org.slf4j.Logger): Unit = {
+    if (Files.exists(path)) {
+      if (!overwrite) throw new FileAlreadyExistsException(s"'$path' already exists.")
+      // writer.py:156,159 — the reference logs which kind of path it
+      // is about to remove before removing it
+      if (Files.isDirectory(path)) log.info(s"Deleting existing directory: $path")
+      else log.info(s"Deleting existing file: $path")
+      deleteTree(path)
+    }
+    if (path.getParent == null || !Files.exists(path.getParent))
+      throw new NoSuchFileException(s"'${path.getParent}' does not exist.")
   }
 
   /** (rowGroupCount, totalRows, maxRowsInAnyGroup) from a file footer —

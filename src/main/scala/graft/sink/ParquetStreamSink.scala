@@ -1,13 +1,12 @@
 package graft.sink
 
-import java.nio.file.{FileAlreadyExistsException, Files, NoSuchFileException, Path}
+import java.nio.file.{Files, Path}
 
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 import org.apache.parquet.io.LocalOutputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
 /** Streaming Parquet sink with schema-enforced ingest, byte-bounded
@@ -55,10 +54,11 @@ import org.apache.spark.sql.types.StructType
   * ([[ParquetFiles.Appender]]), like the reference's `write_table` on
   * its open `pq.ParquetWriter`; rotation and close only write the
   * footer. A shard that receives one flush of at most `rowGroupSize`
-  * rows is that encoded file verbatim, page indexes included. For
-  * unbounded distributed streams, the same [[SinkState]] semantics drive
-  * [[graft.streaming.StreamingShardSink]] inside `foreachBatch`, where
-  * "buffer" is the micro-batch and shards roll per partition.
+  * rows is that encoded file verbatim, page indexes included. The
+  * distributed [[graft.streaming.StreamingShardSink]] flushes once per
+  * micro-batch instead of running a [[SinkState]]; it shares this sink's
+  * byte estimate ([[ColumnarSize]]), schema cast ([[RowConformance.cast]]),
+  * shard-name rule and output-path check ([[ParquetFiles.claimOutput]]).
   */
 final class ParquetStreamSink(
     spark: SparkSession,
@@ -98,17 +98,7 @@ final class ParquetStreamSink(
   private var encodeNanos = 0L
 
   // --- construction-time path semantics (writer.py:151-169) ---
-  if (Files.exists(path)) {
-    if (overwrite) {
-      // writer.py:156,159 — the reference logs which kind of path it
-      // is about to remove before removing it
-      if (Files.isDirectory(path)) log.info(s"Deleting existing directory: $path")
-      else log.info(s"Deleting existing file: $path")
-      ParquetFiles.deleteTree(path)
-    } else throw new FileAlreadyExistsException(s"'$path' already exists.")
-  }
-  if (path.getParent == null || !Files.exists(path.getParent))
-    throw new NoSuchFileException(s"'${path.getParent}' does not exist.")
+  ParquetFiles.claimOutput(path, overwrite, log)
   if (shardSizeBytes.isDefined)
     Files.createDirectory(path) // exactly one level, fails if parent missing
 
@@ -121,9 +111,7 @@ final class ParquetStreamSink(
     */
   def writeBatch(df: DataFrame): Unit = {
     ensureOpen()
-    val casted = df.select(
-      schema.fields.map(f => col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
-    addRows(casted.collect())
+    addRows(RowConformance.cast(df, schema).collect())
   }
 
   /** Ingest local rows (the reference's dict-of-lists path,
@@ -158,9 +146,7 @@ final class ParquetStreamSink(
     */
   def writeAll(df: DataFrame, batchRows: Int = 65536): Unit = {
     ensureOpen()
-    val casted = df.select(
-      schema.fields.map(f => col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
-    casted.toLocalIterator().asScala.grouped(batchRows)
+    RowConformance.cast(df, schema).toLocalIterator().asScala.grouped(batchRows)
       .foreach(chunk => addRows(chunk.toArray))
   }
 
@@ -197,10 +183,7 @@ final class ParquetStreamSink(
     ensureOpen()
     finalizeCurrentShard()
     val idx = state.onRotate()
-    val p = shardSizeBytes match {
-      case None    => path
-      case Some(_) => path.resolve(s"$prefix-$idx.parquet")
-    }
+    val p = if (shardSizeBytes.isEmpty) path else path.resolve(SinkState.shardName(prefix, idx))
     Files.deleteIfExists(p)
     Files.createFile(p) // file exists from open time, like pq.ParquetWriter
     log.info(s"Opened new Parquet shard: $p") // writer.py:190

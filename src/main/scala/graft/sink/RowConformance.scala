@@ -1,6 +1,7 @@
 package graft.sink
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
 /** Runtime type-conformance check: does this external `Row` already
@@ -9,9 +10,17 @@ import org.apache.spark.sql.types._
   * for already-typed rows (the cast would be the identity). The check
   * is CONSERVATIVE: any type it doesn't recognize returns false and
   * the caller routes through the full cast/validation path, so a
-  * wrong answer can only cost speed, never correctness.
+  * wrong answer can only cost speed, never correctness. [[cast]] is
+  * that path, for both sinks.
   */
 object RowConformance {
+
+  /** The cast path: `df`'s columns, by name, ANSI-cast to `schema`. */
+  def cast(df: DataFrame, schema: StructType): DataFrame =
+    df.select(schema.fields.toIndexedSeq.map(f => column(f.name).cast(f.dataType).as(f.name)): _*)
+
+  /** Column `name`, quoted: a dot or backtick in it is part of the name. */
+  def column(name: String): Column = col("`" + name.replace("`", "``") + "`")
 
   def conforms(r: Row, schema: StructType): Boolean =
     r.length == schema.length && {

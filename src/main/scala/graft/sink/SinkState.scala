@@ -4,8 +4,9 @@ package graft.sink
   * the semantics core of the reference library
   * (`/root/reference/src/parquet_stream_writer/writer.py:11-41,201-204,
   * 257-264`), factored out of any I/O so it can be property-tested
-  * exhaustively (ScalaCheck) and shared by both execution modes
-  * (driver-buffered parity mode and distributed `foreachBatch` mode).
+  * exhaustively (ScalaCheck). Only the parity sink runs it; the
+  * distributed [[graft.streaming.StreamingShardSink]] flushes once per
+  * micro-batch and shares just the shard-name rule ([[SinkState.shardName]]).
   *
   * Semantics replicated from the reference CODE (its docstring claims
   * `bufferSizeBytes <= shardSizeBytes` is required but never enforces
@@ -94,6 +95,19 @@ final class SinkState(
 }
 
 object SinkState {
+
+  /** File name of shard `index` (`writer.py:184-188`). */
+  def shardName(prefix: String, index: Int): String = s"$prefix-$index.parquet"
+
+  /** The index of a [[shardName]] file, or None for any other name. A
+    * `BigInt`, so an all-digit index past `Int` range still parses.
+    */
+  def shardIndex(prefix: String, fileName: String): Option[BigInt] =
+    Some(fileName).filter(n => n.startsWith(s"$prefix-") && n.endsWith(".parquet"))
+      .map(_.stripPrefix(s"$prefix-").stripSuffix(".parquet"))
+      .filter(idx => idx.nonEmpty && idx.forall(_.isDigit))
+      .map(BigInt(_))
+
   sealed trait Action
   case object NoOp extends Action
   case object FlushOnly extends Action

@@ -1,15 +1,14 @@
 package graft.streaming
 
-import java.nio.file.{FileAlreadyExistsException, Files, NoSuchFileException, Path, StandardCopyOption}
+import java.nio.file.{Files, Path, StandardCopyOption}
 
-import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, sum}
+import org.apache.spark.sql.functions.{lit, sum}
 import org.apache.spark.sql.types.StructType
 
-import graft.sink.{ColumnarSizeExpr, ParquetFiles}
+import graft.sink.{ColumnarSizeExpr, ParquetFiles, RowConformance, SinkState}
 
 /** The DISTRIBUTED execution mode of the streaming Parquet sink — the
   * shape the same semantics take on a 1000-executor cluster, where the
@@ -24,10 +23,10 @@ import graft.sink.{ColumnarSizeExpr, ParquetFiles}
   *  - "buffer" = the micro-batch itself: flush-per-batch, so memory is
   *    bounded by trigger sizing instead of a driver-side byte counter,
   *  - "shard" = an output file: the byte threshold becomes a per-file
-  *    record cap (`maxRecordsPerFile`) derived per batch from the SAME
-  *    columnar byte estimator the parity sink uses
-  *    ([[ColumnarSizeExpr]] — computed where the data lives, one agg,
-  *    no collect),
+  *    record cap (`maxRecordsPerFile`) derived per batch from the
+  *    parity sink's own estimator, [[graft.sink.ColumnarSize.ofRow]],
+  *    run as a UDF where the data lives ([[ColumnarSizeExpr]]) over a
+  *    bounded sample of the batch: one agg, no collect,
   *  - "{prefix}-{index}.parquet" naming + `writtenFiles` manifest:
   *    tasks write to a staging dir; the driver then renames the part
   *    files to sequential shard indices — a metadata-only operation,
@@ -74,7 +73,6 @@ final class StreamingShardSink(
     filePrefix: Option[String] = None,
     overwrite: Boolean = false,
     val options: Map[String, String] = Map.empty,
-    val writerTasks: Int = 0,
     resume: Boolean = false) {
 
   require(shardSizeBytes > 0, "shard_size_bytes must be positive")
@@ -82,20 +80,17 @@ final class StreamingShardSink(
   val path: Path = rawPath.toAbsolutePath.normalize
   val prefix: String = filePrefix.getOrElse(path.getFileName.toString)
 
-  private val manifest = ArrayBuffer.empty[Path]
   private var shardIndex = 0
   // batchId → (startIndex, fileCount), insertion-ordered for the log
   private val committed = scala.collection.mutable.LinkedHashMap.empty[Long, (Int, Int)]
   private val commitLog: Path = path.resolve("_graft_commits.tsv")
 
-  if (Files.exists(path) && !resume) {
-    if (overwrite) ParquetFiles.deleteTree(path)
-    else throw new FileAlreadyExistsException(s"'$path' already exists.")
+  if (resume && Files.exists(path)) restoreFromCommitLog()
+  else {
+    ParquetFiles.claimOutput(path, overwrite,
+      org.slf4j.LoggerFactory.getLogger(classOf[StreamingShardSink]))
+    Files.createDirectory(path)
   }
-  if (path.getParent == null || !Files.exists(path.getParent))
-    throw new NoSuchFileException(s"'${path.getParent}' does not exist.")
-  if (Files.exists(path) && resume) restoreFromCommitLog()
-  else Files.createDirectory(path)
 
   /** Run `f` over a lazily-populated NIO stream and CLOSE it: each of
     * Files.list/walk holds an open directory fd until closed, and the
@@ -140,15 +135,12 @@ final class StreamingShardSink(
       }
       shardIndex = committed.valuesIterator
         .map { case (start, n) => start + n }.maxOption.getOrElse(0)
-      (0 until shardIndex).foreach(i => manifest += path.resolve(s"$prefix-$i.parquet"))
     } else {
       // no log, but shard-patterned files present: resuming would
       // restore index 0 and the orphan cleanup would delete the whole
       // dataset on the first batch — refuse instead of losing data
-      val orphaned = withStream(Files.list(path))(_.exists { p =>
-        val n = p.getFileName.toString
-        n.startsWith(s"$prefix-") && n.endsWith(".parquet")
-      })
+      val orphaned = withStream(Files.list(path))(
+        _.exists(p => SinkState.shardIndex(prefix, p.getFileName.toString).isDefined))
       if (orphaned) throw new IllegalStateException(
         s"resume=true but '$commitLog' is missing while '$path' holds " +
           s"'$prefix-N.parquet' files — refusing to resume with a zero " +
@@ -170,7 +162,7 @@ final class StreamingShardSink(
   }
 
   /** Absolute shard paths in creation order. */
-  def writtenFiles: Seq[Path] = manifest.toSeq
+  def writtenFiles: Seq[Path] = synchronized((0 until shardIndex).map(shardPath))
 
   /** The next unused batchId (max committed + 1) — a resumed daily
     * append must CONTINUE the id sequence: re-using yesterday's ids
@@ -197,7 +189,7 @@ final class StreamingShardSink(
     */
   def filesCommittedBefore(batchId: Long): Seq[Path] = synchronized {
     committed.iterator.collect { case (b, (start, n)) if b < batchId =>
-      (start until start + n).map(i => path.resolve(s"$prefix-$i.parquet"))
+      (start until start + n).map(shardPath)
     }.flatten.toSeq
   }
 
@@ -210,13 +202,8 @@ final class StreamingShardSink(
     // files before crashing; clear anything at/beyond the next index
     // so a replay with a different task-file count can't strand one
     withStream(Files.list(path))(_.toSeq).foreach { p =>
-      val n = p.getFileName.toString
-      if (n.startsWith(s"$prefix-") && n.endsWith(".parquet")) {
-        val idx = n.stripPrefix(s"$prefix-").stripSuffix(".parquet")
-        // BigInt: an all-digit index past Int range is still an orphan
-        if (idx.nonEmpty && idx.forall(_.isDigit) && BigInt(idx) >= shardIndex)
-          Files.delete(p)
-      }
+      if (SinkState.shardIndex(prefix, p.getFileName.toString).exists(_ >= shardIndex))
+        Files.delete(p)
     }
     val start = shardIndex
     addBatch(df)
@@ -227,8 +214,7 @@ final class StreamingShardSink(
     * ≈`shardSizeBytes` files appended to the shard sequence.
     */
   def addBatch(df: DataFrame): Unit = synchronized {
-    val casted = df.select(
-      schema.fields.map(f => col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
+    val casted = RowConformance.cast(df, schema)
 
     // SAMPLE-based row sizing: a bounded CollectLimit job over the
     // first rows, not a full pass — the shard threshold is documented
@@ -236,7 +222,7 @@ final class StreamingShardSink(
     // is plenty, and a full-batch agg would double every batch's scan
     // (measured 3× slower end-to-end at sf0.1). Also the empty check.
     val stats = casted.limit(1024).agg(
-      sum(org.apache.spark.sql.functions.lit(1L)).as("rows"),
+      sum(lit(1L)).as("rows"),
       sum(ColumnarSizeExpr.rowBytes(schema)).as("bytes")).head()
     if (stats.isNullAt(0) || stats.getLong(0) == 0L) return
     val rows = stats.getLong(0)
@@ -245,8 +231,7 @@ final class StreamingShardSink(
     val recordsPerShard = math.max(shardSizeBytes / avgRowBytes, 1L)
 
     val staging = Files.createTempDirectory(path, ".batch-")
-    val repartitioned = if (writerTasks > 0) casted.repartition(writerTasks) else casted
-    repartitioned
+    casted
       .write.format("parquet").mode("overwrite")
       .options(options)
       .option("maxRecordsPerFile", recordsPerShard)
@@ -261,11 +246,11 @@ final class StreamingShardSink(
         n.startsWith("part-") && n.endsWith(".parquet")
       }.toSeq).sortBy(_.getFileName.toString)
     parts.foreach { p =>
-      val dest = path.resolve(s"$prefix-$shardIndex.parquet")
-      Files.move(p, dest, StandardCopyOption.ATOMIC_MOVE)
-      manifest += dest
+      Files.move(p, shardPath(shardIndex), StandardCopyOption.ATOMIC_MOVE)
       shardIndex += 1
     }
     ParquetFiles.deleteTree(staging)
   }
+
+  private def shardPath(index: Int): Path = path.resolve(SinkState.shardName(prefix, index))
 }

@@ -83,18 +83,42 @@ class SinkApiSpec extends AnyFunSuite with BeforeAndAfterEach {
     spark.read.parquet(p.toString).select($"id").as[Long].collect().toSeq
   }
 
-  test("StreamingShardSink writerTasks: parallel encode still lands sequential shards") {
+  test("StreamingShardSink: a repartitioned batch lands sequential shards") {
     val out = tmp.resolve("par")
-    val sink = new StreamingShardSink(out, schema,
-      shardSizeBytes = 1024L * 1024, writerTasks = 4)
+    val sink = new StreamingShardSink(out, schema, shardSizeBytes = 1024L * 1024)
     val df = spark.range(0, 500).selectExpr("id", "repeat('w', 20) AS value")
-    sink.addBatch(df)
+    sink.addBatch(df.repartition(4))
     val names = sink.writtenFiles.map(_.getFileName.toString)
     assert(names == names.indices.map(i => s"par-$i.parquet"))
     val back = spark.read.schema(schema).parquet(out.toString)
     assert(back.count() == 500L)
     import spark.implicits._
     assert(back.select($"id").as[Long].collect().sorted.toSeq == (0L until 500L))
+  }
+
+  test("a field name with a dot or a backtick is one column on every cast path") {
+    import spark.implicits._
+    val odd = StructType(Seq(StructField("a.b", LongType), StructField("c`d", StringType)))
+    val src = Seq((1L, "x"), (2L, "y")).toDF("a.b", "c`d")
+    val want = Set((1L, "x"), (2L, "y"))
+    def read(p: Path) = spark.read.parquet(p.toString).collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSet
+
+    val batch = tmp.resolve("batch.parquet")
+    ParquetStreamSink.withSink(new ParquetStreamSink(spark, batch, odd))(_.writeBatch(src))
+    assert(read(batch) == want)
+    val widened = tmp.resolve("widened.parquet")
+    ParquetStreamSink.withSink(new ParquetStreamSink(spark, widened, odd))(
+      _.writeRows(Seq(Row(java.lang.Integer.valueOf(1), "x"), Row(2L, "y"))))
+    assert(read(widened) == want)
+    val all = tmp.resolve("all.parquet")
+    ParquetStreamSink.withSink(new ParquetStreamSink(spark, all, odd))(_.writeAll(src))
+    assert(read(all) == want)
+    val stream = tmp.resolve("stream")
+    new StreamingShardSink(stream, odd, 1024L).addBatch(src)
+    assert(read(stream) == want)
+    val est = src.select(ColumnarSizeExpr.rowBytes(odd)).collect().map(_.getLong(0)).sum
+    assert(est == ColumnarSize.ofRows(src.collect(), odd))
   }
 
   test("StreamingShardSink rejects batches missing schema columns") {

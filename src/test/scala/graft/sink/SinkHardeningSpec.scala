@@ -12,8 +12,8 @@ import graft.TestSpark
 import graft.streaming.StreamingShardSink
 
 /** Regressions from the sink/streaming review pass: writeRows' slow
-  * path must actually widen (the doc's promise), the two size
-  * estimators must agree on container types with null elements, and
+  * path must actually widen (the doc's promise), the distributed size
+  * estimate must match the driver's on every type, nulls included, and
   * the streaming sink's resume path must refuse the configuration
   * that would silently delete an existing dataset.
   */
@@ -53,22 +53,47 @@ class SinkHardeningSpec extends AnyFunSuite with BeforeAndAfterEach {
     intercept[Exception] { sink2.writeRows(Seq(Row("not-a-number", "x"))); sink2.close() }
   }
 
-  /** The lockstep invariant, on the container shapes that diverged:
-    * null elements inside arrays (a single null once nulled the whole
-    * aggregate → 4-byte arrays → oversized shards), binary-element
-    * arrays, and maps (both previously priced at a constant).
+  /** The distributed estimate prices a row from the `Row` Spark hands
+    * its UDF, so it matches the driver's only if that conversion keeps
+    * every value [[ColumnarSize]] measures: one column per branch of its
+    * size rule, with null elements inside arrays (a single null once
+    * sized a whole array at 4 bytes → oversized shards), null map
+    * values, a null struct and a struct with a null field.
     */
   test("ColumnarSizeExpr matches ColumnarSize on containers with nulls") {
+    val pt = StructType(Seq(StructField("x", IntegerType), StructField("label", StringType)))
     val schema = StructType(Seq(
       StructField("tags", ArrayType(StringType, containsNull = true)),
       StructField("nums", ArrayType(LongType, containsNull = true)),
       StructField("blobs", ArrayType(BinaryType, containsNull = true)),
-      StructField("attrs", MapType(StringType, StringType, valueContainsNull = true))))
+      StructField("attrs", MapType(StringType, StringType, valueContainsNull = true)),
+      StructField("ts", TimestampType),
+      StructField("ts_ntz", TimestampNTZType),
+      StructField("day", DateType),
+      StructField("price", DecimalType(12, 2)),
+      StructField("small", ShortType),
+      StructField("flag", BooleanType),
+      StructField("bin", BinaryType),
+      StructField("text", StringType),
+      StructField("gone", pt),
+      StructField("half", pt),
+      StructField("pts", ArrayType(pt, containsNull = true))))
     val row = Row(
       Seq("hello", null, "world"),
       Seq(1L, null, 3L),
       Seq(Array[Byte](1, 2, 3), null),
-      Map("k1" -> "v1", "k2" -> null))
+      Map("k1" -> "v1", "k2" -> null),
+      java.sql.Timestamp.valueOf("2024-01-02 03:04:05"),
+      java.time.LocalDateTime.of(2024, 1, 2, 3, 4, 5),
+      java.sql.Date.valueOf("2024-01-02"),
+      new java.math.BigDecimal("1234.56"),
+      7.toShort,
+      true,
+      Array[Byte](9, 8, 7, 6, 5),
+      "naïve café — 日本語 ✓",
+      null,
+      Row(null, "only label"),
+      Seq(Row(1, "a"), null, Row(null, null)))
     val expected = ColumnarSize.ofRow(row, schema)
     val df = spark.createDataFrame(
       java.util.List.of(row), schema)
