@@ -12,9 +12,10 @@ as a script, so a false claim can't ship.
    `SparkEntry.oracleSql` (as dumped by any `graft.Verify` run's
    oracle_sql.json), in BOTH directions.
 
-3. Ceiling coverage — every registry query must carry a
-   `Bench.BaselineSec` entry (the ceiling protocol: recorded the same
-   round the query lands), and no ceiling may be orphaned.
+3. Ceiling coverage — every registry query must carry a line in the
+   ceiling table `src/main/resources/graft/ceilings.tsv` (the ceiling
+   protocol: recorded the same round the query lands), and no ceiling
+   may be orphaned.
 
 0. Input freshness — the oracle_sql.json handed in must carry exactly
    the SURVEY §2.3 surface; a stale pre-refresh dump fails loudly
@@ -63,6 +64,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 MAIN = os.path.join(REPO, "src/main/scala")
 TEST = os.path.join(REPO, "src/test/scala")
 SURVEY = os.path.join(REPO, "SURVEY.md")
+CEILINGS = os.path.join(REPO, "src/main/resources/graft/ceilings.tsv")
 
 # a docstring claim = a suite name followed (within the sentence) by a
 # claim verb; ".scala:NN" cites are matched too
@@ -236,31 +238,11 @@ def check_survey(oracle_path):
 
 
 def baseline_keys():
-    text = open(os.path.join(
-        MAIN, "graft/Bench.scala"), encoding="utf-8").read()
-    # strip line comments first — entry annotations quote old values
-    # with parens ("(15.51 -> 9.41, -39%)") that fool paren tracking
-    text = re.sub(r'//[^\n]*', '', text)
-    start = text.index("BaselineSec: Map[String, Double] = Map(")
-    # walk to the Map(...)'s balanced closing paren: a first-value-
-    # followed-by-paren regex silently truncated the key set under
-    # reformats (e.g. `Map(...) ++ overrides`, a paren after a value
-    # mid-map), weakening the ceiling-coverage gate
-    open_idx = text.index("Map(", start) + len("Map(") - 1
-    depth = 0
-    end = None
-    for i in range(open_idx, len(text)):
-        c = text[i]
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                end = i + 1
-                break
-    if end is None:
-        raise ValueError("BaselineSec Map( literal never closes")
-    return set(re.findall(r'"([a-z0-9_]+)"\s*->', text[start:end]))
+    """The ceiling table's names: the first field of each
+    `name<TAB>seconds<TAB>reason` line (Bench.parseCeilings validates
+    the rest, and the test suite runs it on the shipped table)."""
+    with open(CEILINGS, encoding="utf-8") as f:
+        return {line.split("\t", 1)[0] for line in f.read().splitlines()}
 
 
 def check_ceilings(oracle_path):

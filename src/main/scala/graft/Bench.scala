@@ -1,561 +1,66 @@
 package graft
 
-/** Per-round benchmark: wall-clock per registered query at
-  * SPARK_GRAFT_SF_DIR — min of two back-to-back runs per query, a
-  * third attempt before any regression flag — one JSON line on
-  * stdout, mirrored to `bench_last.json`.
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** Benchmark: wall-clock per registered query at SPARK_GRAFT_SF_DIR —
+  * min of two back-to-back runs per query, a third attempt before any
+  * regression flag — one JSON line on stdout, mirrored to
+  * `bench_last.json`. Each query is timed by [[Sessions.drive]].
   *
-  * Each query is driven to completion with a `noop`-format write — the
-  * sink that consumes every row but writes nothing. `.count()` would
-  * let Catalyst prune all unused columns, so projection-only queries
-  * (scalar batteries, token counts, …) would measure an empty scan
-  * instead of their expressions. Failures are recorded as -1 and named
-  * in `failed`, never silently folded into the total. At sf0.1 every
-  * query is additionally gated against [[BaselineSec]]: the JSON
-  * carries `baseline_ratio` per query, anything whose FINAL reading
-  * ends above its recorded (already-doubled) ceiling AND more than
-  * 0.25 s over it, even after the retry, is listed in `regressed`
-  * (the round-13 advisory: a 1.79× reading next to an empty
-  * `regressed` array misreports a clean run; the 0.25 s absolute
-  * floor mutes sub-noise excursions on the shortest ceilings — a
-  * 0.39 s ceiling only flags above 0.64 s, i.e. ratios up to ~1.6×
-  * on such queries are deliberately not soft-flagged),
-  * and anything over the hard [[RegressionFactor]]×-plus-slack gate is
+  * Failures are recorded as -1 and named in `failed`, never silently
+  * folded into the total. At sf0.1 every query is also gated against
+  * [[BaselineSec]]: the JSON carries `baseline_ratio` per query,
+  * anything whose FINAL reading ends above its (already-doubled)
+  * ceiling AND more than 0.25 s over it, even after the retry, is
+  * listed in `regressed` (the floor mutes sub-noise excursions on the
+  * shortest ceilings: a 0.39 s ceiling only flags above 0.64 s), and
+  * anything over the hard [[RegressionFactor]]×-plus-slack gate is
   * listed in `failed` — the total-only number cannot distinguish one
   * query regressing 5× from ordinary ±3 s machine noise.
   */
 object Bench {
-  /** Per-query regression baseline at sf0.1, re-recorded IN FULL
-    * round 8 (every ceiling from the same two identical-code runs on
-    * a quiet machine, both zero-retry zero-fail): for each query, the
-    * MAX of its min-of-2 seconds across two full runs, DOUBLED. The
-    * round-8 refresh covers the two new queries (x_dedup_recall,
-    * x_media_neardup), re-tightens the manifest family after the
-    * bucketed keep-map (x_cluster_sizes 3.43 → 0.36), and re-validates
-    * the entries round 7 flagged as possibly loose — x_minhash_est
-    * re-recorded at 5.41 vs the old 5.38 and x_ann_recall at 4.30 vs
-    * 3.88, i.e. those were real cost bands, not drift.
-    * The ×2 is an explicit contention allowance — the
-    * recording runs executed on a quiet machine, while the driver's
-    * per-round bench runs alongside its own harness processes, which
-    * round-5 adjudication measured inflating identical code 1.3–2.6×
-    * uniformly. Sustained contention slows BOTH back-to-back attempts
-    * (the min doesn't filter it, unlike one-off stalls), so the
-    * headroom lives in the ceiling; a real plan regression (a lost
-    * broadcast, a new shuffle) costs 5×+ and still clears
-    * [[RegressionFactor]] × this ceiling easily — and a stall that
-    * somehow survives min-of-2 gets the third attempt before
-    * flagging.
-    *
-    * Recording protocol (round-8 advisory): ceilings are re-recorded
-    * in a SEPARATE commit from the code changes they measure, and any
-    * per-entry move >20% against the prior recorded value is named in
-    * that commit's message — so the gate never silently absorbs a
-    * slowdown introduced by the same change that re-recorded it.
-    *
-    * Round 21 (optimization round) — the r20 ADVICE correction plus
-    * the optimization re-records, from this round's four full-sweep
-    * population (pre-change baseline 170.1 s; post-change sweeps
-    * 174.2 / 171.9 / 147.8 s; canary p50 0.087–0.111, i.e. quiet by
-    * the recorded band — the 147.8 s close pair member is the
-    * zero-flag close record). Three entry classes, each named in its
-    * inline comment:
-    * (1) CHANGED-WORK re-records (the 11 queries the optimization
-    * round restructured — fused compaction repair, native strip
-    * kernel, one-aggregation components init, fused delta checkpoint,
-    * exportStats materialization): quiet post-change population max,
-    * >20% moves all named in OPTIMIZATION_r21.md with before/after
-    * plans. The two I/O-incident rows among them
-    * (x_compaction_run — driver r20 read 15.9 s vs 7.05 quiet, the
-    * largest context factor of any query — and x_incr_split_leakage,
-    * the r17 cross-session incident) keep the ×1.4 allowance.
-    * (2) The r20 BLANKET ×1.4 NARROWED to the sink-/I-O-bound rows
-    * (x_corpus_export / x_export_append / x_stream_export keep their
-    * r20 values), per the r20 ADVICE medium item: every other entry
-    * the blanket raised is restored to
-    * max(r19 value, r20 session-population max, r21 quiet population
-    * max) — so a genuine regression no longer hides under ~1.4× of
-    * blanket slack on CPU-bound rows, while no entry undercuts any
-    * quiet reading this container has actually produced. This also
-    * retires the stale inline comments the ADVICE low item flagged
-    * (every adjusted entry carries a fresh r21 comment).
-    * (3) x_incremental_dedup re-footed on the CROSS-SESSION population
-    * per the r20 VERDICT task 1 (0.64 was builder-footed and
-    * under-read three other contexts): builder 0.33, judge
-    * adjudication 0.76/1.12, driver 1.48 (noise-flagged) → 1.25, the
-    * max non-flagged cross-context reading plus margin.
-    *
-    * Round 20 — full re-record at session-population-max × 1.4
-    * (raise-only), i.e. the round-8 blanket allowance REVIVED at the
-    * measured magnitude. Two findings forced it, in escalation:
-    * (1) the cross-session rule (BASELINE.md): builder-session
-    * ceilings under-foot other contexts on I/O-bound queries —
-    * measured 1.31×/1.44× in the r17 and r19 incidents — because
-    * builder sessions warm the filesystem state the sweep itself
-    * creates. First applied to x_corpus_export (closing the r19
-    * official 1.31× conflict) and x_export_append / x_stream_export
-    * at birth.
-    * (2) this round's container then demonstrated the effect
-    * in-session: it drops the page cache externally (observed ~1 GB
-    * cached on a 125 GB box mid-sweep) AND degrades monotonically
-    * (canary p50 walked 0.095 → 0.116 over eight canary-quiet
-    * full-suite sweeps, totals 163.6–198.2 s at the 162-query
-    * surface; x_incr_split_leakage's quiet readings walked
-    * 6.16 → 8.36 on byte-identical code). Every sweep soft-flagged a
-    * nearly-disjoint set of 2–6 code-unchanged queries at 1.1–1.8×,
-    * each clearing in the next run; two population-max-only passes
-    * (44 + 4 entries) were each out-walked by the very next sweep.
-    * Final table: per-query max across the eight sweeps (each value
-    * already min-of-2/3 filtered) × 1.4, raised only — the blanket
-    * allowance absorbs the walk the driver's own bench will meet
-    * later in the same container's lifetime, while a real plan
-    * regression (5×+) still clears it and the hard gate. Largest
-    * moves vs r19: x_dedup_docs 0.44 → 1.58, x_dedup_recall
-    * 1.35 → 4.59, x_corpus_export 3.35 → 8.05, x_incr_split_leakage
-    * 6.06 → 11.71, x_export_stats 2.37 → 5.16.
-    *
-    * Round 19: the two new queries recorded and five entries
-    * re-recorded, from two identical-code quiet full-suite runs at
-    * the 158-query surface (totals 154.1 / 138.2 s; zero
-    * regressed/failed in both; canary p50 0.102/0.087, max ≤0.201 —
-    * both under the drift threshold; max-of-pair per protocol):
-    * x_corpus_export 4.17 (4.165/3.831 — manifest decision + packing
-    * + the distributed-sink write + read-back, all inside the query),
-    * x_epoch_schedule 1.12 (1.115/0.871). Re-recorded, work changed:
-    * x_contam_strip 2.49 → 2.14 and x_span_strip 5.05 → 2.11 (−58%,
-    * named — the staged coverage HOF plus a ceiling that predates the
-    * max-of-pair convention; the staging A/B is in BASELINE.md),
-    * x_index_health 2.47 → 2.24 (readings 2.234/1.574 — now includes
-    * the two media cap rows). Re-recorded, stale pair-max ceilings of
-    * sub-second queries (the round-18 adjudication's own rule,
-    * verdict task 2): x_quality_calibration 0.76 → 0.98 (+29%,
-    * named — quiet population {0.91 official r18, 0.982, 0.738}; the
-    * old ceiling was a pair-max that undercut the query's own band)
-    * and x_cap_gate 0.33 → 0.40 (+21%, named — readings 0.402/0.397
-    * plus the 1.1× official r18 reading on unchanged code).
-    * x_band_gate_recall adjudicated NO-CHANGE: 0.87×/0.93× in the
-    * same pair — its 1.02× official reading was inside the absolute
-    * noise floor, the ceiling stands. Late-round re-records:
-    * x_corpus_export 4.17 → 3.35 (−20%, named — measured work
-    * changed: the kept base is materialized once before the
-    * tree/join fan-out, the export A/B and the re-run ladder
-    * in BASELINE.md; the first re-record took the pair-max 3.06 from
-    * readings 2.825/3.056 and the NEXT two quiet sweeps promptly read
-    * 3.295/3.338 — the round-18 pair-max trap on a sink-bound query
-    * whose band is ±9% — so the entry is footed on the four-reading
-    * quiet population max per the standing rule); x_export_stats 2.37
-    * recorded (readings 2.287/2.364, same two sweeps — totals
-    * 141.2/149.5 s at the 160-query surface, canary p50 0.094/0.098);
-    * x_epoch_realized 0.66 (0.525/0.657, the two sweeps before).
-    *
-    * Round 18 (3): x_shard_append 0.49 recorded (readings
-    * 0.472/0.487 from two further identical-code quiet full-suite
-    * runs, totals 136.3/140.3 s, canary p50 0.096/0.096), and
-    * x_incr_split_leakage re-recorded 5.50 → 6.06 (+10%, named): SIX
-    * canary-verified quiet full-suite readings this round spanned
-    * 4.900–6.056 s (5.436/5.496/5.567/4.900/6.056/5.907) — the ±11%
-    * band of a query whose measured work includes label-frame
-    * checkpoint materialization — so a max-of-TWO statistic sits
-    * inside the band and soft-flags ordinary quiet runs (it did so
-    * twice in this same session); this entry is recorded from the
-    * round's full quiet population instead, per the adjudication
-    * note in BASELINE.md.
-    *
-    * Round 18 (2): the three late-round queries recorded from two
-    * further identical-code quiet full-suite runs (totals 124.0 /
-    * 123.0 s; zero regressed/retried/failed; canary p50 0.082/0.084):
-    * x_contam_strip 2.49 (1.854/2.491 — the positional-span explode +
-    * doc-keyed flag aggregate, the x_dup_spans cost neighborhood),
-    * x_epoch_plan 0.22, x_cap_gate 0.33 (both single bounded
-    * aggregates / map-side verdicts). x_incr_split_leakage read
-    * 5.567/4.900 in the same pair — straddling its fresh 5.50
-    * ceiling exactly as the adjudication note describes; the 0.25 s
-    * soft-flag slack absorbs the band's top. No other entries move.
-    *
-    * Round 18: the six new queries recorded and two entries
-    * re-recorded, all from two identical-code quiet full-suite runs
-    * (totals 137.7 / 133.4 s; zero regressed, zero failed; canary
-    * p50 0.084/0.097 — quiet by the new self-label; max of the two
-    * runs' readings per the round-17 protocol): x_rep_strip 0.31,
-    * x_source_cap 0.30, x_cap_realized 0.56, x_ann_ivfpq 1.52,
-    * x_shard_shuffle 0.44, x_shuffle_stats 0.55. Re-recorded:
-    * x_ann_recall 7.89 → 5.35 (−32%, named per protocol — its
-    * measured work CHANGED this round: the harness gained the
-    * composed ivfpq probe as a seventh arm, and the old ceiling
-    * predates the round-17 undoubled max-of-pair convention, so the
-    * fresh pair re-foots it on today's protocol; readings
-    * 5.349/4.395) and x_incr_split_leakage 5.46 → 5.50 (+0.7% — the
-    * round-17 adjudication: quiet FULL-SWEEP readings 5.436/5.496;
-    * the judge's 1.35× subset reading reproduces quietly and is a
-    * cold-session codegen/JIT artifact the sweep amortizes — the
-    * full analysis and the subset-read rule live in BASELINE.md).
-    *
-    * Round 17 (3): the embed-quality family re-recorded after the
-    * one-text-pass refactor (the narrow (doc_id, qm) frame is
-    * checkpointed once and reused by the centroid, the score join,
-    * and — in the calibration — the band counts, so the corpus text
-    * column is read once instead of three times):
-    * x_embed_quality 1.32 → 0.77 (a 42% move, named per protocol;
-    * readings 0.665 / 0.766) and x_quality_calibration 0.84 → 0.76
-    * (readings 0.671 / 0.758), from two identical-code quiet
-    * full-suite runs (totals 125.1 / 121.5 s, zero flags). Oracle
-    * rows for the whole centroid family (x_embed_quality,
-    * x_embed_outliers, x_gate_battery, x_quality_calibration)
-    * re-verified hash-equal after the refactor; PlanSpec pins the
-    * final calibration plan documents-scan-free.
-    *
-    * Round 17 (2): x_quality_calibration 0.84 recorded from two
-    * further identical-code quiet full-suite runs (totals 126.9 /
-    * 115.3 s, zero flags; readings 0.785 / 0.837) — one
-    * embeddings⋈scores pass plus one all-docs score pass, both
-    * reduced map-side to ≤10 bands. No existing entries move.
-    *
-    * Round 17: the two new round-17 queries recorded and the two
-    * rewritten relational capstones re-recorded, all from the same
-    * two identical-code quiet full-suite runs (totals 123.8 /
-    * 118.2 s; zero regressed/retried/failed in both; max of the two
-    * readings per protocol): x_incr_split_leakage 5.46 (4.95/5.46 —
-    * rides the incremental delta + touched-region machinery, hence
-    * the x_incr_clusters neighborhood), x_gate_chain 2.87
-    * (2.87/2.19 — one battery verdict pass + the band and CDC probe
-    * joins), q_retention_cohorts 0.56 → 0.51 (0.39/0.51 — the
-    * single-scan explode rewrite; the drop is modest at sf0.1 where
-    * constant stage overhead dominates, the probe table in
-    * BASELINE.md carries the 30× story), q_correlated_agg
-    * 1.36 → 1.40 (1.40/1.33 — plan changed from three lineitem scans
-    * to two; the reading is flat at sf0.1 for the same
-    * overhead-floor reason, and the 30× probe shows the sub-linear
-    * growth the rewrite buys). Both rewrites' oracle rows
-    * re-verified hash-equal before recording.
-    *
-    * Round 16 (9): q_correlated_agg 1.36 recorded from two further
-    * identical-code quiet full-suite runs (totals 106.3 / 105.8 s;
-    * readings 1.25 / 1.36) — three narrow lineitem passes (main +
-    * the two decorrelated per-part aggregates). No existing entries
-    * move.
-    *
-    * Round 16 (8): q_retention_cohorts 0.56 recorded from two further
-    * identical-code quiet full-suite runs (totals 109.7 / 112.0 s;
-    * readings 0.558 / 0.471) — two user-keyed exchanges + a window
-    * over the cohort×offset aggregate. No existing entries move.
-    *
-    * Round 16 (7): x_band_gate_recall re-recorded 8.87 → 1.18 (an
-    * 87% move, named per protocol) after the query switched from a
-    * per-run corpusBandIndex rebuild to the stored
-    * ensurePlantedBandIndex artifact — the same stored-index shape
-    * the deployed gate and the audit already read. Two
-    * identical-code quiet full-suite runs (totals 115.2 / 113.9 s;
-    * readings 1.18 / 1.00). Oracle re-verified hash-equal at both
-    * scales after the change. No other entries move.
-    *
-    * Round 16 (6): the split pair (x_split_leakage 1.22,
-    * x_split_repair 1.21) recorded from two further identical-code
-    * quiet full-suite runs (totals 112.3 / 116.2 s) — both pay one
-    * propagation-loop pass over the stored edge graph plus the
-    * doc→label join, so they sit just above x_dedup_clusters
-    * (0.83-0.97 in the same pair). No existing entries move.
-    *
-    * Round 16 (5): x_cdc_novelty 0.38 recorded from two further
-    * identical-code quiet full-suite runs (totals 114.0 / 115.5 s;
-    * readings 0.359 / 0.372) — one hash-only DISTINCT + left join
-    * over the gate family's shared chunking, hence the smallest
-    * entry in the family. The same pair re-measured the gate pair
-    * inside their fresh ceilings (0.39-0.46 / 0.54-0.64). No
-    * existing entries move.
-    *
-    * Round 16 (4): the CDC gate pair (x_cdc_gate 0.48,
-    * x_cdc_gate_recall 0.63) recorded from two identical-code quiet
-    * full-suite runs (totals 118.8 / 124.8 s) — max of the two runs'
-    * per-query readings, the same session the queries landed. Both
-    * ride the shared cdcGateScored probe plan (map-side kernel
-    * chunking + k row-preserving store joins), which is why they sit
-    * an order of magnitude under the chunk-inventory trio. No
-    * existing entries move (largest inter-run drift elsewhere was
-    * q_date_funcs 0.40/0.68, inside its 0.77 ceiling).
-    *
-    * Round 16 (3): the CDC trio (x_cdc_chunks 3.15, x_cdc_dedup 2.17,
-    * x_cdc_resync 1.73) and x_containment 3.61 recorded from two
-    * identical-code quiet full-suite runs (totals 112.6 / 114.6 s) on
-    * the NATIVE CdcStarts kernel + single-pass dedup plan — the trio
-    * was deliberately left ungated through the prior pair while the
-    * interpreted kernel it shipped with was being replaced (measured
-    * there at 9.7-10.1 / 9.7-10.1 / 5.0-5.1 s; the kernel + plan cut
-    * 6-10×, which is why recording before the swap would have frozen
-    * a ceiling 6× loose). No existing entries move.
-    *
-    * Round 16 (2): x_prefix_gate 1.34 and x_band_gate_recall 8.87
-    * recorded from two identical-code quiet full-suite runs (totals
-    * 133.2 / 128.9 s — the round-16 CDC trio present but deliberately
-    * NOT yet gated: its boundary kernel was being replaced the same
-    * session, and a ceiling recorded on the superseded kernel would
-    * be loose by construction; its entries land with the kernel
-    * change's own quiet pair); no existing entries move.
-    *
-    * Round 16: the two new queries (x_band_gate 3.06,
-    * x_gate_battery_capped 2.92) recorded, and x_edit_verify
-    * re-recorded 8.62 -> 6.49 (-25% — the round-14 banded kernel,
-    * measured 1.52x whole-query in the same-JVM 30x A/B this round;
-    * the old ceiling was recorded on the unbanded kernel and was
-    * 2.5x loose against shipped code), all from two identical-code
-    * quiet full-suite runs (totals 98.6 / 96.2 s; max of min-of-2,
-    * doubled); no other entries move.
-    *
-    * Round 12 (5): x_gate_battery 3.90 from two identical-code quiet
-    * full-suite runs (totals 102.4 / 102.9 s; max of min-of-2,
-    * doubled); no existing entries move.
-    *
-    * Round 12 (4): x_embed_quality 1.32 from two identical-code quiet
-    * full-suite runs (totals 101.7 / 103.8 s; max of min-of-2,
-    * doubled); no existing entries move.
-    *
-    * Round 12 (3): two more new queries (x_edit_verify 8.62 — the
-    * banded candidate pipeline plus the per-pair Levenshtein kernel,
-    * the x_minhash_lsh cost band; x_bpe_drift 2.22) recorded from two
-    * identical-code quiet full-suite runs (totals 102.3 / 102.4 s;
-    * max of min-of-2, doubled); no existing entries move.
-    *
-    * Round 12 (2): the session's two new queries (x_bpe_merges 1.29,
-    * x_bpe_segment 1.60) recorded from two identical-code quiet
-    * full-suite runs (totals 98.0 / 91.3 s; max of min-of-2,
-    * doubled); no existing entries move.
-    *
-    * Round 12: the three previously-ungated queries (x_bm25_incr
-    * 1.85, x_hybrid_rank 1.83, x_keep_best_incr 1.90) recorded, and
-    * every query whose WORK changed this round re-recorded, all from
-    * two identical-code quiet full-suite runs (totals 93.2 / 105.6 s;
-    * max of min-of-2, doubled). Moves >20%, each tracking named added
-    * or removed work, not drift: x_ann_recall 4.30 → 7.89 (+83% —
-    * round-11's hybrid-fusion probe runs both arms) and x_incr_media
-    * 0.64 → 1.84 (+188% — round-11's sub-window prefix-index stage):
-    * both grew in round 11 and are re-recorded here per the protocol
-    * the round-11 verdict flagged. From this round's learned coarse
-    * quantizer (in-plan assignment projection replacing the stored
-    * label read): x_ann_ivf 0.36 → 0.76 (+111%), x_ann_ivf_pruned
-    * 0.50 → 0.91 (+82%), x_ivf_drift 0.52 → 1.26 (+142%), x_ann_pq
-    * 1.37 → 2.11 (+54%), x_pq_codes 1.22 → 1.58 (+30%); two TIGHTEN
-    * on the same change — x_ivf_recluster 2.70 → 1.80 (−33%),
-    * x_ann_ivf_nprobe 1.15 → 0.95 (−17%, probe ranking now reads the
-    * persisted codebook instead of re-aggregating centroids).
-    * Sub-20% re-recordings: x_recluster_stats 1.84, x_contamination
-    * 2.95, x_shingle_novelty 1.97 (hashed join keys).
-    *
-    * Round 10 (8): x_mix_realized 0.42 from two identical-code
-    * full-suite runs (113.8 / 110.2 s totals — the machine ran ~20%
-    * slower than the earlier same-day pairs; min-of-2 0.21/0.19
-    * doubled); no existing entries move.
-    *
-    * Round 10 (7): x_keep_best 1.04 from two identical-code
-    * full-suite runs (93.5 / 92.0 s totals, min-of-2 0.52/0.43
-    * doubled); no existing entries move.
-    *
-    * Round 10 (6): x_bigram_fluency 1.90 from two identical-code
-    * full-suite runs (82.7 / 94.6 s totals, min-of-2 0.94/0.95
-    * doubled); no existing entries move.
-    *
-    * Round 10 (5): x_rep_quality 0.78 from two identical-code
-    * full-suite runs (92.4 / 95.4 s totals, min-of-2 0.31/0.39
-    * doubled); no existing entries move.
-    *
-    * Round 10 (4): the four freshness/curation additions
-    * (x_ann_incr 1.06, x_heuristic_filters 1.80, x_filter_agreement
-    * 1.77, x_mix_temperature 0.37) recorded from two fresh
-    * identical-code full-suite runs on the day's machine (totals
-    * 85.0 / 94.2 s), same max-of-min-of-2 doubled statistic.
-    *
-    * Round 10 (3): the four maintenance/curation additions
-    * (x_dup_spans, x_quality_sweep, x_index_health, x_ivf_recluster)
-    * recorded from two fresh identical-code full-suite runs on the
-    * narrowed-radius code; x_compaction_run re-recorded on that same
-    * code (13.98 → 14.66, +4.9% — the survivor-diff windows are
-    * within machine noise; the whole suite ran ~30% slower than the
-    * round-9 recording environment in the same runs). x_ivf_drift
-    * keeps its tighter 0.52 recording: the only change was replacing
-    * its tail sort-merge with a broadcast (a strict improvement), and
-    * its min-of-2 still lands under the old ceiling on a quiet run —
-    * re-recording at today's inflated machine level would loosen the
-    * gate for no reason (the late-round-9 rule).
-    *
-    * Round 10 (2): the two new queries (x_compaction_run 6.99 → 13.98,
-    * x_incr_media 0.32 → 0.64) recorded from two fresh identical-code
-    * full-suite runs, same max-of-min-of-2 doubled statistic.
-    *
-    * Round 10: the five queries the one-sided pair-core rewrite and
-    * the estimator codegen fix touched are re-recorded from two fresh
-    * identical-code runs (max of min-of-2, doubled); every move is
-    * under 20% — the rewrite mostly recovered the round-9 drift
-    * rather than shifting the recorded cost bands.
-    *
-    * Late round 9: ONLY the eight queries the session's changes
-    * touched (events loader, touching-core prunes) are re-recorded,
-    * from two fresh identical-code runs. The rest keep their round-8
-    * values — those same runs measured today's machine ~1.5× slower
-    * on short fixed-overhead queries, and re-recording unrelated
-    * entries at that level would loosen the gate for no reason.
+  /** Per-query ceilings at sf0.1, in seconds, from the classpath table
+    * `graft/ceilings.tsv`: one `name<TAB>seconds<TAB>reason` line per
+    * registered query, sorted by name. The rule that sets a value:
+    *  - a ceiling is the max, across quiet full sweeps, of the query's
+    *    min-of-2 reading, doubled — the doubling is the allowance for
+    *    the sustained contention min-of-2 cannot filter;
+    *  - a ceiling is re-recorded in its own commit, apart from the code
+    *    it measures, and any move over 20% is named in that commit;
+    *  - a ceiling is never footed on readings from a window the canary
+    *    labels drifted.
+    * Each line's reason names how its value was set, including the
+    * older entries that rest partly on drift-window readings;
+    * BASELINE.md "Ceiling history" holds the readings behind them.
     */
-  private val BaselineSec: Map[String, Double] = Map(
-    "q_cube" -> 0.96,
-    "q_date_funcs" -> 0.82, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "q_retention_cohorts" -> 0.71, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "q_correlated_agg" -> 2.14, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_incr_split_leakage" -> 10.09, // r22 re-record: work changed (de-pinned delta); post-change population {6.94, 7.21} max x1.4 (keeps the r17 io-incident allowance; the 15.43 reading in the canary-0.35 sweep is excluded as a labeled burst — the same sweep flagged two untouched queries).
-    "x_rep_strip" -> 0.43, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_source_cap" -> 0.48, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_cap_realized" -> 0.67, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_ann_ivfpq" -> 2.21, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_shard_shuffle" -> 0.68, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_shuffle_stats" -> 0.99, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_contam_strip" -> 1.87, // r21 re-record: measured work changed (OPTIMIZATION_r21.md), quiet post-change population max
-    "x_epoch_plan" -> 0.46, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_export_stats" -> 3.05, // r21 re-record: work changed; four-reading post-change population {1.70,1.82,2.41,3.05} — an I/O-band row (corpus + keep-map scans), footed on the full quiet population per the r18 rule
-    "x_epoch_realized" -> 1.03, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_epoch_schedule" -> 1.46, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_cap_gate" -> 0.55, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_shard_append" -> 0.57, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_quality_calibration" -> 1.35, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_gate_chain" -> 4.05, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "q_event_funnel" -> 2.07,
-    "q_events_tumbling" -> 1.07,
-    "q_grouping_sets" -> 1.03, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "q_join_orders" -> 0.94, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "q_json_funcs" -> 1.36, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "q_lateral_topn" -> 0.71, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "q_local_supplier" -> 1.97, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "q_moving_window" -> 1.11, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "q_outer_join" -> 0.97, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "q_pivot" -> 0.59, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "q_pricing_summary" -> 1.73, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "q_range_join" -> 1.1, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "q_rollup" -> 1.01,
-    "q_scalar_funcs" -> 0.5, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "q_scalar_subquery" -> 0.82,
-    "q_semi_anti" -> 0.63, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "q_setops" -> 0.64, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "q_skew_join" -> 0.74,
-    "q_topk" -> 0.40,
-    "q_unpivot" -> 1.68, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "q_window_rank" -> 0.81, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "roundtrip_cast" -> 2.04, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "roundtrip_distributed" -> 1.35, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "roundtrip_identity" -> 1.37, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "roundtrip_order" -> 0.71, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "roundtrip_rowgroups" -> 2.29, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "roundtrip_sharded" -> 1.2, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_ann_incr" -> 1.53, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_ann_ivf" -> 0.95, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_ann_ivf_nprobe" -> 0.95, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_ann_ivf_pruned" -> 0.91, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_ann_lsh" -> 0.41, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_ann_lsh_multiprobe" -> 0.51, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_ann_pq" -> 2.11, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_ann_recall" -> 6.2, // r22: work changed (shared index-metadata collection, OPTIMIZATION_r22.md) and three sweeps read {4.93, 5.04, 5.10} — but a first narrowing to 5.61 flagged immediately in the next drift-labeled sweep (6.64 at canary p50 0.122, a burst on an operator whose three prior readings were stable), so the r21 value stands: never narrow from drift-window populations.
-    "x_asof_join" -> 0.95, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_bigram_fluency" -> 1.9, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_bm25_batch" -> 1.64,
-    "x_bm25_search" -> 0.97,
-    "x_centroids" -> 0.37, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_chunk_clean" -> 1.15, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_chunk_dedup" -> 0.98, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_chunk_windows" -> 0.51, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_cluster_sizes" -> 0.36, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_contamination" -> 2.95, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_corpus_export" -> 8.05, // re-recorded r20 under the SINK-BOUND rule (BASELINE.md): session quiet pop max 5.75 (readings 3.00-5.75 across the round-20 sweeps) x 1.4 cross-session allowance; closes the r19 driver-context conflict (official 4.39 = 1.31x the old 3.35)
-    "x_export_append" -> 7.64, // recorded r20 at birth under the sink-bound rule: session pop max 5.45 {2.71,2.69,5.45,2.79,2.60,...} x 1.4 — the 2.6-5.5 spread IS this copy+append+read-back query's band under the session's dropped page cache
-    "x_stream_export" -> 5.89, // recorded r20 at birth under the sink-bound rule: session pop max 4.21 (readings 2.53-4.21 across the sweeps it ran in) x 1.4
-    "x_corpus_manifest" -> 2.33, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_dedup_clusters" -> 1.65, // r22: cross-context re-foot per r21 VERDICT item 8 (driver retried it at 1.35 = 1.14x the builder-footed 1.18); r22 population {0.95, 1.06, 1.59, 1.60} (the 1.59/1.60 in drift-labeled sweeps, canary max 0.47/0.89).
-    "x_dedup_docs" -> 1.13, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_dedup_full" -> 3.0, // r22: cross-context re-foot — r22 close sweeps read 3.10/3.73 in two drift-labeled windows (canary max 0.89/0.47) and the one-JVM interleaved profiler read 2.48-2.99 warm in the same container state; code untouched since the r21 seeding. Named readings, not blanket slack.
-    "x_dedup_recall" -> 3.28, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_dedup_semantic" -> 2.2, // r22: cross-context re-foot alongside x_dedup_full (same components family, same drifted-window population: 2.11/1.62 sweeps, 1.95-2.17 profiler).
-    "x_dup_src_matrix" -> 0.74, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_dup_stats" -> 0.43, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_embed_near_dup" -> 1.67, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_embed_quality" -> 0.9, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_gate_battery" -> 5.35, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_embed_outliers" -> 0.69, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_embed_quantize" -> 0.75, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_exact_dedup" -> 0.44, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_filter_funnel" -> 2.41, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_filter_agreement" -> 1.77,
-    "x_fingerprint" -> 1.61,
-    "x_frame_sample" -> 0.32, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_hash_sample" -> 0.32,
-    "x_heuristic_filters" -> 1.80,
-    "x_mix_realized" -> 0.42,
-    "x_mix_temperature" -> 0.37, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_rep_quality" -> 0.78, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_compaction_signal" -> 2.28, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_compaction_run" -> 10.79, // r22 re-record: work changed (two fused checkpoints + freed pins, OPTIMIZATION_r22.md); post-change population {6.43, 7.05, 7.71} max x1.4 (keeps the r20 io-incident allowance: driver once read 15.9 vs 7.05 quiet, the table's largest context factor).
-    "x_dup_spans" -> 4.06, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_span_strip" -> 2.59, // r21 re-record: measured work changed (OPTIMIZATION_r21.md), quiet post-change population max
-    "x_recluster_stats" -> 1.84, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_quality_sweep" -> 0.74, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_index_health" -> 4.98, // r22 re-record: work changed (fused+pruned report, OPTIMIZATION_r22.md) AND cross-context footing per the x_incremental_dedup rule (r21 VERDICT item 1b): the r21 driver read the LEGACY shape 6.49 s at 32 cores / 2.45 at 8 vs builder-quiet 1.66-2.49 — a 2.6x context factor the old builder-footed ceiling ignored. Fused-shape r22 population {1.82, 1.88, 2.00, 2.71}; 4.98 = 2x its 2.49 quiet max, covering the driver context factor on a shape whose cold profile measures 3.4x better than the legacy one the driver flagged.
-    "x_ivf_recluster" -> 1.8, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_incr_media" -> 1.84, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_keep_best" -> 1.04,
-    "x_keep_best_incr" -> 1.90,
-    "x_hybrid_rank" -> 1.83,
-    "x_bm25_incr" -> 1.85,
-    "x_bpe_merges" -> 1.29,
-    "x_bpe_drift" -> 2.22, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_edit_verify" -> 6.49, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_band_gate"    -> 3.06,
-    "x_gate_battery_capped" -> 2.92, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_prefix_gate"  -> 1.34,
-    "x_band_gate_recall" -> 1.68, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_cdc_chunks"   -> 3.15,
-    "x_cdc_dedup"    -> 2.17,
-    "x_cdc_resync"   -> 1.73,
-    "x_cdc_gate"     -> 0.48,
-    "x_cdc_gate_recall" -> 0.85, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_cdc_novelty"  -> 0.38,
-    "x_split_leakage" -> 1.12, // r21 re-record: measured work changed (OPTIMIZATION_r21.md), quiet post-change population max
-    "x_split_repair" -> 1.31, // r21 re-record: measured work changed (OPTIMIZATION_r21.md), quiet post-change population max
-    "x_containment"  -> 3.61,
-    "x_bpe_segment" -> 1.60,
-    "x_ivf_drift" -> 1.26, // round-12 re-record (learned-quantizer assignment)
-    "x_incr_clusters" -> 6.8, // r22 re-record: work changed (de-pinned delta, OPTIMIZATION_r22.md); post-change population {5.50, 6.09, 6.47, 6.80} max — the last two read in drift-labeled sweeps (canary p50 0.108/0.122 vs the 0.084-0.097 quiet band), kept in the footing because the driver context is itself contended.
-    "x_incremental_dedup" -> 1.25, // r21 re-foot on the cross-session population (r20 VERDICT #1): builder 0.33 / judge 0.76,1.12 / driver 1.48-flagged
-    "x_incremental_neardup" -> 1.67,
-    "x_jaccard_sweep" -> 4.06, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_kmeans_converge" -> 2.85, // r22: population re-foot — r22 sweeps read {1.40, 1.44, 1.88, 2.81}, the 2.81 in a drift-labeled window (retried, survived); code untouched.
-    "x_kmeans_iter" -> 0.82, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_kmeans_moves" -> 0.92, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_lang_confusion" -> 0.69,
-    "x_lang_id" -> 0.74, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_len_percentiles" -> 0.39, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_manifest_stats" -> 2.42,
-    "x_media_decode" -> 0.64, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_media_dedup" -> 0.73,
-    "x_media_meta" -> 0.40,
-    "x_media_neardup" -> 2.35, // r22: cross-context re-foot per r21 VERDICT item 8 (driver retried it at 2.13 = 1.08x); r22 population {1.65, 1.69, 1.75, 2.02}.
-    "x_media_recall" -> 3.89, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
+  private[graft] val BaselineSec: Map[String, Double] = {
+    val in = Option(getClass.getResourceAsStream("/graft/ceilings.tsv"))
+      .getOrElse(sys.error("graft/ceilings.tsv is missing from the classpath"))
+    try parseCeilings(scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList)
+    finally in.close()
+  }
 
-    "x_minhash_est" -> 4.84, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_minhash_lsh" -> 5.12, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_ngram_jaccard" -> 4.56, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_pq_codes" -> 1.58,
-    "x_quality_score" -> 0.57, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_redact" -> 0.87, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_repetition" -> 0.96, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_session_window" -> 1.13, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_sessionize" -> 1.32, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_shard_plan" -> 0.99,
-    "x_shard_stats" -> 1.21,
-    "x_shingle_novelty" -> 1.97,
-    "x_sim_search" -> 0.35, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_simhash" -> 3.11, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_simhash_pairs" -> 3.56, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_stratified_sample" -> 0.42, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_text_stats" -> 0.37, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_tfidf_terms" -> 1.1, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_token_count" -> 0.52, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_token_rarity" -> 0.87, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_token_sketch" -> 2.23, // r22: ADVICE correction — the r21 4.46 was an accidental 2.00x of the r20 value; no recorded reading supports it (r21 sweeps read 0.63/0.79 s, the 2.49 s outlier was adjudicated environment). Restored to the r20 value 2.23 = max(r19 1.60, recorded populations).
-    "x_top_ngrams" -> 1.16, // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
-    "x_vocab_growth" -> 2.41,
-    "x_weighted_mix" -> 0.3) // r21: r20 blanket x1.4 narrowed (ADVICE) — max(r19, r20 pop, r21 quiet pop)
+  /** The ceiling table's lines → name → seconds. A malformed line — not
+    * exactly three fields, an empty reason, a name outside
+    * `[a-z0-9_]+`, seconds that are not a positive finite decimal, or
+    * a repeated name — is an error naming its 1-based line number.
+    */
+  private[graft] def parseCeilings(lines: Seq[String]): Map[String, Double] =
+    lines.zipWithIndex.foldLeft(Map.empty[String, Double]) {
+      case (acc, (line, i)) =>
+        def bad(why: String): Nothing =
+          throw new IllegalArgumentException(s"ceiling table line ${i + 1}: $why: '$line'")
+        line.split("\t", -1) match {
+          case Array(name, sec, reason) if reason.trim.nonEmpty =>
+            if (!name.matches("[a-z0-9_]+")) bad("name is not [a-z0-9_]+")
+            val s = Some(sec).filter(_.matches("[0-9]+(\\.[0-9]+)?")).map(_.toDouble)
+              .filter(d => d > 0 && !d.isInfinite)
+              .getOrElse(bad("seconds are not a positive finite number"))
+            if (acc.contains(name)) bad(s"repeated name $name")
+            acc + (name -> s)
+          case _ => bad("expected name<TAB>seconds<TAB>reason")
+        }
+    }
 
   private val RegressionFactor = 3.0
 
@@ -571,30 +76,21 @@ object Bench {
     */
   private val CanaryDriftSec = 0.3
 
-  /** Burst canary — the environment-contention self-label (rounds
-    * 15–17 adjudication: three rounds of official-bench soft flags
-    * were machine bursts, each costing a judge/builder reproduction
-    * cycle). A FIXED trivial probe (the warmup nation scan driven to a
-    * noop write — pure job-launch + tiny-scan overhead, exactly the
-    * cost a contended machine stretches) is timed once before the
-    * sweep and then every [[CanaryEvery]] queries; the JSON carries
-    * `canary` = {n, min, p50, max}. Read rule (BASELINE.md): a run
-    * whose canary p50 sits well above the recorded quiet canary band,
-    * or whose max/min spread is large, is contended — its soft
-    * `regressed` flags are environment suspects to reproduce on a
-    * quiet machine before adjudicating, and the drifted readings
-    * should not re-record any ceiling. The canary is deliberately
-    * OUTSIDE the per-query timing (run after the previous query's
-    * isolation, before the next attempt) so it labels the run without
-    * perturbing the measurements it labels.
+  /** Burst canary — the environment-contention self-label. A FIXED
+    * trivial probe (the nation scan — pure job-launch + tiny-scan
+    * overhead, exactly the cost a contended machine stretches) is
+    * timed once before the sweep and then every [[CanaryEvery]]
+    * queries; the JSON carries `canary` = {n, min, p50, max}. Read
+    * rule (BASELINE.md): a run whose canary p50 sits well above the
+    * recorded quiet band, or whose max/min spread is large, is
+    * contended — its soft `regressed` flags are environment suspects
+    * to reproduce on a quiet machine, and its readings re-record no
+    * ceiling. The canary runs OUTSIDE the per-query timing (after the
+    * previous query's isolation, before the next attempt) so it labels
+    * the run without perturbing the measurements it labels.
     */
-  private def canaryProbe(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): Double = {
-    val t0 = System.nanoTime()
-    spark.read.parquet(s"$sfDir/nation.parquet")
-      .write.format("noop").mode("overwrite").save()
-    (System.nanoTime() - t0) / 1e9
-  }
+  private def canaryProbe(spark: SparkSession, sfDir: String): Double =
+    Sessions.drive(spark.read.parquet(s"$sfDir/nation.parquet"))
 
   /** Absolute excess a query must ALSO show over its ceiling before it
     * flags. A pure ratio gate false-positives on sub-second queries:
@@ -607,132 +103,87 @@ object Bench {
     */
   private val AbsoluteSlackSec = 2.0
 
+  /** Seconds at 3 decimals: bounds the one-line JSON's length (a
+    * log-tail capture truncates a full-precision line); milliseconds
+    * are far below this bench's noise floor.
+    */
+  private def r3(d: Double): Double = math.round(d * 1000) / 1000.0
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // optional arg: comma-separated query names — local perf iteration
-    // on one family without paying the full 99-query sweep. The driver
-    // passes no args, so the per-round emission is always the full
-    // surface.
-    val only: Option[Set[String]] =
-      args.headOption.filter(_.nonEmpty).map(_.split(",").map(_.trim).toSet)
+    // optional arg: comma-separated query names, for local iteration on
+    // one family; no arg (the driver's run) is the full surface
+    val sweep = SparkEntry.select(args.headOption)
+    val full = sweep.size == SparkEntry.queries.size
     val spark = Sessions.builder("graft-bench").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warm up the JVM/codegen/scan paths so the first measured query
     // doesn't absorb session startup (~2-4 s otherwise)
-    spark.range(1000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
-    spark.read.parquet(s"$sfDir/nation.parquet").write.format("noop").mode("overwrite").save()
-    // gate each one-time setup on whether a SELECTED query consumes its
-    // artifact: the `only` iteration path exists to skip the sweep, and
-    // on a cold /tmp the setups dominate it. Queries build any missing
-    // artifact themselves, so an under-inclusive predicate costs
-    // measurement purity for that one local run, never correctness;
-    // the driver passes no args → every setup runs, as before.
+    Sessions.drive(spark.range(1000).selectExpr("sum(id)"))
+    canaryProbe(spark, sfDir)
+    // one-time setups build the stored state a query reads (an index, a
+    // base graph, yesterday's export): every real pipeline amortizes
+    // them, so they are set-up, not query time. A subset run builds
+    // only those a selected query consumes; queries build any missing
+    // artifact themselves, so a miss here costs purity, never results.
     def needed(substrings: String*): Boolean =
-      only.forall(names => names.exists(n => substrings.exists(n.contains)))
-    // one-time ANN index build (setup, not query time — every ANN
-    // system amortizes its index build across the probes it serves)
+      full || sweep.exists { case (n, _) => substrings.exists(n.contains) }
     if (needed("ann", "centroids", "kmeans", "pq_codes", "embed"))
       graft.queries.Pipeline.ensureIvfLayout(spark, sfDir)
     val clusterFamily = Seq("dedup_clusters", "dedup_full", "cluster_sizes",
       "corpus_manifest", "manifest_stats", "filter_funnel", "dedup_semantic",
       "dup_src_matrix", "shard_plan", "shard_stats", "corpus_export",
       "export_append")
-    // one-time near-dup edge-graph build (setup for the dedup-cluster
-    // family, same amortization: a real pipeline generates pairs once
-    // and feeds clustering/keep-drop/reporting from the stored graph;
-    // the pair pipelines themselves are still measured as
-    // x_ngram_jaccard / x_simhash_pairs)
+    // the pair pipelines themselves stay measured as x_ngram_jaccard /
+    // x_simhash_pairs; the dedup decision as x_dedup_full
     if (needed(clusterFamily: _*)) {
       graft.queries.Pipeline.ensureEdgeGraph(spark, sfDir)
-      // one-time symmetrized bucketed edge layout (setup for the
-      // components passes — the same build-once contract as the edge
-      // graph it derives from)
       graft.queries.Pipeline.ensureSymEdges(spark, sfDir)
-      // one-time bucketed keep-map build (setup for the manifest
-      // family; the decision pipeline itself stays measured as
-      // x_dedup_full)
       graft.queries.Pipeline.ensureKeepMap(spark, sfDir)
     }
     if (needed("dedup_recall")) {
-      // one-time planted-corpus build (setup for x_dedup_recall — the
-      // eval measures the four family pipelines over the augmented
-      // corpus, not the corpus derivation itself)
+      // x_dedup_recall scores the family pipelines over a planted
+      // corpus; the corpus and its pair runs are set-up
       graft.queries.Pipeline.ensurePlantedCorpus(spark, sfDir)
-      // one-time family pair run over the planted corpus (setup for
-      // x_dedup_recall's scoring — the family pair pipelines themselves
-      // stay measured as x_ngram_jaccard / x_minhash_lsh /
-      // x_simhash_pairs / x_embed_near_dup)
       graft.queries.Pipeline.ensureRecallPairs(spark, sfDir)
     }
     if (needed("incr", "incremental", "compaction")) {
-      // one-time base corpus + yesterday's graph/labels (setup for
-      // x_incr_clusters — the incremental delta and the touched-region
-      // components re-run ARE the measured query; yesterday's artifacts
-      // are the amortized state a daily ingest starts from)
+      // yesterday's graph/labels and the persisted index state a
+      // daily-ingest dedup service keeps between batches
       graft.queries.Pipeline.ensureBaseLabels(spark, sfDir)
-      // one-time persisted index state for the incremental path: the
-      // shingle posting lists and rep fingerprints a daily-ingest dedup
-      // service keeps between batches — their from-scratch derivations
-      // stay measured as x_ngram_jaccard / x_simhash
       graft.queries.Pipeline.ensureShingleIndex(spark, sfDir)
       graft.queries.Pipeline.ensureFingerprints(spark, sfDir)
     }
-    if (needed("export_append")) {
-      // one-time build of YESTERDAY'S export (setup for
-      // x_export_append — the measured query is the append itself;
-      // yesterday's export is the stored state a daily job starts
-      // from, the same amortization as every other incremental row)
+    if (needed("export_append"))
       graft.queries.Pipeline.ensureBaseExport(spark, sfDir)
-    }
-    if (needed("band_gate", "stream_export", "gate_chain")) {
-      // yesterday's banded-MinHash index + stop-shingle set (setup for
-      // x_band_gate — the measured query is the arrival scoring
-      // against the stored stale index, the state a daily-ingest
-      // near-dup service keeps; the band machinery's from-scratch
-      // derivation stays measured as x_minhash_lsh)
+    if (needed("band_gate", "stream_export", "gate_chain"))
       graft.queries.Pipeline.ensureBandIndex(spark, sfDir)
-    }
     if (needed("compaction_run")) {
-      // one-time crossed-corpus plant + its incremental-state artifacts
-      // (setup for x_compaction_run — the measured query is the repair
-      // itself: crossing detection, blast-radius retraction, touched
-      // rebuild; yesterday's graph and the persisted indexes are the
-      // amortized state the compaction starts from)
+      // the crossed corpus plus the incremental state the repair starts
+      // from; the departure blast radius reads yesterday's fingerprints
       val adir = graft.queries.Pipeline.ensureCrossedCorpus(spark, sfDir).toString
       val bdir = graft.queries.Pipeline.ensureBaseCorpus(spark, adir).toString
       graft.queries.Pipeline.ensureEdgeGraph(spark, bdir)
       graft.queries.Pipeline.ensureShingleIndex(spark, adir)
       graft.queries.Pipeline.ensureFingerprints(spark, adir)
-      // the departure blast radius reads yesterday's rep fingerprints
       graft.queries.Pipeline.ensureFingerprints(spark, bdir)
     }
-    // one-time media planted corpus (setup for x_media_recall)
     if (needed("media", "frame"))
       graft.multimodal.Multimodal.ensureMediaPlanted(spark, sfDir)
     if (needed("incr_media")) {
-      // one-time persisted frame index over the planted corpus (setup
-      // for x_incr_media — the measured query is the batch linking;
-      // the index is the state a daily media-ingest service keeps, and
-      // its from-scratch derivation stays measured as x_media_neardup)
+      // the frame and prefix indexes a media-ingest service keeps
       val mdir = graft.multimodal.Multimodal.ensureMediaPlanted(spark, sfDir)
       graft.multimodal.Multimodal.ensureFrameIndex(spark, mdir.toString)
-      // the sub-window stage's persisted prefix index — same stored-
-      // state contract as the frame postings
       graft.multimodal.Multimodal.ensurePrefixIndex(spark, mdir.toString)
     }
     if (needed("keep_best_incr")) {
-      // yesterday's keep-best decisions + both bucketed keep-maps
-      // (setup for x_keep_best_incr — the measured query is the map
-      // diff, the touched-cluster argmax, and the passthrough; the
-      // full-corpus argmax stays measured as x_keep_best)
       graft.queries.Pipeline.ensureKeepMap(spark, sfDir)
       graft.queries.Pipeline.ensureBaseKeepBest(spark, sfDir)
     }
     var failed = List.empty[String]
     var retried = List.empty[String]
-    // per-query regression gate — the baseline is recorded at sf0.1,
-    // so only gate there (a sf0.001 smoke run would trivially "pass",
-    // a hypothetical sf1 run would trivially fail)
+    // the ceilings are recorded at sf0.1, so only gate there (a
+    // sf0.001 smoke run would trivially "pass", an sf1 run fail)
     val gated = sfDir.stripSuffix("/").endsWith("sf0.1")
     // the hard gate (→ `failed`): a real plan regression clears both
     // the factor and the absolute bar
@@ -747,55 +198,39 @@ object Bench {
     // ceiling measured at 0.33 s says nothing)
     def overCeiling(name: String, sec: Double): Boolean =
       BaselineSec.get(name).exists(b => sec > b + 0.25)
-    def attempt(name: String, fn: (org.apache.spark.sql.SparkSession, String) =>
-        org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+    def attempt(name: String, fn: (SparkSession, String) => DataFrame): Double = {
+      // drive() takes the elapsed time BEFORE the isolation below:
+      // blocking unpersists have their own variable cost and must not
+      // leak into the seconds the gate compares
+      val sec =
+        try Sessions.drive(fn(spark, sfDir))
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
           if (!failed.contains(name)) failed ::= name
-          false
+          -1.0
         }
-      // capture the elapsed time BEFORE cleanup — blocking unpersists
-      // have their own variable cost and must not leak into the
-      // measured seconds the regression gate compares
-      val sec = (System.nanoTime() - t0) / 1e9
-      // isolate queries: no cross-query cache reuse or block-manager
-      // pressure (x_dedup_clusters would otherwise bleed checkpoint
-      // memory into every query after it)
+      // no cross-query cache reuse or block-manager pressure
       Sessions.isolateQueries(spark)
-      if (ok) sec else -1.0
+      sec
     }
     // min of two back-to-back runs per query: this machine's measured
     // noise is single-query stalls (0.44 s → 2.1 s, and one recorded
     // 49× outlier on byte-identical code) that strike ONE run at
-    // random — two consecutive driver benches of identical round-5
-    // code flagged disjoint query pairs. A stall hitting the same
-    // query in both runs is quadratically unlikely, so min-of-2 is a
-    // stable statistic; a real plan regression slows both runs and
-    // survives the min. Quadratically unlikely is not impossible: the
-    // official r6 emission flagged x_kmeans_iter at 3.48× on a stall
-    // that struck both attempts (judge rerun of identical code: 0.42×).
-    // So a would-be flag buys ONE more attempt — min-of-3, recorded in
-    // `retried` so the artifact shows the gate adjudicating itself — a
-    // real plan regression slows all three runs and still flags.
+    // random. A stall hitting the same query in both runs is
+    // quadratically unlikely, so min-of-2 is a stable statistic; a
+    // real plan regression slows both runs and survives the min.
+    // Unlikely is not impossible, so a would-be flag buys ONE more
+    // attempt — min-of-3, recorded in `retried` so the artifact shows
+    // the gate adjudicating itself.
     val canarySecs = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val sweep = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-    // subset-warmup discipline (round 20): a targeted `only` run pays
-    // cold-session costs the full sweep amortizes over 160 queries —
-    // measured 15-25% inflation on the subset's first readings, which
-    // generated two rounds of ceiling-adjudication cycles
-    // (x_incr_split_leakage r17, x_corpus_export r19). Run ONE untimed
-    // warmup pass (the canary target plus the subset's first query)
-    // before the clock so targeted readings compare to full-sweep
-    // ceilings without a mental discount; the JSON carries
-    // `context: "subset"` so the artifact names its own protocol.
-    if (only.nonEmpty) {
+    // subset warmup: a targeted run pays cold-session costs the full
+    // sweep amortizes (measured 15-25% on the subset's first readings),
+    // so ONE untimed pass of the canary and the first query runs
+    // before the clock, and the JSON carries `context: "subset"`
+    if (!full) {
       canaryProbe(spark, sfDir)
       sweep.headOption.foreach { case (name, fn) =>
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        try Sessions.drive(fn(spark, sfDir))
         catch { case e: Throwable =>
           System.err.println(s"[bench] warmup $name failed: ${e.getMessage}")
         }
@@ -819,16 +254,10 @@ object Bench {
     }
     // one trailing canary reading so the tail of the sweep is labeled too
     canarySecs += canaryProbe(spark, sfDir)
-    // canary-triggered requeue (round 19, closing the canary loop):
-    // the canary labels a CONTENDED WINDOW inside an otherwise quiet
-    // run — a query that soft-flagged while either of its bracketing
-    // canary readings was drifted was measured under contention, so
-    // its flag is an environment suspect BY THE RUN'S OWN EVIDENCE.
-    // Re-run each such query once now, at sweep end (the burst has
-    // either passed — the requeued reading clears the flag — or it
-    // has not, and the flag stands on a reading the trailing canary
-    // labels too). The `requeued` JSON section records {name: sec} so
-    // the artifact shows the gate adjudicating itself; the final
+    // canary-triggered requeue: a query that soft-flagged while either
+    // of its bracketing canary readings was drifted was measured under
+    // contention, by the run's own evidence. Re-run each such query
+    // once at sweep end; `requeued` records {name: sec}, and the
     // reported time is the min, the same statistic as `retried`.
     def canaryDriftedAround(idx: Int): Boolean = {
       val before = idx / CanaryEvery
@@ -841,7 +270,7 @@ object Bench {
           canaryDriftedAround(idx)) {
         val again = attempt(name, fn)
         if (again >= 0) {
-          requeued(name) = math.round(again * 1000) / 1000.0
+          requeued(name) = r3(again)
           name -> math.min(best, again)
         } else {
           // the requeue exists only to potentially CLEAR a soft flag:
@@ -857,13 +286,7 @@ object Bench {
         }
       } else name -> best
     }
-    // per-query values at 3 decimals (r22, VERDICT item: bound the
-    // one-line JSON's length — the driver's log-tail capture truncated
-    // round 20's full-precision line, costing that round its official
-    // round-over-round comparison). Milliseconds are far below this
-    // bench's noise floor; the timed methodology is unchanged.
-    def rq(d: Double): Double = math.round(d * 1000) / 1000.0
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + rq(v) }
+    val qs = results.map { case (k, v) => "\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
     val regressed = if (!gated) Nil else results.collect {
@@ -884,7 +307,6 @@ object Bench {
     val requeuedJson = requeued.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val cs = canarySecs.sorted
-    def r3(d: Double): Double = math.round(d * 1000) / 1000.0
     // conventional median: even n averages the two middle elements —
     // upper-middle alone biases a ~16-reading quiet band slightly high
     val canaryP50 =
@@ -892,18 +314,15 @@ object Bench {
       else (cs(cs.size / 2 - 1) + cs(cs.size / 2)) / 2.0
     val canaryJson =
       s"""{"n":${cs.size},"min":${r3(cs.head)},"p50":${r3(canaryP50)},"max":${r3(cs.last)}}"""
-    val context = if (only.isEmpty) "full" else "subset"
+    val context = if (full) "full" else "subset"
     val json =
-      s"""{"metric":"total","value":${rq(total)},"unit":"sec","context":"$context","queries":$qs,"baseline_ratio":$ratios,"regressed":$regressedJson,"retried":$retriedJson,"requeued":$requeuedJson,"failed":$failedJson,"canary":$canaryJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","context":"$context","queries":$qs,"baseline_ratio":$ratios,"regressed":$regressedJson,"retried":$retriedJson,"requeued":$requeuedJson,"failed":$failedJson,"canary":$canaryJson,"sf":"$sfDir"}"""
     println(json)
-    // also land the JSON in a file: the driver captures a log tail,
-    // and one truncated capture already cost a round its per-query
-    // data (BENCH_r05 parsed: null). FULL-surface sf0.1 runs only — a
-    // local subset iteration (the `only` arg) must not clobber the
-    // round's full emission record (a 6-query /tmp-fixture line once
-    // did), and neither may a full-surface smoke at another SF (an
-    // sf0.001 line did, round 20).
-    if (only.isEmpty && gated)
+    // also land the JSON in a file, since a log-tail capture can
+    // truncate the line — full-surface sf0.1 runs only, so neither a
+    // subset iteration nor a smoke run at another SF clobbers the
+    // full emission record
+    if (full && gated)
       java.nio.file.Files.write(
         java.nio.file.Paths.get("bench_last.json"),
         (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))

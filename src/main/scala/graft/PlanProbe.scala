@@ -22,26 +22,24 @@ object PlanProbe {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val suffix = args(1)
-    val only: Option[Set[String]] = args.lift(2).map(_.split(',').map(_.trim).toSet)
+    val selected = SparkEntry.select(args.lift(2))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Sessions.builder("graft-planprobe").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Files.createDirectories(Paths.get(outDir))
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-        try {
-          val df = fn(spark, sfDir)
-          val txt = df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          Files.writeString(Paths.get(outDir, s"${name}_$suffix.txt"), txt)
-          println(s"[planprobe] wrote $name ($suffix)")
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[planprobe] $name failed: ${e.getMessage}")
-        }
-        Sessions.isolateQueries(spark)
+    selected.foreach { case (name, fn) =>
+      try {
+        val df = fn(spark, sfDir)
+        val txt = df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+        Files.writeString(Paths.get(outDir, s"${name}_$suffix.txt"), txt)
+        println(s"[planprobe] wrote $name ($suffix)")
+      } catch {
+        case e: Throwable =>
+          System.err.println(s"[planprobe] $name failed: ${e.getMessage}")
       }
+      Sessions.isolateQueries(spark)
+    }
     spark.stop()
   }
 }

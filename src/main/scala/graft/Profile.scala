@@ -3,7 +3,6 @@ package graft
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.DataFrame
 
 /** Per-JOB attribution profiler for named registry queries: a job-end
   * listener over real runs of the declared queries yields, per job,
@@ -13,8 +12,8 @@ import org.apache.spark.sql.DataFrame
   * rounds) followed by the final noop write.
   *
   * Emits one JSON line per drive: ordered [sec, stages, tasks] per
-  * job plus the wall total. Interleaves the named queries `reps` times
-  * (isolated between drives). Run:
+  * job plus the wall total. Interleaves the named queries, in name
+  * order, `reps` times (isolated between drives). Run:
   * `sbt "runMain graft.Profile /root/testdata/sf0.1 2 x_incr_clusters,x_incr_split_leakage"`
   */
 object Profile {
@@ -23,11 +22,10 @@ object Profile {
     require(args.length == 3, "usage: graft.Profile <sfDir> <reps> <query,query,...>")
     val dir = args(0)
     val reps = args(1).toInt
-    val names = args(2).split(",").map(_.trim).toSeq
+    val arms = SparkEntry.select(Some(args(2)))
     val spark = Sessions.builder("graft-profile").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000).selectExpr("sum(id)")
-      .write.format("noop").mode("overwrite").save()
+    Sessions.drive(spark.range(1000).selectExpr("sum(id)"))
 
     val jobStart = TrieMap.empty[Int, Long]
     val jobSec = TrieMap.empty[Int, Double]
@@ -50,15 +48,11 @@ object Profile {
         }
     })
 
-    val arms: Seq[(String, () => DataFrame)] = names.map(n =>
-      n -> (() => SparkEntry.queries(n)(spark, dir)))
     for (r <- 1 to reps; (name, fn) <- arms) {
       Sessions.isolateQueries(spark)
       jobStart.clear(); jobSec.clear(); jobStages.clear(); jobTasks.clear()
       stageJob.clear()
-      val t0 = System.nanoTime()
-      fn().write.format("noop").mode("overwrite").save()
-      val wall = math.round((System.nanoTime() - t0) / 1e6) / 1e3
+      val wall = math.round(Sessions.drive(fn(spark, dir)) * 1000) / 1e3
       Thread.sleep(300)
       val jobs = jobSec.keys.toSeq.sorted.map { jid =>
         val sec = math.round(jobSec(jid) * 1000) / 1e3

@@ -45,8 +45,7 @@ object ScaleProbe {
     val spark = Sessions.builder("graft-scale-probe").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // absorb session/codegen startup so factor 1 isn't inflated
-    spark.range(1000).selectExpr("sum(id)")
-      .write.format("noop").mode("overwrite").save()
+    Sessions.drive(spark.range(1000).selectExpr("sum(id)"))
     factors.foreach(f => runOne(spark, srcDir, s"$outRoot/f$f", f))
     spark.stop()
   }
@@ -59,20 +58,12 @@ object ScaleProbe {
     // block-manager memory under a later measurement — at 30× that
     // pressure bends exactly the curves the probe exists to record
     def isolate(): Unit = Sessions.isolateQueries(spark)
-    // Every QUERY measurement drives the plan with a noop-format
-    // write, the Bench discipline, for the same reason Bench documents
-    // and one more: .count() does not just prune columns — Catalyst
-    // ELIMINATES whole unique-keyed join/derivation subtrees under a
-    // count(1) (measured: the span audit collapsed to a raw parquet
-    // count; the manifest collapsed to a two-column key join, dropping
-    // every decision expression). Counts used for row-contract checks
-    // run AFTER their measurement.
+    // every QUERY measurement is a Sessions.drive (never a .count(),
+    // which Catalyst prunes — measured: the span audit collapsed to a
+    // raw parquet count); row-contract counts run AFTER it
     def drive(name: String): Double = {
       isolate()
-      val t = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      secsSince(t)
+      r3(Sessions.drive(SparkEntry.queries(name)(spark, dir)))
     }
     val t0 = System.nanoTime()
     val nDocs = buildFixture(spark, srcDir, dir, factor)
@@ -220,10 +211,7 @@ object ScaleProbe {
     // the full from-scratch media rebuild over the same planted
     // corpus — the cost the incremental path replaces
     isolate()
-    val t13 = System.nanoTime()
-    multimodal.Multimodal.mediaNearDup(spark, mediaDir)
-      .write.format("noop").mode("overwrite").save()
-    val tMediaRebuild = secsSince(t13)
+    val tMediaRebuild = r3(Sessions.drive(multimodal.Multimodal.mediaNearDup(spark, mediaDir)))
     val nCompaction = SparkEntry.queries("x_compaction_run")(spark, dir).count()
     val nIncrMedia = SparkEntry.queries("x_incr_media")(spark, dir).count()
     require(nCompaction > 0 && nIncrMedia > 0,
@@ -335,7 +323,9 @@ object ScaleProbe {
     spark.read.parquet(s"$dir/documents.parquet").count()
   }
 
-  private def secsSince(t: Long): Double =
-    math.round((System.nanoTime() - t) / 1e6) / 1e3
+  private def secsSince(t: Long): Double = r3((System.nanoTime() - t) / 1e9)
+
+  /** Seconds rounded to the millisecond. */
+  private def r3(sec: Double): Double = math.round(sec * 1000) / 1000.0
 
 }

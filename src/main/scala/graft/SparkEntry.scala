@@ -22,6 +22,22 @@ object SparkEntry {
       graft.queries.Pipeline.queries ++
       graft.multimodal.Multimodal.queries
 
+  /** The registry entries a harness's optional query-list argument
+    * names, sorted by name. The list is comma-separated; names are
+    * trimmed and empty names dropped, and a list with no names (or no
+    * argument) selects the whole registry. An unknown name is an
+    * error naming every unknown name, never a run that measures
+    * nothing.
+    */
+  def select(arg: Option[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val all = queries
+    val names = arg.toSeq.flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty).distinct
+    val unknown = names.filterNot(all.contains)
+    require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
+    val chosen = if (names.isEmpty) all else all.filter { case (n, _) => names.contains(n) }
+    chosen.toSeq.sortBy(_._1)
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

@@ -7,13 +7,11 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated query names (local iteration
     // only — the driver always runs the full 2-arg surface)
-    val only: Option[Set[String]] = args.lift(2).map(_.split(',').toSet)
+    val selected = SparkEntry.select(args.lift(2))
     val spark = Sessions.builder("graft-verify").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -907,7 +907,7 @@ object Multimodal {
     * truncated variant per video rep.
     */
   def ensureMediaPlanted(s: SparkSession, dir: String): java.nio.file.Path =
-    graft.queries.Pipeline.ensureArtifactFor("graft-media-planted", dir,
+    graft.queries.Pipeline.ensureArtifact("graft-media-planted", dir,
       "documents", s"|v$MEDIA_PLANT_FMT_VERSION") { staging =>
       import s.implicits._
       // variant ids live MEDIA_OFF above their sources; the id<OFF /

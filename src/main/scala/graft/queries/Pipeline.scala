@@ -8579,24 +8579,6 @@ object Pipeline {
     */
   private val IVF_WRITE_SALT = 4
 
-  /** Stamped one-time-build cache shared by [[ensureIvfLayout]] and
-    * [[ensureEdgeGraph]]: the cache key includes the source fixture's
-    * size+mtime (a regenerated fixture at the same path must
-    * invalidate the artifact, or a stale copy would silently diverge
-    * from the oracle), and the build lands in a staging dir that is
-    * atomically renamed into place — two processes racing the build
-    * (driver Verify alongside a Bench run) each produce a complete
-    * artifact and the loser discards its copy, instead of interleaving
-    * writes into one directory.
-    */
-  /** [[ensureArtifact]] for other graft packages (the multimodal
-    * planted corpus uses the same stamped-build-once machinery).
-    */
-  private[graft] def ensureArtifactFor(kind: String, dir: String,
-      srcTable: String, extraKey: String)(
-      build: java.nio.file.Path => Unit): java.nio.file.Path =
-    ensureArtifact(kind, dir, srcTable, extraKey)(build)
-
   /** (exists, size-mtime stamp) of a corpus's embeddings table — the
     * shared cache-key ingredient for every artifact whose content
     * depends on semantic edges. Captured ONCE per ensure* call and
@@ -8614,7 +8596,18 @@ object Pipeline {
     (hasEmb, stamp)
   }
 
-  private def ensureArtifact(kind: String, dir: String, srcTable: String,
+  /** Stamped one-time-build cache shared by [[ensureIvfLayout]],
+    * [[ensureEdgeGraph]] and the other `ensure*` artifacts (the
+    * multimodal planted corpus included): the cache key includes the
+    * source fixture's size+mtime (a regenerated fixture at the same
+    * path must invalidate the artifact, or a stale copy would
+    * silently diverge from the oracle), and the build lands in a
+    * staging dir that is atomically renamed into place — two
+    * processes racing the build (driver Verify alongside a Bench run)
+    * each produce a complete artifact and the loser discards its copy,
+    * instead of interleaving writes into one directory.
+    */
+  private[graft] def ensureArtifact(kind: String, dir: String, srcTable: String,
       extraKey: String)(build: java.nio.file.Path => Unit): java.nio.file.Path =
     Pipeline.synchronized {
       val srcFile = java.nio.file.Paths.get(dir, s"$srcTable.parquet")

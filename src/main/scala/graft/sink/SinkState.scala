@@ -40,7 +40,6 @@ final class SinkState(
   private var _shardIndex: Int = 0
 
   def bufferedBytes: Long = _bufferedBytes
-  def bufferedBatches: Int = _bufferedBatches
   def shardBytes: Long = _shardBytes
   def shardOpen: Boolean = _shardOpen
   def shardIndex: Int = _shardIndex
