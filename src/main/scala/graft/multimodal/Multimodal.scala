@@ -2,7 +2,7 @@ package graft.multimodal
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables

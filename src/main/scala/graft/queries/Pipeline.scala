@@ -159,9 +159,6 @@ object Pipeline {
        |  QUALIFY ROW_NUMBER() OVER (
        |    PARTITION BY md5(lower(trim(text))) ORDER BY doc_id) = 1)""".stripMargin
 
-  /** DuckDB twin of [[repDocs]], as a parenthesized FROM source. */
-  private val repsSql: String = repsSqlFrom("documents")
-
   /** Band-group membership cap for the LSH near-dup family — the band
     * analog of [[SHINGLE_DF_CAP]]. Even after exact-dup pre-collapse a
     * band value can degenerate (all near-identical-but-distinct
@@ -7424,9 +7421,9 @@ object Pipeline {
     * files again and nothing outlives the call.
     *
     * The packed stream itself is materialized ONCE before the sink
-    * fan-in: each micro-batch costs two jobs (the sink's row-size
-    * sample + the write), so an unmaterialized plan re-runs the
-    * keep decision and the prefix-sum tree 2×EXPORT_BATCHES times —
+    * fan-in: each micro-batch's write job would otherwise re-run the
+    * keep decision and the prefix-sum tree, EXPORT_BATCHES times over
+    * (with the old sink's extra size-sample job, 2×EXPORT_BATCHES) —
     * the round-19 scale ladder read 18.6/33.1/55.0 s unmaterialized vs
     * 5.5/9.9/17.3 s checkpointed at 1×/10×/30×. localCheckpoint
     * stores in EXECUTOR storage (memory-and-disk, distributed) — at

@@ -6,7 +6,8 @@ import org.apache.spark.sql.types.StructType
 
 /** [[ColumnarSize.ofRow]] as a column: a UDF over each row, evaluated
   * where the data lives, one `sum` away from a DataFrame's size with no
-  * driver collect. The streaming shard sink sizes its files with it.
+  * driver collect. Neither sink uses it (both call [[ColumnarSize.ofRow]]
+  * per row); perfbench's expected sizes and the sink tests do.
   */
 object ColumnarSizeExpr {
 

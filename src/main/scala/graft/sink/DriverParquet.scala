@@ -17,6 +17,7 @@ import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.SerializableConfiguration
 
 /** In-process Parquet encoding for the parity sink's flushes — the
   * driver-side analog of the reference's single `pq.ParquetWriter`
@@ -32,7 +33,9 @@ import org.apache.spark.sql.types.StructType
   * [[ParquetOutputFormat]]. `parquet.*` Hadoop options and the
   * `compression` option behave exactly as they do on the Spark write
   * path because both paths read them from the same Hadoop conf, and
-  * `ParquetOutputFormat` stays the only reader of that conf.
+  * `ParquetOutputFormat` stays the only reader of that conf. The
+  * distributed [[graft.streaming.StreamingShardSink]] ships the same
+  * [[Encoder]] to its write tasks, which stream rows into shard files.
   *
   * Row groups: a flush is one in-memory Parquet file whose row groups
   * are cut at exactly `rowGroupSize` rows (`parquet.block.row.count.limit`,
@@ -58,17 +61,18 @@ object DriverParquet {
   /** The write settings of one sink, resolved once: Hadoop conf, codec,
     * Catalyst converter and row-group row cap. Construction fails on an
     * unknown codec or a non-positive cap, before the caller has touched
-    * any file.
+    * any file. Serializable, so the streaming sink's write tasks encode
+    * with the settings its driver resolved.
     */
   final class Encoder(
       spark: SparkSession,
       schema: StructType,
       rowGroupSize: Option[Int],
-      options: Map[String, String]) {
+      options: Map[String, String]) extends Serializable {
 
     require(rowGroupSize.forall(_ > 0), "row_group_size must be positive")
 
-    private val conf = {
+    private val conf = new SerializableConfiguration({
       val sqlConf = spark.sessionState.conf
       val c = spark.sessionState.newHadoopConfWithOptions(options)
       // The conf keys ParquetFileFormat.prepareWrite pins before handing
@@ -90,7 +94,7 @@ object DriverParquet {
       rowGroupSize.foreach(n => c.setInt(ParquetOutputFormat.BLOCK_ROW_COUNT_LIMIT, n))
       c.setClass(s"fs.${MemoryFileSystem.Scheme}.impl", classOf[MemoryFileSystem], classOf[FileSystem])
       c
-    }
+    })
 
     // Same precedence and case-insensitivity as Spark's ParquetOptions:
     // `compression` option → `parquet.compression` option → session
@@ -103,16 +107,21 @@ object DriverParquet {
         .orElse(option(options, ParquetOutputFormat.COMPRESSION))
         .getOrElse(spark.sessionState.conf.parquetCompressionCodec))
 
-    private val format = new ParquetOutputFormat[InternalRow](new ParquetWriteSupport)
-    private val toInternal = CatalystTypeConverters.createToCatalystConverter(schema)
+    @transient private lazy val format = new ParquetOutputFormat[InternalRow](new ParquetWriteSupport)
+    @transient private lazy val toInternal = CatalystTypeConverters.createToCatalystConverter(schema)
+
+    /** `rows` (possibly none) as one Parquet file at `file`, replacing it. */
+    def encodeTo(file: HPath, rows: Iterator[Row]): Unit = {
+      val writer = format.getRecordWriter(conf.value, file, codec, ParquetFileWriter.Mode.OVERWRITE)
+      try rows.foreach(r => writer.write(null, toInternal(r).asInstanceOf[InternalRow]))
+      finally writer.close(null)
+    }
 
     /** `rows` (possibly none) as one Parquet file held in memory. */
     def encode(rows: IterableOnce[Row]): Encoded = {
       val file = MemoryFileSystem.newPath()
       try {
-        val writer = format.getRecordWriter(conf, file, codec, ParquetFileWriter.Mode.OVERWRITE)
-        try rows.iterator.foreach(r => writer.write(null, toInternal(r).asInstanceOf[InternalRow]))
-        finally writer.close(null)
+        encodeTo(file, rows.iterator)
         MemoryFileSystem.get(file)
       } finally MemoryFileSystem.remove(file)
     }
@@ -148,23 +157,17 @@ object DriverParquet {
     options.collectFirst { case (k, v) if k.equalsIgnoreCase(key) => v }
 
   /** Spark's `compression` option short names → parquet-mr codecs
-    * (the mapping `ParquetOptions` applies on the executor path;
-    * `lz4` and `lz4_raw` are distinct codecs there and must stay
-    * distinct here or files change format under the same option).
+    * (the mapping `ParquetOptions` applies on the executor path): each
+    * short name is its codec's enum name, lower-cased, plus `none` for
+    * `uncompressed`. `lz4` and `lz4_raw` are distinct codecs there and
+    * stay distinct here, or files would change format under the same
+    * option.
     */
   private def codecName(name: String): CompressionCodecName =
-    name.toLowerCase match {
-      case "none" | "uncompressed" => CompressionCodecName.UNCOMPRESSED
-      case "snappy"                => CompressionCodecName.SNAPPY
-      case "gzip"                  => CompressionCodecName.GZIP
-      case "lzo"                   => CompressionCodecName.LZO
-      case "lz4"                   => CompressionCodecName.LZ4
-      case "lz4_raw"               => CompressionCodecName.LZ4_RAW
-      case "brotli"                => CompressionCodecName.BROTLI
-      case "zstd"                  => CompressionCodecName.ZSTD
-      case other => throw new IllegalArgumentException(
-        s"unknown parquet compression codec '$other'")
-    }
+    if (name.equalsIgnoreCase("none")) CompressionCodecName.UNCOMPRESSED
+    else try CompressionCodecName.valueOf(name.toUpperCase(java.util.Locale.ROOT))
+    catch { case _: IllegalArgumentException =>
+      throw new IllegalArgumentException(s"unknown parquet compression codec '$name'") }
 }
 
 /** The Hadoop file system [[DriverParquet.Encoder]] hands to

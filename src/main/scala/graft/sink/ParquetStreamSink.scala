@@ -55,10 +55,11 @@ import org.apache.spark.sql.types.StructType
   * its open `pq.ParquetWriter`; rotation and close only write the
   * footer. A shard that receives one flush of at most `rowGroupSize`
   * rows is that encoded file verbatim, page indexes included. The
-  * distributed [[graft.streaming.StreamingShardSink]] flushes once per
-  * micro-batch instead of running a [[SinkState]]; it shares this sink's
-  * byte estimate ([[ColumnarSize]]), schema cast ([[RowConformance.cast]]),
-  * shard-name rule and output-path check ([[ParquetFiles.claimOutput]]).
+  * distributed [[graft.streaming.StreamingShardSink]] runs the same
+  * [[SinkState]] rollover and [[DriverParquet.Encoder]] inside each
+  * write task; it shares this sink's byte estimate ([[ColumnarSize]]),
+  * schema cast ([[RowConformance.cast]]), shard-name rule and
+  * output-path check ([[ParquetFiles.claimOutput]]).
   */
 final class ParquetStreamSink(
     spark: SparkSession,

@@ -4,9 +4,10 @@ package graft.sink
   * the semantics core of the reference library
   * (`/root/reference/src/parquet_stream_writer/writer.py:11-41,201-204,
   * 257-264`), factored out of any I/O so it can be property-tested
-  * exhaustively (ScalaCheck). Only the parity sink runs it; the
-  * distributed [[graft.streaming.StreamingShardSink]] flushes once per
-  * micro-batch and shares just the shard-name rule ([[SinkState.shardName]]).
+  * exhaustively (ScalaCheck). Both sinks run it: the parity sink once
+  * per sink on the driver, the distributed
+  * [[graft.streaming.StreamingShardSink]] once per write task with a
+  * zero-byte buffer, so each row flushes as it arrives.
   *
   * Semantics replicated from the reference CODE (its docstring claims
   * `bufferSizeBytes <= shardSizeBytes` is required but never enforces

@@ -4,11 +4,12 @@ import java.nio.file.{Files, Path, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{lit, sum}
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types.StructType
 
-import graft.sink.{ColumnarSizeExpr, ParquetFiles, RowConformance, SinkState}
+import graft.sink.{ColumnarSize, DriverParquet, ParquetFiles, RowConformance, SinkState}
 
 /** The DISTRIBUTED execution mode of the streaming Parquet sink — the
   * shape the same semantics take on a 1000-executor cluster, where the
@@ -20,29 +21,32 @@ import graft.sink.{ColumnarSizeExpr, ParquetFiles, RowConformance, SinkState}
   *  - "batch arrival" = one micro-batch (`foreachBatch` delivers it;
   *    Spark already serializes calls per query, matching the
   *    reference's single-threaded lifecycle, `writer.py:132-149`),
-  *  - "buffer" = the micro-batch itself: flush-per-batch, so memory is
-  *    bounded by trigger sizing instead of a driver-side byte counter,
-  *  - "shard" = an output file: the byte threshold becomes a per-file
-  *    record cap (`maxRecordsPerFile`) derived per batch from the
-  *    parity sink's own estimator, [[graft.sink.ColumnarSize.ofRow]],
-  *    run as a UDF where the data lives ([[ColumnarSizeExpr]]) over a
-  *    bounded sample of the batch: one agg, no collect,
+  *  - "buffer" = none: each write task streams its partition's rows
+  *    straight into the open shard, so memory is bounded by the
+  *    Parquet writer's row group, not by a driver-side byte counter,
+  *  - "shard" = an output file, rolled over by the parity sink's own
+  *    rule inside each write task: a [[SinkState]] with a zero-byte
+  *    buffer, [[graft.sink.ColumnarSize.ofRow]] per row and the same
+  *    [[graft.sink.DriverParquet.Encoder]]. A shard rotates before the
+  *    first row that finds the bytes already in it strictly over
+  *    `shardSizeBytes` (`writer.py:201-204,257-264`), so every file
+  *    holds at most the threshold plus one row, and one oversized row
+  *    still lands in one file,
   *  - "{prefix}-{index}.parquet" naming + `writtenFiles` manifest:
-  *    tasks write to a staging dir; the driver then renames the part
-  *    files to sequential shard indices — a metadata-only operation,
-  *    data never moves through the driver,
+  *    tasks write to a staging dir and return the shards they wrote;
+  *    the driver then renames those files to sequential shard indices,
+  *    in (partition, shard) order — a metadata-only operation, data
+  *    never moves through the driver,
   *  - validation (missing parent / existing path / negative sizes) and
   *    lazy directory semantics match the reference
   *    (`writer.py:127-169`).
   *
-  * Relaxation vs the parity sink, stated honestly: global insertion
-  * order across shards is only guaranteed when each micro-batch has a
-  * deterministic partition order (shards are renamed in batch order,
-  * then partition order, then per-task file order); rows of one input
-  * partition never interleave with another's. The strict sequential
-  * rollover (`strict >`, rotate-before-flush) degenerates here to
-  * "each file carries ≈ shardSizeBytes", which is the property
-  * downstream readers actually rely on at scale.
+  * The rollover runs per input partition: global insertion order
+  * across shards holds when each micro-batch has a deterministic
+  * partition order (shards are renamed in batch order, then partition
+  * order, then shard order), and each partition's last shard may be
+  * under the threshold; rows of one input partition never interleave
+  * with another's.
   *
   * RESTART SAFETY (beyond the single-process reference, which has no
   * such obligation — a "100 TB" sink does): every committed batch is
@@ -105,15 +109,11 @@ final class StreamingShardSink(
   private def restoreFromCommitLog(): Unit = {
     if (Files.exists(commitLog)) {
       val bytes = Files.readAllBytes(commitLog)
-      val text = new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
       // a record is complete iff its newline landed (appendCommit
       // writes line+\n in one syscall): drop a torn final fragment —
-      // that batch was never acknowledged and will replay
-      val complete = text.lastIndexOf('\n') match {
-        case -1 => ""
-        case i  => text.substring(0, i + 1)
-      }
-      val completeBytes = complete.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      // that batch was never acknowledged and will replay. Bytes, not
+      // decoded text, so the truncation offset is the file's own
+      val complete = bytes.lastIndexOf('\n'.toByte) + 1
       // truncate the fragment ON DISK too: appendCommit O_APPENDs, so a
       // surviving fragment would merge with the next record into one
       // line and poison the restart after this one. SHRINK IN PLACE
@@ -124,15 +124,16 @@ final class StreamingShardSink(
       // orphan cleanup would delete all committed shards; an in-place
       // shrink never touches committed bytes, keeping the worst crash
       // outcome at "torn tail again"
-      if (completeBytes.length != bytes.length) {
+      if (complete != bytes.length) {
         val ch = java.nio.channels.FileChannel.open(commitLog,
           java.nio.file.StandardOpenOption.WRITE)
-        try ch.truncate(completeBytes.length.toLong) finally ch.close()
+        try ch.truncate(complete.toLong) finally ch.close()
       }
-      complete.split('\n').iterator.filter(_.nonEmpty).foreach { line =>
-        val Array(b, start, n) = line.split('\t')
-        committed += b.toLong -> (start.toInt, n.toInt)
-      }
+      new String(bytes, 0, complete, java.nio.charset.StandardCharsets.UTF_8)
+        .split('\n').iterator.filter(_.nonEmpty).foreach { line =>
+          val Array(b, start, n) = line.split('\t')
+          committed += b.toLong -> (start.toInt, n.toInt)
+        }
       shardIndex = committed.valuesIterator
         .map { case (start, n) => start + n }.maxOption.getOrElse(0)
     } else {
@@ -210,47 +211,62 @@ final class StreamingShardSink(
     appendCommit(batchId, start, shardIndex - start)
   }
 
-  /** Cast one micro-batch to the schema and write it as
-    * ≈`shardSizeBytes` files appended to the shard sequence.
+  /** Cast one micro-batch to the schema and append its rows to the
+    * shard sequence: one job, whose tasks each roll their own shards
+    * over by the parity sink's rule ([[StreamingShardSink.encodeShards]]),
+    * then a driver-side rename of the listed shards in (partition,
+    * shard) order.
     */
   def addBatch(df: DataFrame): Unit = synchronized {
     val casted = RowConformance.cast(df, schema)
-
-    // SAMPLE-based row sizing: a bounded CollectLimit job over the
-    // first rows, not a full pass — the shard threshold is documented
-    // approximate (reference README.md:135-137), so a ~1k-row average
-    // is plenty, and a full-batch agg would double every batch's scan
-    // (measured 3× slower end-to-end at sf0.1). Also the empty check.
-    val stats = casted.limit(1024).agg(
-      sum(lit(1L)).as("rows"),
-      sum(ColumnarSizeExpr.rowBytes(schema)).as("bytes")).head()
-    if (stats.isNullAt(0) || stats.getLong(0) == 0L) return
-    val rows = stats.getLong(0)
-    val bytes = stats.getLong(1)
-    val avgRowBytes = math.max(bytes / math.max(rows, 1L), 1L)
-    val recordsPerShard = math.max(shardSizeBytes / avgRowBytes, 1L)
-
+    // resolves the codec and the other write settings: a bad option
+    // fails here, before any job runs or any file exists
+    val encoder = new DriverParquet.Encoder(df.sparkSession, schema, None, options)
     val staging = Files.createTempDirectory(path, ".batch-")
-    casted
-      .write.format("parquet").mode("overwrite")
-      .options(options)
-      .option("maxRecordsPerFile", recordsPerShard)
-      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      .save(staging.toString)
-
-    // metadata-only finalize: rename task outputs into the shard
-    // sequence, deterministic (partition, file-counter) order
-    val parts = withStream(Files.list(staging))(
-      _.filter { p =>
-        val n = p.getFileName.toString
-        n.startsWith("part-") && n.endsWith(".parquet")
-      }.toSeq).sortBy(_.getFileName.toString)
-    parts.foreach { p =>
-      Files.move(p, shardPath(shardIndex), StandardCopyOption.ATOMIC_MOVE)
-      shardIndex += 1
-    }
-    ParquetFiles.deleteTree(staging)
+    try {
+      StreamingShardSink.encodeShards(casted, encoder, schema, shardSizeBytes, staging.toUri.toString)
+        .sortBy { case (partition, k, _) => (partition, k) }
+        .foreach { case (_, _, name) =>
+          Files.move(staging.resolve(name), shardPath(shardIndex), StandardCopyOption.ATOMIC_MOVE)
+          shardIndex += 1
+        }
+    } finally ParquetFiles.deleteTree(staging)
   }
 
   private def shardPath(index: Int): Path = path.resolve(SinkState.shardName(prefix, index))
+}
+
+object StreamingShardSink {
+
+  /** The write job: each task streams its partition's rows through a
+    * [[SinkState]] with a zero-byte buffer, so every row flushes at
+    * once and a shard rotates before the first row that finds it
+    * strictly over `shardSizeBytes` (`writer.py:201-204,257-264`). A
+    * shard opens only with its first row, so an empty partition writes
+    * nothing. Shard `k` of partition `p` is `p{p}-a{attempt}-{k}.parquet`
+    * under `staging`; the returned `(p, k, name)` triples, one per
+    * shard, name the only files the driver moves, so a failed or
+    * retried attempt's files stay behind in `staging`.
+    */
+  private def encodeShards(casted: DataFrame, encoder: DriverParquet.Encoder,
+      schema: StructType, shardSizeBytes: Long, staging: String): Array[(Int, Int, String)] =
+    casted.rdd.mapPartitionsWithIndex { (partition, rows) =>
+      val prefix = s"p$partition-a${TaskContext.get.attemptNumber}"
+      val state = new SinkState(Some(shardSizeBytes), 0L)
+      val sharded = rows.map { r =>
+        state.addBatch(ColumnarSize.ofRow(r, schema))
+        if (state.afterWrite() == SinkState.RotateThenFlush || !state.shardOpen) state.onRotate()
+        state.onFlush()
+        (state.shardIndex - 1, r)
+      }.buffered
+      Iterator.continually(sharded.headOption).takeWhile(_.nonEmpty).map { first =>
+        val k = first.get._1
+        val name = SinkState.shardName(prefix, k)
+        encoder.encodeTo(new HPath(staging, name), new Iterator[Row] {
+          def hasNext: Boolean = sharded.headOption.exists(_._1 == k)
+          def next(): Row = sharded.next()._2
+        })
+        (partition, k, name)
+      }
+    }.collect()
 }

@@ -15,8 +15,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
 object Streams {
 
   /** Attach a streaming DataFrame to the shard sink via
-    * `foreachBatch`; micro-batches become ≈shard-sized indexed
-    * Parquet files as they arrive.
+    * `foreachBatch`; micro-batches become byte-rolled, indexed
+    * Parquet shards as they arrive.
     */
   def toShardSink(
       df: DataFrame, sink: StreamingShardSink, checkpoint: Path): StreamingQuery =

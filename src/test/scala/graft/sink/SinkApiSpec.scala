@@ -96,6 +96,80 @@ class SinkApiSpec extends AnyFunSuite with BeforeAndAfterEach {
     assert(back.select($"id").as[Long].collect().sorted.toSeq == (0L until 500L))
   }
 
+  /** Rows per shard that [[SinkState]] gives over `sizes` with a
+    * zero-byte buffer: every row flushes at once, rotating first when
+    * the shard is strictly over `limit`.
+    */
+  private def parityShardRows(sizes: Seq[Long], limit: Long): Seq[Long] = {
+    val state = new SinkState(Some(limit), 0L)
+    val rows = scala.collection.mutable.ArrayBuffer.empty[Long]
+    sizes.foreach { b =>
+      state.addBatch(b)
+      if (state.afterWrite() == SinkState.RotateThenFlush || !state.shardOpen) {
+        state.onRotate()
+        rows += 0L
+      }
+      state.onFlush()
+      rows(rows.size - 1) += 1L
+    }
+    rows.toSeq
+  }
+
+  test("StreamingShardSink: a skewed partition rolls over by bytes, as SinkState does") {
+    val out = tmp.resolve("skew")
+    val limit = 65536L
+    val sink = new StreamingShardSink(out, schema, limit)
+    // one partition: 2,000 one-character rows, then 2,000 rows of 1 KiB
+    val df = spark.range(0, 4000, 1, 1)
+      .selectExpr("id", "IF(id < 2000, 'x', repeat('y', 1024)) AS value")
+    sink.addBatch(df)
+    val sizes = df.collect().toSeq.map(ColumnarSize.ofRow(_, schema))
+    val want = parityShardRows(sizes, limit)
+    assert(want == (2039L +: Seq.fill(30)(64L)) :+ 41L) // by hand: 13 B and 1,036 B rows
+    val files = sink.writtenFiles
+    assert(files.map(ParquetFiles.rowGroupStats(_)._2) == want)
+    val bigRow = 8L + 1024L + 4L
+    files.foreach { f =>
+      val est = ColumnarSize.ofRows(spark.read.schema(schema).parquet(f.toString).collect(), schema)
+      assert(est <= limit + bigRow, s"$f holds $est estimated bytes")
+    }
+    import spark.implicits._
+    val ids = files.flatMap(f => spark.read.schema(schema).parquet(f.toString)
+      .select($"id").as[Long].collect().toSeq)
+    assert(ids == (0L until 4000L), "shards keep the partition's row order")
+  }
+
+  test("StreamingShardSink passes its options to every shard's writer") {
+    val out = tmp.resolve("opts")
+    val sink = new StreamingShardSink(out, schema, 1024L, options = Map(
+      "compression" -> "zstd", "parquet.column.statistics.enabled" -> "false"))
+    sink.addBatch(spark.range(0, 200, 1, 2).selectExpr("id", "repeat('z', 20) AS value"))
+    assert(sink.writtenFiles.size > 2)
+    sink.writtenFiles.foreach { f =>
+      assert(ParquetFiles.firstColumnCodec(f) == "ZSTD")
+      assert(!ParquetFiles.firstColumnHasStatistics(f))
+    }
+  }
+
+  test("StreamingShardSink rejects an unknown codec before any shard or staging dir exists") {
+    val out = tmp.resolve("badcodec")
+    val sink = new StreamingShardSink(out, schema, 1024L, options = Map("compression" -> "snapy"))
+    intercept[IllegalArgumentException] {
+      sink.addBatch(spark.range(0, 10).selectExpr("id", "'v' AS value"))
+    }
+    assert(Files.list(out).iterator.asScala.isEmpty)
+    assert(sink.writtenFiles.isEmpty)
+  }
+
+  test("StreamingShardSink: empty partitions write no file") {
+    val out = tmp.resolve("sparse")
+    val sink = new StreamingShardSink(out, schema, 1024L)
+    sink.addBatch(spark.range(0, 3).selectExpr("id", "'v' AS value").repartition(8))
+    val rows = sink.writtenFiles.map(ParquetFiles.rowGroupStats(_)._2)
+    assert(rows.nonEmpty && rows.size <= 3, s"files: $rows")
+    assert(rows.forall(_ > 0) && rows.sum == 3L, s"rows per file: $rows")
+  }
+
   test("a field name with a dot or a backtick is one column on every cast path") {
     import spark.implicits._
     val odd = StructType(Seq(StructField("a.b", LongType), StructField("c`d", StringType)))
