@@ -1,14 +1,20 @@
 #!/usr/bin/env python3
 """Local mimic of the driver's correctness gate.
 
-Usage: python3 scripts/verify_local.py [sfDir] [outDir]
+Usage: python3 scripts/verify_local.py [sfDir] [outDir] [names]
 
-Assumes `sbt "runMain graft.Verify <sfDir> <outDir>"` already ran (or
-run with --run to invoke it). For each query dir under outDir, reads the
-Spark parquet result and the DuckDB result of oracle_sql.json[name] over
-the same sfDir tables, sorts columns by name, sorts rows, and compares
-values exactly (strictest plausible interpretation of the driver's
-row/schema/hash check).
+Assumes `sbt "runMain graft.Verify <sfDir> <outDir> [names]"` already
+ran (or run with --run to invoke it). For each query name in
+oracle_sql.json, reads the Spark parquet result under outDir and the
+DuckDB result of oracle_sql.json[name] over the same sfDir tables,
+sorts columns by name, sorts rows, and compares values exactly
+(strictest plausible interpretation of the driver's row/schema/hash
+check).
+
+`names` is the comma list graft.Verify takes: only those names are
+checked, a name oracle_sql.json lacks is a failure, and so is a
+selected name whose result directory is missing. With no names (or
+only empty ones) every name in oracle_sql.json is checked.
 """
 import json, subprocess, sys
 from pathlib import Path
@@ -37,9 +43,10 @@ def main():
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     sf_dir = args[0] if len(args) > 0 else "/root/testdata/sf0.01"
     out_dir = Path(args[1] if len(args) > 1 else "/tmp/verify_out")
+    names = {n.strip() for n in (args[2] if len(args) > 2 else "").split(",") if n.strip()}
     if "--run" in sys.argv:
         r = subprocess.run(
-            ["sbt", "-batch", f'runMain graft.Verify {sf_dir} {out_dir}'],
+            ["sbt", "-batch", f'runMain graft.Verify {sf_dir} {out_dir} {",".join(sorted(names))}'.rstrip()],
             cwd="/root/repo", capture_output=True, text=True)
         sys.stdout.write(r.stdout[-3000:])
         if r.returncode != 0:
@@ -51,7 +58,12 @@ def main():
     oracle = json.loads((out_dir / "oracle_sql.json").read_text())
 
     n_pass = n_fail = 0
+    for name in sorted(names - oracle.keys()):
+        print(f"FAIL {name}: not in oracle_sql.json")
+        n_fail += 1
     for name, sql in sorted(oracle.items()):
+        if names and name not in names:
+            continue
         qdir = out_dir / name
         try:
             spark_df = con.sql(f"SELECT * FROM '{qdir}/*.parquet'").df()

@@ -1,8 +1,8 @@
 package graft.sink
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, FileNotFoundException}
+import java.io.{BufferedOutputStream, ByteArrayInputStream, ByteArrayOutputStream, FileNotFoundException}
 import java.net.URI
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
@@ -33,9 +33,20 @@ import org.apache.spark.util.SerializableConfiguration
   * [[ParquetOutputFormat]]. `parquet.*` Hadoop options and the
   * `compression` option behave exactly as they do on the Spark write
   * path because both paths read them from the same Hadoop conf, and
-  * `ParquetOutputFormat` stays the only reader of that conf. The
-  * distributed [[graft.streaming.StreamingShardSink]] ships the same
-  * [[Encoder]] to its write tasks, which stream rows into shard files.
+  * `ParquetOutputFormat` stays the only reader of that conf.
+  *
+  * The distributed [[graft.streaming.StreamingShardSink]] ships the same
+  * [[Encoder]] to its write tasks once per sink, as a broadcast: its
+  * Hadoop conf serializes to ~117 KB, which a per-job closure would
+  * pay to serialize twice on the driver and to deserialize in every
+  * task. A broadcast value is one object shared by concurrent tasks,
+  * so the encoder holds no writer state: each encode makes its own
+  * `ParquetOutputFormat` and `ParquetWriteSupport`. Tasks stream their
+  * `InternalRow`s to local shard files through java.nio
+  * ([[NioFileSystem]]), not Hadoop's local file system: without the
+  * native Hadoop library, `RawLocalFileSystem` sets each new file's
+  * permission by forking `chmod`, once for the file and once for its
+  * `.crc` sidecar, which cost more than encoding a shard.
   *
   * Row groups: a flush is one in-memory Parquet file whose row groups
   * are cut at exactly `rowGroupSize` rows (`parquet.block.row.count.limit`,
@@ -62,7 +73,8 @@ object DriverParquet {
     * Catalyst converter and row-group row cap. Construction fails on an
     * unknown codec or a non-positive cap, before the caller has touched
     * any file. Serializable, so the streaming sink's write tasks encode
-    * with the settings its driver resolved.
+    * with the settings its driver resolved; safe to share between
+    * threads, since every encode makes its own writer.
     */
   final class Encoder(
       spark: SparkSession,
@@ -93,6 +105,7 @@ object DriverParquet {
       // the sink's cap wins over a raw `parquet.block.row.count.limit`
       rowGroupSize.foreach(n => c.setInt(ParquetOutputFormat.BLOCK_ROW_COUNT_LIMIT, n))
       c.setClass(s"fs.${MemoryFileSystem.Scheme}.impl", classOf[MemoryFileSystem], classOf[FileSystem])
+      c.setClass(s"fs.${NioFileSystem.Scheme}.impl", classOf[NioFileSystem], classOf[FileSystem])
       c
     })
 
@@ -107,23 +120,24 @@ object DriverParquet {
         .orElse(option(options, ParquetOutputFormat.COMPRESSION))
         .getOrElse(spark.sessionState.conf.parquetCompressionCodec))
 
-    @transient private lazy val format = new ParquetOutputFormat[InternalRow](new ParquetWriteSupport)
     @transient private lazy val toInternal = CatalystTypeConverters.createToCatalystConverter(schema)
 
     /** `rows` (possibly none) as one Parquet file at `file`, replacing it. */
-    def encodeTo(file: HPath, rows: Iterator[Row]): Unit = {
-      val writer = format.getRecordWriter(conf.value, file, codec, ParquetFileWriter.Mode.OVERWRITE)
-      try rows.foreach(r => writer.write(null, toInternal(r).asInstanceOf[InternalRow]))
-      finally writer.close(null)
-    }
+    def encodeTo(file: Path, rows: Iterator[InternalRow]): Unit = write(NioFileSystem.path(file), rows)
 
     /** `rows` (possibly none) as one Parquet file held in memory. */
     def encode(rows: IterableOnce[Row]): Encoded = {
       val file = MemoryFileSystem.newPath()
       try {
-        encodeTo(file, rows.iterator)
+        write(file, rows.iterator.map(toInternal(_).asInstanceOf[InternalRow]))
         MemoryFileSystem.get(file)
       } finally MemoryFileSystem.remove(file)
+    }
+
+    private def write(file: HPath, rows: Iterator[InternalRow]): Unit = {
+      val writer = new ParquetOutputFormat[InternalRow](new ParquetWriteSupport)
+        .getRecordWriter(conf.value, file, codec, ParquetFileWriter.Mode.OVERWRITE)
+      try rows.foreach(writer.write(null, _)) finally writer.close(null)
     }
   }
 
@@ -170,18 +184,31 @@ object DriverParquet {
       throw new IllegalArgumentException(s"unknown parquet compression codec '$name'") }
 }
 
-/** The Hadoop file system [[DriverParquet.Encoder]] hands to
-  * `ParquetOutputFormat`: write-once heap buffers under `graftmem:`,
-  * registered only on the encoder's own conf. A file exists from the
-  * close of its output stream until the encoder takes it.
+/** A Hadoop file system `ParquetOutputFormat` can create files in and
+  * delete them from, and nothing else: all [[DriverParquet.Encoder]]
+  * asks of one. Registered only on the encoder's own conf.
   */
-final class MemoryFileSystem extends FileSystem {
-  import MemoryFileSystem._
+sealed abstract class CreateOnlyFileSystem(scheme: String) extends FileSystem {
+  private val root = URI.create(s"$scheme:///")
 
-  override def getUri: URI = Root
-  override def getWorkingDirectory: HPath = new HPath(Root)
+  override def getUri: URI = root
+  override def getWorkingDirectory: HPath = new HPath(root)
   override def setWorkingDirectory(dir: HPath): Unit = ()
   override def mkdirs(f: HPath, permission: FsPermission): Boolean = true
+  override def getFileStatus(f: HPath): FileStatus = throw new FileNotFoundException(f.toString)
+  override def open(f: HPath, bufferSize: Int): FSDataInputStream = unsupported
+  override def append(f: HPath, bufferSize: Int, progress: Progressable): FSDataOutputStream = unsupported
+  override def rename(src: HPath, dst: HPath): Boolean = unsupported
+  override def listStatus(f: HPath): Array[FileStatus] = unsupported
+
+  private def unsupported = throw new UnsupportedOperationException(s"$scheme: create-only")
+}
+
+/** Write-once heap buffers under `graftmem:`. A file exists from the
+  * close of its output stream until the encoder takes it.
+  */
+final class MemoryFileSystem extends CreateOnlyFileSystem(MemoryFileSystem.Scheme) {
+  import MemoryFileSystem.files
 
   override def create(f: HPath, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
       replication: Short, blockSize: Long, progress: Progressable): FSDataOutputStream = {
@@ -193,22 +220,36 @@ final class MemoryFileSystem extends FileSystem {
   }
 
   override def delete(f: HPath, recursive: Boolean): Boolean = files.remove(f.toUri.getPath) != null
-  override def getFileStatus(f: HPath): FileStatus = throw new FileNotFoundException(f.toString)
-  override def open(f: HPath, bufferSize: Int): FSDataInputStream = unsupported
-  override def append(f: HPath, bufferSize: Int, progress: Progressable): FSDataOutputStream = unsupported
-  override def rename(src: HPath, dst: HPath): Boolean = unsupported
-  override def listStatus(f: HPath): Array[FileStatus] = unsupported
 }
 
 object MemoryFileSystem {
   val Scheme = "graftmem"
-  private val Root = URI.create(s"$Scheme:///")
   private val files = new ConcurrentHashMap[String, DriverParquet.Encoded]
   private val ids = new AtomicLong
-
-  private def unsupported = throw new UnsupportedOperationException(s"$Scheme: write-once buffers")
 
   private[sink] def newPath(): HPath = new HPath(s"$Scheme:/flush-${ids.incrementAndGet()}.parquet")
   private[sink] def get(f: HPath): DriverParquet.Encoded = files.get(f.toUri.getPath)
   private[sink] def remove(f: HPath): Unit = files.remove(f.toUri.getPath)
+}
+
+/** Local files under `graftnio:`, written with java.nio through a
+  * 64 KiB buffer: no permission call (which forks `chmod` when the
+  * native Hadoop library is missing) and no `.crc` sidecar. Memory
+  * stays bounded by parquet-mr's row group, as on `file:`.
+  */
+final class NioFileSystem extends CreateOnlyFileSystem(NioFileSystem.Scheme) {
+
+  override def create(f: HPath, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long, progress: Progressable): FSDataOutputStream =
+    new FSDataOutputStream(
+      new BufferedOutputStream(Files.newOutputStream(NioFileSystem.local(f)), 64 * 1024), statistics)
+
+  override def delete(f: HPath, recursive: Boolean): Boolean = Files.deleteIfExists(NioFileSystem.local(f))
+}
+
+object NioFileSystem {
+  val Scheme = "graftnio"
+
+  private[sink] def path(file: Path): HPath = new HPath(Scheme, null, file.toAbsolutePath.toString)
+  private def local(f: HPath): Path = Paths.get(f.toUri.getPath)
 }

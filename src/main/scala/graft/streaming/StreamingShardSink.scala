@@ -1,12 +1,13 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.{SparkContext, TaskContext}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.types.StructType
 
 import graft.sink.{ColumnarSize, DriverParquet, ParquetFiles, RowConformance, SinkState}
@@ -31,7 +32,11 @@ import graft.sink.{ColumnarSize, DriverParquet, ParquetFiles, RowConformance, Si
   *    first row that finds the bytes already in it strictly over
   *    `shardSizeBytes` (`writer.py:201-204,257-264`), so every file
   *    holds at most the threshold plus one row, and one oversized row
-  *    still lands in one file,
+  *    still lands in one file. Tasks drive the batch's physical plan
+  *    (`queryExecution.toRdd`) and encode its `InternalRow`s as they
+  *    come; only the byte estimate sees each row as a `Row`, through a
+  *    Catalyst-to-Scala converter, so the per-type size table stays
+  *    the one in [[graft.sink.ColumnarSize]],
   *  - "{prefix}-{index}.parquet" naming + `writtenFiles` manifest:
   *    tasks write to a staging dir and return the shards they wrote;
   *    the driver then renames those files to sequential shard indices,
@@ -40,6 +45,17 @@ import graft.sink.{ColumnarSize, DriverParquet, ParquetFiles, RowConformance, Si
   *  - validation (missing parent / existing path / negative sizes) and
   *    lazy directory semantics match the reference
   *    (`writer.py:127-169`).
+  *
+  * Settings are resolved once per sink, as in the parity sink: the
+  * first batch resolves the codec and the other write settings from
+  * its session and `options` into one encoder, which reaches the write
+  * tasks as a broadcast. A later change to the session's Parquet
+  * settings does not reach a sink already writing; a new sink picks
+  * it up. Only a batch from another `SparkContext` (a restarted one)
+  * resolves and broadcasts them again.
+  *
+  * Each committed batch logs one INFO line: its rows, files, write-job
+  * and rename milliseconds and the commit log's size.
   *
   * The rollover runs per input partition: global insertion order
   * across shards holds when each micro-batch has a deterministic
@@ -88,11 +104,13 @@ final class StreamingShardSink(
   // batchId → (startIndex, fileCount), insertion-ordered for the log
   private val committed = scala.collection.mutable.LinkedHashMap.empty[Long, (Int, Int)]
   private val commitLog: Path = path.resolve("_graft_commits.tsv")
+  private val log = org.slf4j.LoggerFactory.getLogger(classOf[StreamingShardSink])
+  // the write settings, resolved by the first batch on a SparkContext
+  private var shipped: Option[(SparkContext, Broadcast[DriverParquet.Encoder])] = None
 
   if (resume && Files.exists(path)) restoreFromCommitLog()
   else {
-    ParquetFiles.claimOutput(path, overwrite,
-      org.slf4j.LoggerFactory.getLogger(classOf[StreamingShardSink]))
+    ParquetFiles.claimOutput(path, overwrite, log)
     Files.createDirectory(path)
   }
 
@@ -207,8 +225,11 @@ final class StreamingShardSink(
         Files.delete(p)
     }
     val start = shardIndex
-    addBatch(df)
+    val w = write(df)
     appendCommit(batchId, start, shardIndex - start)
+    log.info(s"Committed batch $batchId to: $path (rows=${w.rows}, files=${shardIndex - start}, " +
+      s"write_job_ms=${ms(w.jobNanos)}, rename_ms=${ms(w.renameNanos)}, " +
+      s"commit_log_bytes=${Files.size(commitLog)})")
   }
 
   /** Cast one micro-batch to the schema and append its rows to the
@@ -217,26 +238,47 @@ final class StreamingShardSink(
     * then a driver-side rename of the listed shards in (partition,
     * shard) order.
     */
-  def addBatch(df: DataFrame): Unit = synchronized {
+  def addBatch(df: DataFrame): Unit = synchronized { write(df) }
+
+  private def write(df: DataFrame): StreamingShardSink.Written = {
     val casted = RowConformance.cast(df, schema)
-    // resolves the codec and the other write settings: a bad option
-    // fails here, before any job runs or any file exists
-    val encoder = new DriverParquet.Encoder(df.sparkSession, schema, None, options)
+    // a bad option fails here, before any job runs or any file exists
+    val encoder = ship(df.sparkSession)
     val staging = Files.createTempDirectory(path, ".batch-")
     try {
-      StreamingShardSink.encodeShards(casted, encoder, schema, shardSizeBytes, staging.toUri.toString)
-        .sortBy { case (partition, k, _) => (partition, k) }
-        .foreach { case (_, _, name) =>
+      val t0 = System.nanoTime
+      val shards = StreamingShardSink.encodeShards(casted, encoder, schema, shardSizeBytes, staging)
+      val t1 = System.nanoTime
+      shards.sortBy { case (partition, k, _, _) => (partition, k) }
+        .foreach { case (_, _, name, _) =>
           Files.move(staging.resolve(name), shardPath(shardIndex), StandardCopyOption.ATOMIC_MOVE)
           shardIndex += 1
         }
+      StreamingShardSink.Written(shards.map(_._4).sum, t1 - t0, System.nanoTime - t1)
     } finally ParquetFiles.deleteTree(staging)
   }
+
+  /** The sink's encoder as a broadcast on `spark`'s context: resolved
+    * by the first batch, and again only by a batch from another context.
+    */
+  private def ship(spark: SparkSession): Broadcast[DriverParquet.Encoder] = {
+    val sc = spark.sparkContext
+    shipped.collect { case (c, b) if c eq sc => b }.getOrElse {
+      val b = sc.broadcast(new DriverParquet.Encoder(spark, schema, None, options))
+      shipped = Some(sc -> b)
+      b
+    }
+  }
+
+  private def ms(nanos: Long): String = "%.1f".formatLocal(java.util.Locale.ROOT, nanos / 1e6)
 
   private def shardPath(index: Int): Path = path.resolve(SinkState.shardName(prefix, index))
 }
 
 object StreamingShardSink {
+
+  /** What one batch's write did: rows, write-job and rename nanos. */
+  private final case class Written(rows: Long, jobNanos: Long, renameNanos: Long)
 
   /** The write job: each task streams its partition's rows through a
     * [[SinkState]] with a zero-byte buffer, so every row flushes at
@@ -244,17 +286,19 @@ object StreamingShardSink {
     * strictly over `shardSizeBytes` (`writer.py:201-204,257-264`). A
     * shard opens only with its first row, so an empty partition writes
     * nothing. Shard `k` of partition `p` is `p{p}-a{attempt}-{k}.parquet`
-    * under `staging`; the returned `(p, k, name)` triples, one per
-    * shard, name the only files the driver moves, so a failed or
-    * retried attempt's files stay behind in `staging`.
+    * under `staging`; the returned `(p, k, name, rows)`, one per shard,
+    * name the only files the driver moves, so a failed or retried
+    * attempt's files stay behind in `staging`.
     */
-  private def encodeShards(casted: DataFrame, encoder: DriverParquet.Encoder,
-      schema: StructType, shardSizeBytes: Long, staging: String): Array[(Int, Int, String)] =
-    casted.rdd.mapPartitionsWithIndex { (partition, rows) =>
-      val prefix = s"p$partition-a${TaskContext.get.attemptNumber}"
+  private def encodeShards(casted: DataFrame, encoder: Broadcast[DriverParquet.Encoder],
+      schema: StructType, shardSizeBytes: Long, staging: Path): Array[(Int, Int, String, Long)] = {
+    val dir = staging.toString // a java.nio Path does not serialize
+    casted.queryExecution.toRdd.mapPartitionsWithIndex { (partition, rows) =>
+      val prefix = s"p$partition-a${TaskContext.get().attemptNumber()}"
+      val toRow = CatalystTypeConverters.createToScalaConverter(schema)
       val state = new SinkState(Some(shardSizeBytes), 0L)
       val sharded = rows.map { r =>
-        state.addBatch(ColumnarSize.ofRow(r, schema))
+        state.addBatch(ColumnarSize.ofRow(toRow(r).asInstanceOf[Row], schema))
         if (state.afterWrite() == SinkState.RotateThenFlush || !state.shardOpen) state.onRotate()
         state.onFlush()
         (state.shardIndex - 1, r)
@@ -262,11 +306,13 @@ object StreamingShardSink {
       Iterator.continually(sharded.headOption).takeWhile(_.nonEmpty).map { first =>
         val k = first.get._1
         val name = SinkState.shardName(prefix, k)
-        encoder.encodeTo(new HPath(staging, name), new Iterator[Row] {
+        var n = 0L
+        encoder.value.encodeTo(Paths.get(dir, name), new Iterator[InternalRow] {
           def hasNext: Boolean = sharded.headOption.exists(_._1 == k)
-          def next(): Row = sharded.next()._2
+          def next(): InternalRow = { n += 1; sharded.next()._2 }
         })
-        (partition, k, name)
+        (partition, k, name, n)
       }
     }.collect()
+  }
 }

@@ -26,8 +26,9 @@ class LoggingSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val schema = StructType(Seq(StructField("id", LongType)))
 
-  private def withCapturedLogs[A](f: => A): Seq[String] = {
-    val loggerName = classOf[ParquetStreamSink].getName
+  private def withCapturedLogs[A](logger: Class[_] = classOf[ParquetStreamSink])(
+      f: => A): Seq[String] = {
+    val loggerName = logger.getName
     val messages = ArrayBuffer.empty[String]
     val appender = new AbstractAppender("graft-test-capture", null, null, true,
       org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
@@ -62,7 +63,7 @@ class LoggingSpec extends AnyFunSuite {
     val parent = Files.createTempDirectory("sink-log-")
     val out = parent.resolve("shards")
     Files.createDirectory(out) // pre-existing dir → overwrite must log the delete
-    val logs = withCapturedLogs {
+    val logs = withCapturedLogs() {
       val sink = new ParquetStreamSink(spark, out, schema,
         shardSizeBytes = Some(64), bufferSizeBytes = 64, overwrite = true)
       ParquetStreamSink.withSink(sink) { s =>
@@ -85,5 +86,28 @@ class LoggingSpec extends AnyFunSuite {
       closed.head)
     assert(fields("flushes") == "2" && fields("shards") == "2" && fields("rows") == "64", closed.head)
     assert(fields("encoded_bytes").toLong > 0 && fields("encode_ms").toDouble > 0, closed.head)
+  }
+
+  test("each committed streaming batch is logged at info with its counters") {
+    spark
+    val out = Files.createTempDirectory("stream-log-").resolve("shards")
+    val logs = withCapturedLogs(classOf[graft.streaming.StreamingShardSink]) {
+      val sink = new graft.streaming.StreamingShardSink(out, schema, 256L)
+      sink.addBatch(spark.range(0, 100, 1, 2).toDF("id"), 0L)
+      sink.addBatch(spark.range(100, 150, 1, 1).toDF("id"), 1L)
+      sink.addBatch(spark.range(100, 150, 1, 1).toDF("id"), 1L) // replay: no line
+    }
+    val lines = logs.filter(_.startsWith("Committed batch "))
+    assert(lines.size == 2, s"expected one line per committed batch in: $logs")
+    val fields = lines.map(l => "(\\w+)=([0-9.]+)".r.findAllMatchIn(l)
+      .map(m => m.group(1) -> m.group(2)).toMap)
+    fields.foreach(f => assert(f.keySet ==
+      Set("rows", "files", "write_job_ms", "rename_ms", "commit_log_bytes"), f))
+    assert(lines(0).startsWith(s"Committed batch 0 to: $out (") && lines(1).startsWith("Committed batch 1 "))
+    assert(fields.map(_("rows")) == Seq("100", "50"))
+    // 8-byte rows, 256-byte shards: 33 rows a shard
+    assert(fields.map(_("files")) == Seq("4", "2"))
+    assert(fields.map(_("commit_log_bytes").toLong) == Seq(6L, 12L))
+    assert(fields.forall(_("write_job_ms").toDouble > 0))
   }
 }

@@ -170,6 +170,51 @@ class SinkApiSpec extends AnyFunSuite with BeforeAndAfterEach {
     assert(rows.forall(_ > 0) && rows.sum == 3L, s"rows per file: $rows")
   }
 
+  test("StreamingShardSink: concurrent tasks write each shard as DriverParquet.write would") {
+    val out = tmp.resolve("pin")
+    val sink = new StreamingShardSink(out, schema, 1024L)
+    // 8 partitions on 4 cores, ~4.5 KiB each: several shards per partition
+    sink.addBatch(spark.range(0, 1200)
+      .selectExpr("id", "IF(id % 7 = 0, NULL, repeat('p', CAST(id % 40 AS INT))) AS value")
+      .repartition(8))
+    val files = sink.writtenFiles
+    assert(files.size >= 24, s"${files.size} shards")
+    val rows = spark.read.schema(schema).parquet(out.toString)
+      .selectExpr("id", "value", "_metadata.file_name AS f", "_metadata.row_index AS i")
+      .collect().groupBy(_.getString(2))
+    files.foreach { f =>
+      val back = rows(f.getFileName.toString).sortBy(_.getLong(3)).map(r => Row(r.get(0), r.get(1)))
+      val again = tmp.resolve("again.parquet")
+      DriverParquet.write(spark, again, schema, back.toSeq, Map.empty)
+      assert(java.util.Arrays.equals(Files.readAllBytes(f), Files.readAllBytes(again)), s"$f differs")
+    }
+    assert(rows.valuesIterator.map(_.length).sum == 1200)
+    val crc = Files.walk(out).iterator.asScala.filter(_.getFileName.toString.endsWith(".crc")).toSeq
+    assert(crc.isEmpty, s"checksum files: $crc")
+  }
+
+  test("StreamingShardSink resolves its settings once per sink") {
+    val key = "spark.sql.parquet.compression.codec"
+    val saved = spark.conf.getOption(key)
+    val df = spark.range(0, 100).selectExpr("id", "'c' AS value")
+    def codecs(files: Seq[Path]) = files.map(ParquetFiles.firstColumnCodec).distinct
+    try {
+      spark.conf.set(key, "snappy")
+      val sink = new StreamingShardSink(tmp.resolve("once"), schema, 1024L)
+      sink.addBatch(df, 0L)
+      spark.conf.set(key, "zstd")
+      val before = sink.writtenFiles.size
+      sink.addBatch(df, 1L)
+      assert(codecs(sink.writtenFiles.drop(before)) == Seq("SNAPPY"))
+      val fresh = new StreamingShardSink(tmp.resolve("fresh"), schema, 1024L)
+      fresh.addBatch(df, 0L)
+      assert(codecs(fresh.writtenFiles) == Seq("ZSTD"))
+    } finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("a field name with a dot or a backtick is one column on every cast path") {
     import spark.implicits._
     val odd = StructType(Seq(StructField("a.b", LongType), StructField("c`d", StringType)))
