@@ -32,9 +32,13 @@ as a script, so a false claim can't ship.
 5. Dangling tool references — every `runMain graft.X` and every
    scaladoc `[[graft.….X]]` link under src/ and .claude/ must name an
    object, class or trait declared in src/main (and, for a member
-   link, a member declared in that type's file). Scaladoc links are
-   not compiled, so deleting a tool or member leaves them dangling
-   with no build error.
+   link, a member declared in that type's file). Under src/main an
+   unqualified link `[[name]]` or `[[Type.member]]` must name a
+   declaration in the same file, a top-level type in src/main (with
+   the member declared in that type's file), or a name the file
+   imports; links by a fully qualified `org.`, `java.` or `scala.`
+   path are skipped. Scaladoc links are not compiled, so deleting a
+   tool or member leaves them dangling with no build error.
 
 6. Benchmark API references — every `graft.…` name that perfbench/src
    imports or qualifies must be declared in src/main, and every
@@ -120,15 +124,55 @@ def declared_types():
     return types
 
 
+def declares(text, name):
+    return re.search(r"\b(?:object|class|trait|def|val|var|type)\s+"
+                     + re.escape(name) + r"\b", text) is not None
+
+
 def resolves(ref, types):
     segs = ref.split(".")
     for i in range(len(segs), 1, -1):
         text = types.get(".".join(segs[:i]))
         if text is not None:
-            return all(re.search(
-                r"\b(?:object|class|trait|def|val|var|type)\s+"
-                + re.escape(m) + r"\b", text) for m in segs[i:])
+            return all(declares(text, m) for m in segs[i:])
     return False
+
+
+# an unqualified scaladoc link: `[[name]]` or `[[Type.member]]`
+LOCAL_LINK = re.compile(r"\[\[(?!(?:graft|org|java|scala)\.)(\w+)(?:\.(\w+))?\]\]")
+IMPORT = re.compile(r"^import [\w.]+\.(?:\{([^}]*)\}|(\w+))", re.M)
+
+
+def imported_names(text):
+    names = set()
+    for m in IMPORT.finditer(text):
+        for sel in (m.group(1).split(",") if m.group(1) else [m.group(2)]):
+            name, _, alias = (x.strip() for x in sel.partition("=>"))
+            names.add(alias or name)
+    return names
+
+
+def local_link_misses(text, types):
+    """(line, link) of each unqualified link in a src/main file that
+    names nothing the file declares, imports or can see as a type."""
+    by_name = {}
+    for full, body in types.items():
+        by_name.setdefault(full.rsplit(".", 1)[1], []).append(body)
+    imports = imported_names(text)
+    bad = []
+    for m in LOCAL_LINK.finditer(text):
+        name, member = m.group(1), m.group(2)
+        if member is None:
+            ok = declares(text, name) or name in by_name or name in imports
+        elif declares(text, name):
+            ok = declares(text, member)
+        elif name in by_name:
+            ok = any(declares(body, member) for body in by_name[name])
+        else:
+            ok = name in imports
+        if not ok:
+            bad.append((text.count("\n", 0, m.start()) + 1, m.group(0)))
+    return bad
 
 
 def check_tool_refs():
@@ -149,7 +193,11 @@ def check_tool_refs():
                     if not resolves(ref, types):
                         line = text.count("\n", 0, m.start()) + 1
                         bad.append((os.path.relpath(path, REPO), line, ref))
-    print(f"== runMain / [[graft.…]] references ({n} found) ==")
+                if path.startswith(MAIN) and path.endswith(".scala"):
+                    n += len(LOCAL_LINK.findall(text))
+                    bad += [(os.path.relpath(path, REPO), line, ref)
+                            for line, ref in local_link_misses(text, types)]
+    print(f"== runMain / [[graft.…]] / unqualified src/main links ({n} found) ==")
     for path, line, ref in bad:
         print(f"  MISSING {path}:{line}  {ref}")
     if not bad:

@@ -5147,7 +5147,7 @@ object Pipeline {
     * The fourth statistic (top-token count) is intentionally NOT here:
     * its two consumers compute it through different-shaped plans
     * (explode + groupBy batch-side, row-local HOFs in the gate) and
-    * share only the [[hfTopPpm]] normalization.
+    * share only the [[hfTopPpmCol]] normalization.
     */
   private[graft] def withHfStats(df: DataFrame): DataFrame =
     df.withColumn("hf_w", words(col("text")))
@@ -5975,7 +5975,7 @@ object Pipeline {
     * The expanded copies then go through the shard family's OWN
     * packing core in seeded per-copy permutation order
     * ([[schedKeyCol]] scatters a document's repeats across the
-    * stream; [[exclusivePrefixSumUniform]] assigns budget shards) —
+    * stream; [[packShards]] assigns budget shards) —
     * the complete plan→stream path a token-budgeted run feeds to
     * training.
     *
@@ -5993,10 +5993,9 @@ object Pipeline {
       // collision-free tie-breaker for the prefix-sum tree
       .withColumn("copy_uid", $"doc_id" * 4 + $"k")
       .withColumn("sched_key", schedKeyCol($"doc_id", $"k"))
-    exclusivePrefixSumUniform(copies, "sched_key", "copy_uid", "n_tokens")
+    packShards(copies, "sched_key", Some("copy_uid"))
       .select($"doc_id", $"k", $"source", $"n_tokens", $"sched_key",
-        $"cum_before",
-        expr(s"cum_before div $SHARD_TOKEN_BUDGET").as("shard_id"))
+        $"cum_before", $"shard_id")
       .orderBy($"doc_id", $"k")
   }
 
@@ -6844,18 +6843,34 @@ object Pipeline {
     * re-shuffling the data rows.
     *
     * Returns the input columns plus `cum_before` = sum of `value`
-    * over all rows with strictly smaller `key`. Keys must be unique
-    * (they are doc ids / bucket ids at every call site). The input is
-    * read twice (row path + bucket-totals path) — the
+    * over all rows that come strictly earlier in `(key, tie)` order.
+    * The input is read twice (row path + bucket-totals path) — the
     * [[repDocsOf]] groupBy+join trade: both passes are narrow
     * projections of the scan, cheaper than serializing the corpus
     * through one window task.
+    *
+    * Two bucketings, chosen by `tie`:
+    *  - no `tie`: `key` is a DENSE unique id (doc ids, bucket ids), and
+    *    the widths above cap every level-1 bucket at [[SCAN_FANOUT]]
+    *    rows;
+    *  - with a `tie`: `key` is a HASH-UNIFORM 48-bit key
+    *    ([[shuffleKeyCol]], [[schedKeyCol]]), which may collide, so
+    *    order ties break on the unique `tie` column. Fixed widths would
+    *    leave one row per bucket and push ~n rows into the top-level
+    *    window, so the split is fixed bucket COUNTS instead: 2²⁰
+    *    level-1 buckets (key div 2²⁸) and 2¹⁰ super-buckets.
+    *    Md5-uniformity bounds every level-1 window at ~n/2²⁰ rows (10⁵
+    *    rows per task at a 10¹¹-doc corpus, no skew possible) and the
+    *    one global window sees ≤2¹⁰ super-bucket totals at any corpus
+    *    size.
     */
-  private[queries] def exclusivePrefixSum(df: DataFrame, key: String, value: String): DataFrame = {
+  private[queries] def exclusivePrefixSum(df: DataFrame, key: String, value: String,
+      tie: Option[String] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val b1 = expr(s"$key div $SCAN_FANOUT")
-    val b2 = expr(s"b1 div $SCAN_FANOUT")
-    val wIn = Window.partitionBy(col("b1")).orderBy(col(key))
+    val (width, fanout) = if (tie.isEmpty) (SCAN_FANOUT.toLong, SCAN_FANOUT) else (1L << 28, 1024)
+    val b1 = expr(s"$key div $width")
+    val b2 = expr(s"b1 div $fanout")
+    val wIn = Window.partitionBy(col("b1")).orderBy((key +: tie.toSeq).map(col): _*)
       .rowsBetween(Window.unboundedPreceding, -1)
     val wB1 = Window.partitionBy(col("b2")).orderBy(col("b1"))
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -6885,16 +6900,31 @@ object Pipeline {
     */
   private[graft] val SHARD_TOKEN_BUDGET = 4096L
 
+  /** The token-budget packing rule, the one owner of it for the whole
+    * shard, epoch and export family: a document goes to the shard in
+    * which its token span begins,
+    * `shard_id = (offset + exclusive running n_tokens) div`
+    * [[SHARD_TOKEN_BUDGET]], the running total taken in `(key, tie)`
+    * order by the [[exclusivePrefixSum]] tree. Returns `toks`'s
+    * columns plus `cum_before` (offset included) and `shard_id`.
+    * `offset` (yesterday's or the committed token total) comes only
+    * from the export and append packers; the others' plans carry no
+    * `+ 0`.
+    */
+  private def packShards(toks: DataFrame, key: String, tie: Option[String],
+      offset: Option[Column] = None): DataFrame = {
+    val tree = exclusivePrefixSum(toks, key, "n_tokens", tie)
+    offset.fold(tree)(o => tree.withColumn("cum_before", col("cum_before") + o))
+      .withColumn("shard_id", expr(s"cum_before div $SHARD_TOKEN_BUDGET"))
+  }
+
   /** The unordered shard assignment — shared core of [[shardPlan]]
     * (the per-document plan) and [[shardStats]] (its fill audit).
     */
   private def shardAssign(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val toks = Tables(s, dir, "documents")
-      .select($"doc_id", size(words($"text")).cast("long").as("n_tokens"))
-    exclusivePrefixSum(toks, "doc_id", "n_tokens")
-      .select($"doc_id", $"n_tokens", $"cum_before",
-        expr(s"cum_before div $SHARD_TOKEN_BUDGET").as("shard_id"))
+    packShards(Tables(s, dir, "documents")
+      .select($"doc_id", size(words($"text")).cast("long").as("n_tokens")), "doc_id", None)
   }
 
   /** Shard packing — the last step before a corpus becomes training
@@ -7009,66 +7039,18 @@ object Pipeline {
   private def shuffleKeySql(id: String): String =
     s"('0x' || substr(md5('$SHUF_SALT' || CAST($id AS VARCHAR)), 1, 12))::BIGINT"
 
-  /** Exclusive prefix sum over rows ordered by a HASH-UNIFORM 48-bit
-    * key (ties broken by a unique tie column) — [[exclusivePrefixSum]]
-    * re-footed for sparse keys: that tree buckets by `key div
-    * [[SCAN_FANOUT]]`, which on dense doc-id keys caps every bucket at
-    * [[SCAN_FANOUT]] ROWS, but on uniform 48-bit keys degenerates to
-    * one row per bucket and pushes ~n rows into the top-level global
-    * window — the exact single-task bottleneck the tree exists to
-    * avoid. For uniform keys the right split is fixed bucket COUNTS:
-    * 2²⁰ level-1 buckets (key div 2²⁸) and 2¹⁰ super-buckets, so
-    * md5-uniformity bounds every level-1 window at ~n/2²⁰ rows (10⁵
-    * rows per task at a 10¹¹-doc corpus — balanced BY the hash, no
-    * skew possible) and the one global window sees exactly ≤2¹⁰
-    * super-bucket totals at any corpus size.
+  /** A documents frame as the permutation-order packers' input:
+    * `(doc_id, shuffle_key, n_tokens)`, then the `extra` columns.
     */
-  private def exclusivePrefixSumUniform(
-      df: DataFrame, key: String, tie: String, value: String,
-      keyBits: Int = 48): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // the two split constants derive from the key's bit width so a
-    // caller with a different-width uniform key keeps the balance
-    // contract (2²⁰ level-1 buckets, 2¹⁰ super-buckets) instead of
-    // silently degenerating; [[shuffleKeyCol]] emits 48 bits
-    require(keyBits > 30 && keyBits <= 62,
-      s"uniform prefix-sum key must be a 31..62-bit hash, got $keyBits")
-    val b1 = expr(s"$key div ${1L << (keyBits - 20)}")
-    val wIn = Window.partitionBy(col("b1")).orderBy(col(key), col(tie))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wB1 = Window.partitionBy(col("b2")).orderBy(col("b1"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wB2 = Window.orderBy(col("b2"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val rows = df.withColumn("b1", b1)
-      .withColumn("off1", coalesce(sum(col(value)).over(wIn), lit(0L)))
-    val bucketTotals = df.withColumn("b1", b1)
-      .groupBy(col("b1")).agg(sum(col(value)).as("t1"))
-      .withColumn("b2", expr("b1 div 1024"))
-    val bucketOffsets = bucketTotals
-      .withColumn("off2", coalesce(sum(col("t1")).over(wB1), lit(0L)))
-    val superOffsets = bucketTotals
-      .groupBy(col("b2")).agg(sum(col("t1")).as("t2"))
-      .withColumn("off3", coalesce(sum(col("t2")).over(wB2), lit(0L)))
-    rows
-      .join(bucketOffsets.select(col("b1"), col("b2"), col("off2")), Seq("b1"))
-      .join(broadcast(superOffsets.select(col("b2"), col("off3"))), Seq("b2"))
-      .withColumn("cum_before", col("off1") + col("off2") + col("off3"))
-      .drop("b1", "b2", "off1", "off2", "off3")
-  }
+  private def shuffleToks(docs: DataFrame, extra: Column*): DataFrame =
+    docs.select(Seq(col("doc_id"), shuffleKeyCol(col("doc_id")).as("shuffle_key"),
+      size(words(col("text"))).cast("long").as("n_tokens")) ++ extra: _*)
 
   /** The shuffled shard assignment — [[shardAssign]]'s core fed by the
     * seeded permutation order instead of doc_id order.
     */
-  private def shuffledAssign(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val toks = Tables(s, dir, "documents")
-      .select($"doc_id", shuffleKeyCol($"doc_id").as("shuffle_key"),
-        size(words($"text")).cast("long").as("n_tokens"))
-    exclusivePrefixSumUniform(toks, "shuffle_key", "doc_id", "n_tokens")
-      .select($"doc_id", $"shuffle_key", $"n_tokens", $"cum_before",
-        expr(s"cum_before div $SHARD_TOKEN_BUDGET").as("shard_id"))
-  }
+  private def shuffledAssign(s: SparkSession, dir: String): DataFrame =
+    packShards(shuffleToks(Tables(s, dir, "documents")), "shuffle_key", Some("doc_id"))
 
   /** Seeded deterministic training-shard shuffle (`x_shard_shuffle`)
     * — the step [[shardPlan]] deliberately skipped: training pipelines
@@ -7085,8 +7067,9 @@ object Pipeline {
     * the shuffled layout.
     *
     * Scale shape: the only structural change vs [[shardPlan]] is the
-    * prefix-sum tree — uniform hash keys need fixed bucket COUNTS
-    * rather than fixed bucket widths ([[exclusivePrefixSumUniform]]);
+    * prefix-sum tree's bucketing — uniform hash keys need fixed bucket
+    * COUNTS rather than fixed bucket widths ([[exclusivePrefixSum]]
+    * with a tie column);
     * everything stays the same two narrow passes over (id, key,
     * n_tokens) rows, no corpus-sized global sort, no single-partition
     * window.
@@ -7123,9 +7106,7 @@ object Pipeline {
     * shared core, same explode-spine zero-row visibility.
     */
   def shuffleStats(s: SparkSession, dir: String): DataFrame =
-    shardFillStats(shuffledAssign(s, dir)
-      .select(col("doc_id"), col("n_tokens"), col("cum_before"),
-        col("shard_id")))
+    shardFillStats(shuffledAssign(s, dir))
 
   lazy val shuffleStatsSql: String = shardStatsSqlFrom(shuffledAssignSql)
 
@@ -7163,11 +7144,7 @@ object Pipeline {
       .as[Long].head()
     val batch = docs.filter(defaultBatchPred)
       .select($"doc_id", size(words($"text")).cast("long").as("n_tokens"))
-    exclusivePrefixSum(batch, "doc_id", "n_tokens")
-      .select($"doc_id", $"n_tokens",
-        ($"cum_before" + baseTotal).as("cum_before"))
-      .withColumn("shard_id", expr(s"cum_before div $SHARD_TOKEN_BUDGET"))
-      .orderBy($"doc_id")
+    packShards(batch, "doc_id", None, Some(lit(baseTotal))).orderBy($"doc_id")
   }
 
   lazy val shardAppendSql: String =
@@ -7214,8 +7191,8 @@ object Pipeline {
     * definition shared by [[corpusExport]] and CorpusExportSpec's
     * invariant pins: [[manifestCore]]'s kept slice, the
     * [[shuffleKeyCol]] seeded permutation, and [[shardPlan]]'s
-    * running-token packing over the PERMUTATION order (the
-    * [[exclusivePrefixSumUniform]] tree — uniform 48-bit keys). The
+    * running-token packing over the PERMUTATION order ([[packShards]]
+    * on the [[exclusivePrefixSum]] tree's uniform-key bucketing). The
     * prefix sum runs over narrow (id, key, n_tokens) rows; text joins
     * back on doc_id afterwards, so the scan tree's windows never
     * carry the corpus's fat column.
@@ -7236,7 +7213,7 @@ object Pipeline {
     * manifest + text pass replicates into every branch (a measured
     * 24-scan plan, 20 of them carrying the corpus text column). The
     * checkpoint's lifecycle follows the incrDelta returned-checkpoint
-    * contract: the caller's harness (or [[corpusExport]]'s
+    * contract: the caller's harness (or [[exportPack]]'s
     * freeCheckpoint of the pre-checkpoint plan) reclaims it.
     */
   private[graft] def exportPackedSlice(s: SparkSession, dir: String,
@@ -7248,21 +7225,24 @@ object Pipeline {
     * composed admission chain's survivors for [[streamExport]].
     */
   private def packKept(s: SparkSession, dir: String, keeps: DataFrame,
-      pred: Column, offsetTokens: Column): DataFrame = {
-    import s.implicits._
-    val base = Tables(s, dir, "documents")
-      .join(keeps, Seq("doc_id"), "left_semi")
-      .filter(pred)
-      .select($"doc_id", shuffleKeyCol($"doc_id").as("shuffle_key"),
-        size(words($"text")).cast("long").as("n_tokens"), $"text")
-      .localCheckpoint()
-    val assign = exportPrefixSum(
-        base.select($"doc_id", $"shuffle_key", $"n_tokens"))
-      .withColumn("cum_before", col("cum_before") + offsetTokens)
-      .withColumn("shard_id", expr(s"cum_before div $SHARD_TOKEN_BUDGET"))
-    base.select($"doc_id", $"shuffle_key", $"text").join(assign, Seq("doc_id"))
-      .select($"doc_id", $"shuffle_key", $"n_tokens", $"cum_before",
-        $"shard_id", $"text")
+      pred: Column, offsetTokens: Column): DataFrame =
+    packWithText(shuffleToks(Tables(s, dir, "documents")
+      .join(keeps, Seq("doc_id"), "left_semi").filter(pred), col("text"))
+      .localCheckpoint(), offsetTokens)
+
+  /** Pack a checkpointed `(doc_id, shuffle_key, n_tokens, text)` frame
+    * among itself in permutation order ([[packShards]], offset by
+    * `offset`) and join the text back on doc_id, in [[exportSchema]]
+    * order — the pre-sink stream of every export, batch or streaming.
+    */
+  private def packWithText(base: DataFrame, offset: Column): DataFrame = {
+    val assign = packShards(base.select(col("doc_id"), col("shuffle_key"), col("n_tokens")),
+        "shuffle_key", Some("doc_id"), Some(offset))
+      // the text side carries the key; a second copy would make the
+      // post-join select ambiguous
+      .drop("shuffle_key")
+    base.select(col("doc_id"), col("shuffle_key"), col("text")).join(assign, Seq("doc_id"))
+      .select(exportSchema.fieldNames.toSeq.map(col): _*)
   }
 
   /** The manifest's kept doc-id slice. */
@@ -7290,15 +7270,10 @@ object Pipeline {
     * pass replicated into both branches (the packKept discipline;
     * before-plan: 18 scans, after: the decision runs once).
     */
-  def exportStats(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val toks = Tables(s, dir, "documents")
-      .join(manifestKeptIds(s, dir), Seq("doc_id"), "left_semi")
-      .select($"doc_id", shuffleKeyCol($"doc_id").as("shuffle_key"),
-        size(words($"text")).cast("long").as("n_tokens"))
-      .localCheckpoint()
-    shardFillStats(exportPrefixSum(toks))
-  }
+  def exportStats(s: SparkSession, dir: String): DataFrame =
+    shardFillStats(packShards(shuffleToks(Tables(s, dir, "documents")
+      .join(manifestKeptIds(s, dir), Seq("doc_id"), "left_semi")).localCheckpoint(),
+      "shuffle_key", Some("doc_id")))
 
   /** The export assignment as a parenthesized DuckDB FROM source
     * (the [[shuffledAssignSql]] shape over the kept slice).
@@ -7320,13 +7295,6 @@ object Pipeline {
 
   lazy val exportStatsSql: String = shardStatsSqlFrom(exportAssignSql)
 
-  /** The export's packing tree over (doc_id, shuffle_key, n_tokens). */
-  private def exportPrefixSum(toks: DataFrame): DataFrame =
-    exclusivePrefixSumUniform(toks, "shuffle_key", "doc_id", "n_tokens")
-      .withColumn("shard_id", expr(s"cum_before div $SHARD_TOKEN_BUDGET"))
-      .select(col("doc_id"), col("n_tokens"), col("cum_before"),
-        col("shard_id"))
-
   /** The export stream's sink schema (declared, not inferred — the
     * reference's schema-first writer contract, `writer.py:119-125`).
     */
@@ -7347,34 +7315,56 @@ object Pipeline {
     * manifest: the `writer.py:177-204` semantics, `tests.py:50-86`
     * shape) as [[EXPORT_BATCHES]] ascending permutation-range
     * micro-batches, each sorted by (shuffle_key, doc_id) so the shard
-    * sequence holds the full corpus in permutation order. Returns the
-    * sink (manifest + shard counter) for the spec's invariant pins.
+    * sequence holds the full corpus in permutation order. A fresh
+    * export overwrites `out` and numbers its batches from 0. With
+    * `resume`, the sink re-attaches to yesterday's export at `out`:
+    * the shard file index continues from the restored commit log, and
+    * batchIds continue from
+    * [[graft.streaming.StreamingShardSink.nextBatchId]], so a replayed
+    * id is skipped exactly-once like any other. Returns the sink
+    * (manifest + shard counter) for the spec's invariant pins.
     */
-  private[graft] def exportThroughSink(
-      s: SparkSession, packed: DataFrame, out: java.nio.file.Path,
-      shardBytes: Long): graft.streaming.StreamingShardSink = {
+  private[graft] def exportThroughSink(packed: DataFrame, out: java.nio.file.Path,
+      shardBytes: Long, resume: Boolean = false): graft.streaming.StreamingShardSink = {
     val sink = new graft.streaming.StreamingShardSink(
       out, exportSchema, shardSizeBytes = shardBytes,
-      filePrefix = Some("corpus"), overwrite = true)
-    driveRanges(sink, packed, firstBatchId = 0L)
-    sink
-  }
-
-  /** The [[EXPORT_BATCHES]] ascending permutation-range drive — ONE
-    * definition of the range split shared by [[exportThroughSink]]
-    * (batchIds from 0) and [[appendThroughSink]] (batchIds continuing
-    * from the restored commit log), so the two paths cannot
-    * desynchronize on the split geometry.
-    */
-  private def driveRanges(sink: graft.streaming.StreamingShardSink,
-      packed: DataFrame, firstBatchId: Long): Unit = {
+      filePrefix = Some("corpus"), overwrite = !resume, resume = resume)
+    val first = sink.nextBatchId
     val rangeWidth = (1L << 48) / EXPORT_BATCHES
     (0 until EXPORT_BATCHES).foreach { q =>
       sink.addBatch(
         packed.filter(expr(s"shuffle_key div $rangeWidth") === q)
           .orderBy(col("shuffle_key"), col("doc_id")),
-        firstBatchId + q)
+        first + q)
     }
+    sink
+  }
+
+  /** The export tail every export shares: materialize the packed
+    * stream `pre` ONCE, free the base pin [[packKept]] left under it,
+    * drive it through the sink into `out` ([[exportThroughSink]] at
+    * [[EXPORT_SHARD_BYTES]]), and free the pack. The base pin is found
+    * in the PRE-checkpoint plan (the pack's own lineage is truncated),
+    * and it is freed even when materialization itself fails, so an
+    * executor failure mid-tree leaves nothing pinned for the session.
+    *
+    * The pack is materialized before the sink fan-in because each
+    * micro-batch's write job would otherwise re-run the keep decision
+    * and the prefix-sum tree, EXPORT_BATCHES times over — the round-19
+    * scale ladder read 18.6/33.1/55.0 s unmaterialized vs
+    * 5.5/9.9/17.3 s checkpointed at 1×/10×/30×. localCheckpoint
+    * stores in EXECUTOR storage (memory-and-disk, distributed) — at
+    * deployment scale the same move is a persisted staging table,
+    * never a driver collect.
+    */
+  private[graft] def exportPack(pre: DataFrame, out: java.nio.file.Path,
+      resume: Boolean): Unit = {
+    val packed =
+      try pre.localCheckpoint()
+      catch { case e: Throwable => freeCheckpoint(pre); throw e }
+    freeCheckpoint(pre)
+    try exportThroughSink(packed, out, EXPORT_SHARD_BYTES, resume)
+    finally freeCheckpoint(packed)
   }
 
   /** Curated-corpus EXPORT capstone (`x_corpus_export`) — the query
@@ -7406,52 +7396,30 @@ object Pipeline {
     * which CorpusExportSpec pins by executed scan metrics.
     */
   def corpusExport(s: SparkSession, dir: String): DataFrame =
-    exportAndReadBack(s, exportPacked(s, dir))
+    exportAndReadBack(s, "graft-export-")(exportPack(exportPacked(s, dir), _, resume = false))
 
-  /** Drive a packed pre-sink stream through the distributed sink into
-    * a PER-INVOCATION unique temp dir and return the materialized
-    * read-back — the shared capstone tail of [[corpusExport]] and
-    * [[streamExport]]. Unique dir + materialize + delete (round-19
-    * advisory): a fixed shared path raced two concurrent JVMs (bench
-    * + oracle run, or parallel suites) — one JVM's overwrite-delete
-    * could run while another was writing or reading back — and the
-    * shards persisted after the query returned; here the read-back is
+  /** Run `write` on the `corpus` dir of a PER-INVOCATION unique temp
+    * dir and return the materialized read-back — the shared capstone
+    * tail of [[corpusExport]], [[streamExport]] and [[exportAppend]].
+    * Unique dir + materialize + delete (round-19 advisory): a fixed
+    * shared path raced two concurrent JVMs (bench + oracle run, or
+    * parallel suites) — one JVM's overwrite-delete could run while
+    * another was writing or reading back — and the shards persisted
+    * after the query returned; here the read-back is
     * localCheckpoint-ed (executor storage) before the finally-block
     * deletes the directory, so the returned frame never touches the
-    * files again and nothing outlives the call.
-    *
-    * The packed stream itself is materialized ONCE before the sink
-    * fan-in: each micro-batch's write job would otherwise re-run the
-    * keep decision and the prefix-sum tree, EXPORT_BATCHES times over
-    * (with the old sink's extra size-sample job, 2×EXPORT_BATCHES) —
-    * the round-19 scale ladder read 18.6/33.1/55.0 s unmaterialized vs
-    * 5.5/9.9/17.3 s checkpointed at 1×/10×/30×. localCheckpoint
-    * stores in EXECUTOR storage (memory-and-disk, distributed) — at
-    * deployment scale the same move is a persisted staging table,
-    * never a driver collect.
+    * files again and nothing outlives the call, a failed one included.
     */
-  private def exportAndReadBack(s: SparkSession, pre: DataFrame): DataFrame = {
-    // checkpoint BEFORE creating the temp dir, and free the base pin
-    // even when materialization itself fails — otherwise an executor
-    // failure mid-tree leaves packKept's eager base checkpoint pinned
-    // for the session and an empty graft-export-* dir per retry
-    val packed =
-      try pre.localCheckpoint()
-      catch { case e: Throwable => freeCheckpoint(pre); throw e }
-    // free the base pin packKept left (found in the PRE-checkpoint
-    // plan — packed's own lineage is truncated), then the outer pin
-    freeCheckpoint(pre)
-    val root = java.nio.file.Files.createTempDirectory("graft-export-")
+  private def exportAndReadBack(s: SparkSession, prefix: String)(
+      write: java.nio.file.Path => Unit): DataFrame = {
+    val root = java.nio.file.Files.createTempDirectory(prefix)
     val out = root.resolve("corpus")
     try {
-      exportThroughSink(s, packed, out, EXPORT_SHARD_BYTES)
+      write(out)
       s.read.schema(exportSchema).parquet(out.toString)
         .orderBy(col("doc_id"))
         .localCheckpoint()
-    } finally {
-      // independent cleanups: a failed unpersist must not strand the dir
-      try freeCheckpoint(packed) finally ParquetFiles.deleteTree(root)
-    }
+    } finally ParquetFiles.deleteTree(root)
   }
 
   lazy val corpusExportSql: String =
@@ -7485,30 +7453,9 @@ object Pipeline {
     ensureArtifact("graft-base-export", dir, "documents",
         s"|v1|b$EXPORT_SHARD_BYTES") { staging =>
       java.nio.file.Files.createDirectories(staging)
-      val pre = exportPackedSlice(s, dir, !defaultBatchPred, lit(0L))
-      val packed = pre.localCheckpoint()
-      freeCheckpoint(pre)
-      try exportThroughSink(s, packed, staging.resolve("corpus"),
-        EXPORT_SHARD_BYTES)
-      finally freeCheckpoint(packed)
+      exportPack(exportPackedSlice(s, dir, !defaultBatchPred, lit(0L)),
+        staging.resolve("corpus"), resume = false)
     }
-
-  /** Resume the sink over yesterday's export at `out` and append
-    * today's packed batch as [[EXPORT_BATCHES]] ascending
-    * permutation-range micro-batches — the shard file index continues
-    * from the restored commit log, and batchIds continue from
-    * [[graft.streaming.StreamingShardSink.nextBatchId]] so a replayed
-    * id is skipped exactly-once like any other.
-    */
-  private[graft] def appendThroughSink(
-      s: SparkSession, packed: DataFrame,
-      out: java.nio.file.Path): graft.streaming.StreamingShardSink = {
-    val sink = new graft.streaming.StreamingShardSink(
-      out, exportSchema, shardSizeBytes = EXPORT_SHARD_BYTES,
-      filePrefix = Some("corpus"), resume = true)
-    driveRanges(sink, packed, firstBatchId = sink.nextBatchId)
-    sink
-  }
 
   /** Copy a directory tree (the spec shares it to stage its own
     * yesterday-copies).
@@ -7551,27 +7498,17 @@ object Pipeline {
   def exportAppend(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val baseExport = ensureBaseExport(s, dir)
-    val root = java.nio.file.Files.createTempDirectory("graft-export-append-")
-    val out = root.resolve("corpus")
-    copyDirTree(baseExport.resolve("corpus"), out)
-    // yesterday's token total rides from yesterday's OWN files — one
-    // narrow column scan of the just-copied shards (the stored-
-    // manifest-number shape a real daily job reads), never a second
-    // manifest-decision pass over the corpus: the decision runs
-    // exactly once below, for today's slice
-    val baseTotal = s.read.schema(exportSchema).parquet(out.toString)
-      .agg(coalesce(sum($"n_tokens"), lit(0L))).as[Long].head()
-    val pre = exportPackedSlice(s, dir, defaultBatchPred, lit(baseTotal))
-    val packed = pre.localCheckpoint()
-    freeCheckpoint(pre)
-    try {
-      appendThroughSink(s, packed, out)
-      s.read.schema(exportSchema).parquet(out.toString)
-        .orderBy(col("doc_id")).localCheckpoint()
-    } finally {
-      // a throwing unpersist must not strand the temp copy dir — the
-      // exportAndReadBack discipline
-      try freeCheckpoint(packed) finally ParquetFiles.deleteTree(root)
+    exportAndReadBack(s, "graft-export-append-") { out =>
+      copyDirTree(baseExport.resolve("corpus"), out)
+      // yesterday's token total rides from yesterday's OWN files — one
+      // narrow column scan of the just-copied shards (the stored-
+      // manifest-number shape a real daily job reads), never a second
+      // manifest-decision pass over the corpus: the decision runs
+      // exactly once below, for today's slice
+      val baseTotal = s.read.schema(exportSchema).parquet(out.toString)
+        .agg(coalesce(sum($"n_tokens"), lit(0L))).as[Long].head()
+      exportPack(exportPackedSlice(s, dir, defaultBatchPred, lit(baseTotal)),
+        out, resume = true)
     }
   }
 
@@ -7640,28 +7577,11 @@ object Pipeline {
   private[graft] def packAndAppendBatch(batch: DataFrame,
       offsetTokens: Long, sink: graft.streaming.StreamingShardSink,
       batchId: Long): Long = {
-    val s = batch.sparkSession
-    import s.implicits._
-    val base = batch
-      .select($"doc_id", shuffleKeyCol($"doc_id").as("shuffle_key"),
-        size(words($"text")).cast("long").as("n_tokens"), $"text")
-      .localCheckpoint()
+    val base = shuffleToks(batch, col("text")).localCheckpoint()
     try {
-      val assign = exclusivePrefixSumUniform(
-          base.select($"doc_id", $"shuffle_key", $"n_tokens"),
-          "shuffle_key", "doc_id", "n_tokens")
-        .withColumn("cum_before", col("cum_before") + lit(offsetTokens))
-        .withColumn("shard_id", expr(s"cum_before div $SHARD_TOKEN_BUDGET"))
-        // drop the tree's own key copy — the text side carries it, and
-        // a duplicate column would make the post-join select ambiguous
-        .select($"doc_id", $"n_tokens", $"cum_before", $"shard_id")
-      val packed = base.select($"doc_id", $"shuffle_key", $"text")
-        .join(assign, Seq("doc_id"))
-        .select($"doc_id", $"shuffle_key", $"n_tokens", $"cum_before",
-          $"shard_id", $"text")
-        .orderBy($"shuffle_key", $"doc_id")
-      sink.addBatch(packed, batchId)
-      base.agg(coalesce(sum($"n_tokens"), lit(0L))).as[Long].head()
+      sink.addBatch(packWithText(base, lit(offsetTokens))
+        .orderBy(col("shuffle_key"), col("doc_id")), batchId)
+      base.agg(coalesce(sum(col("n_tokens")), lit(0L))).head().getLong(0)
     } finally freeCheckpoint(base)
   }
 
@@ -7687,7 +7607,8 @@ object Pipeline {
     val keeps = gateChainFlags(s, dir)
       .filter($"pq" && $"pn" && $"pf" && $"pd" && $"pb" && $"pc")
       .select($"doc_id")
-    exportAndReadBack(s, packKept(s, dir, keeps, lit(true), lit(0L)))
+    exportAndReadBack(s, "graft-export-")(
+      exportPack(packKept(s, dir, keeps, lit(true), lit(0L)), _, resume = false))
   }
 
   lazy val streamExportSql: String =

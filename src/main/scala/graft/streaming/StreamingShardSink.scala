@@ -75,11 +75,15 @@ import graft.sink.{ColumnarSize, DriverParquet, ParquetFiles, RowConformance, Si
   * never acknowledged as committed — replays cleanly. `addBatch(df,
   * batchId)` skips batchIds the log already holds, so Structured
   * Streaming's replay of the last uncommitted micro-batch after a
-  * checkpoint restart lands exactly-once; a partially-renamed batch
-  * (crash between the moves and the log append) is rewritten in
-  * place — orphan shard files at or beyond the restored index are
-  * deleted before the batch's renames, so a replay that produces
-  * fewer task files can't leave a stale duplicate shard behind.
+  * checkpoint restart lands exactly-once. The shard counter, the
+  * committed set and `writtenFiles` move only once the batch's log
+  * line is on disk, so a batch that fails anywhere, the log append
+  * included, leaves them as they were and its replay on the same sink
+  * re-runs it. A partially-renamed batch (failure or crash between
+  * the moves and the log append) is rewritten in place — orphan shard
+  * files at or beyond the counter are deleted before the batch's
+  * renames, so a replay that produces fewer task files can't leave a
+  * stale duplicate shard behind.
   * Construct with `resume = true` to re-attach to an existing output
   * directory: the shard counter and manifest are restored from the
   * log. A resume dir holding shard files but NO log fails fast — with
@@ -172,12 +176,13 @@ final class StreamingShardSink(
         .toSeq).foreach(ParquetFiles.deleteTree)
   }
 
-  private def appendCommit(batchId: Long, start: Int, n: Int): Unit = {
-    committed += batchId -> (start, n)
+  private def appendCommit(batchId: Long, n: Int): Unit = {
     Files.write(commitLog,
-      s"$batchId\t$start\t$n\n".getBytes(java.nio.charset.StandardCharsets.UTF_8),
+      s"$batchId\t$shardIndex\t$n\n".getBytes(java.nio.charset.StandardCharsets.UTF_8),
       java.nio.file.StandardOpenOption.CREATE,
       java.nio.file.StandardOpenOption.APPEND)
+    committed += batchId -> (shardIndex, n)
+    shardIndex += n
   }
 
   /** Absolute shard paths in creation order. */
@@ -224,10 +229,9 @@ final class StreamingShardSink(
       if (SinkState.shardIndex(prefix, p.getFileName.toString).exists(_ >= shardIndex))
         Files.delete(p)
     }
-    val start = shardIndex
     val w = write(df)
-    appendCommit(batchId, start, shardIndex - start)
-    log.info(s"Committed batch $batchId to: $path (rows=${w.rows}, files=${shardIndex - start}, " +
+    appendCommit(batchId, w.files)
+    log.info(s"Committed batch $batchId to: $path (rows=${w.rows}, files=${w.files}, " +
       s"write_job_ms=${ms(w.jobNanos)}, rename_ms=${ms(w.renameNanos)}, " +
       s"commit_log_bytes=${Files.size(commitLog)})")
   }
@@ -238,8 +242,11 @@ final class StreamingShardSink(
     * then a driver-side rename of the listed shards in (partition,
     * shard) order.
     */
-  def addBatch(df: DataFrame): Unit = synchronized { write(df) }
+  def addBatch(df: DataFrame): Unit = synchronized { shardIndex += write(df).files }
 
+  /** Write one batch's shards and rename them to the indices from
+    * `shardIndex` on, leaving the counter to the caller.
+    */
   private def write(df: DataFrame): StreamingShardSink.Written = {
     val casted = RowConformance.cast(df, schema)
     // a bad option fails here, before any job runs or any file exists
@@ -249,12 +256,11 @@ final class StreamingShardSink(
       val t0 = System.nanoTime
       val shards = StreamingShardSink.encodeShards(casted, encoder, schema, shardSizeBytes, staging)
       val t1 = System.nanoTime
-      shards.sortBy { case (partition, k, _, _) => (partition, k) }
-        .foreach { case (_, _, name, _) =>
-          Files.move(staging.resolve(name), shardPath(shardIndex), StandardCopyOption.ATOMIC_MOVE)
-          shardIndex += 1
+      shards.sortBy { case (partition, k, _, _) => (partition, k) }.zipWithIndex
+        .foreach { case ((_, _, name, _), i) =>
+          Files.move(staging.resolve(name), shardPath(shardIndex + i), StandardCopyOption.ATOMIC_MOVE)
         }
-      StreamingShardSink.Written(shards.map(_._4).sum, t1 - t0, System.nanoTime - t1)
+      StreamingShardSink.Written(shards.map(_._4).sum, shards.length, t1 - t0, System.nanoTime - t1)
     } finally ParquetFiles.deleteTree(staging)
   }
 
@@ -277,8 +283,8 @@ final class StreamingShardSink(
 
 object StreamingShardSink {
 
-  /** What one batch's write did: rows, write-job and rename nanos. */
-  private final case class Written(rows: Long, jobNanos: Long, renameNanos: Long)
+  /** What one batch's write did: rows, files, write-job and rename nanos. */
+  private final case class Written(rows: Long, files: Int, jobNanos: Long, renameNanos: Long)
 
   /** The write job: each task streams its partition's rows through a
     * [[SinkState]] with a zero-byte buffer, so every row flushes at

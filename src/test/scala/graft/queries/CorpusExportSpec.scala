@@ -34,7 +34,7 @@ class CorpusExportSpec extends AnyFunSuite {
     val out = Files.createTempDirectory("corpus-export-spec-")
       .resolve("corpus")
     val packed = Pipeline.exportPacked(spark, dir).localCheckpoint()
-    val sink = Pipeline.exportThroughSink(spark, packed, out, SHARD_BYTES)
+    val sink = Pipeline.exportThroughSink(packed, out, SHARD_BYTES)
     (out, packed, sink)
   }
 
@@ -171,5 +171,20 @@ class CorpusExportSpec extends AnyFunSuite {
       assert(byShard.getOrElse(sid, 0L) == tok,
         s"shard $sid: audit $tok vs packed ${byShard.getOrElse(sid, 0L)}")
     }
+  }
+
+  test("the export tail frees the pack's base pin when materializing the pack fails") {
+    import org.apache.spark.sql.functions.{col, lit, raise_error, when}
+    val base = spark.range(20).toDF("doc_id").localCheckpoint()
+    val pinned = base.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }
+    assert(pinned.nonEmpty && pinned.forall(spark.sparkContext.getPersistentRDDs.contains))
+    val pre = base.select(when(col("doc_id") > 10, raise_error(lit("boom"))).as("x"))
+    val out = Files.createTempDirectory("export-tail-spec-").resolve("corpus")
+    intercept[Exception] { Pipeline.exportPack(pre, out, resume = false) }
+    assert(!pinned.exists(spark.sparkContext.getPersistentRDDs.contains),
+      "a failed materialization must not leave the base checkpoint pinned")
+    assert(!Files.exists(out), "no sink may start on a pack that never materialized")
   }
 }

@@ -170,7 +170,7 @@ class EpochScheduleSpec extends AnyFunSuite {
         .localCheckpoint()
       val out = Files.createTempDirectory("epoch-export-sink-")
         .resolve("corpus")
-      val sink = Pipeline.exportThroughSink(spark, packed, out, 2048L)
+      val sink = Pipeline.exportThroughSink(packed, out, 2048L)
 
       // the CorpusExportSpec invariants, now on the repeat stream
       val files = sink.writtenFiles

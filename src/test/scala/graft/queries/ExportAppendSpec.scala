@@ -60,7 +60,8 @@ class ExportAppendSpec extends AnyFunSuite {
       spark, dir, Pipeline.defaultBatchPred, lit(baseTotal))
     val packed = pre.localCheckpoint()
     Pipeline.freeCheckpoint(pre)
-    val sink = Pipeline.appendThroughSink(spark, packed, out)
+    val sink = Pipeline.exportThroughSink(
+      packed, out, Pipeline.EXPORT_SHARD_BYTES, resume = true)
     (out, beforeHashes, sink, packed, baseTotal)
   }
 

@@ -8,11 +8,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-/** The distributed scan tree ([[Pipeline.exclusivePrefixSum]]) against
-  * a driver-side running sum, and the shard-packing semantics built on
-  * it. The tree's whole reason to exist is that results must not
-  * depend on how rows land in partitions, so every case shuffles the
-  * input into a deliberately unhelpful partitioning first.
+/** The distributed scan tree ([[Pipeline.exclusivePrefixSum]]), in both
+  * its bucketings, against a driver-side running sum, and the
+  * shard-packing semantics built on it. The tree's whole reason to
+  * exist is that results must not depend on how rows land in
+  * partitions, so every case shuffles the input into a deliberately
+  * unhelpful partitioning first.
   */
 class PrefixSumSpec extends AnyFunSuite {
 
@@ -20,21 +21,40 @@ class PrefixSumSpec extends AnyFunSuite {
 
   test("exclusivePrefixSum matches a sequential scan across all tree levels") {
     import spark.implicits._
-    // sparse, irregular keys spanning multiple level-1 (div 1000) and
-    // level-2 (div 1000000) buckets, so every tier of the tree carries
-    // non-zero offsets; fixed seed keeps the case reproducible
+    // rows are (key, tie, value), scanned in (key, tie) order through an
+    // arbitrary, key-unaligned split
+    def check(rows: Seq[(Long, Long, Long)], tie: Option[String]): Unit = {
+      val df = rows.toDF("k", "t", "v").repartition(7)
+      val got = Pipeline.exclusivePrefixSum(df, "k", "v", tie)
+        .select("t", "cum_before").as[(Long, Long)].collect().toMap
+      assert(got.size === rows.size)
+      var acc = 0L
+      rows.sortBy { case (k, t, _) => (k, t) }.foreach { case (k, t, v) =>
+        assert(got(t) === acc, s"key $k tie $t")
+        acc += v
+      }
+    }
+    // dense keys: sparse, irregular, unique keys spanning multiple
+    // level-1 (div 1000) and level-2 (div 1000000) buckets, so every
+    // tier of the tree carries non-zero offsets; fixed seed keeps the
+    // case reproducible
     val rnd = new Random(42)
     val keys = rnd.shuffle((0 until 2000).map(i => i.toLong * 1711L + rnd.nextInt(1000)))
       .distinct
-    val rows = keys.map(k => (k, (k % 97) + 1)) // positive, key-derived values
-    val df = rows.toDF("k", "v").repartition(7) // arbitrary, key-unaligned split
-    val got = Pipeline.exclusivePrefixSum(df, "k", "v")
-      .select("k", "cum_before").as[(Long, Long)].collect().toMap
-    var acc = 0L
-    rows.sortBy(_._1).foreach { case (k, v) =>
-      assert(got(k) === acc, s"key $k")
-      acc += v
+    check(keys.map(k => (k, k, (k % 97) + 1)), None) // positive, key-derived values
+    // uniform 48-bit keys in clusters: each cluster shares one
+    // 2²⁸-wide level-1 bucket, the clusters spread over several
+    // 2³⁸-wide level-2 buckets, and every third key is planted twice,
+    // so only the tie column orders that pair
+    val hashed = (0 until 60).flatMap { _ =>
+      val bucket = (rnd.nextLong() >>> 16) & ~((1L << 28) - 1)
+      Seq.fill(1 + rnd.nextInt(12))(bucket + rnd.nextInt(1 << 20))
     }
+    assert(hashed.map(_ >>> 28).distinct.size < hashed.size, "no multi-row level-1 bucket")
+    assert(hashed.map(_ >>> 38).distinct.size > 1, "one level-2 bucket only")
+    val planted = hashed ++ hashed.indices.filter(_ % 3 == 0).map(hashed)
+    check(rnd.shuffle(planted).zipWithIndex.map { case (k, t) => (k, t.toLong, t % 89 + 1L) },
+      Some("t"))
   }
 
   test("shardPlan packs documents at the running token total, deterministically") {

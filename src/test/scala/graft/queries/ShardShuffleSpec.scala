@@ -9,7 +9,7 @@ import graft.TestSpark
   * EXACTLY (same docs, same per-doc token counts, same total), the
   * scan-tree prefix sum reproduces a first-principles local running
   * total over the (shuffle_key, doc_id) order (the
-  * exclusivePrefixSumUniform correctness pin — PrefixSumSpec's
+  * exclusivePrefixSum uniform-key bucketing pin — PrefixSumSpec's
   * discipline re-run on the uniform-key tree), the permutation
   * actually permutes, and the shuffled fill audit accounts for every
   * token.

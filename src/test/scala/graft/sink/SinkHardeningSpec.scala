@@ -149,6 +149,33 @@ class SinkHardeningSpec extends AnyFunSuite with BeforeAndAfterEach {
     assert(sink.writtenFiles.size == before)
   }
 
+  /** The committed set and the shard counter move only after a
+    * batch's log line is on disk: a batch whose log append throws must
+    * replay on the same sink, not be skipped as committed while its
+    * shards, which have no log line, wait for the next resumed sink's
+    * orphan cleanup to delete them.
+    */
+  test("a batch whose commit-log append fails replays, and every batch lands exactly once") {
+    import spark.implicits._
+    val out = tmp.resolve("order")
+    def batch(b: Long) = (0L until 30L).map(i => (b * 100 + i, s"row $b-$i")).toDF("id", "value")
+    val sink = new StreamingShardSink(out, idVal, shardSizeBytes = 256)
+    sink.addBatch(batch(0), batchId = 0L)
+    val logFile = out.resolve("_graft_commits.tsv")
+    val logBytes = Files.readAllBytes(logFile)
+    Files.delete(logFile)
+    Files.createDirectory(logFile) // batch 1's renames succeed, its log append throws
+    intercept[java.io.IOException] { sink.addBatch(batch(1), batchId = 1L) }
+    Files.delete(logFile)
+    Files.write(logFile, logBytes)
+    sink.addBatch(batch(1), batchId = 1L)
+    new StreamingShardSink(out, idVal, shardSizeBytes = 256, resume = true)
+      .addBatch(batch(2), batchId = 2L)
+    val ids = spark.read.schema(idVal).parquet(out.toString).select("id").as[Long].collect()
+    assert(ids.sorted.toSeq == (0L to 2L).flatMap(b => (0L until 30L).map(b * 100 + _)))
+    assert(Files.readAllLines(logFile).size == 3)
+  }
+
   /** Restore must TRUNCATE a torn fragment on disk, not just skip it
     * in memory: appendCommit O_APPENDs, so a surviving fragment merges
     * with the next record into one line — and the restart AFTER that
