@@ -724,7 +724,7 @@ object Multimodal {
     * measured index-build cost.
     */
   def ensureFrameIndex(s: SparkSession, dir: String): java.nio.file.Path =
-    graft.queries.Pipeline.ensureBucketedIndex(s, "graft-frameidx", dir,
+    graft.queries.Artifacts.ensureBucketedIndex(s, "graft-frameidx", dir,
         "documents", s"|v$FRAME_IDX_FMT_VERSION|b$FRAME_IDX_BUCKETS",
         FRAME_IDX_BUCKETS, "frame_md5") {
       keptFrames(s, dir).select(col("asset_id"), col("n"), col("frame_md5"))
@@ -734,7 +734,7 @@ object Multimodal {
     * registration pattern, via the shared machinery).
     */
   private def frameIndexOf(s: SparkSession, dir: String): DataFrame =
-    graft.queries.Pipeline.bucketedIndexOf(s, ensureFrameIndex(s, dir),
+    graft.queries.Artifacts.bucketedIndexOf(s, ensureFrameIndex(s, dir),
         "graft_frameidx", "asset_id BIGINT, n BIGINT, frame_md5 STRING",
         "frame_md5", FRAME_IDX_BUCKETS)
       .select(col("asset_id"), col("n"), col("frame_md5"))
@@ -759,7 +759,7 @@ object Multimodal {
     * next to the frame postings at real payload sizes.
     */
   def ensurePrefixIndex(s: SparkSession, dir: String): java.nio.file.Path =
-    graft.queries.Pipeline.ensureBucketedIndex(s, "graft-prefidx", dir,
+    graft.queries.Artifacts.ensureBucketedIndex(s, "graft-prefidx", dir,
         "documents", s"|v$PREFIX_IDX_FMT_VERSION|b$FRAME_IDX_BUCKETS",
         FRAME_IDX_BUCKETS, "ph") {
       import s.implicits._
@@ -773,7 +773,7 @@ object Multimodal {
     }
 
   private def prefixIndexOf(s: SparkSession, dir: String): DataFrame =
-    graft.queries.Pipeline.bucketedIndexOf(s, ensurePrefixIndex(s, dir),
+    graft.queries.Artifacts.bucketedIndexOf(s, ensurePrefixIndex(s, dir),
         "graft_prefidx", "asset_id BIGINT, l BIGINT, ph STRING, slen BIGINT",
         "ph", FRAME_IDX_BUCKETS)
       .select(col("asset_id"), col("l"), col("ph"), col("slen"))
@@ -907,7 +907,7 @@ object Multimodal {
     * truncated variant per video rep.
     */
   def ensureMediaPlanted(s: SparkSession, dir: String): java.nio.file.Path =
-    graft.queries.Pipeline.ensureArtifact("graft-media-planted", dir,
+    graft.queries.Artifacts.ensureArtifact("graft-media-planted", dir,
       "documents", s"|v$MEDIA_PLANT_FMT_VERSION") { staging =>
       import s.implicits._
       // variant ids live MEDIA_OFF above their sources; the id<OFF /

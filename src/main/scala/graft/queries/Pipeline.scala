@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.queries.Artifacts.{bucketedIndexOf, embPresenceStamp, ensureArtifact, ensureBucketedIndex}
 import graft.sink.ParquetFiles
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -3000,47 +3001,6 @@ object Pipeline {
     * (`x_ngram_jaccard`, `x_minhash_*`) intentionally do NOT read
     * this: they are the measured index-build cost.
     */
-  /** The bucketed-index build machinery, shared by every persisted
-    * inverted index (shingle postings here, frame postings in
-    * [[graft.multimodal.Multimodal]]): stage the rows `bucketBy` the
-    * posting key through a pid-suffixed temp table (Spark only writes
-    * bucket metadata via `saveAsTable`), then drop the catalog entry —
-    * the artifact dir is the contract. One copy of the staging
-    * subtlety, so a fix here reaches every index.
-    */
-  private[graft] def ensureBucketedIndex(
-      s: SparkSession, kind: String, dir: String, srcTable: String,
-      extraKey: String, buckets: Int, keyCol: String)(
-      rows: => DataFrame): java.nio.file.Path =
-    ensureArtifact(kind, dir, srcTable, extraKey) { staging =>
-      val tmp = s"${kind.replace('-', '_')}_build_${ProcessHandle.current.pid}"
-      s.sql(s"DROP TABLE IF EXISTS $tmp")
-      rows.repartition(buckets, col(keyCol))
-        .write.bucketBy(buckets, keyCol).sortBy(keyCol)
-        .option("path", staging.toString)
-        .saveAsTable(tmp)
-      s.sql(s"DROP TABLE $tmp")
-    }
-
-  /** Register a built bucketed index as a bucket-aware external table
-    * (idempotent per artifact) and return its DataFrame — the other
-    * half of [[ensureBucketedIndex]], one copy of the DDL/registration
-    * subtlety.
-    */
-  private[graft] def bucketedIndexOf(
-      s: SparkSession, p: java.nio.file.Path, tblPrefix: String,
-      schemaDdl: String, keyCol: String, buckets: Int): DataFrame =
-    Pipeline.synchronized {
-      val tbl = s"${tblPrefix}_${p.getFileName}"
-      if (!s.catalog.tableExists(tbl))
-        s.sql(
-          s"""CREATE TABLE $tbl ($schemaDdl)
-             |USING parquet
-             |CLUSTERED BY ($keyCol) SORTED BY ($keyCol) INTO $buckets BUCKETS
-             |LOCATION '$p'""".stripMargin)
-      s.table(tbl)
-    }
-
   def ensureShingleIndex(s: SparkSession, dir: String): java.nio.file.Path =
     ensureBucketedIndex(s, "graft-shingleidx", dir, "documents",
         s"|v$IDX_FMT_VERSION|b$IDX_BUCKETS", IDX_BUCKETS, "s") {
@@ -8496,82 +8456,6 @@ object Pipeline {
     * (still ≤ salt files per cell directory).
     */
   private val IVF_WRITE_SALT = 4
-
-  /** (exists, size-mtime stamp) of a corpus's embeddings table — the
-    * shared cache-key ingredient for every artifact whose content
-    * depends on semantic edges. Captured ONCE per ensure* call and
-    * reused inside the build closure: re-checking existence at build
-    * time could disagree with the stamp (a table appearing between the
-    * two) and cache content under a key that promises the opposite.
-    */
-  private def embPresenceStamp(dir: String): (Boolean, String) = {
-    val embSrc = java.nio.file.Paths.get(dir, "embeddings.parquet")
-    val hasEmb = java.nio.file.Files.exists(embSrc)
-    val stamp =
-      if (hasEmb)
-        s"${java.nio.file.Files.size(embSrc)}-${java.nio.file.Files.getLastModifiedTime(embSrc).toMillis}"
-      else "none"
-    (hasEmb, stamp)
-  }
-
-  /** Stamped one-time-build cache shared by [[ensureIvfLayout]],
-    * [[ensureEdgeGraph]] and the other `ensure*` artifacts (the
-    * multimodal planted corpus included): the cache key includes the
-    * source fixture's size+mtime (a regenerated fixture at the same
-    * path must invalidate the artifact, or a stale copy would
-    * silently diverge from the oracle), and the build lands in a
-    * staging dir that is atomically renamed into place — two
-    * processes racing the build (driver Verify alongside a Bench run)
-    * each produce a complete artifact and the loser discards its copy,
-    * instead of interleaving writes into one directory.
-    */
-  private[graft] def ensureArtifact(kind: String, dir: String, srcTable: String,
-      extraKey: String)(build: java.nio.file.Path => Unit): java.nio.file.Path =
-    Pipeline.synchronized {
-      val srcFile = java.nio.file.Paths.get(dir, s"$srcTable.parquet")
-      val stamp =
-        if (java.nio.file.Files.exists(srcFile))
-          s"${java.nio.file.Files.size(srcFile)}-${java.nio.file.Files.getLastModifiedTime(srcFile).toMillis}"
-        else "dir"
-      val p = java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"), kind,
-        java.lang.Integer.toHexString((dir + "|" + stamp + extraKey).hashCode))
-      if (!java.nio.file.Files.exists(p.resolve("_SUCCESS"))) {
-        // a dir without _SUCCESS is a partial artifact from a killed
-        // run — it would make the rename below fail forever; clear it
-        ParquetFiles.deleteTree(p)
-        val staging = p.resolveSibling(
-          p.getFileName.toString + ".tmp-" + ProcessHandle.current.pid)
-        try {
-          build(staging)
-          // the completeness marker this method checks above must
-          // exist at the artifact ROOT: builds that write parquet
-          // SUBDIRECTORIES (planted corpus, base corpus) get Spark's
-          // _SUCCESS inside each table dir but not at the root — and
-          // without a root marker every later call saw "partial
-          // artifact", deleted it, and silently rebuilt (plus, the
-          // refreshed inner mtimes re-keyed every downstream artifact
-          // stamped off them — a full rebuild cascade per call)
-          val marker = staging.resolve("_SUCCESS")
-          if (!java.nio.file.Files.exists(marker))
-            java.nio.file.Files.createFile(marker)
-          try java.nio.file.Files.move(staging, p,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          catch {
-            case e: java.nio.file.FileSystemException =>
-              // rename onto an existing dir fails (EEXIST/ENOTEMPTY):
-              // if the winner's artifact is complete the race is benign
-              // — same stamp ⇒ same input ⇒ identical content; drop
-              // ours (the finally below). Anything else is a real
-              // failure.
-              if (!java.nio.file.Files.exists(p.resolve("_SUCCESS"))) throw e
-          }
-        // covers the race-loser copy AND a build that threw mid-write —
-        // a no-op when the rename moved staging into place
-        } finally ParquetFiles.deleteTree(staging)
-      }
-      p
-    }
 
   def ensureIvfLayout(s: SparkSession, dir: String): java.nio.file.Path =
     ensureArtifact("graft-ivf", dir, "embeddings",
