@@ -47,6 +47,12 @@ as a script, so a false claim can't ship.
    compiled against src/main, so renaming a sink or query API fails
    every benchmark workload, not this repo's build.
 
+7. One artifact store — outside comments, `saveAsTable(`,
+   `CLUSTERED BY` and `_SUCCESS` appear under src/main only in
+   `graft/queries/Artifacts.scala`: a staged, marked or bucketed
+   build written anywhere else is a second copy of the store's
+   staging and registration rules.
+
 Usage:
     python3 scripts/round_close_checks.py [path/to/oracle_sql.json] \
         [--round N]
@@ -211,14 +217,17 @@ QUALIFIED = re.compile(r"\bgraft(?:\.\w+)+")
 COMMENT = re.compile(r"//[^\n]*|/\*.*?\*/", re.S)
 
 
+def blank_comments(raw):
+    """the text with every comment blanked to spaces, newlines kept so
+    line numbers hold: a name in a comment is not compiled"""
+    return COMMENT.sub(lambda m: re.sub(r"[^\n]", " ", m.group(0)), raw)
+
+
 def check_bench_refs():
     types = declared_types()
     n, bad = 0, []
     for path in sorted(scala_files(BENCH_SRC)):
-        raw = open(path, encoding="utf-8").read()
-        # blank comments out (keeping newlines, so line numbers hold):
-        # a name in a comment is not compiled
-        text = COMMENT.sub(lambda m: re.sub(r"[^\n]", " ", m.group(0)), raw)
+        text = blank_comments(open(path, encoding="utf-8").read())
         refs, aliases, spans = [], {}, []
         for m in GRAFT_IMPORT.finditer(text):
             spans.append(m.span())
@@ -248,6 +257,28 @@ def check_bench_refs():
         print(f"  MISSING {path}:{line}  {ref}")
     if not bad:
         print("  every name resolves")
+    return len(bad)
+
+
+STORE = os.path.join(MAIN, "graft/queries/Artifacts.scala")
+STORE_ONLY = ("saveAsTable(", "CLUSTERED BY", "_SUCCESS")
+
+
+def check_store_only():
+    bad = []
+    for path in sorted(scala_files(MAIN)):
+        if path == STORE:
+            continue
+        text = blank_comments(open(path, encoding="utf-8").read())
+        for tok in STORE_ONLY:
+            for m in re.finditer(re.escape(tok), text):
+                line = text.count("\n", 0, m.start()) + 1
+                bad.append((os.path.relpath(path, REPO), line, tok))
+    print(f"== {', '.join(STORE_ONLY)} outside {os.path.relpath(STORE, REPO)} ==")
+    for path, line, tok in bad:
+        print(f"  OUTSIDE {path}:{line}  {tok}")
+    if not bad:
+        print("  none")
     return len(bad)
 
 
@@ -374,6 +405,7 @@ def main():
     bad = check_claims()
     bad += check_tool_refs()
     bad += check_bench_refs()
+    bad += check_store_only()
     if not os.path.exists(oracle):
         print(f"oracle_sql.json not found at {oracle} — run "
               "`sbt \"runMain graft.Verify <sfDir> <outDir>\"` first",

@@ -32,7 +32,7 @@ object PlanProbe {
         val df = fn(spark, sfDir)
         val txt = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
-        Files.writeString(Paths.get(outDir, s"${name}_$suffix.txt"), txt)
+        Files.writeString(Paths.get(outDir, s"${name}_$suffix.txt"), dropCallSiteLines(txt))
         println(s"[planprobe] wrote $name ($suffix)")
       } catch {
         case e: Throwable =>
@@ -42,4 +42,12 @@ object PlanProbe {
     }
     spark.stop()
   }
+
+  /** `dump` with the line number dropped from each `<File>.scala:N`
+    * call site (`MapPartitionsRDD[8] at localCheckpoint at
+    * Pipeline.scala:4034`), so an edit above a `localCheckpoint` call
+    * leaves an otherwise identical dump identical.
+    */
+  private[graft] def dropCallSiteLines(dump: String): String =
+    dump.replaceAll("""(\w+\.scala):\d+""", "$1")
 }

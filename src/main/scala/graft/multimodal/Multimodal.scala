@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.Artifacts
 
 /** Multimodal columns: image/audio/video treated as opaque `binary`
   * payloads with typed metadata, processed by a typed
@@ -711,6 +712,9 @@ object Multimodal {
     */
   private val FRAME_IDX_BUCKETS = 8
 
+  /** The frame-index layout ([[ensureFrameIndex]]), bucketed by `frame_md5`. */
+  private val FRAME_IDX = Artifacts.Bucketed("graft-frameidx", "frame_md5", FRAME_IDX_BUCKETS)
+
   /** One-time build of the kept-frame inverted index — `(asset_id, n,
     * frame_md5)` written `bucketBy(frame_md5)`: the persisted state a
     * daily media-ingest dedup service keeps between batches, exactly
@@ -724,20 +728,15 @@ object Multimodal {
     * measured index-build cost.
     */
   def ensureFrameIndex(s: SparkSession, dir: String): java.nio.file.Path =
-    graft.queries.Artifacts.ensureBucketedIndex(s, "graft-frameidx", dir,
-        "documents", s"|v$FRAME_IDX_FMT_VERSION|b$FRAME_IDX_BUCKETS",
-        FRAME_IDX_BUCKETS, "frame_md5") {
+    FRAME_IDX.ensure(s, dir, s"|v$FRAME_IDX_FMT_VERSION") {
       keptFrames(s, dir).select(col("asset_id"), col("n"), col("frame_md5"))
     }
 
-  /** The frame index as a bucket-aware DataFrame (the shingle-index
-    * registration pattern, via the shared machinery).
+  /** The frame index `(asset_id, n, frame_md5)` as a bucket-aware
+    * DataFrame ([[Artifacts.Bucketed]]).
     */
   private def frameIndexOf(s: SparkSession, dir: String): DataFrame =
-    graft.queries.Artifacts.bucketedIndexOf(s, ensureFrameIndex(s, dir),
-        "graft_frameidx", "asset_id BIGINT, n BIGINT, frame_md5 STRING",
-        "frame_md5", FRAME_IDX_BUCKETS)
-      .select(col("asset_id"), col("n"), col("frame_md5"))
+    FRAME_IDX.read(s, ensureFrameIndex(s, dir))
 
   /** Bump when the prefix-row semantics ([[subWindowPairs]]' carrier
     * shape, the md5-prefix derivation, the short-payload length set)
@@ -749,6 +748,9 @@ object Multimodal {
     */
   private val PREFIX_IDX_FMT_VERSION = 1
 
+  /** The prefix-index layout ([[ensurePrefixIndex]]), bucketed by `ph`. */
+  private val PREFIX_IDX = Artifacts.Bucketed("graft-prefidx", "ph", FRAME_IDX_BUCKETS)
+
   /** One-time build of the PREFIX index — [[subWindowPairs]]'
     * `(asset_id, l, ph, slen)` carrier rows persisted
     * `bucketBy(ph)`: the stored state that keeps the sub-window
@@ -759,9 +761,7 @@ object Multimodal {
     * next to the frame postings at real payload sizes.
     */
   def ensurePrefixIndex(s: SparkSession, dir: String): java.nio.file.Path =
-    graft.queries.Artifacts.ensureBucketedIndex(s, "graft-prefidx", dir,
-        "documents", s"|v$PREFIX_IDX_FMT_VERSION|b$FRAME_IDX_BUCKETS",
-        FRAME_IDX_BUCKETS, "ph") {
+    PREFIX_IDX.ensure(s, dir, s"|v$PREFIX_IDX_FMT_VERSION") {
       import s.implicits._
       val vids = videoReps(s, dir)
       val lens = vids.filter(length($"payload") < WIN_BYTES)
@@ -772,11 +772,11 @@ object Multimodal {
           length($"payload").cast("long").as("slen"))
     }
 
+  /** The prefix index `(asset_id, l, ph, slen)` as a bucket-aware
+    * DataFrame ([[Artifacts.Bucketed]]).
+    */
   private def prefixIndexOf(s: SparkSession, dir: String): DataFrame =
-    graft.queries.Artifacts.bucketedIndexOf(s, ensurePrefixIndex(s, dir),
-        "graft_prefidx", "asset_id BIGINT, l BIGINT, ph STRING, slen BIGINT",
-        "ph", FRAME_IDX_BUCKETS)
-      .select(col("asset_id"), col("l"), col("ph"), col("slen"))
+    PREFIX_IDX.read(s, ensurePrefixIndex(s, dir))
 
   /** Incremental media near-dup — the daily-ingest twin of
     * [[mediaNearDup]], the `x_incremental_neardup` discipline applied
@@ -907,7 +907,7 @@ object Multimodal {
     * truncated variant per video rep.
     */
   def ensureMediaPlanted(s: SparkSession, dir: String): java.nio.file.Path =
-    graft.queries.Artifacts.ensureArtifact("graft-media-planted", dir,
+    Artifacts.ensureArtifact("graft-media-planted", dir,
       "documents", s"|v$MEDIA_PLANT_FMT_VERSION") { staging =>
       import s.implicits._
       // variant ids live MEDIA_OFF above their sources; the id<OFF /

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.queries.Artifacts.{bucketedIndexOf, embPresenceStamp, ensureArtifact, ensureBucketedIndex}
+import graft.queries.Artifacts.{Bucketed, ensureArtifact, stamp}
 import graft.sink.ParquetFiles
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -2263,16 +2263,16 @@ object Pipeline {
     // cache key — a regenerated embedding table must invalidate the
     // graph. A corpus WITHOUT an embedding table (text-only pipelines,
     // the degenerate-corpus specs) gets the lexical graph.
-    val (hasEmb, embStamp) = embPresenceStamp(dir)
+    val emb = stamp(dir, "embeddings")
     ensureArtifact("graft-edges", dir, "documents",
-        s"|v$EDGE_FMT_VERSION|e$embStamp") { staging =>
+        s"|v$EDGE_FMT_VERSION|e${emb.getOrElse("none")}") { staging =>
       import s.implicits._
       val lex = ngramJaccard(s, dir).select($"a_id", $"b_id")
         .union(simhashPairs(s, dir).select($"a_id", $"b_id"))
         .distinct()
         .select($"a_id", $"b_id", lit("lex").as("fam"))
       val all =
-        if (hasEmb)
+        if (emb.isDefined)
           lex.union(embedNearDup(s, dir)
             .select($"a_id", $"b_id", lit("sem").as("fam")))
         else lex
@@ -2291,12 +2291,12 @@ object Pipeline {
     e.select(e("a_id"), e("b_id"))
   }
 
-  /** Bucket count of the symmetric-edge layout — same sizing contract
-    * as [[KEEP_BUCKETS]]: the one fixed constant every components
-    * pass aligns to, so the edge side of the propagation join never
-    * re-buckets.
+  /** The symmetric-edge layout, bucketed by `src` — same sizing
+    * contract as [[KEEP_BUCKETS]]: one fixed bucket count every
+    * components pass aligns to, so the edge side of the propagation
+    * join never re-buckets.
     */
-  private val SYM_BUCKETS = 8
+  private val SYM_EDGES = Bucketed("graft-symedges", "src", 8)
 
   /** One-time build of the SYMMETRIZED edge layout — the
     * [[ensureEdgeGraph]] pair set with both directions materialized
@@ -2314,39 +2314,19 @@ object Pipeline {
     */
   def ensureSymEdges(s: SparkSession, dir: String): java.nio.file.Path = {
     val edges = ensureEdgeGraph(s, dir)
-    ensureArtifact("graft-symedges", dir, "documents",
-        s"|p${edges.getFileName}|b$SYM_BUCKETS") { staging =>
+    SYM_EDGES.ensure(s, dir, s"|p${edges.getFileName}") {
       val e = s.read.parquet(edges.toString)
-      val tmp = s"graft_symedges_build_${ProcessHandle.current.pid}"
-      s.sql(s"DROP TABLE IF EXISTS $tmp")
       e.select(e("a_id").as("src"), e("b_id").as("dst"), e("fam"))
         .union(e.select(e("b_id").as("src"), e("a_id").as("dst"), e("fam")))
         .distinct()
-        .repartition(SYM_BUCKETS, col("src"))
-        .write.bucketBy(SYM_BUCKETS, "src").sortBy("src")
-        .option("path", staging.toString)
-        .saveAsTable(tmp)
-      s.sql(s"DROP TABLE $tmp")
     }
   }
 
-  /** The symmetric edge layout as a bucket-aware DataFrame (the
-    * [[keepMapOf]] registration pattern: external bucketed table named
-    * by artifact hash, read through the catalog so the scan keeps the
-    * bucket partitioning a bare `read.parquet` would discard).
+  /** The symmetric edge layout `(src, dst, fam)` as a bucket-aware
+    * DataFrame ([[Artifacts.Bucketed]]).
     */
   private[graft] def symEdgesOf(s: SparkSession, dir: String): DataFrame =
-    Pipeline.synchronized {
-      val p = ensureSymEdges(s, dir)
-      val tbl = s"graft_symedges_${p.getFileName}"
-      if (!s.catalog.tableExists(tbl))
-        s.sql(
-          s"""CREATE TABLE $tbl (src BIGINT, dst BIGINT, fam STRING)
-             |USING parquet
-             |CLUSTERED BY (src) SORTED BY (src) INTO $SYM_BUCKETS BUCKETS
-             |LOCATION '$p'""".stripMargin)
-      s.table(tbl).select(col("src"), col("dst"), col("fam"))
-    }
+    SYM_EDGES.read(s, ensureSymEdges(s, dir))
 
   /** Duplicate-cluster assignment — the stage a real dedup pipeline
     * runs after pair generation: the union of the exact-Jaccard
@@ -2396,7 +2376,7 @@ object Pipeline {
     * family, recall eval) unconditionally inlines
     * [[embedNearDupSql]], which reads `embeddings`. The Scala side
     * degrades to the lexical-only graph when the table is absent
-    * ([[ensureEdgeGraph]]'s `hasEmb`); on a TEXT-ONLY corpus the
+    * ([[ensureEdgeGraph]]'s embedding stamp); on a TEXT-ONLY corpus the
     * oracle errors instead of matching that degradation. The verify
     * harness only runs fixtures that carry embeddings, so the gap is
     * latent by construction — a text-only deployment validates
@@ -2862,6 +2842,9 @@ object Pipeline {
     */
   private val KEEP_BUCKETS = 8
 
+  /** The keep-map layout ([[ensureKeepMap]]), bucketed by `doc_id`. */
+  private val KEEP_MAP = Bucketed("graft-keepmap", "doc_id", KEEP_BUCKETS)
+
   /** Format version of the persisted keep-best decision artifact
     * ([[ensureBaseKeepBest]]). Bump on ANY change to the quality
     * formula ([[qualityCol]]/`qualitySql`) or the keep-best argmax
@@ -2871,6 +2854,11 @@ object Pipeline {
     * fresh.
     */
   private val KEEP_BEST_FMT_VERSION = 1
+
+  /** The keep-best decision layout ([[ensureBaseKeepBest]]), aligned
+    * with [[KEEP_MAP]].
+    */
+  private val BASE_KEEP_BEST = Bucketed("graft-basekeepbest", "doc_id", KEEP_BUCKETS)
 
   /** One-time build of the dedup-decision artifact — [[dedupDecision]]
     * (doc_id, keep_id, is_kept) materialized as a `bucketBy(doc_id)`
@@ -2885,9 +2873,9 @@ object Pipeline {
     * (`x_dedup_full`) — same contract as [[ensureEdgeGraph]] vs the
     * pair pipelines. Files are written through Spark's bucketed
     * writer (bucket ids live in the file names), one file per bucket
-    * via an aligned repartition; [[keepMapOf]] re-registers the
+    * via an aligned repartition; [[keepMapOf]] registers the
     * location as an external bucketed table so ANY later session gets
-    * bucket-aware scans of the same files.
+    * bucket-aware scans of the same files ([[Artifacts.Bucketed]]).
     */
   def ensureKeepMap(s: SparkSession, dir: String): java.nio.file.Path = {
     // keyed on the edge-graph ARTIFACT's name (the [[ensureSymEdges]]
@@ -2896,39 +2884,15 @@ object Pipeline {
     // map transitively by construction — reconstructing the parent's
     // key here would go stale the day the parent's key gains an input
     val edges = ensureEdgeGraph(s, dir)
-    ensureArtifact("graft-keepmap", dir, "documents",
-        s"|p${edges.getFileName}|b$KEEP_BUCKETS") { staging =>
-      val tmp = s"graft_keepmap_build_${ProcessHandle.current.pid}"
-      s.sql(s"DROP TABLE IF EXISTS $tmp")
-      dedupDecision(s, dir)
-        .repartition(KEEP_BUCKETS, col("doc_id"))
-        .write.bucketBy(KEEP_BUCKETS, "doc_id").sortBy("doc_id")
-        .option("path", staging.toString)
-        .saveAsTable(tmp)
-      // external table (explicit path): DROP removes only the catalog
-      // entry, the bucketed files stay for the atomic move
-      s.sql(s"DROP TABLE $tmp")
-    }
+    KEEP_MAP.ensure(s, dir, s"|p${edges.getFileName}")(dedupDecision(s, dir))
   }
 
-  /** The keep-map artifact as a bucket-aware DataFrame: registers the
-    * artifact directory as an external bucketed table (id = artifact
-    * hash, so a refreshed artifact gets a fresh table) and reads
-    * through the catalog — a plain `read.parquet` of the same files
+  /** The keep-map artifact `(doc_id, keep_id, is_kept)` as a
+    * bucket-aware DataFrame: a plain `read.parquet` of the same files
     * would discard the bucket metadata and re-shuffle in every join.
     */
   private[graft] def keepMapOf(s: SparkSession, dir: String): DataFrame =
-    Pipeline.synchronized {
-      val p = ensureKeepMap(s, dir)
-      val tbl = s"graft_keepmap_${p.getFileName}"
-      if (!s.catalog.tableExists(tbl))
-        s.sql(
-          s"""CREATE TABLE $tbl (doc_id BIGINT, keep_id BIGINT, is_kept BOOLEAN)
-             |USING parquet
-             |CLUSTERED BY (doc_id) SORTED BY (doc_id) INTO $KEEP_BUCKETS BUCKETS
-             |LOCATION '$p'""".stripMargin)
-      s.table(tbl).select(col("doc_id"), col("keep_id"), col("is_kept"))
-    }
+    KEEP_MAP.read(s, ensureKeepMap(s, dir))
 
   // ------------------------------------------- incremental graph maintenance
 
@@ -2950,14 +2914,14 @@ object Pipeline {
     * machinery end-to-end instead of maintaining a parallel one.
     */
   def ensureBaseCorpus(s: SparkSession, dir: String): java.nio.file.Path = {
-    val (hasEmb, embStamp) = embPresenceStamp(dir)
+    val emb = stamp(dir, "embeddings")
     ensureArtifact("graft-basecorpus", dir, "documents",
-        s"|v$INCR_FMT_VERSION|e$embStamp") { staging =>
+        s"|v$INCR_FMT_VERSION|e${emb.getOrElse("none")}") { staging =>
       import s.implicits._
       Tables(s, dir, "documents").filter(!isBatchId($"doc_id"))
         .write.mode("overwrite")
         .parquet(staging.resolve("documents.parquet").toString)
-      if (hasEmb)
+      if (emb.isDefined)
         Tables(s, dir, "embeddings").filter(!isBatchId($"vec_id"))
           .write.mode("overwrite")
           .parquet(staging.resolve("embeddings.parquet").toString)
@@ -2983,10 +2947,10 @@ object Pipeline {
     */
   private val IDX_FMT_VERSION = 1
 
-  /** Bucket count of the shingle-index layout — the [[SYM_BUCKETS]]
-    * sizing contract applied to the inverted index's posting key.
+  /** The shingle-index layout, bucketed by the posting key `s` — the
+    * [[SYM_EDGES]] sizing contract applied to the inverted index.
     */
-  private val IDX_BUCKETS = 8
+  private val SHINGLE_IDX = Bucketed("graft-shingleidx", "s", 8)
 
   /** One-time build of the kept-shingle inverted index — `(doc_id, n,
     * s)` rows (n = the doc's kept-shingle count, the Jaccard
@@ -3002,21 +2966,18 @@ object Pipeline {
     * this: they are the measured index-build cost.
     */
   def ensureShingleIndex(s: SparkSession, dir: String): java.nio.file.Path =
-    ensureBucketedIndex(s, "graft-shingleidx", dir, "documents",
-        s"|v$IDX_FMT_VERSION|b$IDX_BUCKETS", IDX_BUCKETS, "s") {
+    SHINGLE_IDX.ensure(s, dir, s"|v$IDX_FMT_VERSION") {
       import org.apache.spark.sql.expressions.Window
       keptShingles(s, dir)
         .withColumn("n", count(lit(1)).over(Window.partitionBy(col("doc_id"))))
         .select(col("doc_id"), col("n"), col("s"))
     }
 
-  /** The shingle index as a bucket-aware DataFrame (the [[symEdgesOf]]
-    * registration pattern).
+  /** The shingle index `(doc_id, n, s)` as a bucket-aware DataFrame
+    * ([[Artifacts.Bucketed]]).
     */
   private[graft] def shingleIndexOf(s: SparkSession, dir: String): DataFrame =
-    bucketedIndexOf(s, ensureShingleIndex(s, dir), "graft_shingleidx",
-      "doc_id BIGINT, n BIGINT, s STRING", "s", IDX_BUCKETS)
-      .select(col("doc_id"), col("n"), col("s"))
+    SHINGLE_IDX.read(s, ensureShingleIndex(s, dir))
 
   /** One-time build of the exact-dedup-representative fingerprint
     * table — `(doc_id, simhash)` over [[repDocsOf]], the other half of
@@ -3767,9 +3728,9 @@ object Pipeline {
     * handling is exercised by its shared derivation with the signal.
     */
   def ensureCrossedCorpus(s: SparkSession, dir: String): java.nio.file.Path = {
-    val (hasEmb, embStamp) = embPresenceStamp(dir)
+    val emb = stamp(dir, "embeddings")
     ensureArtifact("graft-crossed", dir, "documents",
-        s"|v$CROSS_FMT_VERSION|e$embStamp") { staging =>
+        s"|v$CROSS_FMT_VERSION|e${emb.getOrElse("none")}") { staging =>
       import s.implicits._
       val maxId = Tables(s, dir, "documents")
         .agg(max($"doc_id")).as[Long].head()
@@ -3789,7 +3750,7 @@ object Pipeline {
       Tables(s, dir, "documents").unionByName(plant)
         .write.mode("overwrite")
         .parquet(staging.resolve("documents.parquet").toString)
-      if (hasEmb)
+      if (emb.isDefined)
         Tables(s, dir, "embeddings")
           .write.mode("overwrite")
           .parquet(staging.resolve("embeddings.parquet").toString)
@@ -4320,7 +4281,7 @@ object Pipeline {
 
   /** One-time materialization of YESTERDAY's keep-best decisions —
     * [[keepBest]] over the base corpus, written as a
-    * `bucketBy(doc_id)` layout (the [[ensureKeepMap]] pattern) so the
+    * `bucketBy(doc_id)` layout aligned with [[KEEP_MAP]] so the
     * incremental path's passthrough join ships zero exchange. Keyed
     * on the BASE keep-map artifact's name (corpus stamp, edge format,
     * and embedding stamp invalidate transitively) PLUS
@@ -4332,34 +4293,15 @@ object Pipeline {
   def ensureBaseKeepBest(s: SparkSession, dir: String): java.nio.file.Path = {
     val baseDir = ensureBaseCorpus(s, dir).toString
     val baseMap = ensureKeepMap(s, baseDir)
-    ensureArtifact("graft-basekeepbest", dir, "documents",
-        s"|v$KEEP_BEST_FMT_VERSION|p${baseMap.getFileName}|b$KEEP_BUCKETS") { staging =>
-      val tmp = s"graft_basekeepbest_build_${ProcessHandle.current.pid}"
-      s.sql(s"DROP TABLE IF EXISTS $tmp")
-      keepBestDecision(s, baseDir)
-        .repartition(KEEP_BUCKETS, col("doc_id"))
-        .write.bucketBy(KEEP_BUCKETS, "doc_id").sortBy("doc_id")
-        .option("path", staging.toString)
-        .saveAsTable(tmp)
-      s.sql(s"DROP TABLE $tmp")
-    }
+    BASE_KEEP_BEST.ensure(s, dir, s"|v$KEEP_BEST_FMT_VERSION|p${baseMap.getFileName}")(
+      keepBestDecision(s, baseDir))
   }
 
-  /** Yesterday's keep-best artifact as a bucket-aware DataFrame (the
-    * [[keepMapOf]] registration pattern).
+  /** Yesterday's keep-best artifact `(doc_id, keep_id, is_kept)` as a
+    * bucket-aware DataFrame ([[Artifacts.Bucketed]]).
     */
-  private def baseKeepBestOf(s: SparkSession, dir: String): DataFrame =
-    Pipeline.synchronized {
-      val p = ensureBaseKeepBest(s, dir)
-      val tbl = s"graft_basekeepbest_${p.getFileName}"
-      if (!s.catalog.tableExists(tbl))
-        s.sql(
-          s"""CREATE TABLE $tbl (doc_id BIGINT, keep_id BIGINT, is_kept BOOLEAN)
-             |USING parquet
-             |CLUSTERED BY (doc_id) SORTED BY (doc_id) INTO $KEEP_BUCKETS BUCKETS
-             |LOCATION '$p'""".stripMargin)
-      s.table(tbl).select(col("doc_id"), col("keep_id"), col("is_kept"))
-    }
+  private[graft] def baseKeepBestOf(s: SparkSession, dir: String): DataFrame =
+    BASE_KEEP_BEST.read(s, ensureBaseKeepBest(s, dir))
 
   /** Incremental keep-best — the policy layer's per-batch maintenance,
     * completing for [[keepBest]] what `x_incr_clusters` completed for
@@ -10673,9 +10615,9 @@ object Pipeline {
     * [[dedupRecallSql]] does.
     */
   def ensurePlantedCorpus(s: SparkSession, dir: String): java.nio.file.Path = {
-    val (hasEmb, embStamp) = embPresenceStamp(dir)
+    val emb = stamp(dir, "embeddings")
     ensureArtifact("graft-planted", dir, "documents",
-        s"|v$PLANT_FMT_VERSION|e$embStamp") { staging =>
+        s"|v$PLANT_FMT_VERSION|e${emb.getOrElse("none")}") { staging =>
       import s.implicits._
       // the id<OFF / id>=OFF split in every recall consumer is only a
       // partition of the pairs if no fixture doc_id reaches the
@@ -10698,7 +10640,7 @@ object Pipeline {
       Tables(s, dir, "documents").unionByName(variants)
         .write.mode("overwrite")
         .parquet(staging.resolve("documents.parquet").toString)
-      if (hasEmb) {
+      if (emb.isDefined) {
         val emb = Tables(s, dir, "embeddings")
         val vemb = emb
           .join(plantedSources(s, dir).select($"doc_id".as("vec_id"), $"rate"),

@@ -3,8 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The measurement harness's shared decisions: the ceiling table every
-  * gated Bench run reads, and the query-list argument every harness
-  * parses. Neither needs a Spark session.
+  * gated Bench run reads, the query-list argument every harness parses,
+  * and the call-site form of a plan dump. None needs a Spark session.
   */
 class HarnessSpec extends AnyFunSuite {
 
@@ -49,5 +49,15 @@ class HarnessSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException](
       SparkEntry.select(Some("q_topk,q_topkk, x_nope")))
     assert(e.getMessage.contains("q_topkk") && e.getMessage.contains("x_nope"))
+  }
+
+  test("PlanProbe drops the line number from each Scala call site in a dump") {
+    val line = "Arguments: [doc_id#13L], MapPartitionsRDD[8] at localCheckpoint at " +
+      "Pipeline.scala:4034, ExistingRDD, UnknownPartitioning(0)"
+    assert(PlanProbe.dropCallSiteLines(line) ==
+      "Arguments: [doc_id#13L], MapPartitionsRDD[8] at localCheckpoint at " +
+        "Pipeline.scala, ExistingRDD, UnknownPartitioning(0)")
+    assert(PlanProbe.dropCallSiteLines("a at X.scala:1\nb at Y.scala:22 and Z.java:3") ==
+      "a at X.scala\nb at Y.scala and Z.java:3")
   }
 }

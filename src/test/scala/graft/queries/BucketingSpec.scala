@@ -119,8 +119,10 @@ class BucketingSpec extends AnyFunSuite {
 
   test("keep-best incremental: today/base keep-maps diff without shuffling either map") {
     // keepBestIncr's touched-set derivation is a left join of the two
-    // corpus-sized decision maps — at 100 TB, re-shuffling either per
-    // batch is exactly the cost the aligned bucketed layouts delete.
+    // corpus-sized decision maps, and its passthrough a semi join of
+    // yesterday's keep-best decisions against today's map — at 100 TB,
+    // re-shuffling any of them per batch is exactly the cost the
+    // aligned bucketed layouts delete.
     // The merge hint blocks a fixture-scale broadcast from hiding the
     // layout.
     import spark.implicits._
@@ -136,5 +138,16 @@ class BucketingSpec extends AnyFunSuite {
     assert(!plan.contains("Exchange hashpartitioning"),
       "bucket-aligned map diff must not shuffle either side:\n" + plan.take(3000))
     assert(diff.count() > 0)
+
+    // the untouched-cluster passthrough: yesterday's persisted
+    // keep-best decisions joined on doc_id against today's map
+    val pass = Pipeline.baseKeepBestOf(spark, dir).hint("merge")
+      .join(today.select($"doc_id"), Seq("doc_id"), "left_semi")
+    val passPlan = pass.queryExecution.executedPlan.toString
+    assert(passPlan.contains("SortMergeJoin"),
+      "expected the forced merge join:\n" + passPlan.take(2000))
+    assert(!passPlan.contains("Exchange hashpartitioning"),
+      "the keep-best passthrough must not shuffle either side:\n" + passPlan.take(3000))
+    assert(pass.count() > 0)
   }
 }
