@@ -2,7 +2,7 @@ package graft.queries
 
 import java.nio.file.{FileSystemException, Files, Path, Paths, StandardCopyOption}
 
-import graft.sink.ParquetFiles
+import graft.sink.{DriverParquet, ParquetFiles}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -112,6 +112,11 @@ object Artifacts {
           .write.bucketBy(buckets, key).sortBy(key)
           .option("path", staging.toString)
           .saveAsTable(tmp)
+        // no rows write no bucket file, and a dir of no file has no
+        // columns for [[read]] to find: give it an empty bucket-0 file
+        if (s.table(tmp).inputFiles.isEmpty)
+          DriverParquet.write(s, staging.resolve("part-00000-empty_00000.c000.parquet"),
+            s.table(tmp).schema, Nil, Map.empty)
         // external table (explicit path): DROP removes only the catalog
         // entry, the bucketed files stay for the atomic move
         s.sql(s"DROP TABLE $tmp")

@@ -61,6 +61,26 @@ class BucketingSpec extends AnyFunSuite {
     }
   }
 
+  test("a bucketed layout of no rows reads back as an empty table with its columns") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-bucketed-empty-")
+    val layout = Artifacts.Bucketed(s"graft-bucketed-empty-${System.nanoTime}", "k", 4)
+    try {
+      val p = layout.ensure(spark, dir.toString, "|v1")(
+        Seq((1L, "a")).toDF("k", "v").filter($"k" < 0))
+      val t = layout.read(spark, p)
+      assert(t.columns.toSeq == Seq("k", "v"))
+      assert(t.schema.map(_.dataType.simpleString) == Seq("bigint", "string"))
+      assert(t.count() == 0)
+      val self = t.hint("merge").join(layout.read(spark, p), "k")
+      assert(!self.queryExecution.executedPlan.toString.contains("Exchange hashpartitioning"))
+    } finally {
+      graft.sink.ParquetFiles.deleteTree(
+        java.nio.file.Paths.get(sys.props("java.io.tmpdir"), layout.kind))
+      graft.sink.ParquetFiles.deleteTree(dir)
+    }
+  }
+
   test("keep-map artifact: doc_id joins never shuffle the bucketed decision side") {
     // the real thing, not a toy: the dedup-decision artifact the
     // manifest family consumes, registered bucket-aware and joined
