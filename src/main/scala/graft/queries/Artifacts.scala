@@ -39,7 +39,7 @@ object Artifacts {
     * path must invalidate the artifact, or a stale copy would
     * silently diverge from the oracle), and the build lands in a
     * staging dir that is atomically renamed into place — two
-    * processes racing the build (driver Verify alongside a Bench run)
+    * processes racing the build (a `graft.Verify` run alongside a Bench run)
     * each produce a complete artifact and the loser discards its copy,
     * instead of interleaving writes into one directory.
     */
