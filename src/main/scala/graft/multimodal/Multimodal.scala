@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.queries.Artifacts
+import graft.queries.{Artifacts, Banding}
 
 /** Multimodal columns: image/audio/video treated as opaque `binary`
   * payloads with typed metadata, processed by a typed
@@ -621,16 +621,9 @@ object Multimodal {
     val index = kept.groupBy($"frame_md5")
       .agg(collect_list(struct($"asset_id", $"n")).as("g"))
       .filter(size($"g") >= 2)
-    // one-sided generation: explode only the STRICT TAIL after each
-    // x's position, so a group of n assets expands to n(n-1)/2 rows
-    // instead of n² rows filtered in half afterwards (the incremental
-    // touching cores' discipline); least/greatest in the shared tail
-    // restores the id-ordered orientation the list order doesn't
-    // guarantee
-    scoreFramePairs(
-      index.select(posexplode($"g").as(Seq("px", "x")), $"g")
-        .select($"x",
-          explode(slice($"g", $"px" + lit(2), size($"g") - $"px" - lit(1))).as("y")))
+    // least/greatest in the shared tail restores the id-ordered
+    // orientation the list order doesn't guarantee
+    scoreFramePairs(Banding.tailPairs(index))
       .unionByName(subWindowPairs(s, dir))
       .orderBy($"a_id", $"b_id")
   }
@@ -815,13 +808,7 @@ object Multimodal {
     val index = kept.groupBy($"frame_md5")
       .agg(collect_list(struct($"asset_id", $"n", $"is_t")).as("g"))
       .filter(size($"g") >= 2)
-    val windowed = scoreFramePairs(
-      index
-        .select(explode($"g").as("x"), $"g")
-        .filter($"x.is_t")
-        .select($"x", explode($"g").as("y"))
-        .filter($"x.asset_id" =!= $"y.asset_id" &&
-          (!$"y.is_t" || $"x.asset_id" < $"y.asset_id")))
+    val windowed = scoreFramePairs(Banding.touchingPairs(index, "asset_id"))
     // the sub-window containment stage off the persisted prefix index
     // (the mediaNearDup stage's incremental twin): batch-touching
     // feature groups only, capped with the same boilerplate

@@ -2,6 +2,9 @@ package graft.queries
 
 import graft.Tables
 import graft.queries.Artifacts.{Bucketed, ensureArtifact, stamp}
+import graft.queries.Banding.{BAND_CAP, bandGroups, capBandGroups, minhashBandKeys,
+  minhashBands, minhashBandsSql, minhashSigAggsSql, minhashSignature, minhashSlot,
+  simhashBands, simhashBandsSql, tailPairs, touchingPairs}
 import graft.sink.ParquetFiles
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -159,35 +162,6 @@ object Pipeline {
     s"""(SELECT * FROM $src
        |  QUALIFY ROW_NUMBER() OVER (
        |    PARTITION BY md5(lower(trim(text))) ORDER BY doc_id) = 1)""".stripMargin
-
-  /** Band-group membership cap for the LSH near-dup family — the band
-    * analog of [[SHINGLE_DF_CAP]]. Even after exact-dup pre-collapse a
-    * band value can degenerate (all near-identical-but-distinct
-    * variants of one template share a band), and the band groups are
-    * materialized with `collect_list`, which must stay bounded at any
-    * corpus size. Per (band_idx, band) only the first `BAND_CAP`
-    * members by doc_id enter the group; later members lose that band
-    * (they still pair through their other bands). The truncation is
-    * part of the operator's semantics and the DuckDB oracle applies
-    * the identical QUALIFY. The cap bounds candidate fan-out per band
-    * at cap²/2 and the per-group payload at cap members.
-    */
-  private[graft] val BAND_CAP = 100
-
-  /** Keep the first [[BAND_CAP]] members (by doc_id) of every
-    * (band_idx, band) group. row_number over the band partition is an
-    * external (spillable) sort — a degenerate band is a slow task, not
-    * an OOM — and the window's hash partitioning on (band_idx, band)
-    * is reused verbatim by the groupBy that follows it in both
-    * callers, so the cap costs no extra shuffle.
-    */
-  private[graft] def capBandGroups(bands: DataFrame, cap: Int = BAND_CAP): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("band_idx"), col("band")).orderBy(col("doc_id"))
-    bands.withColumn("brn", row_number().over(w))
-      .filter(col("brn") <= cap)
-      .drop("brn")
-  }
 
   /** The deduplicated corpus itself (companion to [[exactDedup]]'s
     * hash map): first document per normalized-text hash survives.
@@ -807,15 +781,9 @@ object Pipeline {
     val index = kept.groupBy($"hs")
       .agg(sort_array(collect_list(struct($"doc_id", $"n"))).as("g"))
       .filter(size($"g") >= 2)
-    // one-sided generation (the x_media_neardup slice idiom): explode
-    // only the STRICT TAIL after each x's position, so a group of n
-    // docs expands to n(n-1)/2 rows instead of n² filtered in half —
-    // this stage feeds the hottest shuffle in the family, so the
-    // constant is wall-clock.
-    index
-      .select(posexplode($"g").as(Seq("px", "x")), $"g")
-      .select($"x",
-        explode(slice($"g", $"px" + lit(2), size($"g") - $"px" - lit(1))).as("y"))
+    // one-sided generation: this stage feeds the hottest shuffle in
+    // the family, so tailPairs' n(n-1)/2 constant is wall-clock.
+    tailPairs(index)
       .select($"x.doc_id".as("a_id"), $"y.doc_id".as("b_id"),
         $"x.n".as("na"), $"y.n".as("nb"))
       .groupBy($"a_id", $"b_id", $"na", $"nb")
@@ -1385,28 +1353,14 @@ object Pipeline {
   val shingleNoveltySql: String =
     noveltyBodySqlFrom(defaultBatchCondSql) + "\nORDER BY doc_id"
 
-  /** MinHash signature (k=8 hash functions) per document.
-    * hash_i(shingle) := md5('<i>|' || shingle); min over shingles of a
-    * uniformly-distributed fixed-width hex string is a valid min-hash,
-    * and md5 is bit-identical across engines (unlike seeded MLlib
-    * MinHashLSH). One groupBy = one shuffle; signature is 8 small aggs.
-    */
-  private val minhashSigsSql: String = {
-    val aggs = (0 until 8).map(i => s"min(md5('$i|' || s)) AS mh$i").mkString(", ")
-    // reads the `sh` CTE its sole consumer (minhashCandCtesSql)
-    // defines — re-inlining the reps+shingle pipeline here would make
-    // the oracle evaluate it twice
-    s"""SELECT doc_id, $aggs FROM sh GROUP BY doc_id"""
-  }
-
   /** Candidate pairs out of the banded-MinHash pipeline — the shared
     * core of [[minhashLsh]] (the near-dup operator) and [[minhashEst]]
     * (its estimator audit), so the band structure, caps, and shingle
     * handling can never diverge between an operator and the audit that
     * judges it. One groupBy(doc_id) produces the signature slots AND
     * the shingle set; bands explode map-side; groups are cut to
-    * [[BAND_CAP]]; pairs leave the capped groups carrying intersection
-    * size and both set sizes — plus slot agreement (`eq`) when
+    * [[Banding.BAND_CAP]]; pairs leave the capped groups carrying
+    * intersection size and both set sizes — plus slot agreement (`eq`) when
     * `withSig` is set. Only [[minhashEst]] needs the 8-slot signature
     * arrays; [[minhashLsh]] opts out so ~256 extra bytes per member
     * never ride its band shuffle and collect_list groups (Catalyst
@@ -1415,8 +1369,6 @@ object Pipeline {
   private def minhashCandPairs(s: SparkSession, dir: String,
       withSig: Boolean): DataFrame = {
     import s.implicits._
-    val sigAggs = (0 until 8)
-      .map(i => min(md5(concat(lit(s"$i|"), $"s").cast("binary"))).as(s"mh$i"))
     // The shingle set rides the band shuffle, the collect_list groups,
     // and the pairwise explode² as 64-bit hashes, not raw strings:
     // |intersection| and the set sizes are identical (two distinct
@@ -1428,14 +1380,11 @@ object Pipeline {
     // signature slots still hash the raw string — the banding and the
     // oracle's `min(md5('i|' || s))` must agree byte-for-byte.
     val doc = keptShinglesOf(repDocs(s, dir)).groupBy($"doc_id")
-      .agg(collect_list(xxhash64($"s")).as("ss"), sigAggs: _*)
+      .agg(collect_list(xxhash64($"s")).as("ss"), minhashSignature($"s"): _*)
     val sigCol =
       if (withSig) Seq(array((0 until 8).map(i => col(s"mh$i")): _*).as("sig"))
       else Nil
-    val bands = doc.select(Seq($"doc_id", $"ss") ++ sigCol ++ Seq(
-      posexplode(array((0 until 4).map(b =>
-        concat(col(s"mh${2 * b}"), col(s"mh${2 * b + 1}"))): _*))
-        .as(Seq("band_idx", "band"))): _*)
+    val bands = doc.select(Seq($"doc_id", $"ss") ++ sigCol :+ minhashBands: _*)
     val member =
       if (withSig) struct($"doc_id", $"ss", $"sig")
       else struct($"doc_id", $"ss")
@@ -1450,17 +1399,10 @@ object Pipeline {
           when($"x.sig".getItem(i) === $"y.sig".getItem(i), lit(1L))
             .otherwise(lit(0L))).reduce(_ + _).as("eq"))
       else Nil
-    // one-sided generation (the x_media_neardup slice idiom): each x
-    // pairs with the strict tail after its position — n(n-1)/2 rows
-    // per group, not n² filtered in half. least/greatest restores the
-    // id orientation (collect_list order is nondeterministic) and
-    // na/nb follow the ids; c and eq are symmetric.
-    capBandGroups(bands).groupBy($"band_idx", $"band")
-      .agg(collect_list(member).as("g"))
-      .filter(size($"g") >= 2)
-      .select(posexplode($"g").as(Seq("px", "x")), $"g")
-      .select($"x",
-        explode(slice($"g", $"px" + lit(2), size($"g") - $"px" - lit(1))).as("y"))
+    // least/greatest restores the id orientation (collect_list order
+    // is nondeterministic) and na/nb follow the ids; c and eq are
+    // symmetric.
+    tailPairs(bandGroups(bands, member))
       .select(Seq(least($"x.doc_id", $"y.doc_id").as("a_id"),
         greatest($"x.doc_id", $"y.doc_id").as("b_id")) ++ eqCol ++ Seq(
         size(array_intersect($"x.ss", $"y.ss")).cast("long").as("c"),
@@ -1475,15 +1417,12 @@ object Pipeline {
     * `cand`/`sz`/`inter`; the finals differ per consumer), over an
     * arbitrary documents source.
     */
-  private def minhashCandCtesSqlFrom(src: String): String = {
-    val bandSelects = (0 until 4)
-      .map(b => s"SELECT doc_id, mh${2 * b} || mh${2 * b + 1} AS band, $b AS band_idx FROM sig")
-      .mkString("\n  UNION ALL ")
+  private def minhashCandCtesSqlFrom(src: String): String =
     s"""sh AS (${keptShinglesSqlFrom(repsSqlFrom(src))}),
-       |sig AS ($minhashSigsSql),
+       |sig AS (SELECT doc_id, $minhashSigAggsSql FROM sh GROUP BY doc_id),
        |bands AS (
        |  SELECT doc_id, band, band_idx FROM (
-       |  $bandSelects)
+       |  ${minhashBandsSql("sig")})
        |  QUALIFY ROW_NUMBER() OVER (
        |    PARTITION BY band_idx, band ORDER BY doc_id) <= $BAND_CAP),
        |cand AS (
@@ -1496,7 +1435,6 @@ object Pipeline {
        |  FROM cand JOIN sh sa ON a_id = sa.doc_id
        |            JOIN sh sb ON b_id = sb.doc_id AND sa.s = sb.s
        |  GROUP BY 1, 2)""".stripMargin
-  }
 
   private val minhashCandCtesSql: String = minhashCandCtesSqlFrom("documents")
 
@@ -1505,8 +1443,8 @@ object Pipeline {
     * candidates verified with exact Jaccard ≥ 0.10. The band join is
     * the scalable step — shuffle on band value, no all-pairs compare;
     * exact verification touches candidates only. Band groups are
-    * bounded by [[capBandGroups]] so no aggregation row ever exceeds
-    * [[BAND_CAP]] members. The oracle mirrors the full pipeline,
+    * bounded by [[Banding.capBandGroups]] so no aggregation row ever
+    * exceeds [[Banding.BAND_CAP]] members. The oracle mirrors the full pipeline,
     * pre-collapse and cap included (LSH recall is part of the
     * operator's semantics).
     */
@@ -1557,8 +1495,8 @@ object Pipeline {
     * longer prefix length, the distance share in integer ppm, and the
     * verify verdict at [[EDIT_PPM_MAX]].
     *
-    * Scale shape: candidates are [[BAND_CAP]]-bounded and BROADCAST;
-    * each text lookup is a map-side probe of the corpus scan (two
+    * Scale shape: candidates are [[Banding.BAND_CAP]]-bounded and
+    * BROADCAST; each text lookup is a map-side probe of the corpus scan (two
     * scans, zero shuffle of the corpus), and the O(prefix²) kernel
     * runs once per candidate — never per corpus row. Both engines'
     * `levenshtein` is the standard unit-cost
@@ -1630,7 +1568,7 @@ object Pipeline {
     * agreement × 125000 is exact; the one division floors an
     * IEEE-identical double). Same linear banded plan as
     * [[minhashLsh]], with the 8 slots riding the band structs (+8
-    * hashes per member, still [[BAND_CAP]]-bounded).
+    * hashes per member, still [[Banding.BAND_CAP]]-bounded).
     */
   def minhashEst(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -1753,9 +1691,9 @@ object Pipeline {
     * expected candidate set is ~4·N²/65 536, vs N²/2 for a cross join
     * (and vs only 256 keys for 8-bit bands, which degenerates
     * quadratically ~256× sooner). Runs over the exact-dedup
-    * representatives with band groups capped at [[BAND_CAP]]
-    * (see [[repDocs]] / [[capBandGroups]]); the oracle mirrors the
-    * banded pipeline, pre-collapse and cap included.
+    * representatives with band groups capped at [[Banding.BAND_CAP]]
+    * (see [[repDocs]] / [[Banding.capBandGroups]]); the oracle mirrors
+    * the banded pipeline, pre-collapse and cap included.
     */
   def simhashPairs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -1768,20 +1706,11 @@ object Pipeline {
     // generated INSIDE each band group. No self-join, no cache: the
     // old band×band join launched up to 8 concurrent materializations
     // of the 64-agg fingerprint subtree.
-    val bands = fingerprintsOf(repDocs(s, dir)).select($"doc_id", $"simhash",
-      posexplode(array((0 until 4).map(b =>
-        shiftright($"simhash", 16 * b).bitwiseAND(lit(0xFFFFL))): _*))
-        .as(Seq("band_idx", "band")))
-    // one-sided generation (the x_media_neardup slice idiom): pair
-    // each x with the strict tail after its position — n(n-1)/2 rows
-    // per band group, not n² filtered in half. XOR is symmetric;
-    // least/greatest restores the id orientation per row.
-    capBandGroups(bands).groupBy($"band_idx", $"band")
-      .agg(collect_list(struct($"doc_id", $"simhash")).as("g"))
-      .filter(size($"g") >= 2)
-      .select(posexplode($"g").as(Seq("px", "x")), $"g")
-      .select($"x",
-        explode(slice($"g", $"px" + lit(2), size($"g") - $"px" - lit(1))).as("y"))
+    val bands = fingerprintsOf(repDocs(s, dir))
+      .select($"doc_id", $"simhash", simhashBands($"simhash"))
+    // XOR is symmetric; least/greatest restores the id orientation
+    // per row.
+    tailPairs(bandGroups(bands, struct($"doc_id", $"simhash")))
       .select(least($"x.doc_id", $"y.doc_id").as("a_id"),
         greatest($"x.doc_id", $"y.doc_id").as("b_id"),
         bit_count($"x.simhash".bitwiseXOR($"y.simhash")).cast("long").as("hamming"))
@@ -1844,13 +1773,14 @@ object Pipeline {
     * the ingest loop's lexical near-dup gap (the
     * [[corpusShingleFilter]]/[[corpusBigramStats]] contract applied to
     * the `x_minhash_lsh` family): per (band_idx, band) of the BASE
-    * corpus's exact-dedup representatives, the [[BAND_CAP]]-bounded
-    * member list, each member carrying its df-capped shingle-hash set
-    * so the gate's exact-Jaccard verify needs no second lookup. The
-    * signature/band derivation is byte-identical to
-    * [[minhashCandPairs]] (same `min(md5('i|' || s))` slots, same
-    * 4 × 2 banding, same [[capBandGroups]] cut), so a gate drop can be
-    * re-derived exactly by the batch operator over the same slice.
+    * corpus's exact-dedup representatives, the
+    * [[Banding.BAND_CAP]]-bounded member list, each member carrying its
+    * df-capped shingle-hash set so the gate's exact-Jaccard verify
+    * needs no second lookup. The signature/band derivation is
+    * [[minhashCandPairs]]'s ([[Banding.minhashSignature]],
+    * [[Banding.minhashBands]], the [[Banding.capBandGroups]] cut), so a
+    * gate drop can be re-derived exactly by the batch operator over the
+    * same slice.
     *
     * Scale shape: this is a stored TABLE (refreshed at compaction
     * cadence), not a driver blob — a 100 TB corpus's band index is
@@ -1865,14 +1795,9 @@ object Pipeline {
   private[graft] def corpusBandIndex(
       s: SparkSession, docs: DataFrame): DataFrame = {
     import s.implicits._
-    val sigAggs = (0 until 8).map(i =>
-      min(md5(concat(lit(s"$i|"), $"s").cast("binary"))).as(s"mh$i"))
     val doc = keptShinglesOf(repDocsOf(docs)).groupBy($"doc_id")
-      .agg(sort_array(collect_list(xxhash64($"s"))).as("ss"), sigAggs: _*)
-    val bands = doc.select($"doc_id", $"ss",
-      posexplode(array((0 until 4).map(b =>
-        concat(col(s"mh${2 * b}"), col(s"mh${2 * b + 1}"))): _*))
-        .as(Seq("band_idx", "band")))
+      .agg(sort_array(collect_list(xxhash64($"s"))).as("ss"), minhashSignature($"s"): _*)
+    val bands = doc.select($"doc_id", $"ss", minhashBands)
     capBandGroups(bands).groupBy($"band_idx", $"band")
       .agg(collect_list(struct($"doc_id", $"ss")).as("members"))
   }
@@ -1910,8 +1835,9 @@ object Pipeline {
     * LEFT-joins the index on its band value (equi-keyed — broadcast
     * when the index fits, shuffle-hash otherwise; stream-static and
     * therefore STATELESS in a streaming plan); the Jaccard verify is a
-    * per-row fold over the ≤ 4 × [[BAND_CAP]] collected members. No
-    * streaming state, no corpus-side shuffle, no all-pairs anywhere.
+    * per-row fold over the ≤ 4 × [[Banding.BAND_CAP]] collected
+    * members. No streaming state, no corpus-side shuffle, no all-pairs
+    * anywhere.
     */
   private[graft] def bandGateScored(
       s: SparkSession, df: DataFrame, bandIndex: DataFrame,
@@ -1923,21 +1849,16 @@ object Pipeline {
         filter(col("gate_shw"), x => !array_contains(stop, xxhash64(x))))
       .withColumn("gate_ss", transform(col("gate_kept"), x => xxhash64(x)))
     val mh = (0 until 8).map(i =>
-      array_min(transform(col("gate_kept"), x =>
-        md5(concat(lit(s"$i|"), x).cast("binary")))))
-    var out = kept
-      .withColumn("gate_b0", concat(mh(0), mh(1)))
-      .withColumn("gate_b1", concat(mh(2), mh(3)))
-      .withColumn("gate_b2", concat(mh(4), mh(5)))
-      .withColumn("gate_b3", concat(mh(6), mh(7)))
+      array_min(transform(col("gate_kept"), x => minhashSlot(i, x))))
+    var out = minhashBandKeys(mh).zipWithIndex
+      .foldLeft(kept) { case (d, (k, b)) => d.withColumn(s"gate_b$b", k) }
       .drop("gate_shw", "gate_kept")
     (0 until 4).foreach { b =>
       val idx = bandIndex.filter(col("band_idx") === b)
         .select(col("band").as(s"gate_bk$b"), col("members").as(s"gate_m$b"))
       out = out.join(idx, col(s"gate_b$b") === col(s"gate_bk$b"), "left_outer")
     }
-    val emptyMembers =
-      array().cast("array<struct<doc_id:bigint,ss:array<bigint>>>")
+    val emptyMembers = array().cast(bandIndex.schema("members").dataType)
     out
       .withColumn("gate_cand", concat((0 until 4).map(b =>
         coalesce(col(s"gate_m$b"), emptyMembers)): _*))
@@ -1987,29 +1908,22 @@ object Pipeline {
     * index-build, stop-filter, banding, cap, and verify derivations
     * are written exactly once.
     */
-  private def bandGateCtesSql(baseSrc: String, arrSrc: String): String = {
-    val bandUnion = (0 until 4).map(b =>
-      s"SELECT doc_id, mh${2 * b} || mh${2 * b + 1} AS band, $b AS band_idx FROM bsig")
-      .mkString("\n  UNION ALL ")
-    val abandUnion = (0 until 4).map(b =>
-      s"SELECT doc_id, mh${2 * b} || mh${2 * b + 1} AS band, $b AS band_idx FROM asig")
-      .mkString("\n  UNION ALL ")
-    val sigAggs = (0 until 8).map(i => s"min(md5('$i|' || s)) AS mh$i").mkString(", ")
+  private def bandGateCtesSql(baseSrc: String, arrSrc: String): String =
     s"""bsha AS (${shinglesSqlFrom(repsSqlFrom(baseSrc))}),
        |stop AS (SELECT s FROM bsha GROUP BY s HAVING COUNT(*) > $SHINGLE_DF_CAP),
        |bsh AS (SELECT doc_id, s FROM bsha WHERE s NOT IN (SELECT s FROM stop)),
-       |bsig AS (SELECT doc_id, $sigAggs FROM bsh GROUP BY doc_id),
+       |bsig AS (SELECT doc_id, $minhashSigAggsSql FROM bsh GROUP BY doc_id),
        |bbands AS (
        |  SELECT doc_id, band, band_idx FROM (
-       |  $bandUnion)
+       |  ${minhashBandsSql("bsig")})
        |  QUALIFY ROW_NUMBER() OVER (
        |    PARTITION BY band_idx, band ORDER BY doc_id) <= $BAND_CAP),
        |bsz AS (SELECT doc_id, COUNT(*) AS n FROM bsh GROUP BY 1),
        |asha AS (${shinglesSqlFrom(arrSrc)}),
        |ash AS (SELECT doc_id, s FROM asha WHERE s NOT IN (SELECT s FROM stop)),
-       |asig AS (SELECT doc_id, $sigAggs FROM ash GROUP BY doc_id),
+       |asig AS (SELECT doc_id, $minhashSigAggsSql FROM ash GROUP BY doc_id),
        |abands AS (
-       |  $abandUnion),
+       |  ${minhashBandsSql("asig")}),
        |asz AS (SELECT doc_id, COUNT(*) AS n FROM ash GROUP BY 1),
        |cand AS (
        |  SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
@@ -2029,7 +1943,6 @@ object Pipeline {
        |    JOIN asz na ON c.a_id = na.doc_id
        |    JOIN bsz nb ON c.b_id = nb.doc_id
        |  GROUP BY 1)""".stripMargin
-  }
 
   lazy val bandGateAuditSql: String =
     s"""WITH base AS (
@@ -3030,19 +2943,10 @@ object Pipeline {
     val index = kept.groupBy($"s")
       .agg(collect_list(struct($"doc_id", $"n", $"is_t")).as("g"))
       .filter(size($"g") >= 2)
-    // one-sided generation, the [[incrementalNearDup]] idiom: explode
-    // only TOUCHED members as x (between the explodes, so each group
-    // costs |touch∩g|×|g|, not |g|² — the delta's cost must scale
-    // with the batch, not the corpus), pair them with every other
-    // member, and when BOTH endpoints are touched keep only the
-    // smaller-id orientation so each unordered pair contributes one
-    // row per shared shingle and the intersection count stays exact
-    index
-      .select(explode($"g").as("x"), $"g")
-      .filter($"x.is_t")
-      .select($"x", explode($"g").as("y"))
-      .filter($"x.doc_id" =!= $"y.doc_id" &&
-        (!$"y.is_t" || $"x.doc_id" < $"y.doc_id"))
+    // one orientation per (t,t) pair, so each unordered pair
+    // contributes one row per shared shingle and the intersection
+    // count stays exact
+    touchingPairs(index, "doc_id")
       .groupBy(least($"x.doc_id", $"y.doc_id").as("a_id"),
         greatest($"x.doc_id", $"y.doc_id").as("b_id"))
       .agg(count(lit(1)).as("c"),
@@ -3058,12 +2962,8 @@ object Pipeline {
     val bands = s.read.parquet(ensureFingerprints(s, dir).toString)
       .join(broadcast(touch.select($"doc_id", lit(true).as("t"))), Seq("doc_id"), "left")
       .withColumn("is_t", coalesce($"t", lit(false)))
-      .select($"doc_id", $"simhash", $"is_t",
-        posexplode(array((0 until 4).map(b =>
-          shiftright($"simhash", 16 * b).bitwiseAND(lit(0xFFFFL))): _*))
-          .as(Seq("band_idx", "band")))
-    // same one-sided discipline as [[jacPairsTouching]]: touched
-    // members explode first, |touch∩g|×|g| per band group; XOR is
+      .select($"doc_id", $"simhash", $"is_t", simhashBands($"simhash"))
+    // same one-sided discipline as [[jacPairsTouching]]; XOR is
     // symmetric and the trailing distinct dedups band duplicates, so
     // the single orientation per (t,t) pair loses nothing. Prune to
     // band groups containing a touched rep BEFORE the cap window —
@@ -3073,14 +2973,7 @@ object Pipeline {
     // pairs the is_t filter discards anyway
     val touchedB = bands.filter($"is_t").select($"band_idx", $"band").distinct()
     val pruned = bands.join(broadcast(touchedB), Seq("band_idx", "band"), "left_semi")
-    capBandGroups(pruned).groupBy($"band_idx", $"band")
-      .agg(collect_list(struct($"doc_id", $"simhash", $"is_t")).as("g"))
-      .filter(size($"g") >= 2)
-      .select(explode($"g").as("x"), $"g")
-      .filter($"x.is_t")
-      .select($"x", explode($"g").as("y"))
-      .filter($"x.doc_id" =!= $"y.doc_id" &&
-        (!$"y.is_t" || $"x.doc_id" < $"y.doc_id"))
+    touchingPairs(bandGroups(pruned, struct($"doc_id", $"simhash", $"is_t")), "doc_id")
       .filter(bit_count($"x.simhash".bitwiseXOR($"y.simhash")) <= 3)
       .select(least($"x.doc_id", $"y.doc_id").as("a_id"),
         greatest($"x.doc_id", $"y.doc_id").as("b_id"))
@@ -3138,12 +3031,12 @@ object Pipeline {
     *
     * EXACTNESS BOUNDARY, documented: the identity holds while the
     * increment crosses no structural cap — a shingle df crossing
-    * [[SHINGLE_DF_CAP]], a band group crossing [[BAND_CAP]], or an
+    * [[SHINGLE_DF_CAP]], a band group crossing [[Banding.BAND_CAP]], or an
     * embedding cell crossing [[EMBED_CELL_CAP]] re-scores pairs the
     * delta does not revisit. Cap crossings are what the periodic full
     * compaction ([[ensureEdgeGraph]] on the merged corpus) owns — the
     * standard incremental-dedup contract, and the fixtures sit far
-    * under every cap (max band group ≈ [[BAND_CAP]]/4 at sf0.1).
+    * under every cap (max band group ≈ [[Banding.BAND_CAP]]/4 at sf0.1).
     */
   /** The batch-bounded delta as two pinned sets: (`plus`, `minus`).
     * One fused touching run serves both jaccard roles — pairs
@@ -3409,10 +3302,7 @@ object Pipeline {
     */
   private def fingerprintBands(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(ensureFingerprints(s, dir).toString)
-      .select(col("doc_id"),
-        posexplode(array((0 until 4).map(b =>
-          shiftright(col("simhash"), 16 * b).bitwiseAND(lit(0xFFFFL))): _*))
-          .as(Seq("band_idx", "band")))
+      .select(col("doc_id"), simhashBands(col("simhash")))
 
   // The three crossed-key derivations, ONE definition each consumed by
   // both the monitor (compactionSignal) and the repair's blast radius
@@ -3431,7 +3321,7 @@ object Pipeline {
       .select(col("s"))
 
   /** Band groups whose pair set the batch can have changed. The band
-    * cap is POSITIONAL (first [[BAND_CAP]] members by doc_id), so a
+    * cap is POSITIONAL (first [[Banding.BAND_CAP]] members by doc_id), so a
     * batch ARRIVAL into a group that was already over the cap still
     * reorders the survivor set — hence every over-cap group the batch
     * touches, not only strict crossings.
@@ -3496,8 +3386,7 @@ object Pipeline {
        |  (SELECT COUNT(DISTINCT sh.doc_id) FROM sh JOIN jacc USING (s)) AS n_affected),
        |fp AS (${simhashSqlFrom(repsSqlFrom("documents"))}),
        |bands AS (
-       |  SELECT doc_id, band_idx, (simhash >> (16 * band_idx)) & 65535 AS band
-       |  FROM fp CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS band_idx)),
+       |  ${simhashBandsSql("fp")}),
        |sim AS (
        |  SELECT band_idx, band, COUNT(*) AS n_full,
        |    COUNT(*) FILTER (WHERE doc_id % 10 = 7) AS n_batch
@@ -3664,8 +3553,7 @@ object Pipeline {
        |   WHERE s IN (SELECT s FROM scnt WHERE m > $SHINGLE_DF_CAP)) AS n_carrier_docs),
        |fp AS (${simhashSqlFrom(repsSqlFrom("documents"))}),
        |bands AS (
-       |  SELECT doc_id, band_idx, (simhash >> (16 * band_idx)) & 65535 AS band
-       |  FROM fp CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS band_idx)),
+       |  ${simhashBandsSql("fp")}),
        |bcnt AS (SELECT band_idx, band, COUNT(*) AS m FROM bands GROUP BY 1, 2),
        |brow AS (SELECT 'band' AS family,
        |  (SELECT COUNT(*) FROM bcnt) AS n_keys,
@@ -4051,8 +3939,7 @@ object Pipeline {
        |    WHERE n_full > $SHINGLE_DF_CAP AND n_full - n_batch <= $SHINGLE_DF_CAP)),
        |fpx AS (${simhashSqlFrom(repsSqlFrom("adocs"))}),
        |bx AS (
-       |  SELECT doc_id, band_idx, (simhash >> (16 * band_idx)) & 65535 AS band
-       |  FROM fpx CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS band_idx)),
+       |  ${simhashBandsSql("fpx")}),
        |bc AS (
        |  -- the repair's WIDENED band predicate (positional cap: any
        |  -- over-cap group the batch touches — see affectedDocs)
@@ -4073,8 +3960,7 @@ object Pipeline {
        |  WHERE base_min IS NOT NULL AND full_min <> base_min),
        |bfpx AS (${simhashSqlFrom(repsSqlFrom("bdocs"))}),
        |bbx AS (
-       |  SELECT doc_id, band_idx, (simhash >> (16 * band_idx)) & 65535 AS band
-       |  FROM bfpx CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS band_idx)),
+       |  ${simhashBandsSql("bfpx")}),
        |depg AS (
        |  SELECT g.band_idx, g.band FROM
        |    (SELECT band_idx, band, COUNT(*) AS n FROM bbx GROUP BY 1, 2) g

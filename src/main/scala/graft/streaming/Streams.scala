@@ -403,7 +403,7 @@ object Streams {
     * ([[graft.queries.Pipeline.ensureBandIndex]], refreshed at
     * compaction cadence) reaches the batch family's own
     * `jaccard ≥ 0.10` cut — candidates come from the same 4 × 2
-    * banding, [[graft.queries.Pipeline.capBandGroups]]-capped, and the
+    * banding, [[graft.queries.Banding.capBandGroups]]-capped, and the
     * verify is exact set intersection over the same df-capped shingle
     * universe (the stop set rides along as a plan constant), so a gate
     * drop is a pair the batch operator itself would link against

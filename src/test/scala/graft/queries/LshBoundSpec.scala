@@ -33,17 +33,17 @@ class LshBoundSpec extends AnyFunSuite {
   test("capBandGroups: a 1000-member degenerate band is cut to BAND_CAP") {
     import spark.implicits._
     val bands = (1L to 1000L).map(i => (i, 0, "deadbeef")).toDF("doc_id", "band_idx", "band")
-    val capped = Pipeline.capBandGroups(bands).collect()
-    assert(capped.length === Pipeline.BAND_CAP)
-    assert(capped.map(_.getLong(0)).sorted.toSeq === (1L to Pipeline.BAND_CAP.toLong))
+    val capped = Banding.capBandGroups(bands).collect()
+    assert(capped.length === Banding.BAND_CAP)
+    assert(capped.map(_.getLong(0)).sorted.toSeq === (1L to Banding.BAND_CAP.toLong))
   }
 
   test("capBandGroups: caps per (band_idx, band), not globally") {
     import spark.implicits._
     val bands = (1L to 300L).map(i => (i, (i % 2).toInt, "x")).toDF("doc_id", "band_idx", "band")
-    val sizes = Pipeline.capBandGroups(bands)
+    val sizes = Banding.capBandGroups(bands)
       .groupBy($"band_idx").count().collect().map(_.getLong(1))
-    assert(sizes.length === 2 && sizes.forall(_ === Pipeline.BAND_CAP.toLong))
+    assert(sizes.length === 2 && sizes.forall(_ === Banding.BAND_CAP.toLong))
   }
 
   test("simhashPairs: 1000 distinct docs sharing every band stay bounded") {
@@ -56,7 +56,7 @@ class LshBoundSpec extends AnyFunSuite {
     // output is exactly the C(cap, 2) pairs among doc_ids 1..cap.
     val dir = corpusDir((1L to 1000L).map(i => (i, Seq.fill(i.toInt + 2)("w").mkString(" "))))
     val rows = Pipeline.simhashPairs(spark, dir).collect()
-    val cap = Pipeline.BAND_CAP
+    val cap = Banding.BAND_CAP
     assert(rows.length === cap * (cap - 1) / 2)
     assert(rows.forall(r => r.getLong(0) <= cap && r.getLong(1) <= cap))
     assert(rows.forall(_.getLong(2) === 0L)) // identical fingerprints
