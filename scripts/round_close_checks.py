@@ -53,6 +53,12 @@ as a script, so a false claim can't ship.
    build written anywhere else is a second copy of the store's
    staging and registration rules.
 
+8. One banding core — outside comments, `posexplode(array(`,
+   `explode(slice(` and `lit(s"$i|")` appear under src/main only in
+   `graft/queries/Banding.scala`: a band explode, a tail-slice pair
+   generator or a minhash slot written anywhere else is a second copy
+   of the near-dup family's banding rules.
+
 Usage:
     python3 scripts/round_close_checks.py [path/to/oracle_sql.json] \
         [--round N]
@@ -262,19 +268,23 @@ def check_bench_refs():
 
 STORE = os.path.join(MAIN, "graft/queries/Artifacts.scala")
 STORE_ONLY = ("saveAsTable(", "CLUSTERED BY", "_SUCCESS")
+BANDING = os.path.join(MAIN, "graft/queries/Banding.scala")
+BANDING_ONLY = ("posexplode(array(", "explode(slice(", 'lit(s"$i|")')
 
 
-def check_store_only():
+def check_owned(owner, tokens):
+    """each of `tokens` outside comments in a src/main file other than
+    `owner`"""
     bad = []
     for path in sorted(scala_files(MAIN)):
-        if path == STORE:
+        if path == owner:
             continue
         text = blank_comments(open(path, encoding="utf-8").read())
-        for tok in STORE_ONLY:
+        for tok in tokens:
             for m in re.finditer(re.escape(tok), text):
                 line = text.count("\n", 0, m.start()) + 1
                 bad.append((os.path.relpath(path, REPO), line, tok))
-    print(f"== {', '.join(STORE_ONLY)} outside {os.path.relpath(STORE, REPO)} ==")
+    print(f"== {', '.join(tokens)} outside {os.path.relpath(owner, REPO)} ==")
     for path, line, tok in bad:
         print(f"  OUTSIDE {path}:{line}  {tok}")
     if not bad:
@@ -405,7 +415,8 @@ def main():
     bad = check_claims()
     bad += check_tool_refs()
     bad += check_bench_refs()
-    bad += check_store_only()
+    bad += check_owned(STORE, STORE_ONLY)
+    bad += check_owned(BANDING, BANDING_ONLY)
     if not os.path.exists(oracle):
         print(f"oracle_sql.json not found at {oracle} — run "
               "`sbt \"runMain graft.Verify <sfDir> <outDir>\"` first",

@@ -58,6 +58,7 @@ class BucketingSpec extends AnyFunSuite {
     } finally {
       spark.sql("DROP TABLE IF EXISTS docs_b")
       spark.sql("DROP TABLE IF EXISTS scores_b")
+      graft.sink.ParquetFiles.deleteTree(warehouse)
     }
   }
 
