@@ -59,6 +59,13 @@ as a script, so a false claim can't ship.
    generator or a minhash slot written anywhere else is a second copy
    of the near-dup family's banding rules.
 
+9. Parquet reads resolve their settings once — outside comments,
+   `.appendFile(` appears nowhere under src/main, and
+   `ParquetFileReader.open(` and `new Configuration(` appear only in
+   `graft/sink/ParquetFiles.scala`: parquet-mr's `appendFile` and
+   one-argument `open` build a new Hadoop `Configuration` per call,
+   which parses its XML defaults again.
+
 Usage:
     python3 scripts/round_close_checks.py [path/to/oracle_sql.json] \
         [--round N]
@@ -270,11 +277,14 @@ STORE = os.path.join(MAIN, "graft/queries/Artifacts.scala")
 STORE_ONLY = ("saveAsTable(", "CLUSTERED BY", "_SUCCESS")
 BANDING = os.path.join(MAIN, "graft/queries/Banding.scala")
 BANDING_ONLY = ("posexplode(array(", "explode(slice(", 'lit(s"$i|")')
+PARQUET_FILES = os.path.join(MAIN, "graft/sink/ParquetFiles.scala")
+PARQUET_FILES_ONLY = ("ParquetFileReader.open(", "new Configuration(")
+NOWHERE = (".appendFile(",)
 
 
 def check_owned(owner, tokens):
     """each of `tokens` outside comments in a src/main file other than
-    `owner`"""
+    `owner` (None: in any src/main file)"""
     bad = []
     for path in sorted(scala_files(MAIN)):
         if path == owner:
@@ -284,9 +294,10 @@ def check_owned(owner, tokens):
             for m in re.finditer(re.escape(tok), text):
                 line = text.count("\n", 0, m.start()) + 1
                 bad.append((os.path.relpath(path, REPO), line, tok))
-    print(f"== {', '.join(tokens)} outside {os.path.relpath(owner, REPO)} ==")
+    where = f"outside {os.path.relpath(owner, REPO)}" if owner else "in src/main"
+    print(f"== {', '.join(tokens)} {where} ==")
     for path, line, tok in bad:
-        print(f"  OUTSIDE {path}:{line}  {tok}")
+        print(f"  {'OUTSIDE' if owner else 'FOUND'} {path}:{line}  {tok}")
     if not bad:
         print("  none")
     return len(bad)
@@ -417,6 +428,8 @@ def main():
     bad += check_bench_refs()
     bad += check_owned(STORE, STORE_ONLY)
     bad += check_owned(BANDING, BANDING_ONLY)
+    bad += check_owned(PARQUET_FILES, PARQUET_FILES_ONLY)
+    bad += check_owned(None, NOWHERE)
     if not os.path.exists(oracle):
         print(f"oracle_sql.json not found at {oracle} — run "
               "`sbt \"runMain graft.Verify <sfDir> <outDir>\"` first",

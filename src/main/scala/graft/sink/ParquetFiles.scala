@@ -6,12 +6,13 @@ import java.util.Comparator
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.parquet.ParquetReadOptions
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.{InputFile, LocalOutputFile, OutputFile}
 
 /** Row-group-level Parquet file surgery: whole files appended to one
-  * output **at the binary row-group level** (`ParquetFileWriter.appendFile`
+  * output **at the binary row-group level** (`ParquetFileReader.appendTo`
   * — no decode, no re-encode, no decompress), and the footer facts the
   * tests read.
   *
@@ -25,20 +26,36 @@ import org.apache.parquet.io.{InputFile, LocalOutputFile, OutputFile}
   * reference's single `pq.ParquetWriter` per shard (`writer.py:177-199`):
   * one file per shard, row groups in flush order, each flush = the row
   * groups `write_table` would have produced.
+  *
+  * Reader settings are resolved once, here. parquet-mr's one-argument
+  * `ParquetFileReader.open(InputFile)`, and `ParquetFileWriter.appendFile`
+  * which calls it, build their read options over a new Hadoop
+  * `Configuration` on every call, and a new `Configuration` looks up and
+  * parses `core-default.xml` and `core-site.xml` on the classpath: on
+  * the parity sink's path, one parse per appended flush, on the
+  * caller's thread. So every reader in this object opens with the one
+  * [[readOptions]], which holds the same defaults, and the footer
+  * readers share one [[conf]], loaded on first use.
   */
 object ParquetFiles {
 
-  private def conf(): Configuration = new Configuration()
+  private val conf = new Configuration()
+  private val readOptions = ParquetReadOptions.builder().build()
+
+  private def open(file: InputFile): ParquetFileReader = ParquetFileReader.open(file, readOptions)
+  private def open(file: Path): ParquetFileReader = open(HadoopInputFile.fromPath(hPath(file), conf))
 
   /** Appends whole Parquet files to `out`, row groups copied verbatim,
     * under the schema and key-value footer metadata (e.g. Spark's row
     * schema) of `template` — the first file to be appended. `close`
     * writes the footer. Appended row groups carry no page indexes
-    * (parquet-mr drops them on append).
+    * (parquet-mr drops them on append). Each part is opened with the
+    * shared [[readOptions]]: `reader.appendTo(writer)` is the body of
+    * parquet-mr's `appendFile` without its per-call configuration load.
     */
   final class Appender(out: OutputFile, template: InputFile) {
     private val (schema, keyValueMeta) = {
-      val r = ParquetFileReader.open(template)
+      val r = open(template)
       try {
         val md = r.getFooter.getFileMetaData
         (md.getSchema, md.getKeyValueMetaData)
@@ -46,13 +63,16 @@ object ParquetFiles {
     }
     // 128 MiB target block size / 8 MiB max padding — parquet-mr's own
     // defaults (ParquetWriter.DEFAULT_BLOCK_SIZE / MAX_PADDING_SIZE_DEFAULT);
-    // irrelevant to appendFile, which copies source row groups verbatim.
+    // irrelevant to appendTo, which copies source row groups verbatim.
     private val writer = new ParquetFileWriter(out, schema,
       ParquetFileWriter.Mode.OVERWRITE, 128L * 1024 * 1024, 8 * 1024 * 1024,
       null, org.apache.parquet.column.ParquetProperties.builder().build())
     writer.start()
 
-    def append(part: InputFile): Unit = writer.appendFile(part)
+    def append(part: InputFile): Unit = {
+      val r = open(part)
+      try r.appendTo(writer) finally r.close()
+    }
     def close(): Unit = writer.end(keyValueMeta)
   }
 
@@ -66,8 +86,7 @@ object ParquetFiles {
       Files.move(parts.head, dest, StandardCopyOption.REPLACE_EXISTING)
       return
     }
-    val c = conf()
-    val inputs = parts.map(p => HadoopInputFile.fromPath(hPath(p), c))
+    val inputs = parts.map(p => HadoopInputFile.fromPath(hPath(p), conf))
     val tmp = dest.resolveSibling("." + dest.getFileName.toString + ".concat.tmp")
     val out = new Appender(new LocalOutputFile(tmp), inputs.head)
     inputs.foreach(out.append)
@@ -111,7 +130,7 @@ object ParquetFiles {
     * `pq.read_metadata` (`tests/tests.py:244-248`).
     */
   def rowGroupStats(file: Path): (Int, Long, Long) = {
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(hPath(file), conf()))
+    val r = open(file)
     try {
       val blocks = r.getFooter.getBlocks.asScala
       val rows = blocks.map(_.getRowCount)
@@ -123,7 +142,7 @@ object ParquetFiles {
     * of the first row group (`tests/tests.py:161-169` analog).
     */
   def firstColumnHasStatistics(file: Path): Boolean = {
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(hPath(file), conf()))
+    val r = open(file)
     try {
       val col = r.getFooter.getBlocks.get(0).getColumns.get(0)
       val st: org.apache.parquet.column.statistics.Statistics[_] = col.getStatistics
@@ -135,7 +154,7 @@ object ParquetFiles {
     * group — the footer fact the codec-option tests pin.
     */
   def firstColumnCodec(file: Path): String = {
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(hPath(file), conf()))
+    val r = open(file)
     try r.getFooter.getBlocks.get(0).getColumns.get(0).getCodec.name()
     finally r.close()
   }

@@ -97,6 +97,7 @@ final class ParquetStreamSink(
   private var rowCount = 0L
   private var encodedBytes = 0L
   private var encodeNanos = 0L
+  private var appendNanos = 0L
 
   // --- construction-time path semantics (writer.py:151-169) ---
   ParquetFiles.claimOutput(path, overwrite, log)
@@ -169,7 +170,7 @@ final class ParquetStreamSink(
     if (!state.bufferNonEmpty) return
     if (shard.isEmpty) openNewShard() // lazy creation
     val n = buffer.iterator.map(_.length).sum
-    shard.get.add(encode(buffer.iterator.flatten), onePart = rowGroupSize.forall(n <= _))
+    appending(shard.get.add(encode(buffer.iterator.flatten), onePart = rowGroupSize.forall(n <= _)))
     flushCount += 1
     rowCount += n
     state.onFlush()
@@ -198,9 +199,10 @@ final class ParquetStreamSink(
     flush()
     finalizeCurrentShard()
     closed = true
-    val encodeMs = "%.1f".formatLocal(java.util.Locale.ROOT, encodeNanos / 1e6)
+    def ms(nanos: Long) = "%.1f".formatLocal(java.util.Locale.ROOT, nanos / 1e6)
     log.info(s"Closed Parquet writer for: $path (flushes=$flushCount, " + // writer.py:301
-      s"shards=${manifest.size}, rows=$rowCount, encoded_bytes=$encodedBytes, encode_ms=$encodeMs)")
+      s"shards=${manifest.size}, rows=$rowCount, encoded_bytes=$encodedBytes, " +
+      s"encode_ms=${ms(encodeNanos)}, append_ms=${ms(appendNanos)})")
   }
 
   // ------------------------------------------------------------------
@@ -208,7 +210,7 @@ final class ParquetStreamSink(
   private def finalizeCurrentShard(): Unit = {
     // Opened but never flushed: the reference's ParquetWriter.close()
     // still writes a valid 0-row file (schema + footer only).
-    shard.foreach(_.close(encode(Iterator.empty)))
+    shard.foreach(s => appending(s.close(encode(Iterator.empty))))
     shard = None
   }
 
@@ -218,6 +220,15 @@ final class ParquetStreamSink(
     encodeNanos += System.nanoTime - t0
     encodedBytes += e.length
     e
+  }
+
+  /** Runs `f`, an add to or a close of the open shard, and counts its
+    * time less the encodes inside it: the close line's `append_ms`.
+    */
+  private def appending(f: => Unit): Unit = {
+    val t0 = System.nanoTime - encodeNanos
+    f
+    appendNanos += System.nanoTime - encodeNanos - t0
   }
 
   private def ensureOpen(): Unit =

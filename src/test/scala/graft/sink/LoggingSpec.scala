@@ -82,10 +82,11 @@ class LoggingSpec extends AnyFunSuite {
     // the sink's counters: two flushes of 32 rows, one shard each
     val fields = "(\\w+)=([0-9.]+)".r.findAllMatchIn(closed.head)
       .map(m => m.group(1) -> m.group(2)).toMap
-    assert(fields.keySet == Set("flushes", "shards", "rows", "encoded_bytes", "encode_ms"),
+    assert(fields.keySet == Set("flushes", "shards", "rows", "encoded_bytes", "encode_ms", "append_ms"),
       closed.head)
     assert(fields("flushes") == "2" && fields("shards") == "2" && fields("rows") == "64", closed.head)
     assert(fields("encoded_bytes").toLong > 0 && fields("encode_ms").toDouble > 0, closed.head)
+    assert(fields("append_ms").toDouble >= 0, closed.head)
   }
 
   test("each committed streaming batch is logged at info with its counters") {

@@ -18,6 +18,12 @@ import graft.TestSpark
   * staged-file composition it replaced — [[DriverParquet.write]] per
   * chunk of at most `rowGroupSize` rows, then [[ParquetFiles.concat]]
   * per shard — and it must leave nothing in the output but the shards.
+  *
+  * The byte pins hold within one JVM. parquet-mr builds each column
+  * chunk's footer `encodings` list from a hash set, so the order of that
+  * list can differ between two JVM runs of the same code. Shards written
+  * by two runs compare equal in their data bytes, and in their footers
+  * once each chunk's `encodings` list is sorted.
   */
 class ShardWriteSpec extends AnyFunSuite with BeforeAndAfterEach {
 
@@ -178,6 +184,32 @@ class ShardWriteSpec extends AnyFunSuite with BeforeAndAfterEach {
     calls(4, 100).foreach(one.writeRows) // several flushes into one file
     one.close()
     assert(entries(tmp) == Set("shards", "single.parquet"))
+  }
+
+  test("appending flushes to open shards loads no Hadoop configuration") {
+    val est = ColumnarSize.ofRows(calls(1, 100).head, schema)
+    val out = tmp.resolve("shards")
+    // every call flushes, and shards roll over by bytes; the 200-row
+    // flushes go over the cap, the 100-row ones do not
+    val sink = new ParquetStreamSink(spark, out, schema, Some(est * 2), est, rowGroupSize = Some(150))
+    // a Hadoop Configuration looks up its XML defaults through the
+    // context class loader it was built under
+    val lookups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val thread = Thread.currentThread
+    val prior = thread.getContextClassLoader
+    thread.setContextClassLoader(new ClassLoader(prior) {
+      override def getResource(name: String): java.net.URL = {
+        if (name.endsWith(".xml")) lookups.add(name)
+        super.getResource(name)
+      }
+    })
+    try {
+      (calls(4, 100) ++ calls(4, 200)).foreach(sink.writeRows)
+      sink.close()
+    } finally thread.setContextClassLoader(prior)
+    val stats = sink.writtenFiles.map(ParquetFiles.rowGroupStats)
+    assert(stats.size >= 2 && stats.map(_._1).sum == 4 + 4 * 2 && stats.map(_._2).sum == 1200L, stats)
+    assert(lookups.isEmpty, s"${lookups.size} XML lookups: ${lookups.asScala.toSeq.distinct}")
   }
 
   test("an unknown codec fails in the constructor, before the overwrite delete") {
