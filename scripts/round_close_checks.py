@@ -66,6 +66,12 @@ as a script, so a false claim can't ship.
    one-argument `open` build a new Hadoop `Configuration` per call,
    which parses its XML defaults again.
 
+10. One connected-components owner — outside comments, `reach(id, r)`
+   and `"src_label"` appear under src/main only in
+   `graft/queries/Components.scala`: an oracle closure CTE or a
+   label-propagation loop written anywhere else is a second copy of
+   the components rule.
+
 Usage:
     python3 scripts/round_close_checks.py [path/to/oracle_sql.json] \
         [--round N]
@@ -280,6 +286,8 @@ BANDING_ONLY = ("posexplode(array(", "explode(slice(", 'lit(s"$i|")')
 PARQUET_FILES = os.path.join(MAIN, "graft/sink/ParquetFiles.scala")
 PARQUET_FILES_ONLY = ("ParquetFileReader.open(", "new Configuration(")
 NOWHERE = (".appendFile(",)
+COMPONENTS = os.path.join(MAIN, "graft/queries/Components.scala")
+COMPONENTS_ONLY = ("reach(id, r)", '"src_label"')
 
 
 def check_owned(owner, tokens):
@@ -430,6 +438,7 @@ def main():
     bad += check_owned(BANDING, BANDING_ONLY)
     bad += check_owned(PARQUET_FILES, PARQUET_FILES_ONLY)
     bad += check_owned(None, NOWHERE)
+    bad += check_owned(COMPONENTS, COMPONENTS_ONLY)
     if not os.path.exists(oracle):
         print(f"oracle_sql.json not found at {oracle} — run "
               "`sbt \"runMain graft.Verify <sfDir> <outDir>\"` first",

@@ -79,7 +79,7 @@ object ScaleProbe {
     val tSym = secsSince(t2)
 
     val tDecision = drive("x_dedup_full")
-    val rounds = queries.Pipeline.lastComponentsRounds
+    val rounds = queries.Components.lastComponentsRounds
 
     val t4 = System.nanoTime()
     queries.Pipeline.ensureKeepMap(spark, dir)
@@ -108,7 +108,7 @@ object ScaleProbe {
     val tBaseState = secsSince(t7)
 
     val tIncr = drive("x_incr_clusters")
-    val incrRounds = queries.Pipeline.lastComponentsRounds
+    val incrRounds = queries.Components.lastComponentsRounds
 
     val tSignal = drive("x_compaction_signal")
     val nIncr = SparkEntry.queries("x_incr_clusters")(spark, dir).count()

@@ -158,8 +158,8 @@ object Parity {
     val out = scratch("distributed")
     val sink = new graft.streaming.StreamingShardSink(
       out, src.schema, shardSizeBytes = 256L * 1024, overwrite = true)
-    sink.addBatch(src.filter(col("doc_id") % 2 === 0))
-    sink.addBatch(src.filter(col("doc_id") % 2 === 1))
+    sink.addBatch(src.filter(col("doc_id") % 2 === 0), 0L)
+    sink.addBatch(src.filter(col("doc_id") % 2 === 1), 1L)
     s.read.schema(src.schema).parquet(out.toString).orderBy("doc_id")
   }
 

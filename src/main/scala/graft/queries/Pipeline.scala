@@ -5,6 +5,7 @@ import graft.queries.Artifacts.{Bucketed, ensureArtifact, stamp}
 import graft.queries.Banding.{BAND_CAP, bandGroups, capBandGroups, minhashBandKeys,
   minhashBands, minhashBandsSql, minhashSigAggsSql, minhashSignature, minhashSlot,
   simhashBands, simhashBandsSql, tailPairs, touchingPairs}
+import graft.queries.Components.{closureCtesSql, connectedComponents, freeCheckpoint}
 import graft.sink.ParquetFiles
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -2039,113 +2040,6 @@ object Pipeline {
        |GROUP BY a.rate
        |ORDER BY a.rate""".stripMargin
 
-  /** Minimum-label propagation connected components over an undirected
-    * edge list (`a_id`, `b_id`): every node's label converges to the
-    * smallest doc_id reachable from it — the unique, order-independent
-    * fixpoint, so the result is deterministic however Spark schedules
-    * the joins. Each round is a neighbor-min propagation (one shuffle
-    * join + one aggregation) followed by a pointer-jumping compression
-    * (`label := label-of-label` — a label is itself a node id, and its
-    * own label can only be smaller), which doubles the distance
-    * information travels per round: convergence is O(log diameter),
-    * not O(diameter), so even a pathological million-node chain
-    * finishes in ~20 rounds and the 50-round cap is a genuine runaway
-    * guard — hitting it throws rather than silently returning a
-    * non-fixpoint. `localCheckpoint` materializes the per-round labels
-    * and truncates the iterative lineage — without it round k replays
-    * all k-1 predecessors and the plan grows without bound; on a
-    * cluster the same call swaps for a reliable `checkpoint` to an
-    * HDFS dir.
-    */
-  private[graft] def connectedComponents(edges: DataFrame): DataFrame = {
-    // repartition on src BEFORE the checkpoint: every round joins sym
-    // on src, and a checkpointed plan carries its partitioning into
-    // the LogicalRDD — so the edge set is exchanged ONCE here instead
-    // of once per round (at 100 TB the edge set is the big operand;
-    // O(rounds) exchanges of it was the loop's dominant shuffle)
-    val sym = edges.select(col("a_id").as("src"), col("b_id").as("dst"))
-      .union(edges.select(col("b_id").as("src"), col("a_id").as("dst")))
-      .distinct()
-      .repartition(col("src"))
-      .localCheckpoint() // reused every round; never recompute the edge pipeline
-    componentsOverSym(sym, freeSym = true)
-  }
-
-  /** The label-propagation loop over an already-symmetrized edge set
-    * (`src`, `dst`; duplicates tolerated — they only feed a `min`).
-    * Callers holding the bucketed [[symEdgesOf]] layout enter here
-    * directly: the scan arrives hash-partitioned on `src`, so the
-    * per-round propagation join never exchanges the edge side, and
-    * storage (not executor block-manager memory) backs its per-round
-    * reuse — the corpus-scale operand stays unpinned. `freeSym` is
-    * set by callers that checkpointed `sym` themselves and want it
-    * released on convergence (false when sym is a table scan).
-    */
-  private def componentsOverSym(sym: DataFrame, freeSym: Boolean): DataFrame = {
-    // localCheckpoint persists RDDs the catalog cache never sees; free
-    // each round's checkpoint as soon as the next one supersedes it —
-    // DIRECTLY from the superseded DataFrame's own plan
-    // ([[freeCheckpoint]]), never by diffing the context-global
-    // registry, whose diff window would capture and free a CONCURRENT
-    // caller's pins (the incrDelta lesson) — so an iterative call
-    // leaves behind only its result, not O(rounds) of dead
-    // block-manager state
-    // fused init (r21): label₀ = min(id, min neighbor) in ONE
-    // aggregation over the already-src-partitioned edge set. Starting
-    // from identity labels, the loop's first round computes exactly
-    // this (propagation over identity labels is the min-neighbor id;
-    // the pointer-jump is a no-op against identity labels), so seeding
-    // with it drops one full join+checkpoint+count round from every
-    // components call at identical fixpoint — measured one round saved
-    // on every consumer (dedup clusters, split family, incremental
-    // sub-graphs).
-    var labels = sym.groupBy(col("src")).agg(min(col("dst")).as("mn"))
-      .select(col("src").as("id"), least(col("src"), col("mn")).as("label"))
-      .localCheckpoint()
-    var changed = 1L
-    var round = 0
-    while (changed > 0 && round < 50) {
-      val prop = sym
-        .join(labels.select(col("id").as("src"), col("label").as("src_label")), "src")
-        .groupBy(col("dst").as("id")).agg(min(col("src_label")).as("nbr_label"))
-      val hooked = labels.join(prop, Seq("id"), "left")
-        .select(col("id"), col("label").as("old"),
-          least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label"))
-      // pointer jumping: substitute each label with that node's own
-      // (smaller-or-equal) label, halving remaining path lengths
-      val compressed = hooked.join(
-        labels.select(col("id").as("label"), col("label").as("ll")), Seq("label"), "left")
-      // carry the previous label through the checkpoint so the
-      // convergence check is a filter over materialized rows, not a
-      // second pass over the join
-      val next = compressed
-        .select(col("id"), col("old"),
-          least(col("label"), coalesce(col("ll"), col("label"))).as("label"))
-        .localCheckpoint()
-      changed = next.filter(col("label") =!= col("old")).count()
-      // next is materialized (eager checkpoint + the count above), so
-      // the previous round's checkpoint — the one LogicalRDD in the
-      // current `labels` plan — has no remaining reader
-      freeCheckpoint(labels)
-      labels = next.select(col("id"), col("label"))
-      round += 1
-    }
-    if (freeSym) freeCheckpoint(sym) // the final labels checkpoint alone survives
-    require(changed == 0,
-      s"connectedComponents did not converge in $round rounds — " +
-        "graph structure inconsistent with a near-dup corpus")
-    lastComponentsRounds = round
-    labels
-  }
-
-  /** Rounds the most recent [[componentsOverSym]] loop took to reach
-    * its fixpoint — observability for the scale probe ([[ScaleProbe]]),
-    * which reports rounds-to-converge alongside wall time so the
-    * O(log diameter) claim is measured, not asserted. Diagnostic only:
-    * concurrent components calls race benignly on it.
-    */
-  @volatile private[graft] var lastComponentsRounds: Int = -1
-
   /** Bump when the near-dup edge semantics change (caps, thresholds,
     * shingle shape, …): the cached edge artifact must not survive a
     * code change, or a stale /tmp graph from an earlier build would
@@ -2195,8 +2089,8 @@ object Pipeline {
 
   /** The materialized near-dup edge set, both families unioned (see
     * [[ensureEdgeGraph]]). No `.distinct()` over the fam duplicates:
-    * the only consumers feed [[connectedComponents]], whose `sym`
-    * union dedups anyway — a pre-distinct would be one extra
+    * the only consumers feed [[Components.connectedComponents]], whose
+    * `sym` union dedups anyway — a pre-distinct would be one extra
     * edge-set shuffle per graph query for no semantic effect.
     */
   private def nearDupEdges(s: SparkSession, dir: String): DataFrame = {
@@ -2214,10 +2108,10 @@ object Pipeline {
   /** One-time build of the SYMMETRIZED edge layout — the
     * [[ensureEdgeGraph]] pair set with both directions materialized
     * (`src`, `dst`, `fam`), distinct, written `bucketBy(src)`. This
-    * is [[connectedComponents]]' working set: every propagation round
+    * is [[Components.ofSym]]'s working set: every propagation round
     * joins the edges on `src`, so the symmetrize + distinct + hash
-    * alignment that the generic path re-derives per components CALL
-    * happens once per corpus here, and the bucket metadata hands
+    * alignment that [[Components.connectedComponents]] re-derives per
+    * CALL happens once per corpus here, and the bucket metadata hands
     * every round a scan that is already partitioned on the join key —
     * zero exchanges of the corpus-scale operand, ever, after this
     * build. Keyed by the parent edge artifact's hash (which already
@@ -2241,6 +2135,13 @@ object Pipeline {
   private[graft] def symEdgesOf(s: SparkSession, dir: String): DataFrame =
     SYM_EDGES.read(s, ensureSymEdges(s, dir))
 
+  /** Component labels (`id`, `label`) over the stored [[symEdgesOf]]
+    * layout, both families: a cross-family duplicate pair only feeds
+    * the loop's min, so no distinct is needed.
+    */
+  private def storedComponents(s: SparkSession, dir: String): DataFrame =
+    Components.ofSym(symEdgesOf(s, dir).select(col("src"), col("dst")))
+
   /** Duplicate-cluster assignment — the stage a real dedup pipeline
     * runs after pair generation: the union of the exact-Jaccard
     * ([[ngramJaccard]]) and SimHash ([[simhashPairs]]) near-dup edges
@@ -2261,9 +2162,7 @@ object Pipeline {
     */
   def dedupClusters(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // both fams straight off the bucketed layout — a cross-fam
-    // duplicate pair only feeds the loop's min, so no distinct needed
-    componentsOverSym(symEdgesOf(s, dir).select($"src", $"dst"), freeSym = false)
+    storedComponents(s, dir)
       .select($"id".as("doc_id"), $"label".as("cluster_id"))
       .orderBy($"doc_id")
   }
@@ -2280,9 +2179,22 @@ object Pipeline {
        |lex_edges AS (
        |  SELECT a_id, b_id FROM jp UNION SELECT a_id, b_id FROM sp)""".stripMargin
 
+  /** The three near-dup edge families as CTEs `<prefix>jac`,
+    * `<prefix>sim` and `<prefix>sem` (`a_id`, `b_id`) over a
+    * documents/embeddings source pair, without a trailing comma — the
+    * families' parameterized oracle pipelines at their thresholds
+    * (Jaccard ≥ 0.10, Hamming ≤ 3, cosine ≥ 0.40).
+    */
+  private def edgeFamilyCtesSql(docs: String, emb: String, prefix: String = ""): String =
+    s"""${prefix}jac AS (WITH ${ngramPairCountsCtesSqlFrom(docs)}
+       |  SELECT a_id, b_id FROM pc WHERE c / (na + nb - c) >= 0.10),
+       |${prefix}sim AS (WITH ${simhashPairsCtesSqlFrom(docs)}
+       |  SELECT a_id, b_id FROM cand WHERE bit_count(xor(sa, sb)) <= 3),
+       |${prefix}sem AS (SELECT a_id, b_id FROM (${embedNearDupBodySqlFrom(emb)}))""".stripMargin
+
   /** The near-dup (lexical ∪ semantic) cluster CTE chain for
-    * [[dedupClustersSql]]. ([[dedupFullSql]] builds its own closure
-    * because its edge set additionally contains the exact-dup edges.)
+    * [[dedupClustersSql]]. ([[dedupFullSql]] takes the closure over its
+    * own edge set, which additionally contains the exact-dup edges.)
     *
     * ORACLE ASYMMETRY, recorded: this chain (and every oracle built
     * on it — clusters, semantic audit, full decision, manifest
@@ -2300,19 +2212,29 @@ object Pipeline {
        |ep AS ($embedNearDupSql),
        |edges AS (
        |  SELECT a_id, b_id FROM lex_edges UNION SELECT a_id, b_id FROM ep),
-       |sym AS (
-       |  SELECT a_id AS src, b_id AS dst FROM edges
-       |  UNION SELECT b_id, a_id FROM edges),
-       |reach(id, r) AS (
-       |  SELECT src, src FROM sym
-       |  UNION
-       |  SELECT s.dst, r.r FROM reach r JOIN sym s ON s.src = r.id)""".stripMargin
+       |${closureCtesSql("edges")}""".stripMargin
 
   lazy val dedupClustersSql: String =
     s"""WITH RECURSIVE
        |$dedupClusterCtesSql
        |SELECT id AS doc_id, MIN(r) AS cluster_id
        |FROM reach GROUP BY id ORDER BY doc_id""".stripMargin
+
+  /** The split-bucket rule of the split family ([[splitLeakage]],
+    * [[splitRepair]], [[incrSplitLeakage]]): md5 of the id's decimal
+    * string, its first 4 hex digits, mod 10 — buckets 0-7 train, 8 val,
+    * 9 test. [[splitBucketSql]] is the oracle's statement of it.
+    */
+  private def splitBucket(id: Column): Column =
+    conv(substring(md5(id.cast("string").cast("binary")), 1, 4), 16, 10)
+      .cast("long") % 10
+
+  /** [[splitBucket]] in DuckDB SQL over the id expression `id`. `sep`
+    * is the whitespace before `% 10`: with a line break in it or in
+    * `id`, each oracle keeps its own line layout.
+    */
+  private def splitBucketSql(id: String, sep: String = " "): String =
+    s"('0x' || substr(md5(CAST($id AS VARCHAR)), 1, 4))::BIGINT$sep% 10"
 
   /** Train/eval split-leakage audit (`x_split_leakage`) — the check a
     * curation pipeline runs BEFORE publishing a held-out set: assign
@@ -2339,14 +2261,10 @@ object Pipeline {
     */
   def splitLeakage(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val labels = componentsOverSym(
-        symEdgesOf(s, dir).select($"src", $"dst"), freeSym = false)
+    val labels = storedComponents(s, dir)
       .select($"id".as("doc_id"), $"label")
-    val sp = conv(substring(
-        md5($"doc_id".cast("string").cast("binary")), 1, 4), 16, 10)
-      .cast("long") % 10
     val dl = Tables(s, dir, "documents")
-      .select($"doc_id", sp.as("sp"))
+      .select($"doc_id", splitBucket($"doc_id").as("sp"))
       .join(labels, Seq("doc_id"), "left_outer")
     val trainClusters = dl
       .filter($"label".isNotNull && $"sp" <= 7)
@@ -2383,20 +2301,16 @@ object Pipeline {
     */
   def splitRepair(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val labels = componentsOverSym(
-        symEdgesOf(s, dir).select($"src", $"dst"), freeSym = false)
+    val labels = storedComponents(s, dir)
       .select($"id".as("doc_id"), $"label")
-    def bucket(c: Column): Column =
-      conv(substring(md5(c.cast("string").cast("binary")), 1, 4), 16, 10)
-        .cast("long") % 10
     def name(b: Column): Column =
       when(b <= 7, "train").when(b === 8, "val").otherwise("test")
     val perDoc = Tables(s, dir, "documents")
       .select($"doc_id")
       .join(labels, Seq("doc_id"), "left_outer")
       .select(
-        name(bucket($"doc_id")).as("nb"),
-        name(bucket(coalesce($"label", $"doc_id"))).as("na"))
+        name(splitBucket($"doc_id")).as("nb"),
+        name(splitBucket(coalesce($"label", $"doc_id"))).as("na"))
     val outFlow = perDoc.groupBy($"nb".as("split"))
       .agg(count(lit(1)).as("n_before"),
         sum(when($"nb" =!= $"na", 1L).otherwise(0L)).as("n_moved_out"))
@@ -2424,10 +2338,8 @@ object Pipeline {
        |      ELSE 'test' END AS na
        |  FROM (
        |    SELECT
-       |      ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 4))::BIGINT
-       |        % 10 AS bb,
-       |      ('0x' || substr(md5(CAST(coalesce(l.label, d.doc_id)
-       |        AS VARCHAR)), 1, 4))::BIGINT % 10 AS ba
+       |      ${splitBucketSql("d.doc_id", "\n        ")} AS bb,
+       |      ${splitBucketSql("coalesce(l.label, d.doc_id)\n       ")} AS ba
        |    FROM documents d LEFT JOIN labels l ON d.doc_id = l.id)),
        |outf AS (
        |  SELECT nb AS split, COUNT(*) AS n_before,
@@ -2453,8 +2365,7 @@ object Pipeline {
        |labels AS (SELECT id, MIN(r) AS label FROM reach GROUP BY id),
        |dl AS (
        |  SELECT d.doc_id,
-       |    ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 4))::BIGINT
-       |      % 10 AS sp,
+       |    ${splitBucketSql("d.doc_id", "\n      ")} AS sp,
        |    l.label
        |  FROM documents d LEFT JOIN labels l ON d.doc_id = l.id),
        |tc AS (
@@ -2498,17 +2409,14 @@ object Pipeline {
     */
   def incrSplitLeakage(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    def bucket(c: Column): Column =
-      conv(substring(md5(c.cast("string").cast("binary")), 1, 4), 16, 10)
-        .cast("long") % 10
     // the incremental label frame, materialized once — it feeds the
     // train-set derivation AND both eval probes
     val post = incrLabels(s, dir).localCheckpoint()
-    val trainToday = post.filter(bucket($"doc_id") <= 7)
+    val trainToday = post.filter(splitBucket($"doc_id") <= 7)
       .select($"cluster_id").distinct().withColumn("t_now", lit(1))
     val arr = Tables(s, dir, "documents")
       .filter(isBatchId($"doc_id"))
-      .select($"doc_id", bucket($"doc_id").as("sp"))
+      .select($"doc_id", splitBucket($"doc_id").as("sp"))
       .filter($"sp" >= 8)
       .join(post.select($"doc_id", $"cluster_id"), Seq("doc_id"), "left_outer")
       .join(broadcast(trainToday), Seq("cluster_id"), "left_outer")
@@ -2517,10 +2425,10 @@ object Pipeline {
         sum(when($"t_now".isNotNull, 1L).otherwise(0L))
           .as("n_arriving_leaked"))
     val baseLabels = s.read.parquet(ensureBaseLabels(s, dir).toString)
-    val trainYest = baseLabels.filter(bucket($"id") <= 7)
+    val trainYest = baseLabels.filter(splitBucket($"id") <= 7)
       .select($"label").distinct().withColumn("t_yest", lit(1))
     val pub = post.filter($"recomputed" && !isBatchId($"doc_id"))
-      .select($"doc_id", $"cluster_id", bucket($"doc_id").as("sp"))
+      .select($"doc_id", $"cluster_id", splitBucket($"doc_id").as("sp"))
       .filter($"sp" >= 8)
       .join(broadcast(trainToday), Seq("cluster_id"), "left_outer")
       .join(baseLabels.select($"id".as("doc_id"), $"label"),
@@ -2553,54 +2461,12 @@ object Pipeline {
     */
   lazy val incrSplitLeakageSql: String =
     s"""WITH RECURSIVE
-       |base_docs AS (SELECT * FROM documents WHERE doc_id % 10 <> 7),
-       |base_emb AS (SELECT * FROM embeddings WHERE vec_id % 10 <> 7),
-       |fjac AS (WITH ${ngramPairCountsCtesSqlFrom("documents")}
-       |  SELECT a_id, b_id FROM pc WHERE c / (na + nb - c) >= 0.10),
-       |fsim AS (WITH ${simhashPairsCtesSqlFrom("documents")}
-       |  SELECT a_id, b_id FROM cand WHERE bit_count(xor(sa, sb)) <= 3),
-       |fsem AS (SELECT a_id, b_id FROM (${embedNearDupBodySqlFrom("embeddings")})),
-       |bjac AS (WITH ${ngramPairCountsCtesSqlFrom("base_docs")}
-       |  SELECT a_id, b_id FROM pc WHERE c / (na + nb - c) >= 0.10),
-       |bsim AS (WITH ${simhashPairsCtesSqlFrom("base_docs")}
-       |  SELECT a_id, b_id FROM cand WHERE bit_count(xor(sa, sb)) <= 3),
-       |bsem AS (SELECT a_id, b_id FROM (${embedNearDupBodySqlFrom("base_emb")})),
-       |full_e AS (
-       |  SELECT a_id, b_id FROM fjac UNION SELECT a_id, b_id FROM fsim
-       |  UNION SELECT a_id, b_id FROM fsem),
-       |base_e AS (
-       |  SELECT a_id, b_id FROM bjac UNION SELECT a_id, b_id FROM bsim
-       |  UNION SELECT a_id, b_id FROM bsem),
-       |plus AS (
-       |  SELECT a_id, b_id FROM full_e WHERE a_id % 10 = 7 OR b_id % 10 = 7),
-       |minus AS (
-       |  SELECT b.a_id, b.b_id FROM base_e b
-       |  WHERE NOT EXISTS (
-       |    SELECT 1 FROM full_e f WHERE f.a_id = b.a_id AND f.b_id = b.b_id)),
-       |touched AS (
-       |  SELECT a_id AS id FROM plus UNION SELECT b_id FROM plus
-       |  UNION SELECT a_id FROM minus UNION SELECT b_id FROM minus),
-       |sym AS (
-       |  SELECT a_id AS src, b_id AS dst FROM full_e
-       |  UNION SELECT b_id, a_id FROM full_e),
-       |reach(id, r) AS (
-       |  SELECT src, src FROM sym
-       |  UNION
-       |  SELECT s.dst, r.r FROM reach r JOIN sym s ON s.src = r.id),
-       |cl AS (SELECT id, MIN(r) AS cluster_id FROM reach GROUP BY id),
-       |tcl AS (SELECT DISTINCT cluster_id FROM cl JOIN touched USING (id)),
-       |bsym AS (
-       |  SELECT a_id AS src, b_id AS dst FROM base_e
-       |  UNION SELECT b_id, a_id FROM base_e),
-       |breach(id, r) AS (
-       |  SELECT src, src FROM bsym
-       |  UNION
-       |  SELECT s.dst, r.r FROM breach r JOIN bsym s ON s.src = r.id),
+       |$incrRebuildCtesSql,
+       |${closureCtesSql("base_e", "b")},
        |bcl AS (SELECT id, MIN(r) AS label FROM breach GROUP BY id),
        |bkt AS (
        |  SELECT doc_id,
-       |    ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT
-       |      % 10 AS sp
+       |    ${splitBucketSql("doc_id", "\n      ")} AS sp
        |  FROM documents),
        |tnow AS (
        |  SELECT DISTINCT cl.cluster_id
@@ -2651,8 +2517,8 @@ object Pipeline {
     * family into the production graph (paraphrase detection: same
     * meaning, different tokens). Both sides ride the
     * [[ensureEdgeGraph]] artifact's amortization: lexical components
-    * come from the stored 'lex' edges (one [[connectedComponents]]
-    * pass over the pair set, never the raw corpus), semantic pairs
+    * come from the stored 'lex' edges (one [[Components.ofSym]] pass
+    * over the pair set, never the raw corpus), semantic pairs
     * re-run the measured [[embedNearDup]] probe for their cos scores.
     * Unclustered docs count as their own singleton cluster
     * (`coalesce(label, id)`), so a semantic edge between two lexically
@@ -2662,9 +2528,8 @@ object Pipeline {
     import s.implicits._
     // 'lex' rows of the bucketed layout are already distinct + both
     // directions — straight into the propagation loop
-    val lex = componentsOverSym(
-      symEdgesOf(s, dir).filter($"fam" === "lex").select($"src", $"dst"),
-      freeSym = false)
+    val lex = Components.ofSym(
+      symEdgesOf(s, dir).filter($"fam" === "lex").select($"src", $"dst"))
     val sem = embedNearDup(s, dir).select($"a_id", $"b_id", $"cos")
     sem
       .join(lex.select($"id".as("a_id"), $"label".as("a_cl")), Seq("a_id"), "left")
@@ -2677,13 +2542,7 @@ object Pipeline {
   lazy val dedupSemanticSql: String =
     s"""WITH RECURSIVE
        |$lexEdgeCtesSql,
-       |lsym AS (
-       |  SELECT a_id AS src, b_id AS dst FROM lex_edges
-       |  UNION SELECT b_id, a_id FROM lex_edges),
-       |lreach(id, r) AS (
-       |  SELECT src, src FROM lsym
-       |  UNION
-       |  SELECT s.dst, r.r FROM lreach r JOIN lsym s ON s.src = r.id),
+       |${closureCtesSql("lex_edges", "l")},
        |lcl AS (SELECT id, MIN(r) AS cluster FROM lreach GROUP BY id),
        |ep AS ($embedNearDupSql)
        |SELECT ep.a_id, ep.b_id, ep.cos,
@@ -2707,7 +2566,8 @@ object Pipeline {
     * `is_kept` marks the survivors; `count_if(is_kept)` is the corpus
     * size after dedup. Shapes: the rep window is per-hash-group
     * (repDocs' pattern), the edge union adds one distinct, and the
-    * component pass is the O(log diameter) [[connectedComponents]].
+    * component pass is the O(log diameter)
+    * [[Components.connectedComponents]].
     */
   def dedupFull(s: SparkSession, dir: String): DataFrame =
     dedupDecision(s, dir).orderBy(col("doc_id"))
@@ -3116,22 +2976,6 @@ object Pipeline {
       delta.filter(!$"added").select($"a_id", $"b_id"))
   }
 
-  /** Unpersist the backing RDD of an eagerly `localCheckpoint`ed
-    * DataFrame, read straight out of its plan's LogicalRDD. The
-    * alternative — diffing `sc.getPersistentRDDs` around the region
-    * that created the pins — assumes one caller at a time per
-    * SparkContext: a concurrent caller's pins land inside the diff
-    * window and get freed under it, and a freed localCheckpoint has
-    * truncated lineage, so the victim job dies unrecoverably instead
-    * of recomputing.
-    */
-  private[graft] def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   private[graft] def incrEdges(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val (plus, minus) = incrDelta(s, dir)
@@ -3210,27 +3054,18 @@ object Pipeline {
       .select($"id".as("doc_id"), $"label".as("cluster_id"), $"recomputed")
   }
 
-  /** DuckDB twin: ground truth by FULL rebuild — both edge sets (the
-    * batch-less base and the whole corpus) derived from scratch with
-    * the families' parameterized oracle pipelines, the closure taken
-    * over the full set, and `recomputed` as "the cluster contains a
-    * changed-edge endpoint". The Spark side never rebuilds; matching
-    * this oracle is the incremental ≡ full-rebuild proof.
+  /** The full-rebuild chain both incremental oracles ([[incrClustersSql]],
+    * [[incrSplitLeakageSql]]) start from: the batch-less base corpus
+    * (every doc and vector whose id ends in 7 held back), both edge
+    * sets from scratch (`full_e`, `base_e`), the edge delta (`plus`,
+    * `minus`), its endpoints (`touched`), the full closure's clusters
+    * (`cl`) and the clusters the delta touches (`tcl`).
     */
-  lazy val incrClustersSql: String =
-    s"""WITH RECURSIVE
-       |base_docs AS (SELECT * FROM documents WHERE doc_id % 10 <> 7),
+  private lazy val incrRebuildCtesSql: String =
+    s"""base_docs AS (SELECT * FROM documents WHERE doc_id % 10 <> 7),
        |base_emb AS (SELECT * FROM embeddings WHERE vec_id % 10 <> 7),
-       |fjac AS (WITH ${ngramPairCountsCtesSqlFrom("documents")}
-       |  SELECT a_id, b_id FROM pc WHERE c / (na + nb - c) >= 0.10),
-       |fsim AS (WITH ${simhashPairsCtesSqlFrom("documents")}
-       |  SELECT a_id, b_id FROM cand WHERE bit_count(xor(sa, sb)) <= 3),
-       |fsem AS (SELECT a_id, b_id FROM (${embedNearDupBodySqlFrom("embeddings")})),
-       |bjac AS (WITH ${ngramPairCountsCtesSqlFrom("base_docs")}
-       |  SELECT a_id, b_id FROM pc WHERE c / (na + nb - c) >= 0.10),
-       |bsim AS (WITH ${simhashPairsCtesSqlFrom("base_docs")}
-       |  SELECT a_id, b_id FROM cand WHERE bit_count(xor(sa, sb)) <= 3),
-       |bsem AS (SELECT a_id, b_id FROM (${embedNearDupBodySqlFrom("base_emb")})),
+       |${edgeFamilyCtesSql("documents", "embeddings", "f")},
+       |${edgeFamilyCtesSql("base_docs", "base_emb", "b")},
        |full_e AS (
        |  SELECT a_id, b_id FROM fjac UNION SELECT a_id, b_id FROM fsim
        |  UNION SELECT a_id, b_id FROM fsem),
@@ -3248,15 +3083,20 @@ object Pipeline {
        |touched AS (
        |  SELECT a_id AS id FROM plus UNION SELECT b_id FROM plus
        |  UNION SELECT a_id FROM minus UNION SELECT b_id FROM minus),
-       |sym AS (
-       |  SELECT a_id AS src, b_id AS dst FROM full_e
-       |  UNION SELECT b_id, a_id FROM full_e),
-       |reach(id, r) AS (
-       |  SELECT src, src FROM sym
-       |  UNION
-       |  SELECT s.dst, r.r FROM reach r JOIN sym s ON s.src = r.id),
+       |${closureCtesSql("full_e")},
        |cl AS (SELECT id, MIN(r) AS cluster_id FROM reach GROUP BY id),
-       |tcl AS (SELECT DISTINCT cluster_id FROM cl JOIN touched USING (id))
+       |tcl AS (SELECT DISTINCT cluster_id FROM cl JOIN touched USING (id))""".stripMargin
+
+  /** DuckDB twin: ground truth by FULL rebuild — both edge sets (the
+    * batch-less base and the whole corpus) derived from scratch with
+    * the families' parameterized oracle pipelines, the closure taken
+    * over the full set, and `recomputed` as "the cluster contains a
+    * changed-edge endpoint". The Spark side never rebuilds; matching
+    * this oracle is the incremental ≡ full-rebuild proof.
+    */
+  lazy val incrClustersSql: String =
+    s"""WITH RECURSIVE
+       |$incrRebuildCtesSql
        |SELECT cl.id AS doc_id, cl.cluster_id,
        |  cl.cluster_id IN (SELECT cluster_id FROM tcl) AS recomputed
        |FROM cl ORDER BY doc_id""".stripMargin
@@ -3920,11 +3760,7 @@ object Pipeline {
        |adocs AS (
        |  SELECT doc_id, text, lang, source, n_chars FROM documents
        |  UNION ALL SELECT * FROM plant),
-       |jac AS (WITH ${ngramPairCountsCtesSqlFrom("adocs")}
-       |  SELECT a_id, b_id FROM pc WHERE c / (na + nb - c) >= 0.10),
-       |sim AS (WITH ${simhashPairsCtesSqlFrom("adocs")}
-       |  SELECT a_id, b_id FROM cand WHERE bit_count(xor(sa, sb)) <= 3),
-       |sem AS (SELECT a_id, b_id FROM (${embedNearDupBodySqlFrom("embeddings")})),
+       |${edgeFamilyCtesSql("adocs", "embeddings")},
        |edges AS (
        |  SELECT a_id, b_id FROM jac UNION SELECT a_id, b_id FROM sim
        |  UNION SELECT a_id, b_id FROM sem),
@@ -4018,13 +3854,7 @@ object Pipeline {
        |edges AS (
        |  SELECT a_id, b_id FROM lex_edges UNION SELECT a_id, b_id FROM ep
        |  UNION SELECT rep, doc_id FROM reps WHERE doc_id <> rep),
-       |sym AS (
-       |  SELECT a_id AS src, b_id AS dst FROM edges
-       |  UNION SELECT b_id, a_id FROM edges),
-       |reach(id, r) AS (
-       |  SELECT src, src FROM sym
-       |  UNION
-       |  SELECT s.dst, r.r FROM reach r JOIN sym s ON s.src = r.id),
+       |${closureCtesSql("edges")},
        |cl AS (SELECT id AS doc_id, MIN(r) AS cluster_id FROM reach GROUP BY id)
        |SELECT d.doc_id,
        |  COALESCE(c.cluster_id, d.doc_id) AS keep_id,
@@ -4262,11 +4092,7 @@ object Pipeline {
     */
   private def keepMapSqlFrom(docsSrc: String, embSrc: String): String =
     s"""WITH RECURSIVE
-       |jac AS (WITH ${ngramPairCountsCtesSqlFrom(docsSrc)}
-       |  SELECT a_id, b_id FROM pc WHERE c / (na + nb - c) >= 0.10),
-       |sim AS (WITH ${simhashPairsCtesSqlFrom(docsSrc)}
-       |  SELECT a_id, b_id FROM cand WHERE bit_count(xor(sa, sb)) <= 3),
-       |sem AS (SELECT a_id, b_id FROM (${embedNearDupBodySqlFrom(embSrc)})),
+       |${edgeFamilyCtesSql(docsSrc, embSrc)},
        |reps AS (
        |  SELECT doc_id, min(doc_id) OVER (
        |    PARTITION BY md5(lower(trim(text)))) AS rep FROM $docsSrc),
@@ -4274,13 +4100,7 @@ object Pipeline {
        |  SELECT a_id, b_id FROM jac UNION SELECT a_id, b_id FROM sim
        |  UNION SELECT a_id, b_id FROM sem
        |  UNION SELECT rep, doc_id FROM reps WHERE doc_id <> rep),
-       |sym AS (
-       |  SELECT a_id AS src, b_id AS dst FROM edges
-       |  UNION SELECT b_id, a_id FROM edges),
-       |reach(id, r) AS (
-       |  SELECT src, src FROM sym
-       |  UNION
-       |  SELECT s.dst, r.r FROM reach r JOIN sym s ON s.src = r.id),
+       |${closureCtesSql("edges")},
        |cl AS (SELECT id, MIN(r) AS cluster FROM reach GROUP BY id)
        |SELECT d.doc_id, COALESCE(c.cluster, d.doc_id) AS keep_id
        |FROM $docsSrc d LEFT JOIN cl c ON d.doc_id = c.id""".stripMargin
@@ -7731,8 +7551,8 @@ object Pipeline {
     * postings only — the fan-out is bounded by query terms, not
     * vocabulary), and one (query_id, term, doc_id) aggregation yields
     * tf. The posting table is MATERIALIZED once (`localCheckpoint`,
-    * the [[connectedComponents]] pattern — a cluster swaps in a
-    * reliable checkpoint): its two consumers — the per-term df
+    * the [[Components.connectedComponents]] pattern — a cluster swaps
+    * in a reliable checkpoint): its two consumers — the per-term df
     * aggregate and the scoring join — would otherwise each replay the
     * corpus scan (column pruning specializes the two subtrees, which
     * defeats Spark's exchange reuse), and postings bounded by

@@ -236,16 +236,11 @@ final class StreamingShardSink(
       s"commit_log_bytes=${Files.size(commitLog)})")
   }
 
-  /** Cast one micro-batch to the schema and append its rows to the
-    * shard sequence: one job, whose tasks each roll their own shards
-    * over by the parity sink's rule ([[StreamingShardSink.encodeShards]]),
-    * then a driver-side rename of the listed shards in (partition,
-    * shard) order.
-    */
-  def addBatch(df: DataFrame): Unit = synchronized { shardIndex += write(df).files }
-
-  /** Write one batch's shards and rename them to the indices from
-    * `shardIndex` on, leaving the counter to the caller.
+  /** Cast one micro-batch to the schema and write its shards: one job,
+    * whose tasks each roll their own shards over by the parity sink's
+    * rule ([[StreamingShardSink.encodeShards]]), then a driver-side
+    * rename of the listed shards, in (partition, shard) order, to the
+    * indices from `shardIndex` on, leaving the counter to the caller.
     */
   private def write(df: DataFrame): StreamingShardSink.Written = {
     val casted = RowConformance.cast(df, schema)

@@ -49,7 +49,7 @@ object ConnectedComponentsPropSpec extends Properties("connectedComponents") {
   property("labels = component minima (vs driver union-find)") =
     forAll(graphs) { edges =>
       import spark.implicits._
-      val got = Pipeline.connectedComponents(edges.toDF("a_id", "b_id"))
+      val got = Components.connectedComponents(edges.toDF("a_id", "b_id"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       got == unionFind(edges)
     }

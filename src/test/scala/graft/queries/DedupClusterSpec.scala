@@ -20,7 +20,7 @@ class DedupClusterSpec extends AnyFunSuite {
     // 1-2-3-4 chain (diameter 3 → several propagation rounds) plus an
     // unrelated pair; labels must converge to the component minimum
     val edges = Seq((2L, 3L), (1L, 2L), (3L, 4L), (10L, 11L)).toDF("a_id", "b_id")
-    val got = Pipeline.connectedComponents(edges)
+    val got = Components.connectedComponents(edges)
       .orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(got === Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 1L), (10L, 10L), (11L, 10L)))
   }
@@ -32,9 +32,38 @@ class DedupClusterSpec extends AnyFunSuite {
     // O(log n) rounds — non-convergence throws, so passing IS the
     // round-count assertion
     val edges = (0L until 399L).map(i => (i, i + 1)).toDF("a_id", "b_id")
-    val labels = Pipeline.connectedComponents(edges).collect()
+    val labels = Components.connectedComponents(edges).collect()
     assert(labels.length == 400)
     assert(labels.forall(_.getLong(1) == 0L))
+  }
+
+  test("connectedComponents frees its own sym pin; ofSym keeps the caller's") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    def rddIds(df: org.apache.spark.sql.DataFrame): Set[Int] =
+      df.queryExecution.analyzed.collect {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+      }.toSet
+    val edges = Seq((2L, 3L), (1L, 2L), (3L, 4L), (10L, 11L)).toDF("a_id", "b_id")
+    val before = sc.getPersistentRDDs.keySet
+    val labels = Components.connectedComponents(edges)
+    val resultPin = rddIds(labels)
+    assert(resultPin.size == 1, s"result pins: $resultPin")
+    assert(sc.getPersistentRDDs.keySet == before ++ resultPin,
+      "the result's checkpoint is the one pin the call leaves")
+    Components.freeCheckpoint(labels)
+
+    val sym = edges.select($"a_id".as("src"), $"b_id".as("dst"))
+      .union(edges.select($"b_id".as("src"), $"a_id".as("dst")))
+      .localCheckpoint()
+    val symPin = rddIds(sym)
+    try {
+      val got = Components.ofSym(sym)
+      assert(got.count() == 6L)
+      assert(symPin.nonEmpty && symPin.subsetOf(sc.getPersistentRDDs.keySet),
+        "ofSym never frees the caller's edge set")
+      Components.freeCheckpoint(got)
+    } finally Components.freeCheckpoint(sym)
   }
 
   test("dedupFull: keep_id is final even when a case-variant twin carries the near-dup edge") {

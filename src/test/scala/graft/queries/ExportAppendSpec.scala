@@ -59,7 +59,7 @@ class ExportAppendSpec extends AnyFunSuite {
     val pre = Pipeline.exportPackedSlice(
       spark, dir, Pipeline.defaultBatchPred, lit(baseTotal))
     val packed = pre.localCheckpoint()
-    Pipeline.freeCheckpoint(pre)
+    Components.freeCheckpoint(pre)
     val sink = Pipeline.exportThroughSink(
       packed, out, Pipeline.EXPORT_SHARD_BYTES, resume = true)
     (out, beforeHashes, sink, packed, baseTotal)

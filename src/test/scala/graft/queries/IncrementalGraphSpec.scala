@@ -208,7 +208,7 @@ class IncrementalGraphSpec extends AnyFunSuite {
     assert(rows("simhash") == ((0L, 0L, false)),
       s"band groups stay far under BAND_CAP: ${rows("simhash")}")
   }
-  /** The concurrent-caller contract behind [[Pipeline.freeCheckpoint]]:
+  /** The concurrent-caller contract behind [[Components.freeCheckpoint]]:
     * freeing one pin must never touch another's blocks. The old
     * registry-diff release freed every RDD persisted inside its
     * window, including a concurrent caller's — and a freed
@@ -226,11 +226,11 @@ class IncrementalGraphSpec extends AnyFunSuite {
       }
     val (mineIds, theirIds) = (rddIds(mine), rddIds(theirs))
     assert(mineIds.nonEmpty && theirIds.nonEmpty, "checkpoints must pin RDDs")
-    Pipeline.freeCheckpoint(mine)
+    Components.freeCheckpoint(mine)
     val persisted = sc.getPersistentRDDs.keySet
     assert(mineIds.forall(id => !persisted.contains(id)), "own pin must be freed")
     assert(theirIds.forall(persisted.contains), "neighbor's pin must survive")
     assert(theirs.count() == 3)
-    Pipeline.freeCheckpoint(theirs)
+    Components.freeCheckpoint(theirs)
   }
 }

@@ -48,8 +48,11 @@ class SinkApiSpec extends AnyFunSuite with BeforeAndAfterEach {
   test("StreamingShardSink batch-mode addBatch: empty batch writes nothing") {
     val out = tmp.resolve("stream")
     val sink = new StreamingShardSink(out, schema, 1024L)
-    sink.addBatch(spark.createDataFrame(Seq.empty[Row].asJava, schema))
-    assert(Files.list(out).iterator.asScala.isEmpty)
+    sink.addBatch(spark.createDataFrame(Seq.empty[Row].asJava, schema), 0L)
+    // the commit log is the one file: batch 0 from shard 0, zero shards
+    val log = out.resolve("_graft_commits.tsv")
+    assert(Files.list(out).iterator.asScala.toSeq == Seq(log))
+    assert(Files.readString(log) == "0\t0\t0\n")
     assert(sink.writtenFiles.isEmpty)
   }
 
@@ -87,7 +90,7 @@ class SinkApiSpec extends AnyFunSuite with BeforeAndAfterEach {
     val out = tmp.resolve("par")
     val sink = new StreamingShardSink(out, schema, shardSizeBytes = 1024L * 1024)
     val df = spark.range(0, 500).selectExpr("id", "repeat('w', 20) AS value")
-    sink.addBatch(df.repartition(4))
+    sink.addBatch(df.repartition(4), 0L)
     val names = sink.writtenFiles.map(_.getFileName.toString)
     assert(names == names.indices.map(i => s"par-$i.parquet"))
     val back = spark.read.schema(schema).parquet(out.toString)
@@ -122,7 +125,7 @@ class SinkApiSpec extends AnyFunSuite with BeforeAndAfterEach {
     // one partition: 2,000 one-character rows, then 2,000 rows of 1 KiB
     val df = spark.range(0, 4000, 1, 1)
       .selectExpr("id", "IF(id < 2000, 'x', repeat('y', 1024)) AS value")
-    sink.addBatch(df)
+    sink.addBatch(df, 0L)
     val sizes = df.collect().toSeq.map(ColumnarSize.ofRow(_, schema))
     val want = parityShardRows(sizes, limit)
     assert(want == (2039L +: Seq.fill(30)(64L)) :+ 41L) // by hand: 13 B and 1,036 B rows
@@ -143,7 +146,7 @@ class SinkApiSpec extends AnyFunSuite with BeforeAndAfterEach {
     val out = tmp.resolve("opts")
     val sink = new StreamingShardSink(out, schema, 1024L, options = Map(
       "compression" -> "zstd", "parquet.column.statistics.enabled" -> "false"))
-    sink.addBatch(spark.range(0, 200, 1, 2).selectExpr("id", "repeat('z', 20) AS value"))
+    sink.addBatch(spark.range(0, 200, 1, 2).selectExpr("id", "repeat('z', 20) AS value"), 0L)
     assert(sink.writtenFiles.size > 2)
     sink.writtenFiles.foreach { f =>
       assert(ParquetFiles.firstColumnCodec(f) == "ZSTD")
@@ -155,7 +158,7 @@ class SinkApiSpec extends AnyFunSuite with BeforeAndAfterEach {
     val out = tmp.resolve("badcodec")
     val sink = new StreamingShardSink(out, schema, 1024L, options = Map("compression" -> "snapy"))
     intercept[IllegalArgumentException] {
-      sink.addBatch(spark.range(0, 10).selectExpr("id", "'v' AS value"))
+      sink.addBatch(spark.range(0, 10).selectExpr("id", "'v' AS value"), 0L)
     }
     assert(Files.list(out).iterator.asScala.isEmpty)
     assert(sink.writtenFiles.isEmpty)
@@ -164,7 +167,7 @@ class SinkApiSpec extends AnyFunSuite with BeforeAndAfterEach {
   test("StreamingShardSink: empty partitions write no file") {
     val out = tmp.resolve("sparse")
     val sink = new StreamingShardSink(out, schema, 1024L)
-    sink.addBatch(spark.range(0, 3).selectExpr("id", "'v' AS value").repartition(8))
+    sink.addBatch(spark.range(0, 3).selectExpr("id", "'v' AS value").repartition(8), 0L)
     val rows = sink.writtenFiles.map(ParquetFiles.rowGroupStats(_)._2)
     assert(rows.nonEmpty && rows.size <= 3, s"files: $rows")
     assert(rows.forall(_ > 0) && rows.sum == 3L, s"rows per file: $rows")
@@ -176,7 +179,7 @@ class SinkApiSpec extends AnyFunSuite with BeforeAndAfterEach {
     // 8 partitions on 4 cores, ~4.5 KiB each: several shards per partition
     sink.addBatch(spark.range(0, 1200)
       .selectExpr("id", "IF(id % 7 = 0, NULL, repeat('p', CAST(id % 40 AS INT))) AS value")
-      .repartition(8))
+      .repartition(8), 0L)
     val files = sink.writtenFiles
     assert(files.size >= 24, s"${files.size} shards")
     val rows = spark.read.schema(schema).parquet(out.toString)
@@ -234,7 +237,7 @@ class SinkApiSpec extends AnyFunSuite with BeforeAndAfterEach {
     ParquetStreamSink.withSink(new ParquetStreamSink(spark, all, odd))(_.writeAll(src))
     assert(read(all) == want)
     val stream = tmp.resolve("stream")
-    new StreamingShardSink(stream, odd, 1024L).addBatch(src)
+    new StreamingShardSink(stream, odd, 1024L).addBatch(src, 0L)
     assert(read(stream) == want)
     val est = src.select(ColumnarSizeExpr.rowBytes(odd)).collect().map(_.getLong(0)).sum
     assert(est == ColumnarSize.ofRows(src.collect(), odd))
@@ -244,7 +247,7 @@ class SinkApiSpec extends AnyFunSuite with BeforeAndAfterEach {
     val out = tmp.resolve("badcols")
     val sink = new StreamingShardSink(out, schema, 1024L)
     val wrong = spark.range(5).selectExpr("id AS something_else")
-    intercept[org.apache.spark.sql.AnalysisException] { sink.addBatch(wrong) }
+    intercept[org.apache.spark.sql.AnalysisException] { sink.addBatch(wrong, 0L) }
   }
 
   test("GraftExtensions injects graft functions without error") {
