@@ -72,6 +72,12 @@ as a script, so a false claim can't ship.
    label-propagation loop written anywhere else is a second copy of
    the components rule.
 
+11. One export sink drive — outside comments, `Some("corpus")` and
+   `shuffle_key div` appear under src/main only in
+   `graft/queries/Export.scala`: a corpus sink or a permutation-range
+   batch split written anywhere else is a second copy of the export's
+   sink drive.
+
 Usage:
     python3 scripts/round_close_checks.py [path/to/oracle_sql.json] \
         [--round N]
@@ -233,13 +239,22 @@ def check_tool_refs():
 BENCH_SRC = os.path.join(REPO, "perfbench/src")
 GRAFT_IMPORT = re.compile(r"^[ \t]*import (graft(?:\.\w+)*)\.(?:\{([^}]*)\}|(\w+))", re.M)
 QUALIFIED = re.compile(r"\bgraft(?:\.\w+)+")
-COMMENT = re.compile(r"//[^\n]*|/\*.*?\*/", re.S)
+# a string or char literal, tried before a comment at the same
+# position, so `//` inside a literal (DuckDB's integer division in
+# oracle SQL) is kept as code; a `"""` literal ends at its last quote
+COMMENT = re.compile(
+    r'"""[\s\S]*?"""(?!")'
+    r'|"(?:[^"\\\n]|\\.)*"'
+    r"|'(?:[^'\\\n]|\\[^\n]+?)'"
+    r"|//[^\n]*|/\*[\s\S]*?\*/")
 
 
 def blank_comments(raw):
     """the text with every comment blanked to spaces, newlines kept so
-    line numbers hold: a name in a comment is not compiled"""
-    return COMMENT.sub(lambda m: re.sub(r"[^\n]", " ", m.group(0)), raw)
+    line numbers hold: a name in a comment is not compiled, and string
+    and char literals are kept as they are"""
+    return COMMENT.sub(lambda m: m.group(0) if m.group(0)[0] in "\"'"
+                       else re.sub(r"[^\n]", " ", m.group(0)), raw)
 
 
 def check_bench_refs():
@@ -288,6 +303,8 @@ PARQUET_FILES_ONLY = ("ParquetFileReader.open(", "new Configuration(")
 NOWHERE = (".appendFile(",)
 COMPONENTS = os.path.join(MAIN, "graft/queries/Components.scala")
 COMPONENTS_ONLY = ("reach(id, r)", '"src_label"')
+EXPORT = os.path.join(MAIN, "graft/queries/Export.scala")
+EXPORT_ONLY = ('Some("corpus")', "shuffle_key div")
 
 
 def check_owned(owner, tokens):
@@ -439,6 +456,7 @@ def main():
     bad += check_owned(PARQUET_FILES, PARQUET_FILES_ONLY)
     bad += check_owned(None, NOWHERE)
     bad += check_owned(COMPONENTS, COMPONENTS_ONLY)
+    bad += check_owned(EXPORT, EXPORT_ONLY)
     if not os.path.exists(oracle):
         print(f"oracle_sql.json not found at {oracle} — run "
               "`sbt \"runMain graft.Verify <sfDir> <outDir>\"` first",

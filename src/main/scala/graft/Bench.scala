@@ -155,7 +155,7 @@ object Bench {
       graft.queries.Pipeline.ensureFingerprints(spark, sfDir)
     }
     if (needed("export_append"))
-      graft.queries.Pipeline.ensureBaseExport(spark, sfDir)
+      graft.queries.Export.ensureBaseExport(spark, sfDir)
     if (needed("band_gate", "stream_export", "gate_chain"))
       graft.queries.Pipeline.ensureBandIndex(spark, sfDir)
     if (needed("compaction_run")) {

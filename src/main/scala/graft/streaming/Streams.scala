@@ -6,6 +6,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.queries.Export
+
 /** Wiring helpers for the `readStream → transforms → writeStream`
   * shape: one call to attach any streaming DataFrame to the
   * distributed shard sink, and the standard watermarked event-time
@@ -63,16 +65,13 @@ object Streams {
             val prior = sink.filesCommittedBefore(id)
             committedTokens =
               if (prior.isEmpty) 0L
-              else s.read.schema(sink.schema)
-                .parquet(prior.map(_.toString): _*)
-                .agg(coalesce(sum(col("n_tokens")), lit(0L)))
-                .head.getLong(0)
+              else Export.tokenTotal(
+                s.read.schema(sink.schema).parquet(prior.map(_.toString): _*))
           }
           // on ANY failure, force a re-derivation from the committed
           // files next batch — a throw between addBatch's commit and
           // the token agg must not leave the accumulator behind disk
-          try committedTokens += graft.queries.Pipeline
-            .packAndAppendBatch(batch, committedTokens, sink, id)
+          try committedTokens += Export.packAndAppendBatch(batch, committedTokens, sink, id)
           catch { case e: Throwable => committedTokens = -1L; throw e }
         }
       }

@@ -4,9 +4,11 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.sink.ParquetFiles
 
 /** File-level invariants of the curated-corpus export capstone
   * (`x_corpus_export`) — everything the oracle's row hash cannot see:
@@ -18,7 +20,7 @@ import graft.TestSpark
   * (shuffle_key, doc_id) in strictly ascending order across file and
   * batch boundaries.
   */
-class CorpusExportSpec extends AnyFunSuite {
+class CorpusExportSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
@@ -30,11 +32,12 @@ class CorpusExportSpec extends AnyFunSuite {
   // but distinct from Pipeline.SHARD_TOKEN_BUDGET (the plan-level
   // token packing), which the packing assertions reference directly.
   private val SHARD_BYTES = 4096L
+  private val root = Files.createTempDirectory("corpus-export-spec-")
+  override def afterAll(): Unit = ParquetFiles.deleteTree(root)
   private lazy val exported = {
-    val out = Files.createTempDirectory("corpus-export-spec-")
-      .resolve("corpus")
-    val packed = Pipeline.exportPacked(spark, dir).localCheckpoint()
-    val sink = Pipeline.exportThroughSink(packed, out, SHARD_BYTES)
+    val out = root.resolve("corpus")
+    val packed = Export.exportPacked(spark, dir).localCheckpoint()
+    val sink = Export.exportThroughSink(packed, out, SHARD_BYTES)
     (out, packed, sink)
   }
 
@@ -61,7 +64,7 @@ class CorpusExportSpec extends AnyFunSuite {
     val log = Files.readAllLines(out.resolve("_graft_commits.tsv"))
       .asScala.filter(_.nonEmpty)
       .map { l => val a = l.split('\t'); (a(0).toLong, a(2).toInt) }.toMap
-    assert(log.keySet == (0L until Pipeline.EXPORT_BATCHES).toSet,
+    assert(log.keySet == (0L until Export.EXPORT_BATCHES).toSet,
       s"one commit per batch: $log")
     // the sf0.001 fixture puts ~56-66 rows (~20 KB) in every
     // permutation quartile; a 4 KiB threshold must roll each batch
@@ -80,7 +83,7 @@ class CorpusExportSpec extends AnyFunSuite {
     val (_, _, sink) = exported
     val keys = sink.writtenFiles.flatMap { f =>
       // one small file = one split = file order preserved
-      spark.read.schema(Pipeline.exportSchema).parquet(f.toString)
+      spark.read.schema(Export.exportSchema).parquet(f.toString)
         .select("shuffle_key", "doc_id").coalesce(1).collect()
         .map(r => (r.getLong(0), r.getLong(1)))
     }
@@ -92,7 +95,7 @@ class CorpusExportSpec extends AnyFunSuite {
 
   test("read-back ≡ packed stream; packing foots to the token budget") {
     val (out, packed, _) = exported
-    val back = spark.read.schema(Pipeline.exportSchema)
+    val back = spark.read.schema(Export.exportSchema)
       .parquet(out.toString)
     val a = back.collect().map(_.toString).sorted
     val b = packed.collect().map(_.toString).sorted
@@ -111,13 +114,18 @@ class CorpusExportSpec extends AnyFunSuite {
   }
 
   test("read-side shard pruning: a single-shard read scans only that shard's files") {
+    val (_, packed, _) = exported
+    val parts = Files.createTempDirectory("corpus-export-parts-")
+    try partitionedReadPrunes(packed, parts.resolve("by_shard"))
+    finally ParquetFiles.deleteTree(parts)
+  }
+
+  private def partitionedReadPrunes(
+      packed: org.apache.spark.sql.DataFrame, dest: java.nio.file.Path): Unit = {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.functions.col
-    val (_, packed, _) = exported
-    val dest = Files.createTempDirectory("corpus-export-parts-")
-      .resolve("by_shard")
-    Pipeline.writePartitionedExport(packed, dest)
+    Export.writePartitionedExport(packed, dest)
     def parquetFilesUnder(p: java.nio.file.Path): Long = {
       val st = Files.walk(p)
       try st.iterator.asScala.count(_.getFileName.toString.endsWith(".parquet")).toLong
@@ -154,7 +162,7 @@ class CorpusExportSpec extends AnyFunSuite {
 
   test("exportStats ≡ the packed stream: same docs, tokens, and shard spine") {
     val (_, packed, _) = exported
-    val stats = Pipeline.exportStats(spark, dir).collect()
+    val stats = Export.exportStats(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toList
     val pk = packed.select("shard_id", "n_tokens").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
@@ -181,10 +189,34 @@ class CorpusExportSpec extends AnyFunSuite {
     }
     assert(pinned.nonEmpty && pinned.forall(spark.sparkContext.getPersistentRDDs.contains))
     val pre = base.select(when(col("doc_id") > 10, raise_error(lit("boom"))).as("x"))
-    val out = Files.createTempDirectory("export-tail-spec-").resolve("corpus")
-    intercept[Exception] { Pipeline.exportPack(pre, out, resume = false) }
-    assert(!pinned.exists(spark.sparkContext.getPersistentRDDs.contains),
-      "a failed materialization must not leave the base checkpoint pinned")
-    assert(!Files.exists(out), "no sink may start on a pack that never materialized")
+    val tmp = Files.createTempDirectory("export-tail-spec-")
+    try {
+      val out = tmp.resolve("corpus")
+      intercept[Exception] { Export.exportPack(pre, out, resume = false) }
+      assert(!pinned.exists(spark.sparkContext.getPersistentRDDs.contains),
+        "a failed materialization must not leave the base checkpoint pinned")
+      assert(!Files.exists(out), "no sink may start on a pack that never materialized")
+    } finally ParquetFiles.deleteTree(tmp)
+  }
+
+  test("an empty keep-set exports no shard: 0 rows read back, one empty commit per batch") {
+    import org.apache.spark.sql.functions.lit
+    val none = spark.range(0).toDF("doc_id")
+    var shards = Seq.empty[String]
+    var log = Seq.empty[String]
+    val back = Export.exportAndReadBack(spark, "export-empty-spec-") { out =>
+      Export.exportPack(Export.packKept(spark, dir, none, lit(true), lit(0L)), out,
+        resume = false)
+      val st = Files.list(out)
+      shards = try st.iterator.asScala.map(_.getFileName.toString)
+        .filter(n => n.startsWith("corpus-") && n.endsWith(".parquet")).toSeq
+      finally st.close()
+      log = Files.readAllLines(out.resolve("_graft_commits.tsv")).asScala.toSeq
+    }
+    assert(back.schema == Export.exportSchema)
+    assert(back.count() == 0L)
+    assert(shards.isEmpty, s"an empty export must write no shard: $shards")
+    assert(log == (0 until Export.EXPORT_BATCHES).map(i => s"$i\t0\t0"),
+      s"one empty commit per batch: $log")
   }
 }

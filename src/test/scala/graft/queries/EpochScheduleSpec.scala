@@ -145,6 +145,7 @@ class EpochScheduleSpec extends AnyFunSuite {
     // kept-slice export can't: manifest order ≡ permutation order with
     // DUPLICATE doc_ids present.
     val dir = Files.createTempDirectory("epoch-export-").toString
+    val sinkRoot = Files.createTempDirectory("epoch-export-sink-")
     try {
       def toks(id: Long, n: Int): String =
         (0 until n).map(j => s"d${id}w$j").mkString(" ")
@@ -168,16 +169,15 @@ class EpochScheduleSpec extends AnyFunSuite {
         .select(col("doc_id"), col("shuffle_key"), col("n_tokens"),
           col("cum_before"), col("shard_id"), col("text"))
         .localCheckpoint()
-      val out = Files.createTempDirectory("epoch-export-sink-")
-        .resolve("corpus")
-      val sink = Pipeline.exportThroughSink(packed, out, 2048L)
+      val out = sinkRoot.resolve("corpus")
+      val sink = Export.exportThroughSink(packed, out, 2048L)
 
       // the CorpusExportSpec invariants, now on the repeat stream
       val files = sink.writtenFiles
       assert(files.nonEmpty && files.map(_.getFileName.toString) ==
         files.indices.map(i => s"corpus-$i.parquet"))
       val keysAndIds = files.flatMap { f =>
-        spark.read.schema(Pipeline.exportSchema).parquet(f.toString)
+        spark.read.schema(Export.exportSchema).parquet(f.toString)
           .select("shuffle_key", "doc_id").coalesce(1).collect()
           .map(r => (r.getLong(0), r.getLong(1)))
       }
@@ -187,10 +187,13 @@ class EpochScheduleSpec extends AnyFunSuite {
       assert(ids.distinct.size < ids.size,
         "the repeat stream must carry duplicate doc_ids")
       // write → read identity on the repeat stream
-      val back = spark.read.schema(Pipeline.exportSchema)
+      val back = spark.read.schema(Export.exportSchema)
         .parquet(out.toString).collect().map(_.toString).sorted
       val src = packed.collect().map(_.toString).sorted
       assert(back.length == src.length && back.sameElements(src))
-    } finally ParquetFiles.deleteTree(java.nio.file.Paths.get(dir))
+    } finally {
+      ParquetFiles.deleteTree(java.nio.file.Paths.get(dir))
+      ParquetFiles.deleteTree(sinkRoot)
+    }
   }
 }

@@ -6,9 +6,11 @@ import java.security.MessageDigest
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions.{col, lit}
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.sink.ParquetFiles
 
 /** File-level invariants of the incremental export append
   * (`x_export_append`) — everything the oracle's row hash cannot see:
@@ -18,10 +20,12 @@ import graft.TestSpark
   * batchId, and the appended slice's packing offset footing to
   * yesterday's token total.
   */
-class ExportAppendSpec extends AnyFunSuite {
+class ExportAppendSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
+  private val root = Files.createTempDirectory("export-append-spec-")
+  override def afterAll(): Unit = ParquetFiles.deleteTree(root)
 
   private def md5(p: java.nio.file.Path): String =
     MessageDigest.getInstance("MD5").digest(Files.readAllBytes(p))
@@ -45,23 +49,22 @@ class ExportAppendSpec extends AnyFunSuite {
   // pins below can see yesterday's bytes and the sink state), shared
   // by the tests
   private lazy val appended = {
-    val baseExport = Pipeline.ensureBaseExport(spark, dir)
-    val root = Files.createTempDirectory("export-append-spec-")
+    val baseExport = Export.ensureBaseExport(spark, dir)
     val out = root.resolve("corpus")
-    Pipeline.copyDirTree(baseExport.resolve("corpus"), out)
+    Export.copyDirTree(baseExport.resolve("corpus"), out)
     val beforeHashes = shardFiles(out)
       .map(p => p.getFileName.toString -> md5(p)).toMap
     // yesterday's token total, derived from yesterday's own files —
     // the scalar the append rides
-    val baseTotal = spark.read.schema(Pipeline.exportSchema)
+    val baseTotal = spark.read.schema(Export.exportSchema)
       .parquet(out.toString)
       .agg(org.apache.spark.sql.functions.sum("n_tokens")).head.getLong(0)
-    val pre = Pipeline.exportPackedSlice(
+    val pre = Export.exportPackedSlice(
       spark, dir, Pipeline.defaultBatchPred, lit(baseTotal))
     val packed = pre.localCheckpoint()
     Components.freeCheckpoint(pre)
-    val sink = Pipeline.exportThroughSink(
-      packed, out, Pipeline.EXPORT_SHARD_BYTES, resume = true)
+    val sink = Export.exportThroughSink(
+      packed, out, Export.EXPORT_SHARD_BYTES, resume = true)
     (out, beforeHashes, sink, packed, baseTotal)
   }
 
@@ -94,29 +97,29 @@ class ExportAppendSpec extends AnyFunSuite {
     // commit log: yesterday's EXPORT_BATCHES ids plus today's, disjoint
     val ids = Files.readAllLines(out.resolve("_graft_commits.tsv"))
       .asScala.filter(_.nonEmpty).map(_.split('\t')(0).toLong).toSeq
-    assert(ids == (0L until 2L * Pipeline.EXPORT_BATCHES),
+    assert(ids == (0L until 2L * Export.EXPORT_BATCHES),
       s"batchIds must continue without collision: $ids")
-    assert(sink.nextBatchId == 2L * Pipeline.EXPORT_BATCHES)
+    assert(sink.nextBatchId == 2L * Export.EXPORT_BATCHES)
   }
 
   test("a replayed batchId is exactly-once: no new files, no rewrites") {
     val (out, _, _, packed, _) = appended
     val filesBefore = shardFiles(out).map(_.getFileName.toString).toSet
     val replay = new graft.streaming.StreamingShardSink(
-      out, Pipeline.exportSchema,
-      shardSizeBytes = Pipeline.EXPORT_SHARD_BYTES,
+      out, Export.exportSchema,
+      shardSizeBytes = Export.EXPORT_SHARD_BYTES,
       filePrefix = Some("corpus"), resume = true)
     // re-deliver today's first range under its already-committed id —
     // Structured Streaming's restart replay shape
     replay.addBatch(packed.orderBy(col("shuffle_key"), col("doc_id")),
-      Pipeline.EXPORT_BATCHES.toLong)
+      Export.EXPORT_BATCHES.toLong)
     assert(shardFiles(out).map(_.getFileName.toString).toSet == filesBefore,
       "replaying a committed batchId must be a no-op")
   }
 
   test("read-back = yesterday ∪ today; today's packing is offset by yesterday's total") {
     val (out, _, _, packed, baseTotal) = appended
-    val back = spark.read.schema(Pipeline.exportSchema)
+    val back = spark.read.schema(Export.exportSchema)
       .parquet(out.toString).collect()
     val today = back.filter(_.getLong(0) % 10 == 7)
     val yesterday = back.filterNot(_.getLong(0) % 10 == 7)

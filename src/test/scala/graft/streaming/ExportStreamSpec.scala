@@ -10,6 +10,7 @@ import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.sink.ParquetFiles
 
 /** The STREAMING export capstone — the production shape `x_stream_export`
   * is the batch twin of: the composed admission chain
@@ -32,12 +33,7 @@ class ExportStreamSpec extends AnyFunSuite with BeforeAndAfterEach {
   override def beforeEach(): Unit = {
     tmp = Files.createTempDirectory("graft-export-stream")
   }
-  override def afterEach(): Unit = {
-    import java.util.Comparator
-    if (Files.exists(tmp))
-      Files.walk(tmp).sorted(Comparator.reverseOrder[Path]())
-        .iterator.asScala.foreach(Files.deleteIfExists(_))
-  }
+  override def afterEach(): Unit = ParquetFiles.deleteTree(tmp)
 
   private def md5(p: Path): String =
     MessageDigest.getInstance("MD5").digest(Files.readAllBytes(p))
@@ -58,7 +54,7 @@ class ExportStreamSpec extends AnyFunSuite with BeforeAndAfterEach {
     val spark0 = spark
     import spark0.implicits._
     implicit val sqlCtx = spark.sqlContext
-    import graft.queries.Pipeline
+    import graft.queries.{Export, Pipeline}
 
     // yesterday's artifacts — the audits' own ensure* builds; the
     // Bloom fpp is tightened so the approximate novelty filter is
@@ -105,7 +101,7 @@ class ExportStreamSpec extends AnyFunSuite with BeforeAndAfterEach {
         mem.toDF().toDF("doc_id", "text", "embedding"), arts),
       sink, ckpt)
 
-    val sink1 = new StreamingShardSink(out, Pipeline.exportSchema,
+    val sink1 = new StreamingShardSink(out, Export.exportSchema,
       shardSizeBytes = 4096L, filePrefix = Some("corpus"))
     val q1 = startQuery(sink1)
     try {
@@ -128,7 +124,7 @@ class ExportStreamSpec extends AnyFunSuite with BeforeAndAfterEach {
     Files.delete(newest)
     Files.deleteIfExists(commitDir.resolve("." + newest.getFileName + ".crc"))
 
-    val sink2 = new StreamingShardSink(out, Pipeline.exportSchema,
+    val sink2 = new StreamingShardSink(out, Export.exportSchema,
       shardSizeBytes = 4096L, filePrefix = Some("corpus"), resume = true)
     val q2 = startQuery(sink2)
     try {
@@ -151,7 +147,7 @@ class ExportStreamSpec extends AnyFunSuite with BeforeAndAfterEach {
       (0 until after.size).map(i => s"corpus-$i.parquet").sorted)
 
     // gate ≡ audit for the whole composition, exactly-once row-wise
-    val back = spark.read.schema(Pipeline.exportSchema)
+    val back = spark.read.schema(Export.exportSchema)
       .parquet(out.toString).collect()
     assert(back.map(_.getLong(0)).toSet == keeps,
       "streamed survivors must equal the audit keep-set")
@@ -161,7 +157,7 @@ class ExportStreamSpec extends AnyFunSuite with BeforeAndAfterEach {
     // (cum_before legitimately differs — the stream packs per batch,
     // the twin packs the keep-set globally; doc identity and token
     // mass are the invariants)
-    val twin = Pipeline.streamExport(spark, dir).collect()
+    val twin = Export.streamExport(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(2), r.getString(5))).sortBy(_._1)
     val mine = back.map(r => (r.getLong(0), r.getLong(2), r.getString(5)))
       .sortBy(_._1)
@@ -197,7 +193,7 @@ class ExportStreamSpec extends AnyFunSuite with BeforeAndAfterEach {
     // files in creation order yields wave 1's (key, doc) ascending,
     // then wave 2's
     val inOrder = sink2.writtenFiles.flatMap { f =>
-      spark.read.schema(Pipeline.exportSchema).parquet(f.toString)
+      spark.read.schema(Export.exportSchema).parquet(f.toString)
         .select("shuffle_key", "doc_id").coalesce(1).collect()
         .map(r => (r.getLong(0), r.getLong(1)))
     }
